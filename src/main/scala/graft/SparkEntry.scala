@@ -13,10 +13,6 @@ import graft.queries.{Etl, Extra, Pipeline, Q, RefStarQueries, Relational, Round
   */
 object SparkEntry {
 
-  /** qj03's built table per sfDir — see the query for why. */
-  private val rangeReadTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Every gated query, from the per-category suites. */
   def allQueries: Seq[Q] =
     Relational.all ++ Pipeline.all ++ Etl.all ++ Extra.all ++
@@ -68,15 +64,12 @@ object SparkEntry {
       """SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice
         |FROM orders
         |WHERE o_orderkey BETWEEN 1000 AND 5000""".stripMargin) { (s, dir) =>
-      // Path is PID-scoped so concurrent drivers over the same sfDir
-      // (a Verify and a Bench run) can't overwrite each other's table
-      // mid-read, and the layout build (rewrite + compact + manifest)
-      // runs once per JVM — later invocations, e.g. bench passes 2..n,
-      // time only the pruned read, not the one-time table prep.
-      val table = rangeReadTables.computeIfAbsent(dir, { d =>
-        val pid = ProcessHandle.current().pid()
-        val t = s"/tmp/graft_rangeread_${pid}_${Integer.toHexString(d.hashCode)}"
-        Tables(s, d, "orders")
+      // The layout build (rewrite + compact + manifest) runs once per
+      // JVM — later invocations, e.g. bench passes 2..n, time only the
+      // pruned read, not the one-time table prep.
+      val table = Fixture.once("qj03_table", dir) {
+        val t = Fixture.dir("graft_rangeread")
+        Tables(s, dir, "orders")
           .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
           .repartition(8)
           .write.mode("overwrite").parquet(t)
@@ -90,7 +83,7 @@ object SparkEntry {
           sortCols = Seq("o_orderkey"))
         sources.StatsManifest.write(s, t, Seq("o_orderkey"))
         t
-      })
+      }
       val pruned = sources.StatsManifest.rangeRead(
         s, table, "o_orderkey", "1000", "5000")
       val onDisk = new java.io.File(table).listFiles()
@@ -116,10 +109,9 @@ object SparkEntry {
       """SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice
         |FROM orders
         |WHERE o_orderkey BETWEEN 1000 AND 5000""".stripMargin) { (s, dir) =>
-      val table = twoLevelTables.computeIfAbsent(dir, { d =>
-        val pid = ProcessHandle.current().pid()
-        val t = s"/tmp/graft_twolevel_${pid}_${Integer.toHexString(d.hashCode)}"
-        val base = Tables(s, d, "orders")
+      val table = Fixture.once("qj24_table", dir) {
+        val t = Fixture.dir("graft_twolevel")
+        val base = Tables(s, dir, "orders")
           .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
         // 8 key bands at ANY scale factor, so the 1000..5000 gate band
         // always selects a proper subset of partitions
@@ -130,7 +122,7 @@ object SparkEntry {
           .write.mode("overwrite").partitionBy("pband").parquet(t)
         sources.StatsManifest.writePartitioned(s, t, Seq("o_orderkey"))
         t
-      })
+      }
       val (pruned, stats) = sources.StatsManifest.rangeReadTwoLevel(
         s, table, "o_orderkey", "1000", "5000")
       require(stats.partsOpened < stats.partsTotal,
@@ -159,10 +151,9 @@ object SparkEntry {
         |FROM orders
         |WHERE o_orderkey = (SELECT min(o_orderkey) FROM orders)"""
         .stripMargin) { (s, dir) =>
-      val table = bloomTables.computeIfAbsent(dir, { d =>
-        val pid = ProcessHandle.current().pid()
-        val t = s"/tmp/graft_bloomread_${pid}_${Integer.toHexString(d.hashCode)}"
-        val ord = Tables(s, d, "orders")
+      val table = Fixture.once("qj11_table", dir) {
+        val t = Fixture.dir("graft_bloomread")
+        val ord = Tables(s, dir, "orders")
           .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
         ord.repartition(16).write.mode("overwrite").parquet(t)
         // ~12 bits/key at 6 hashes: <1% false-positive rate per file at
@@ -172,7 +163,7 @@ object SparkEntry {
         sources.StatsManifest.writeBlooms(s, t, Seq("o_orderkey"),
           bits = bits.toInt)
         t
-      })
+      }
       val key = Tables(s, dir, "orders")
         .agg(min(col("o_orderkey"))).head().getLong(0)
       val hit = sources.StatsManifest.pointRead(
@@ -200,11 +191,9 @@ object SparkEntry {
         |FROM orders
         |WHERE o_orderkey = (SELECT min(o_orderkey) FROM orders)"""
         .stripMargin) { (s, dir) =>
-      val table = twoLevelBloomTables.computeIfAbsent(dir, { d =>
-        val pid = ProcessHandle.current().pid()
-        val t = s"/tmp/graft_twolevelbloom_${pid}_" +
-          Integer.toHexString(d.hashCode)
-        val ord = Tables(s, d, "orders")
+      val table = Fixture.once("qj25_table", dir) {
+        val t = Fixture.dir("graft_twolevelbloom")
+        val ord = Tables(s, dir, "orders")
           .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
           .withColumn("pgrp", pmod(col("o_custkey"), lit(8L)))
         ord.repartition(2).write.mode("overwrite")
@@ -217,7 +206,7 @@ object SparkEntry {
         sources.StatsManifest.writeBloomsPartitioned(s, t, Seq("o_orderkey"),
           fileBits = sized(rows / 16), partBits = sized(rows / 8))
         t
-      })
+      }
       val key = Tables(s, dir, "orders")
         .agg(min(col("o_orderkey"))).head().getLong(0)
       val (hit, stats) = sources.StatsManifest.pointReadTwoLevel(
@@ -255,10 +244,9 @@ object SparkEntry {
         |SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice
         |FROM orders WHERE o_orderkey BETWEEN 300 AND 400""".stripMargin) {
       (s, dir) =>
-      val table = replacementTables.computeIfAbsent(dir, { d =>
-        val pid = ProcessHandle.current().pid()
-        val t = s"/tmp/graft_replread_${pid}_${Integer.toHexString(d.hashCode)}"
-        val base = Tables(s, d, "orders")
+      val table = Fixture.once("qj26_table", dir) {
+        val t = Fixture.dir("graft_replread")
+        val base = Tables(s, dir, "orders")
           .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
         val kmax = base.agg(max(col("o_orderkey"))).head().getLong(0)
         val band = math.max(1L, kmax / 8)
@@ -274,8 +262,7 @@ object SparkEntry {
           .maxBy(_.getName.stripPrefix("pband=").toLong)
         val olds = top.listFiles().filter(_.getName.endsWith(".parquet"))
         require(olds.length == 1, s"swap needs 1 file, got ${olds.length}")
-        val scratch = java.nio.file.Files
-          .createTempDirectory("graft_qj26_swap").toString
+        val scratch = Fixture.dir("graft_qj26_swap")
         base.filter(col("o_orderkey").between(300, 400)).coalesce(1)
           .write.mode("overwrite").parquet(scratch)
         val repl = new java.io.File(scratch).listFiles()
@@ -284,7 +271,7 @@ object SparkEntry {
           new java.io.File(top, "part-00000-replaced.snappy.parquet").toPath)
         require(olds.head.delete(), "swap could not remove the old file")
         t
-      })
+      }
       val (pruned, stats) = sources.StatsManifest.rangeReadTwoLevel(
         s, table, "o_orderkey", "200", "600")
       require(stats.partsOpened < stats.partsTotal,
@@ -356,11 +343,9 @@ object SparkEntry {
         |UNION ALL
         |SELECT c_custkey + 1000000, c_name, c_nationkey
         |FROM customer WHERE c_custkey % 10 = 5""".stripMargin) { (s, dir) =>
-      val table = mergeTables.computeIfAbsent(dir, { d =>
-        val t = s"/tmp/graft_snapmerge_${ProcessHandle.current().pid()}_" +
-          Integer.toHexString(d.hashCode)
-        wipeDir(t)
-        val cust = Tables(s, d, "customer")
+      val table = Fixture.once("qj12_table", dir) {
+        val t = Fixture.dir("graft_snapmerge")
+        val cust = Tables(s, dir, "customer")
           .select("c_custkey", "c_name", "c_nationkey")
         sources.Snapshots.commit(s, t, cust) // v0
         val dels = cust.filter(col("c_custkey") % 10 === 3L)
@@ -376,7 +361,7 @@ object SparkEntry {
           Seq("c_custkey"), deleteCol = Some("__del"))
         require(v == 1, s"merge should commit version 1, got $v")
         t
-      })
+      }
       sources.Snapshots.read(s, table)
     },
 
@@ -397,11 +382,9 @@ object SparkEntry {
         |UNION ALL
         |SELECT c_custkey + 1000000, c_name, c_nationkey
         |FROM customer WHERE c_custkey % 10 = 5""".stripMargin) { (s, dir) =>
-      val table = morTables.computeIfAbsent(dir, { d =>
-        val t = s"/tmp/graft_snapmor_${ProcessHandle.current().pid()}_" +
-          Integer.toHexString(d.hashCode)
-        wipeDir(t)
-        val cust = Tables(s, d, "customer")
+      val table = Fixture.once("qj14_table", dir) {
+        val t = Fixture.dir("graft_snapmor")
+        val cust = Tables(s, dir, "customer")
           .select("c_custkey", "c_name", "c_nationkey")
         sources.Snapshots.commit(s, t, cust) // v0
         val dels = cust.filter(col("c_custkey") % 10 === 3L)
@@ -421,7 +404,7 @@ object SparkEntry {
         require(f0.subsetOf(f1) && (f1 -- f0).forall(_.startsWith("delta-v")),
           "delta commit must carry the base forward and add only delta files")
         t
-      })
+      }
       sources.Snapshots.read(s, table)
     },
 
@@ -500,25 +483,18 @@ object SparkEntry {
     Q("qj05_snapshot_time_travel",
       """SELECT c_custkey, c_name, c_nationkey, c_acctbal
         |FROM customer""".stripMargin) { (s, dir) =>
-      val table = snapshotTables.computeIfAbsent(dir, { d =>
-        val t = s"/tmp/graft_snap_${ProcessHandle.current().pid()}_" +
-          Integer.toHexString(d.hashCode)
-        // self-heal: a half-built dir from a failed earlier attempt (or
-        // a recycled PID) would shift the version numbers and wedge the
-        // require below forever — start from a clean slate
-        def wipe(f: java.io.File): Unit = {
-          if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(wipe)
-          f.delete(); ()
-        }
-        wipe(new java.io.File(t))
-        val cust = Tables(s, d, "customer")
+      // a fresh dir per build attempt: a half-built table from a failed
+      // earlier attempt would shift the version numbers and wedge the
+      // require below forever
+      val table = Fixture.once("qj05_table", dir) {
+        val t = Fixture.dir("graft_snap")
+        val cust = Tables(s, dir, "customer")
           .select("c_custkey", "c_name", "c_nationkey", "c_acctbal")
         sources.Snapshots.commit(s, t, cust) // v0
         sources.Snapshots.commit(s, t, // v1: "delete" a key band
           cust.filter(col("c_custkey") % 10 =!= 3L))
         t
-      })
+      }
       require(sources.Snapshots.latestVersion(s, table).contains(1))
       sources.Snapshots.read(s, table, version = Some(0))
     },
@@ -606,10 +582,9 @@ object SparkEntry {
       // rows at sf0.001 and at sf1 alike: the gate can never go vacuous
       // at one scale while passing at another. Dates ride as epoch-day
       // integers to keep the manifest's min/max compare numeric.
-      val table = zorderTables.computeIfAbsent(dir, { d =>
-        val pid = ProcessHandle.current().pid()
-        val t = s"/tmp/graft_zorder_${pid}_${Integer.toHexString(d.hashCode)}"
-        Tables(s, d, "orders")
+      val table = Fixture.once("qj08_table", dir) {
+        val t = Fixture.dir("graft_zorder")
+        Tables(s, dir, "orders")
           .select(col("o_orderkey"),
             datediff(col("o_orderdate").cast("date"), lit("1970-01-01"))
               .cast("long").as("o_orderday"),
@@ -623,7 +598,7 @@ object SparkEntry {
           targetBytes = math.max(4L << 10, total / 8))
         sources.StatsManifest.write(s, t, Seq("o_orderday", "o_totalprice"))
         t
-      })
+      }
       val pruned = sources.StatsManifest.multiRangeRead(s, table,
         Seq(("o_orderday", "9556", "9861"), ("o_totalprice", "20000", "80000")))
       val onDisk = new java.io.File(table).listFiles()
@@ -634,10 +609,6 @@ object SparkEntry {
       pruned
     }
   )
-
-  /** qj08's z-ordered table per sfDir — see the query for why. */
-  private val zorderTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** qj06/qj07's bucketed layout per sfDir: customer and orders written
     * bucketBy(8)+sortBy on the custkey, ONE file per bucket (the
@@ -657,52 +628,24 @@ object SparkEntry {
     //   bucketed-table scans, and these are the only bucketed tables.
     s.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
     s.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-    bucketedTables.computeIfAbsent(dir, { d =>
-      val t = s"${ProcessHandle.current().pid()}_" +
-        Integer.toHexString(d.hashCode)
-      val base = s"/tmp/graft_bkt_$t"
-      Tables(s, d, "customer").select("c_custkey", "c_name")
+    Fixture.once("qj06_tables", dir) {
+      // the table-name tag is the fresh dir's unique suffix, so each
+      // sf dir's tables get their own catalog names
+      val base = Fixture.dir("graft_bkt_")
+      val t = new java.io.File(base).getName.stripPrefix("graft_bkt_")
+      Tables(s, dir, "customer").select("c_custkey", "c_name")
         .repartition(8, col("c_custkey"))
         .write.bucketBy(8, "c_custkey").sortBy("c_custkey")
         .option("path", s"$base/cust").mode("overwrite")
         .saveAsTable(s"bkt_cust_$t")
-      Tables(s, d, "orders")
+      Tables(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
         .repartition(8, col("o_custkey"))
         .write.bucketBy(8, "o_custkey").sortBy("o_custkey")
         .option("path", s"$base/ord").mode("overwrite")
         .saveAsTable(s"bkt_ord_$t")
       t
-    })
-  }
-
-  /** qj06's bucketed tables per sfDir — see the query for why. */
-  private val bucketedTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** qj05's snapshot table per sfDir — see the query for why. */
-  private val snapshotTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** qj10's two-version snapshot table per sfDir. */
-  private val diffTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** qj12's merged snapshot table per sfDir. */
-  private val mergeTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** qj14's merge-on-read snapshot table per sfDir. */
-  private val morTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def wipeDir(t: String): Unit = {
-    def wipe(f: java.io.File): Unit = {
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(wipe)
-      f.delete(); ()
     }
-    wipe(new java.io.File(t))
   }
 
   /** qj10/qj13's shared two-version snapshot table: v0 = a customer
@@ -710,11 +653,9 @@ object SparkEntry {
     * inserted (all three change kinds in one diff).
     */
   private def ensureDiffTable(s: SparkSession, dir: String): String =
-    diffTables.computeIfAbsent(dir, { d =>
-      val t = s"/tmp/graft_snapdiff_${ProcessHandle.current().pid()}_" +
-        Integer.toHexString(d.hashCode)
-      wipeDir(t)
-      val cust = Tables(s, d, "customer")
+    Fixture.once("qj10_table", dir) {
+      val t = Fixture.dir("graft_snapdiff")
+      val cust = Tables(s, dir, "customer")
         .select("c_custkey", "c_name", "c_nationkey")
       sources.Snapshots.commit(s, t, cust) // v0
       val v1 = cust.filter(col("c_custkey") % 10 =!= 3L)
@@ -725,23 +666,7 @@ object SparkEntry {
           .withColumn("c_custkey", col("c_custkey") + 1000000L))
       sources.Snapshots.commit(s, t, v1)
       t
-    })
-
-  /** qj11's bloom-manifested table per sfDir. */
-  private val bloomTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** qj24's partitioned, two-level-manifested table per sfDir. */
-  private val twoLevelTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** qj25's partitioned, two-level-bloom'd table per sfDir. */
-  private val twoLevelBloomTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** qj26's replaced-file table per sfDir. */
-  private val replacementTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame = {

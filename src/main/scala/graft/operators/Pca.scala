@@ -243,9 +243,9 @@ object Pca {
     // left lazy, the 32-coordinate HOF projection chain gets inlined
     // into the probe join's candidate side and re-evaluates per
     // REFERENCE instead of per corpus row (measured 19 s vs 0.8 s at
-    // sf0.1, tools.PcaDiag). Persisting the compressed representation
-    // is also the honest production shape — compressing once is the
-    // point of compression; at scale this table is what you'd write
+    // sf0.1, tools.PcaDiag at commit f1c7db7). Persisting the
+    // compressed representation is also the honest production shape
+    // — compressing once is the point of compression; at scale this table is what you'd write
     // next to the index anyway (n × outDims doubles, 2× smaller than
     // the float corpus at 64→32).
     val pc = project(cN, model, idCol, "nv").localCheckpoint()

@@ -86,8 +86,8 @@ object UnigramLm {
   def seedVocab(wf: DataFrame, maxPieceLen: Int, seedSize: Int): DataFrame = {
     // piece-table-sized checkpoint: the two branches below (chars /
     // top-k multis) would otherwise each re-run the substring explode
-    // and its aggregate — the plan-reuse discipline UnigramDiag
-    // measured at 2× per extra reference
+    // and its aggregate — the plan-reuse discipline tools.UnigramDiag
+    // (at commit 4dd9795) measured at 2× per extra reference
     val subs = wf
       .select(col("freq"), explode(substrExpr(col("word"), maxPieceLen)).as("s"))
       .groupBy(col("s.piece").as("piece"))
@@ -151,9 +151,10 @@ object UnigramLm {
     // formulation copied the accumulator array per position (O(L²)
     // per word) and needed a localCheckpoint of the DP table between
     // the folds because project collapsing would otherwise INLINE the
-    // whole DP aggregate at every backpointer read (UnigramDiag
-    // measured the un-materialized form at ~3.5× the pass cost) —
-    // both the copies and the checkpoint job disappear here.
+    // whole DP aggregate at every backpointer read (tools.UnigramDiag
+    // at commit 4dd9795 measured the un-materialized form at ~3.5× the
+    // pass cost) — both the copies and the checkpoint job disappear
+    // here.
     // UnigramLmSpec pins model equality; qt29/qp12 hash the pieces.
     val viterbi = org.apache.spark.sql.GraftColumnBridge.column(
       graft.expressions.UnigramViterbi(

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-import graft.Tables
+import graft.{Fixture, Tables}
 import graft.functions.Text
 
 /** Round-11 session additions: higher-order array-function surface,
@@ -21,52 +21,6 @@ object Round11 {
 
   private def wCte =
     s"SELECT doc_id, source, ${Text.wordsSql("text")} AS ws FROM documents"
-
-  /** qj15's schema-evolved snapshot table per sfDir (PID-scoped path,
-    * self-healing wipe — the qj05 discipline).
-    */
-  private val evoTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** qj18's evolved-merge snapshot table per sfDir. */
-  private val mergeEvoTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** qj19's branched snapshot table per sfDir. */
-  private val refTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** qj20's partition-evolved snapshot table per sfDir. */
-  private val pspecTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** qj21's bucket-partitioned snapshot table per sfDir. */
-  private val bucketTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** qj22's restored snapshot table per sfDir. */
-  private val restoreTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** qj23's write-audit-publish table per sfDir. */
-  private val wapTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** qj17's extensions-enabled session (one per JVM, shares the
-    * SparkContext; the active/default session is restored immediately
-    * so other gates never see it).
-    */
-  private val extendedSessions =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.SparkSession]()
-
-  private def wipeDir(t: String): Unit = {
-    def wipe(f: java.io.File): Unit = {
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(wipe)
-      f.delete(); ()
-    }
-    wipe(new java.io.File(t))
-  }
 
   val all: Seq[Q] = Seq(
 
@@ -548,7 +502,10 @@ object Round11 {
         |FROM e JOIN b ON t >= lo AND t <= hi
         |GROUP BY band""".stripMargin) { (s, dir) =>
       import org.apache.spark.sql.SparkSession
-      val s2 = extendedSessions.computeIfAbsent("ext", { _ =>
+      // one extensions-enabled session per JVM; it shares the
+      // SparkContext, and the active/default session is restored at
+      // once so other gates never see it
+      val s2 = Fixture.once("qj17_session") {
         val prev = SparkSession.getActiveSession
         SparkSession.clearActiveSession()
         SparkSession.clearDefaultSession()
@@ -559,7 +516,7 @@ object Round11 {
         prev.foreach(SparkSession.setDefaultSession)
         es.conf.set("spark.graft.rangeJoin.binWidth", "3600000000")
         es
-      })
+      }
       val ev = Tables(s2, dir, "events")
         .select(col("event_id"),
           expr("unix_micros(CAST(ts AS TIMESTAMP))").as("t"))
@@ -590,11 +547,9 @@ object Round11 {
         |SELECT c_custkey, c_name, c_nationkey
         |FROM customer WHERE c_custkey % 2 = 1""".stripMargin) { (s, dir) =>
       import graft.sources.Snapshots
-      val table = evoTables.computeIfAbsent(dir, { d =>
-        val t = s"/tmp/graft_evo_${ProcessHandle.current().pid()}_" +
-          Integer.toHexString(d.hashCode)
-        wipeDir(t)
-        val cust = Tables(s, d, "customer")
+      val table = Fixture.once("qj15_table", dir) {
+        val t = Fixture.dir("graft_evo")
+        val cust = Tables(s, dir, "customer")
         Snapshots.commit(s, t,
           cust.filter(col("c_custkey") % 2 === 0).select("c_custkey", "c_name"))
         Snapshots.commit(s, t,
@@ -602,7 +557,7 @@ object Round11 {
             .select("c_custkey", "c_name", "c_nationkey"),
           mode = "append")
         t
-      })
+      }
       // time travel reads v0 under v0's schema, not the evolved one
       require(Snapshots.read(s, table, Some(0)).columns.toSeq ==
         Seq("c_custkey", "c_name"),
@@ -621,11 +576,9 @@ object Round11 {
       """SELECT c_custkey, c_name FROM customer
         |WHERE c_custkey % 4 IN (0, 2)""".stripMargin) { (s, dir) =>
       import graft.sources.{Refs, Snapshots}
-      val table = refTables.computeIfAbsent(dir, { d =>
-        val t = s"/tmp/graft_refs_${ProcessHandle.current().pid()}_" +
-          Integer.toHexString(d.hashCode)
-        wipeDir(t)
-        val cust = Tables(s, d, "customer").select("c_custkey", "c_name")
+      val table = Fixture.once("qj19_table", dir) {
+        val t = Fixture.dir("graft_refs")
+        val cust = Tables(s, dir, "customer").select("c_custkey", "c_name")
         Snapshots.commit(s, t, cust.filter(col("c_custkey") % 4 === 0)) // v0
         Refs.branch(s, t, "main")
         Refs.branch(s, t, "feature")
@@ -634,7 +587,7 @@ object Round11 {
         Refs.commitTo(s, t, "feature",
           cust.filter(col("c_custkey") % 4 === 2), mode = "append")
         t
-      })
+      }
       // main is isolated from the branch commit
       require(Refs.read(s, table, "main")
         .filter(col("c_custkey") % 4 === 2).count() == 0,
@@ -655,11 +608,9 @@ object Round11 {
         |SELECT c_custkey, c_name || '!' AS c_name, c_acctbal
         |FROM customer WHERE c_custkey % 10 = 4""".stripMargin) { (s, dir) =>
       import graft.sources.Snapshots
-      val table = mergeEvoTables.computeIfAbsent(dir, { d =>
-        val t = s"/tmp/graft_mergeevo_${ProcessHandle.current().pid()}_" +
-          Integer.toHexString(d.hashCode)
-        wipeDir(t)
-        val cust = Tables(s, d, "customer")
+      val table = Fixture.once("qj18_table", dir) {
+        val t = Fixture.dir("graft_mergeevo")
+        val cust = Tables(s, dir, "customer")
         Snapshots.commit(s, t, cust.select("c_custkey", "c_name"))
         Snapshots.merge(s, t,
           cust.filter(col("c_custkey") % 10 === 4)
@@ -667,7 +618,7 @@ object Round11 {
               concat(col("c_name"), lit("!")).as("c_name"), col("c_acctbal")),
           keyCols = Seq("c_custkey"), autoEvolve = true)
         t
-      })
+      }
       Snapshots.read(s, table)
     },
 
@@ -838,17 +789,15 @@ object Round11 {
          |GROUP BY l_returnflag""".stripMargin) { (s, dir) =>
       import graft.sources.{PartitionSpec, Snapshots}
       val cut = "1998-01-01"
-      val table = pspecTables.computeIfAbsent(dir, { d =>
-        val t = s"/tmp/graft_pspec_${ProcessHandle.current().pid()}_" +
-          Integer.toHexString(d.hashCode)
-        wipeDir(t)
-        val li = Tables(s, d, "lineitem")
+      val table = Fixture.once("qj20_table", dir) {
+        val t = Fixture.dir("graft_pspec")
+        val li = Tables(s, dir, "lineitem")
         Snapshots.commit(s, t, li.filter(col("l_shipdate") < cut),
           partitionBy = Seq(("year", "l_shipdate")))
         Snapshots.commit(s, t, li.filter(col("l_shipdate") >= cut),
           mode = "append", partitionBy = Seq(("month", "l_shipdate")))
         t
-      })
+      }
       val (lo, hi) = ("1997-06-01", "1998-03-31")
       val rel = Snapshots.files(s, table)
       val kept = rel.filter(PartitionSpec.mayContain(_, "l_shipdate", lo, hi))
@@ -876,14 +825,12 @@ object Round11 {
          |FROM orders WHERE o_custkey = 421
          |GROUP BY o_orderstatus""".stripMargin) { (s, dir) =>
       import graft.sources.{PartitionSpec, Snapshots}
-      val table = bucketTables.computeIfAbsent(dir, { d =>
-        val t = s"/tmp/graft_bucket_${ProcessHandle.current().pid()}_" +
-          Integer.toHexString(d.hashCode)
-        wipeDir(t)
-        Snapshots.commit(s, t, Tables(s, d, "orders"),
+      val table = Fixture.once("qj21_table", dir) {
+        val t = Fixture.dir("graft_bucket")
+        Snapshots.commit(s, t, Tables(s, dir, "orders"),
           partitionBy = Seq(("bucket16", "o_custkey")))
         t
-      })
+      }
       val rel = Snapshots.files(s, table)
       val kept = rel.filter(PartitionSpec.mayContain(_, "o_custkey", "421", "421"))
       require(kept.nonEmpty && kept.size * 4 <= rel.size,
@@ -907,17 +854,15 @@ object Round11 {
       """SELECT c_custkey, c_name, c_nationkey FROM customer
         |WHERE c_custkey % 3 = 0""".stripMargin) { (s, dir) =>
       import graft.sources.Snapshots
-      val table = restoreTables.computeIfAbsent(dir, { d =>
-        val t = s"/tmp/graft_restore_${ProcessHandle.current().pid()}_" +
-          Integer.toHexString(d.hashCode)
-        wipeDir(t)
-        val cust = Tables(s, d, "customer")
+      val table = Fixture.once("qj22_table", dir) {
+        val t = Fixture.dir("graft_restore")
+        val cust = Tables(s, dir, "customer")
           .select("c_custkey", "c_name", "c_nationkey")
         Snapshots.commit(s, t, cust.filter(col("c_custkey") % 3 === 0)) // good
         Snapshots.commit(s, t, cust.filter(col("c_custkey") % 3 === 1)) // bad
         Snapshots.restore(s, t, 0)
         t
-      })
+      }
       require(Snapshots.files(s, table) == Snapshots.files(s, table, Some(0)),
         "restored head must re-reference v0's files verbatim")
       val hist = Snapshots.history(s, table).collect()
@@ -1099,11 +1044,9 @@ object Round11 {
         |WHERE c_custkey % 4 IN (0, 2)""".stripMargin) { (s, dir) =>
       import graft.etl.Expectations
       import graft.sources.{Refs, Snapshots, Wap}
-      val table = wapTables.computeIfAbsent(dir, { d =>
-        val t = s"/tmp/graft_wap_${ProcessHandle.current().pid()}_" +
-          Integer.toHexString(d.hashCode)
-        wipeDir(t)
-        val cust = Tables(s, d, "customer").select("c_custkey", "c_name")
+      val table = Fixture.once("qj23_table", dir) {
+        val t = Fixture.dir("graft_wap")
+        val cust = Tables(s, dir, "customer").select("c_custkey", "c_name")
         Snapshots.commit(s, t, cust.filter(col("c_custkey") % 4 === 0)) // v0
         Refs.branch(s, t, "main")
         Refs.branch(s, t, "audit")
@@ -1124,7 +1067,7 @@ object Round11 {
         require(Snapshots.versions(s, t).size >= 3,
           "the staged bad version must remain in history for forensics")
         t
-      })
+      }
       Refs.read(s, table, "main")
     },
 

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Fixture, Tables}
 import graft.functions.{Exact, Text}
 import graft.operators.{Bpe, Curation, Dedup, Retrieval, Similarity, TextAnalysis}
 
@@ -52,41 +52,19 @@ object Round13 {
        |    ROW_NUMBER() OVER (ORDER BY bm25 DESC, did) AS rnk FROM agg)
        |WHERE rnk <= 10""".stripMargin
 
-  /** qt21's maintained index per sf dir — built once (two disjoint
-    * doc_id-parity batches through IndexIngest.applyBatch), served
-    * many times; same memoization discipline as SparkEntry's built
-    * tables.
-    */
-  private val indexDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** qd16's maintained dedup state per sf dir — same discipline. */
-  private val dedupDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** qt24's maintained novelty state per sf dir — same discipline. */
-  private val noveltyDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   // ----- shared retrieval arms, memoized per sf dir --------------------
   // qs17/qs19/qs20 read the SAME lexical BM25 arm, qs19/qs20 the same
   // exact-cosine truth, and qs17/qs23 the same exact semantic arm —
   // r13 rebuilt each from scratch per gate (~11 s of the suite spent
-  // recomputing identical frames). Same memoization discipline as
-  // indexDirs: built once per (JVM, sf dir) into a temp parquet, read
-  // back by every consumer. Every column is an integer id/rank, so the
-  // parquet round trip is bit-exact and the gate hashes are unchanged.
+  // recomputing identical frames). Each is built once per (JVM, sf
+  // dir) into a temp parquet, read back by every consumer. Every column
+  // is an integer id/rank, so the parquet round trip is bit-exact and
+  // the gate hashes are unchanged.
   //
   // The query sets are the `% 100` FIXTURE slices of the corpus tables
   // — constructed HERE, at the gate, and passed to the operators as
   // explicit bounded frames (the operators' bounded-query contract;
   // the oracle SQL mirrors the same fixture so hashes reproduce).
-  private val lexArmDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val semArmDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val truthDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** The gates' fixed lexical query set: documents with id ≡ 0 (mod
     * 100). A fixture choice, not operator behavior — the operators take
@@ -100,28 +78,26 @@ object Round13 {
     Tables(s, dir, "embeddings").filter(col("vec_id") % 100 === 0)
 
   private def memoParquet(
-      cache: java.util.concurrent.ConcurrentHashMap[String, String],
       tag: String, s: org.apache.spark.sql.SparkSession, dir: String)(
       build: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val path = cache.computeIfAbsent(dir, _ => {
-      val out = java.nio.file.Files
-        .createTempDirectory(s"graft_$tag").toString
+    val path = Fixture.once(tag, dir) {
+      val out = Fixture.dir(s"graft_$tag")
       build.write.mode("overwrite").parquet(out)
       out
-    })
+    }
     s.read.parquet(path)
   }
 
   /** Lexical BM25 arm, kArm = 20: (qid, did, rl). */
   private def lexArm20(s: org.apache.spark.sql.SparkSession, dir: String) =
-    memoParquet(lexArmDirs, "lexarm", s, dir) {
+    memoParquet("lexarm", s, dir) {
       Retrieval.bm25PerQueryTopK(Tables(s, dir, "documents"),
         "doc_id", "text", queryDocsOf(s, dir), kArm = 20)
     }
 
   /** Exact-cosine semantic arm, kArm = 20: (sqid, sdid, rs). */
   private def semArm20(s: org.apache.spark.sql.SparkSession, dir: String) =
-    memoParquet(semArmDirs, "semarm", s, dir) {
+    memoParquet("semarm", s, dir) {
       Similarity.cosineTopK(Tables(s, dir, "embeddings"),
           queryVecsOf(s, dir), "vec_id", "embedding", k = 20)
         .select(col("query_id").as("sqid"), col("neighbor_id").as("sdid"),
@@ -130,7 +106,7 @@ object Round13 {
 
   /** Exact-cosine relevance truth, k = 10: (query_id, neighbor_id, rnk). */
   private def truth10(s: org.apache.spark.sql.SparkSession, dir: String) =
-    memoParquet(truthDirs, "truth", s, dir) {
+    memoParquet("truth", s, dir) {
       Similarity.cosineTopK(Tables(s, dir, "embeddings"),
         queryVecsOf(s, dir), "vec_id", "embedding", k = 10)
     }
@@ -321,16 +297,17 @@ object Round13 {
     // streaming ingest, under the strict hash gate rather than
     // spec-only equality.
     Q("qt21_bm25_indexed", bm25OracleSql) { (s, dir) =>
-      val path = indexDirs.computeIfAbsent(dir, d => {
-        val out = java.nio.file.Files
-          .createTempDirectory("graft_qt21_idx").toString
-        val docs = Tables(s, d, "documents").select("doc_id", "text")
+      // built once (two disjoint doc_id-parity batches), served many
+      // times
+      val path = Fixture.once("qt21_index", dir) {
+        val out = Fixture.dir("graft_qt21_idx")
+        val docs = Tables(s, dir, "documents").select("doc_id", "text")
         graft.streaming.IndexIngest.applyBatch(
           s, docs.filter(col("doc_id") % 2 === 0), out, 0L)
         graft.streaming.IndexIngest.applyBatch(
           s, docs.filter(col("doc_id") % 2 === 1), out, 1L)
         out
-      })
+      }
       graft.streaming.IndexIngest.bm25(s, path, Bm25Terms, k = 10)
     },
 
@@ -389,9 +366,10 @@ object Round13 {
     // paths are deterministic, so `hits >= floor` is a reproducible
     // integer the oracle can state as all-ones; measured min hits@10 =
     // 8 at sf0.001, 7 at sf0.01, 6 at sf0.1, 7 at sf1
-    // (tools.HybridTune) — fusion shares the whole lexical arm, so
-    // fused overlap sits above the raw qs06 floor; gate floor 4 keeps
-    // the qs05-style safety margin under the measured minima).
+    // (tools.HybridTune at commit d5f8002) — fusion shares the whole
+    // lexical arm, so fused overlap sits above the raw qs06 floor; gate
+    // floor 4 keeps the qs05-style safety margin under the measured
+    // minima).
     Q("qs23_hybrid_ann_recall",
       """SELECT vec_id AS query_id, CAST(1 AS BIGINT) AS recall_ok
         |FROM embeddings WHERE vec_id % 100 = 0""".stripMargin) { (s, dir) =>
@@ -568,16 +546,15 @@ object Round13 {
     Q("qd16_stream_dedup",
       "SELECT text, min(doc_id) AS keep_id, COUNT(*) AS n_copies FROM documents GROUP BY text") {
       (s, dir) =>
-        val path = dedupDirs.computeIfAbsent(dir, d => {
-          val out = java.nio.file.Files
-            .createTempDirectory("graft_qd16_dedup").toString
-          val docs = Tables(s, d, "documents").select("doc_id", "text")
+        val path = Fixture.once("qd16_state", dir) {
+          val out = Fixture.dir("graft_qd16_dedup")
+          val docs = Tables(s, dir, "documents").select("doc_id", "text")
           graft.streaming.DedupIngest.applyBatch(
             docs.filter(col("doc_id") % 2 === 0), "doc_id", "text", out, 0L)
           graft.streaming.DedupIngest.applyBatch(
             docs.filter(col("doc_id") % 2 === 1), "doc_id", "text", out, 1L)
           out
-        })
+        }
         graft.streaming.DedupIngest.serve(s, path, "text")
     },
 
@@ -599,16 +576,15 @@ object Round13 {
     // multi-batch build — min is a monoid, so a later batch carrying
     // an earlier doc id correctly steals first-occurrence credit.
     Q("qt24_novelty_indexed", noveltyOracleSql) { (s, dir) =>
-      val path = noveltyDirs.computeIfAbsent(dir, d => {
-        val out = java.nio.file.Files
-          .createTempDirectory("graft_qt24_nov").toString
-        val docs = Tables(s, d, "documents").select("doc_id", "text")
+      val path = Fixture.once("qt24_state", dir) {
+        val out = Fixture.dir("graft_qt24_nov")
+        val docs = Tables(s, dir, "documents").select("doc_id", "text")
         graft.streaming.NoveltyIngest.applyBatch(
           docs.filter(col("doc_id") % 2 === 0), "doc_id", "text", out, 0L)
         graft.streaming.NoveltyIngest.applyBatch(
           docs.filter(col("doc_id") % 2 === 1), "doc_id", "text", out, 1L)
         out
-      })
+      }
       graft.streaming.NoveltyIngest.serve(s, path, "doc_id")
     },
 

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Fixture, Tables}
 import graft.functions.Text
 import graft.operators.{Curation, Dedup, EntityResolution, UnigramLm}
 
@@ -15,46 +15,18 @@ import graft.operators.{Curation, Dedup, EntityResolution, UnigramLm}
 object Round15 {
 
   /** qt30's trained-and-persisted unigram vocabulary per sf dir —
-    * trained ONCE per JVM (the clsModelPath discipline: the serve
-    * gate's operator is the SERVE, so bench passes 2..n time the
-    * stream encode, not the one-time train).
+    * trained ONCE per JVM (the serve gate's operator is the SERVE, so
+    * bench passes 2..n time the stream encode, not the one-time train).
     */
-  private val ugVocabDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** qt30's encoded-pieces dir per sf dir — memoized like the vocab
-    * (applyBatch overwrites its own batch=N subdirs, so re-invocations
-    * re-encode in place instead of leaving a fresh orphan directory
-    * per bench/verify pass), and registered for JVM-exit cleanup.
-    */
-  private val ugPiecesDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Recursive delete at JVM exit for the temp dirs this suite creates
-    * (deleteOnExit only removes empty dirs, so a shutdown hook walks).
-    */
-  private def tempDirForCleanup(prefix: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(prefix)
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def wipe(f: java.io.File): Unit = {
-        if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(wipe)
-        f.delete(); ()
-      }
-      wipe(p.toFile)
-    }))
-    p.toString
-  }
-
   private def ugVocabPath(s: org.apache.spark.sql.SparkSession,
                           dir: String): String =
-    ugVocabDirs.computeIfAbsent(dir, { d =>
-      val out = tempDirForCleanup("graft_qt30_vocab")
-      val vocab = graft.operators.UnigramLm.train(Tables(s, d, "documents"),
+    Fixture.once("qt30_vocab", dir) {
+      val out = Fixture.dir("graft_qt30_vocab")
+      val vocab = graft.operators.UnigramLm.train(Tables(s, dir, "documents"),
         "text")
       graft.operators.Models.saveVocab(s, vocab, s"$out/vocab")
       s"$out/vocab"
-    })
+    }
 
   def all: Seq[Q] = Seq(
 
@@ -367,8 +339,12 @@ object Round15 {
         |  CAST(1 AS BIGINT) AS bounds_ok
         |FROM documents""".stripMargin) { (s, dir) =>
       val vp = ugVocabPath(s, dir)
-      val out = ugPiecesDirs.computeIfAbsent(dir,
-        _ => tempDirForCleanup("graft_qt30_pieces"))
+      // one pieces dir per sf dir: applyBatch overwrites its own
+      // batch=N subdirs, so re-invocations re-encode in place instead
+      // of leaving a fresh directory per bench/verify pass
+      val out = Fixture.once("qt30_pieces", dir) {
+        Fixture.dir("graft_qt30_pieces")
+      }
       val docs = Tables(s, dir, "documents")
       graft.streaming.EncodeIngest.applyBatch(s,
         docs.filter(col("doc_id") % 2 === 0), "doc_id", "text", vp, out, 0L)

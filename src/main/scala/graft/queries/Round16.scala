@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Fixture, Tables}
 import graft.operators.{Curation, Dedup, EntityResolution, Ivf, MediaFixtures, Multimodal, Similarity}
 
 /** Round-16 gate additions: generalization-hierarchy k-anonymity
@@ -15,47 +15,6 @@ import graft.operators.{Curation, Dedup, EntityResolution, Ivf, MediaFixtures, M
   * non-SQL-expressible, ScalaTest twins for the structural laws.
   */
 object Round16 {
-
-  /** qs28's ingested+deleted+compacted IVF state per sf dir (the qs24
-    * memoization discipline: the gate's operator is the SERVE, so
-    * bench passes 2..n time the tombstone-suppressed search, not the
-    * one-time ingest).
-    */
-  private val ivfDeleteState =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Ivf.Model)]()
-
-  /** qt32's sequential reference merge table per sf dir — the CHECK
-    * arm, not the operator under test, so bench passes 2..n re-time
-    * only the incremental trainer + encode against a cached reference
-    * (the qs24/qs28 memoization discipline).
-    */
-  private val bpeSeqRef =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, String)]]()
-
-  /** qq07's stream-maintained rollup state per sf dir (the gate's
-    * operator is the RELEASE over the standing state, so bench passes
-    * 2..n time the release, not the one-time ingest).
-    */
-  private val dpRollupState =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Recursive delete at JVM exit (deleteOnExit only removes empty
-    * dirs — the Round15 discipline).
-    */
-  private def tempDirForCleanup(prefix: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(prefix)
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def wipe(f: java.io.File): Unit = {
-        // listFiles is null on a shutdown race (dir already gone / IO
-        // error at JVM exit) — an NPE here aborts the whole hook
-        if (f.isDirectory)
-          Option(f.listFiles()).getOrElse(Array.empty).foreach(wipe)
-        f.delete(); ()
-      }
-      wipe(p.toFile)
-    }))
-    p.toString
-  }
 
   def all: Seq[Q] = Seq(
 
@@ -136,11 +95,12 @@ object Round16 {
       """SELECT vec_id AS query_id, CAST(1 AS BIGINT) AS recall_ok,
         |  CAST(1 AS BIGINT) AS no_deleted
         |FROM embeddings WHERE vec_id % 100 = 0""".stripMargin) { (s, dir) =>
-      val (path, model) = ivfDeleteState.computeIfAbsent(dir, { d =>
-        val emb = Tables(s, d, "embeddings")
+      // the gate's operator is the SERVE, so bench passes 2..n time the
+      // tombstone-suppressed search, not the one-time ingest
+      val (path, model) = Fixture.once("qs28_ivf", dir) {
+        val emb = Tables(s, dir, "embeddings")
         val m = Ivf.train(s, emb, "vec_id", "embedding", k = 8)
-        val out = java.nio.file.Files
-          .createTempDirectory("graft_qs28_ivf").toString
+        val out = Fixture.dir("graft_qs28_ivf")
         (0 until 3).foreach { b =>
           graft.streaming.IvfIngest.applyBatch(
             emb.filter(col("vec_id") % 3 === b),
@@ -153,7 +113,7 @@ object Round16 {
           doomed.filter(col("vec_id") % 2 === 1), "vec_id", out, 1L)
         graft.streaming.IvfIngest.compact(s, out)
         (out, m)
-      })
+      }
       val emb = Tables(s, dir, "embeddings")
       val survivors = emb.filter(col("vec_id") % 7 =!= 3)
       // one bounded query frame for every arm (the Pipeline qs05
@@ -277,9 +237,12 @@ object Round16 {
       val docs = Tables(s, dir, "documents")
       val merges = graft.operators.Bpe.trainIncremental(
         docs, "text", numMerges = 12, compactEvery = 5)
-      val seqRef = bpeSeqRef.computeIfAbsent(dir, { d =>
-        graft.operators.Bpe.train(Tables(s, d, "documents"), "text", 12)
-      })
+      // the sequential reference is the CHECK arm, not the operator
+      // under test, so bench passes 2..n re-time only the incremental
+      // trainer + encode against a cached reference
+      val seqRef = Fixture.once("qt32_reference", dir) {
+        graft.operators.Bpe.train(Tables(s, dir, "documents"), "text", 12)
+      }
       require(merges == seqRef,
         "incremental trainer diverged from the sequential merge sequence")
       val enc = graft.operators.Bpe.encode(docs, "doc_id", "text", merges)
@@ -385,11 +348,13 @@ object Round16 {
         |      FROM l)
         |SELECT d, et, noisy_count, CAST(500000 AS BIGINT) AS eps_micro
         |FROM r WHERE noisy_count >= 20""".stripMargin) { (s, dir) =>
-      val path = dpRollupState.computeIfAbsent(dir, { d =>
-        val ev = Tables(s, d, "events")
+      // the gate's operator is the RELEASE over the standing state, so
+      // bench passes 2..n time the release, not the one-time ingest
+      val path = Fixture.once("qq07_rollup", dir) {
+        val ev = Tables(s, dir, "events")
         // the rollup table path must not pre-exist (lastBatch reads it
         // when present), so the table lives one level below the temp dir
-        val out = tempDirForCleanup("graft_qq07_rollup") + "/rollup"
+        val out = Fixture.dir("graft_qq07_rollup") + "/rollup"
         (0 until 3).foreach { b =>
           graft.streaming.RollupIngest.applyBatch(s,
             ev.filter(col("event_id") % 3 === b), out, b.toLong)
@@ -399,7 +364,7 @@ object Round16 {
         graft.streaming.RollupIngest.applyBatch(s,
           ev.filter(col("event_id") % 3 === 1), out, 1L)
         out
-      })
+      }
       val state = graft.streaming.RollupIngest.read(s, path)
         .select(to_date(col("d")).as("d"), col("event_type").as("et"),
           col("n"))

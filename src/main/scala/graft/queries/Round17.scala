@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Fixture, Tables}
 import graft.operators.{Curation, Ivf, MediaFixtures, Multimodal, Similarity}
 
 /** Round-17 gate additions, closing the r16 verdict asks: an ε-budget
@@ -15,30 +15,6 @@ import graft.operators.{Curation, Ivf, MediaFixtures, Multimodal, Similarity}
   * for the structural laws.
   */
 object Round17 {
-
-  /** qs29's ingested+deleted+retrained+swapped IVF state per sf dir
-    * (the qs24/qs28 memoization discipline: the gate's operator is the
-    * SERVE-after-swap, so bench passes 2..n time the post-swap search,
-    * not the one-time build+retrain).
-    */
-  private val ivfRetrainState = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Ivf.Model)]()
-
-  /** Recursive delete at JVM exit (deleteOnExit only removes empty
-    * dirs; listFiles null-guarded against the shutdown race).
-    */
-  private def tempDirForCleanup(prefix: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(prefix)
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def wipe(f: java.io.File): Unit = {
-        if (f.isDirectory)
-          Option(f.listFiles()).getOrElse(Array.empty).foreach(wipe)
-        f.delete(); ()
-      }
-      wipe(p.toFile)
-    }))
-    p.toString
-  }
 
   def all: Seq[Q] = Seq(
 
@@ -188,11 +164,13 @@ object Round17 {
       """SELECT vec_id AS query_id, CAST(1 AS BIGINT) AS recall_ok,
         |  CAST(1 AS BIGINT) AS swap_consistent
         |FROM embeddings WHERE vec_id % 100 = 0""".stripMargin) { (s, dir) =>
-      val (path, model) = ivfRetrainState.computeIfAbsent(dir, { d =>
-        val emb = Tables(s, d, "embeddings")
+      // the gate's operator is the SERVE-after-swap, so bench passes
+      // 2..n time the post-swap search, not the one-time build+retrain
+      val (path, model) = Fixture.once("qs29_ivf", dir) {
+        val emb = Tables(s, dir, "embeddings")
         val stale = Ivf.train(s, emb.filter(col("vec_id") % 3 === 0),
           "vec_id", "embedding", k = 8)
-        val out = tempDirForCleanup("graft_qs29_ivf") + "/ivf"
+        val out = Fixture.dir("graft_qs29_ivf") + "/ivf"
         (0 until 3).foreach { b =>
           graft.streaming.IvfIngest.applyBatch(
             emb.filter(col("vec_id") % 3 === b),
@@ -230,7 +208,7 @@ object Round17 {
         require(ann0.exceptAll(fresh).isEmpty && fresh.exceptAll(ann0).isEmpty,
           "post-swap serve diverged from a fresh batch index")
         (out, retrained)
-      })
+      }
       val emb = Tables(s, dir, "embeddings")
       val survivors = emb.filter(col("vec_id") % 7 =!= 3)
       // one bounded query frame for every arm (the Pipeline qs05

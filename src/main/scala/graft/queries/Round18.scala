@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Fixture, Tables}
 import graft.operators.{Curation, Ivf, Similarity}
 import graft.streaming.IvfIngest
 
@@ -15,27 +15,6 @@ import graft.streaming.IvfIngest
   * ScalaTest twins for the structural laws.
   */
 object Round18 {
-
-  /** qs30's drift-maintained IVF state per sf dir (the qs24/qs28/qs29
-    * memoization discipline: the gate's operator is the steady SERVE
-    * under the maintained model, so bench passes 2..n time the
-    * post-maintenance search, not the one-time build+drift+retrain).
-    */
-  private val ivfMaintainState = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Ivf.Model)]()
-
-  private def tempDirForCleanup(prefix: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(prefix)
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def wipe(f: java.io.File): Unit = {
-        if (f.isDirectory)
-          Option(f.listFiles()).getOrElse(Array.empty).foreach(wipe)
-        f.delete(); ()
-      }
-      wipe(p.toFile)
-    }))
-    p.toString
-  }
 
   def all: Seq[Q] = Seq(
 
@@ -129,13 +108,16 @@ object Round18 {
       """SELECT vec_id AS query_id, CAST(1 AS BIGINT) AS recall_ok,
         |  CAST(1 AS BIGINT) AS probe_fired
         |FROM embeddings WHERE vec_id % 100 = 0""".stripMargin) { (s, dir) =>
-      val (path, model) = ivfMaintainState.computeIfAbsent(dir, { d =>
-        val emb = Tables(s, d, "embeddings")
+      // the gate's operator is the steady SERVE under the maintained
+      // model, so bench passes 2..n time the post-maintenance search,
+      // not the one-time build+drift+retrain
+      val (path, model) = Fixture.once("qs30_ivf", dir) {
+        val emb = Tables(s, dir, "embeddings")
         val a = emb.filter(col("vec_id") % 2 === 0)
         val bShift = emb.filter(col("vec_id") % 2 === 1)
           .withColumn("embedding",
             transform(col("embedding").cast("array<double>"), x => -x))
-        val out = tempDirForCleanup("graft_qs30_ivf") + "/ivf"
+        val out = Fixture.dir("graft_qs30_ivf") + "/ivf"
         val m0 = Ivf.train(s, a, "vec_id", "embedding", k = 8)
         IvfIngest.applyBatch(a, m0, "vec_id", "embedding", out, 0L)
         // publish the (model, drift-ref) pair the policy maintains
@@ -178,7 +160,7 @@ object Round18 {
         require(ann0.exceptAll(fresh).isEmpty && fresh.exceptAll(ann0).isEmpty,
           "post-maintenance serve diverged from a fresh batch index")
         (out, m2)
-      })
+      }
       val emb = Tables(s, dir, "embeddings")
       val full = emb.filter(col("vec_id") % 2 === 0).unionByName(
         emb.filter(col("vec_id") % 2 === 1)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -21,7 +19,7 @@ class BitmapIngestSpec extends SparkSpec {
   test("streamed bitmap rollup: exact range counts and exact overlap") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val tmp = Files.createTempDirectory("graft-bitmap-ingest").toString
+    val tmp = Fixture.dir("graft-bitmap-ingest")
     val path = s"$tmp/rollup"
     val mem = MemoryStream[(java.sql.Timestamp, Long)]
     val q = BitmapIngest.start(spark,
@@ -47,7 +45,7 @@ class BitmapIngestSpec extends SparkSpec {
 
   test("replaying a batch is a no-op (idempotent OR), blobs byte-equal") {
     import spark.implicits._
-    val tmp = Files.createTempDirectory("graft-bitmap-replay").toString
+    val tmp = Fixture.dir("graft-bitmap-replay")
     val path = s"$tmp/rollup"
     val batch = (1L to 50L).map(u => (ts(u.toInt), u)).toDF("ts", "user_id")
     BitmapIngest.applyBatch(spark, batch, path)

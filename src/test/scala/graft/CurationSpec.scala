@@ -247,7 +247,7 @@ class CurationSpec extends SparkSpec {
   }
 
   test("shard export round-trips the seeded order, balanced and sorted") {
-    val path = "/tmp/graft_shard_export_" + ProcessHandle.current().pid()
+    val path = Fixture.dir("graft_shard_export") + "/shards"
     val shuffled = Curation.deterministicShuffle(
       docs.select("doc_id", "source"), "doc_id", seed = 7L)
     val back = Curation.exportShards(shuffled, path, shards = 8)

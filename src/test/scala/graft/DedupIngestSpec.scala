@@ -18,7 +18,7 @@ class DedupIngestSpec extends SparkSpec {
   test("stream-built dedup state serves identical to the corpus scan") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_dd").toString
+    val dir = Fixture.dir("graft_dd")
     val docs = Tables(spark, sf, "documents").select("doc_id", "text")
       .as[(Long, String)].collect()
     // three uneven micro-batches — duplicates land across batch
@@ -45,7 +45,7 @@ class DedupIngestSpec extends SparkSpec {
 
   test("cross-batch duplicates merge to the global min id and full count") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_dd2").toString
+    val dir = Fixture.dir("graft_dd2")
     DedupIngest.applyBatch(
       Seq((5L, "same text"), (9L, "other")).toDF("doc_id", "text"),
       "doc_id", "text", dir, 0L)
@@ -59,7 +59,7 @@ class DedupIngestSpec extends SparkSpec {
 
   test("a replayed micro-batch no-ops; a new batch still applies") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_dd3").toString
+    val dir = Fixture.dir("graft_dd3")
     val b0 = Seq((1L, "a"), (3L, "a"), (2L, "b")).toDF("doc_id", "text")
     DedupIngest.applyBatch(b0, "doc_id", "text", dir, 0L)
     val once = DedupIngest.serve(spark, dir, "text")
@@ -79,7 +79,7 @@ class DedupIngestSpec extends SparkSpec {
 
   test("compaction collapses batch dirs without changing served results") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_dd4").toString
+    val dir = Fixture.dir("graft_dd4")
     DedupIngest.applyBatch(
       Seq((5L, "x"), (6L, "y")).toDF("doc_id", "text"),
       "doc_id", "text", dir, 0L)
@@ -116,7 +116,7 @@ class DedupIngestSpec extends SparkSpec {
     // racing the compactor) must be a complete no-op — pre-marker it
     // re-created the batch directory beside the compacted partials and
     // serve() double-counted n_copies.
-    val dir = java.nio.file.Files.createTempDirectory("graft_dd5").toString
+    val dir = Fixture.dir("graft_dd5")
     val b1 = Seq((4L, "x"), (8L, "w")).toDF("doc_id", "text")
     DedupIngest.applyBatch(
       Seq((5L, "x"), (6L, "y")).toDF("doc_id", "text"),
@@ -150,7 +150,7 @@ class DedupIngestSpec extends SparkSpec {
     // BatchMarkers.record. Compacting that directory's rows and then
     // replaying the batch used to double-count n_copies — compact now
     // reconstructs the marker from the committed directory first.
-    val dir = java.nio.file.Files.createTempDirectory("graft_dd6").toString
+    val dir = Fixture.dir("graft_dd6")
     val b1 = Seq((4L, "x"), (8L, "w")).toDF("doc_id", "text")
     DedupIngest.applyBatch(
       Seq((5L, "x"), (6L, "y")).toDF("doc_id", "text"),
@@ -177,7 +177,7 @@ class DedupIngestSpec extends SparkSpec {
     // torn write: no _SUCCESS, no marker — compact can't prove the
     // batch committed, so its rows must NOT merge into the compacted
     // partial (the replay would then re-apply them beside it)
-    val dir = java.nio.file.Files.createTempDirectory("graft_dd7").toString
+    val dir = Fixture.dir("graft_dd7")
     val b1 = Seq((4L, "x"), (8L, "w")).toDF("doc_id", "text")
     DedupIngest.applyBatch(
       Seq((5L, "x"), (6L, "y")).toDF("doc_id", "text"),

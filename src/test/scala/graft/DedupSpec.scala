@@ -148,8 +148,7 @@ class DedupSpec extends SparkSpec {
   test("reliable-checkpoint components equal the localCheckpoint variant") {
     import spark.implicits._
     val prior = Option(spark.sparkContext.getCheckpointDir.orNull)
-    val ckDir = java.nio.file.Files
-      .createTempDirectory("graft-cc-ckpt").toString
+    val ckDir = Fixture.dir("graft-cc-ckpt")
     spark.sparkContext.setCheckpointDir(ckDir)
     try {
       val pairs = Seq((2L, 1L), (2L, 3L), (3L, 4L), (10L, 11L), (20L, 22L),
@@ -169,8 +168,7 @@ class DedupSpec extends SparkSpec {
   test("reliable rounds clean superseded snapshots; dir is bounded at convergence") {
     import spark.implicits._
     val prior = Option(spark.sparkContext.getCheckpointDir.orNull)
-    val ckDir = java.nio.file.Files
-      .createTempDirectory("graft-cc-gc").toString
+    val ckDir = Fixture.dir("graft-cc-gc")
     spark.sparkContext.setCheckpointDir(ckDir)
     try {
       // a 100-node path needs many doubling rounds — enough to prove

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -39,7 +37,7 @@ class DimIngestSpec extends SparkSpec {
   test("micro-batches version the dimension; new keys insert") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val tmp = Files.createTempDirectory("graft-dim-ingest").toString
+    val tmp = Fixture.dir("graft-dim-ingest")
     val dim = s"$tmp/dim_store"
     seedDim(dim)
     val mem = MemoryStream[DimUpd]
@@ -64,7 +62,7 @@ class DimIngestSpec extends SparkSpec {
 
   test("replaying a batch is idempotent (at-least-once → exactly-once state)") {
     import spark.implicits._
-    val tmp = Files.createTempDirectory("graft-dim-replay").toString
+    val tmp = Fixture.dir("graft-dim-replay")
     val dim = s"$tmp/dim"
     seedDim(dim)
     val batch = Seq(DimUpd(1L, "Zed"), DimUpd(7L, "Eve")).toDF("k", "manager")
@@ -80,7 +78,7 @@ class DimIngestSpec extends SparkSpec {
 
   test("a first-ever batch bootstraps an absent dimension") {
     import spark.implicits._
-    val tmp = Files.createTempDirectory("graft-dim-boot").toString
+    val tmp = Fixture.dir("graft-dim-boot")
     val dim = s"$tmp/dim" // never seeded
     val batch = Seq(DimUpd(1L, "Ann"), DimUpd(2L, "Bo")).toDF("k", "manager")
     DimIngest.applyBatch(spark, batch, dim, "k", Seq("manager"), "2014-01-01")
@@ -91,7 +89,7 @@ class DimIngestSpec extends SparkSpec {
 
   test("recover restores the live path from every crash window") {
     import spark.implicits._
-    val tmp = Files.createTempDirectory("graft-dim-crash").toString
+    val tmp = Fixture.dir("graft-dim-crash")
     val dim = s"$tmp/dim"
     seedDim(dim)
     val fs = new org.apache.hadoop.fs.Path(dim)

@@ -18,7 +18,7 @@ class EncodeIngestSpec extends SparkSpec {
     Tables(spark, sfDir, "documents").select("doc_id", "text")
 
   private def trainedVocabPath(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ugm").toString
+    val dir = Fixture.dir("graft_ugm")
     val vocab = UnigramLm.train(docs, "text")
     Models.saveVocab(spark, vocab, s"$dir/vocab")
     s"$dir/vocab"
@@ -32,7 +32,7 @@ class EncodeIngestSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val vp = trainedVocabPath()
-    val out = java.nio.file.Files.createTempDirectory("graft_eci").toString
+    val out = Fixture.dir("graft_eci")
     val all = docs.as[(Long, String)].collect()
     val batches = Seq(all.take(7).toSeq, all.slice(7, 60).toSeq,
       all.drop(60).toSeq)
@@ -53,7 +53,7 @@ class EncodeIngestSpec extends SparkSpec {
 
   test("a replayed micro-batch leaves the served pieces unchanged") {
     val vp = trainedVocabPath()
-    val out = java.nio.file.Files.createTempDirectory("graft_eci2").toString
+    val out = Fixture.dir("graft_eci2")
     val b0 = docs.filter(col("doc_id") < 50)
     EncodeIngest.applyBatch(spark, b0, "doc_id", "text", vp, out, 0L)
     val before = rows(EncodeIngest.serve(spark, out))

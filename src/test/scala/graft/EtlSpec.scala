@@ -11,7 +11,7 @@ import graft.runner.EtlRunner
 class EtlSpec extends SparkSpec {
 
   test("CSV stage reader: NULL_IF variants, empty fields, corrupt rows") {
-    val dir = Files.createTempDirectory("graft-csv").toFile
+    val dir = new java.io.File(Fixture.dir("graft-csv"))
     val f = new java.io.File(dir, "channel.csv")
     Files.writeString(f.toPath,
       """CHANNELID,CHANNEL,NOTES
@@ -42,7 +42,7 @@ class EtlSpec extends SparkSpec {
     // fs.graftfs.impl — the same resolution path a cloud connector uses.
     spark.sparkContext.hadoopConfiguration
       .set("fs.graftfs.impl", classOf[GraftTestFs].getName)
-    val dir = Files.createTempDirectory("graft-csv-fs").toFile
+    val dir = new java.io.File(Fixture.dir("graft-csv-fs"))
     val f = new java.io.File(dir, "channel.csv")
     Files.writeString(f.toPath,
       """CHANNELID,CHANNEL

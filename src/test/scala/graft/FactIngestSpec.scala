@@ -58,8 +58,7 @@ class FactIngestSpec extends SparkSpec {
     // file source (replayable across restarts, unlike MemoryStream):
     // the checkpoint + parquet sink metadata log carry exactly-once
     // across a stop/restart boundary
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-fact-restart").toString
+    val tmp = Fixture.dir("graft-fact-restart")
     val srcDir = s"$tmp/src"; val outDir = s"$tmp/fact"; val ck = s"$tmp/ckpt"
     val schema = implicitly[org.apache.spark.sql.Encoder[RawSale]].schema
     def feed(ids: Seq[Long]): Unit =
@@ -89,7 +88,7 @@ class FactIngestSpec extends SparkSpec {
   test("streaming ingest maintains the stats manifest per micro-batch") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft-fact-manifest").toString
+    val tmp = Fixture.dir("graft-fact-manifest")
     val mem = MemoryStream[RawSale]
     val q = FactIngest.start(spark, mem.toDF(), s"$tmp/fact", s"$tmp/ckpt",
       manifestCols = Seq("SalesDetailID"))
@@ -123,7 +122,7 @@ class FactIngestSpec extends SparkSpec {
   test("parquet sink appends resolved fact rows under a checkpoint") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft-fact-ingest").toString
+    val tmp = Fixture.dir("graft-fact-ingest")
     val mem = MemoryStream[RawSale]
     val q = FactIngest.start(spark, mem.toDF(), s"$tmp/fact", s"$tmp/ckpt")
     try {

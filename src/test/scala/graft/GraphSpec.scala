@@ -176,7 +176,7 @@ class GraphSpec extends SparkSpec {
   test("pagerankConvergedFp reliable mode keeps O(1) snapshots and fails " +
     "loudly when maxRounds is exhausted") {
     import spark.implicits._
-    val ckDir = java.nio.file.Files.createTempDirectory("graft-pr-ck").toString
+    val ckDir = Fixture.dir("graft-pr-ck")
     spark.sparkContext.setCheckpointDir(ckDir)
     val nodes = nodeList.toDF("id")
     val edges = edgeList.toDF("src", "dst", "w")

@@ -20,7 +20,7 @@ class IndexIngestSpec extends SparkSpec {
   test("stream-built index serves BM25 identical to the corpus scan") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_idx").toString
+    val dir = Fixture.dir("graft_idx")
     val docs = Tables(spark, sf, "documents").select("doc_id", "text")
       .as[(Long, String)].collect()
     // three uneven micro-batches, including one zero-word document
@@ -53,7 +53,7 @@ class IndexIngestSpec extends SparkSpec {
 
   test("a replayed micro-batch no-ops on every index table") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_idx2").toString
+    val dir = Fixture.dir("graft_idx2")
     val b0 = Seq((1L, "spark vector spark"), (2L, "stream window")).toDF("doc_id", "text")
     IndexIngest.applyBatch(spark, b0, dir, 0L)
     val vocabOnce = IndexIngest.vocab(spark, dir).collect().toSet
@@ -74,7 +74,7 @@ class IndexIngestSpec extends SparkSpec {
 
   test("compaction collapses batch directories without changing serving") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_idx3").toString
+    val dir = Fixture.dir("graft_idx3")
     val batches = Seq(
       Seq((1L, "spark vector spark"), (2L, "stream window")),
       Seq((3L, "spark stream stream")),
@@ -111,7 +111,7 @@ class IndexIngestSpec extends SparkSpec {
     // its postings directory beside the compacted rows (double-counted
     // scores), and replaying the compacted id itself overwrote the
     // merged rows with just its own (dropped every other batch).
-    val dir = java.nio.file.Files.createTempDirectory("graft_idx4").toString
+    val dir = Fixture.dir("graft_idx4")
     val b0 = Seq((1L, "spark vector spark"), (2L, "stream window"))
       .toDF("doc_id", "text")
     val b1 = Seq((3L, "spark stream stream")).toDF("doc_id", "text")
@@ -146,7 +146,7 @@ class IndexIngestSpec extends SparkSpec {
     // and the postings _SUCCESS proves the directory committed, so
     // compact reconstructs the marker instead of leaving a replay
     // free to rewrite the vacuumed directory and double-count.
-    val dir = java.nio.file.Files.createTempDirectory("graft_idx5").toString
+    val dir = Fixture.dir("graft_idx5")
     val b0 = Seq((1L, "spark vector spark"), (2L, "stream window"))
       .toDF("doc_id", "text")
     val b1 = Seq((3L, "spark stream stream")).toDF("doc_id", "text")
@@ -178,7 +178,7 @@ class IndexIngestSpec extends SparkSpec {
     // here would make the replay skip the vocab/stats merges forever.
     // The batch's postings must pass through under their own id so
     // the replay's directory overwrite lands on them.
-    val dir = java.nio.file.Files.createTempDirectory("graft_idx6").toString
+    val dir = Fixture.dir("graft_idx6")
     val b0 = Seq((1L, "spark vector spark"), (2L, "stream window"))
       .toDF("doc_id", "text")
     val b1 = Seq((3L, "spark stream stream")).toDF("doc_id", "text")

@@ -24,7 +24,7 @@ class IvfIngestSpec extends SparkSpec {
   test("stream-built IVF index serves bit-identical to the batch search") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf").toString
+    val dir = Fixture.dir("graft_ivf")
     val emb = Tables(spark, sf, "embeddings")
     val model = Ivf.train(spark, emb, "vec_id", "embedding", k = 8)
     val rows = emb.select(col("vec_id"), col("embedding").cast("array<double>"))
@@ -51,7 +51,7 @@ class IvfIngestSpec extends SparkSpec {
   test("replay no-ops; compact relocates without changing the serve; the " +
       "marker crash window is safe") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf2").toString
+    val dir = Fixture.dir("graft_ivf2")
     val emb = Tables(spark, sf, "embeddings")
     val model = Ivf.train(spark, emb, "vec_id", "embedding", k = 8)
     val b0 = emb.filter(col("vec_id") % 2 === 0)
@@ -87,7 +87,7 @@ class IvfIngestSpec extends SparkSpec {
 
   test("tombstones: deleted ids vanish from serve, compact applies them " +
       "physically, and re-adds stay suppressed") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf3").toString
+    val dir = Fixture.dir("graft_ivf3")
     val emb = Tables(spark, sf, "embeddings")
     val model = Ivf.train(spark, emb, "vec_id", "embedding", k = 8)
     IvfIngest.applyBatch(emb.filter(col("vec_id") % 2 === 0),
@@ -129,7 +129,7 @@ class IvfIngestSpec extends SparkSpec {
 
   test("retrainSwap: new (model, assignment) pair serves like a fresh " +
       "batch index; tombstones and replay idempotency survive the swap") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf4").toString
+    val dir = Fixture.dir("graft_ivf4")
     val emb = Tables(spark, sf, "embeddings")
     // deliberately stale model: trained on one slice only
     val stale = Ivf.train(spark, emb.filter(col("vec_id") % 3 === 0),
@@ -184,7 +184,7 @@ class IvfIngestSpec extends SparkSpec {
   }
 
   test("compact preserves the published (model, drift-ref) pair") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf6").toString
+    val dir = Fixture.dir("graft_ivf6")
     val emb = Tables(spark, sf, "embeddings")
     val model = Ivf.train(spark, emb, "vec_id", "embedding", k = 4)
     IvfIngest.applyBatch(emb.filter(col("vec_id") % 2 === 0),
@@ -214,7 +214,7 @@ class IvfIngestSpec extends SparkSpec {
 
   test("retrainSwap leaves in-flight batches bit-identical for the " +
       "pending replay; no re-duplication, no tombstone resurrection") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf7").toString
+    val dir = Fixture.dir("graft_ivf7")
     val emb = Tables(spark, sf, "embeddings")
     val model = Ivf.train(spark, emb, "vec_id", "embedding", k = 8)
     // in-flight batch 0: the odd vids PLUS an overlap slice that also
@@ -262,7 +262,7 @@ class IvfIngestSpec extends SparkSpec {
 
   test("maintainIndex: no fire on a stable corpus, fires on a shifted " +
       "ingest, republishes the reference") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf8").toString
+    val dir = Fixture.dir("graft_ivf8")
     val emb = Tables(spark, sf, "embeddings")
     val a = emb.filter(col("vec_id") % 2 === 0)
     val m0 = Ivf.train(spark, a, "vec_id", "embedding", k = 4)
@@ -302,7 +302,7 @@ class IvfIngestSpec extends SparkSpec {
   test("retrainSwap pair survives every crash window via recover") {
     import org.apache.hadoop.fs.Path
     import graft.streaming.AtomicSwap
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf5").toString
+    val dir = Fixture.dir("graft_ivf5")
     val emb = Tables(spark, sf, "embeddings")
     val model = Ivf.train(spark, emb, "vec_id", "embedding", k = 4)
     IvfIngest.applyBatch(emb, model, "vec_id", "embedding", dir, 0L)

@@ -17,7 +17,7 @@ class MaintenanceSpec extends SparkSpec {
   }
 
   test("compaction merges small files, preserves content and partitions") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-compact").toString
+    val dir = Fixture.dir("graft-compact")
     val events = Tables(spark, sfDir, "events")
     // accrete many small files per partition (streaming-ingest shape)
     events.repartition(16)
@@ -44,7 +44,7 @@ class MaintenanceSpec extends SparkSpec {
   }
 
   test("sorted compaction yields files with disjoint key ranges") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-sorted").toString
+    val dir = Fixture.dir("graft-sorted")
     val orders = Tables(spark, sfDir, "orders")
     orders.repartition(8).write.mode("overwrite").parquet(dir)
     // force a multi-file layout so disjointness is non-trivial
@@ -66,7 +66,7 @@ class MaintenanceSpec extends SparkSpec {
   }
 
   test("deleteWhere rewrites only affected partitions and drops emptied ones") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-delete").toString
+    val dir = Fixture.dir("graft-delete")
     val events = Tables(spark, sfDir, "events")
     events.write.partitionBy("event_type").mode("overwrite").parquet(dir)
     val untouched = dataFiles(dir)
@@ -104,7 +104,7 @@ class MaintenanceSpec extends SparkSpec {
   }
 
   test("sorted compaction within partition dirs: pruning plus in-file range skipping") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-psort").toString
+    val dir = Fixture.dir("graft-psort")
     val events = Tables(spark, sfDir, "events")
     events.repartition(16)
       .write.partitionBy("event_type").mode("overwrite").parquet(dir)
@@ -148,7 +148,7 @@ class MaintenanceSpec extends SparkSpec {
   }
 
   test("partitioned compaction splits an oversized partition into multiple files") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-psplit").toString
+    val dir = Fixture.dir("graft-psplit")
     val events = Tables(spark, sfDir, "events")
     events.write.partitionBy("event_type").mode("overwrite").parquet(dir)
     Maintenance.compact(spark, dir, partitionCols = Seq("event_type"),
@@ -162,7 +162,7 @@ class MaintenanceSpec extends SparkSpec {
   }
 
   test("deleteWhere keeps rows whose predicate evaluates NULL (SQL DELETE semantics)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-delnull").toString
+    val dir = Fixture.dir("graft-delnull")
     import spark.implicits._
     val df = Seq(
       ("2024", "alice", 1), ("2024", "bob", 2), ("2024", null, 3),
@@ -184,7 +184,7 @@ class MaintenanceSpec extends SparkSpec {
   }
 
   test("deleteWhere reaches a partition whose value contains DEL (full Hive escape set)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-deldel").toString
+    val dir = Fixture.dir("graft-deldel")
     import spark.implicits._
     //  (DEL) is escaped by Spark's partition-path writer; a
     // composed DROP path missing it never matches the directory Spark
@@ -204,7 +204,7 @@ class MaintenanceSpec extends SparkSpec {
   }
 
   test("zorderCompact survives an all-NULL z column and an empty table") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-znull").toString
+    val dir = Fixture.dir("graft-znull")
     import spark.implicits._
     // all-NULL second column: its range is undefined, so it contributes
     // nothing to the curve — but the rewrite must not NPE
@@ -216,7 +216,7 @@ class MaintenanceSpec extends SparkSpec {
     assert(spark.read.parquet(dir).agg(org.apache.spark.sql.functions.sum("k"))
       .head().getLong(0) == 6L)
 
-    val empty = java.nio.file.Files.createTempDirectory("graft-zempty").toString
+    val empty = Fixture.dir("graft-zempty")
     Seq((1L, 2L)).toDF("k", "v").filter(col("k") < 0)
       .write.mode("overwrite").parquet(empty)
     Maintenance.zorderCompact(spark, empty, Seq("k", "v"), targetBytes = 1L << 20)
@@ -224,7 +224,7 @@ class MaintenanceSpec extends SparkSpec {
   }
 
   test("deleteWhere reaches rows in a NULL partition value") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-delnullpart").toString
+    val dir = Fixture.dir("graft-delnullpart")
     import spark.implicits._
     val df = Seq(
       ("us", "alice", 1), ("us", "bob", 2),
@@ -253,7 +253,7 @@ class MaintenanceSpec extends SparkSpec {
   }
 
   test("recoverDelete rolls a journaled crash forward") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-delrecover").toString
+    val dir = Fixture.dir("graft-delrecover")
     import spark.implicits._
     Seq(("a", 1), ("a", 2), ("b", 3)).toDF("p", "v")
       .write.partitionBy("p").mode("overwrite").parquet(dir)
@@ -277,8 +277,8 @@ class MaintenanceSpec extends SparkSpec {
   }
 
   test("z-order compaction bounds file ranges on BOTH columns; single-key sort does not") {
-    val zdir = java.nio.file.Files.createTempDirectory("graft-zorder").toString
-    val sdir = java.nio.file.Files.createTempDirectory("graft-zsort").toString
+    val zdir = Fixture.dir("graft-zorder")
+    val sdir = Fixture.dir("graft-zsort")
     val events = Tables(spark, sfDir, "events")
       .select("event_id", "user_id", "event_type", "value")
     events.repartition(8).write.mode("overwrite").parquet(zdir)
@@ -325,7 +325,7 @@ class MaintenanceSpec extends SparkSpec {
   }
 
   test("compaction of an unpartitioned table coalesces to the byte target") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-compact1").toString
+    val dir = Fixture.dir("graft-compact1")
     val nation = Tables(spark, sfDir, "nation")
     nation.repartition(8).write.mode("overwrite").parquet(dir)
     assert(dataFiles(dir).size > 1)

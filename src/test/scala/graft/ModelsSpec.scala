@@ -14,7 +14,7 @@ class ModelsSpec extends SparkSpec {
   private lazy val emb = Tables(spark, sfDir, "embeddings")
 
   test("PQ model round-trips bit-for-bit and encodes identically") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-pqmodel").toString
+    val dir = Fixture.dir("graft-pqmodel")
     val trained = Pq.train(spark, emb, "vec_id", "embedding",
       m = 8, k = 8, iters = 2)
     Models.savePq(spark, trained, s"$dir/pq")
@@ -30,7 +30,7 @@ class ModelsSpec extends SparkSpec {
   }
 
   test("IVF model round-trips and searches identically") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfmodel").toString
+    val dir = Fixture.dir("graft-ivfmodel")
     val trained = Ivf.train(spark, emb, "vec_id", "embedding", k = 8, iters = 2)
     Models.saveIvf(spark, trained, s"$dir/ivf")
     val loaded = Models.loadIvf(spark, s"$dir/ivf")
@@ -45,7 +45,7 @@ class ModelsSpec extends SparkSpec {
   }
 
   test("loading a truncated PQ model fails loudly, not silently") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-pqbad").toString
+    val dir = Fixture.dir("graft-pqbad")
     val trained = Pq.train(spark, emb, "vec_id", "embedding",
       m = 8, k = 8, iters = 1)
     Models.savePq(spark, trained, s"$dir/pq")
@@ -62,7 +62,7 @@ class ModelsSpec extends SparkSpec {
 
   test("linear classifier model round-trips bit-for-bit and scores " +
       "identically") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-linmodel").toString
+    val dir = Fixture.dir("graft-linmodel")
     val docs = Tables(spark, sfDir, "documents")
     val teacher = TextAnalysis.qualityScore(docs, "doc_id", "text")
       .select(col("doc_id"),
@@ -91,7 +91,7 @@ class ModelsSpec extends SparkSpec {
   test("unigram vocabulary round-trips; a loaded model encodes bit-identically") {
     val docs = Tables(spark, sfDir, "documents")
     val vocab = UnigramLm.train(docs, "text")
-    val path = s"/tmp/graft_models_vocab_${ProcessHandle.current().pid()}"
+    val path = Fixture.dir("graft_models_vocab") + "/vocab"
     Models.saveVocab(spark, vocab, path)
     val loaded = Models.loadVocab(spark, path)
     val a = vocab.collect().map(r => r.getString(0) -> r.getLong(1)).toMap

@@ -19,7 +19,7 @@ class MomentIngestSpec extends SparkSpec {
   test("stream-merged moments train the exact batch model") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_mom").toString
+    val dir = Fixture.dir("graft_mom")
     val all = normed.as[(Long, Seq[Double])].collect()
     val batches = Seq(all.take(11).toSeq, all.slice(11, 200).toSeq,
       all.drop(200).toSeq)
@@ -41,7 +41,7 @@ class MomentIngestSpec extends SparkSpec {
   }
 
   test("a replayed micro-batch leaves the merged moments unchanged") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mom2").toString
+    val dir = Fixture.dir("graft_mom2")
     val b0 = normed.filter(col("vec_id") < 100)
     MomentIngest.applyBatch(b0, "nv", dir, 0L)
     MomentIngest.applyBatch(normed.filter(col("vec_id") >= 100), "nv", dir, 1L)

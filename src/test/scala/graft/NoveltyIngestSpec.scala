@@ -24,7 +24,7 @@ class NoveltyIngestSpec extends SparkSpec {
   test("stream-built novelty state serves identical to the corpus scan") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_nov").toString
+    val dir = Fixture.dir("graft_nov")
     val docs = Tables(spark, sf, "documents").select("doc_id", "text")
       .as[(Long, String)].collect()
     val batches = Seq(docs.take(9).toSeq, docs.slice(9, 27).toSeq,
@@ -47,7 +47,7 @@ class NoveltyIngestSpec extends SparkSpec {
 
   test("a later batch with an earlier id steals first-occurrence credit") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_nov2").toString
+    val dir = Fixture.dir("graft_nov2")
     // batch 0: doc 5 owns both its shingles; batch 1 brings doc 2 with
     // the SAME text — the merged min flips credit to doc 2
     NoveltyIngest.applyBatch(
@@ -62,7 +62,7 @@ class NoveltyIngestSpec extends SparkSpec {
 
   test("a replayed micro-batch no-ops on both state tables") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_nov3").toString
+    val dir = Fixture.dir("graft_nov3")
     val b0 = Seq((1L, "a b c d"), (2L, "b c d e")).toDF("doc_id", "text")
     NoveltyIngest.applyBatch(b0, "doc_id", "text", dir, 0L)
     val once = rows(NoveltyIngest.serve(spark, dir, "doc_id"))

@@ -12,7 +12,7 @@ import graft.sources.{PartitionSpec, Snapshots}
 class PartitionEvolutionSpec extends SparkSpec {
 
   private def freshTable(): String =
-    java.nio.file.Files.createTempDirectory("graft-pspec").toString
+    Fixture.dir("graft-pspec")
 
   private def li = Tables(spark, sfDir, "lineitem")
     .select("l_orderkey", "l_linenumber", "l_shipdate", "l_quantity", "l_returnflag")

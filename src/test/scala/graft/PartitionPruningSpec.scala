@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 class PartitionPruningSpec extends SparkSpec {
 
   test("partition column predicate prunes the scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-part").toFile
+    val dir = new java.io.File(Fixture.dir("graft-part"))
     val events = Tables(spark, sfDir, "events")
     events.write.partitionBy("event_type").mode("overwrite")
       .parquet(dir.getAbsolutePath)
@@ -32,7 +32,7 @@ class PartitionPruningSpec extends SparkSpec {
     // the scan must carry a dynamicpruning subquery that waits for the
     // dim's build side. At 100 TB this is how a star join reads one
     // partition instead of the full fact history.
-    val dir = java.nio.file.Files.createTempDirectory("graft-dpp").toFile
+    val dir = new java.io.File(Fixture.dir("graft-dpp"))
     Tables(spark, sfDir, "events")
       .write.partitionBy("event_type").mode("overwrite")
       .parquet(dir.getAbsolutePath)
@@ -57,7 +57,7 @@ class PartitionPruningSpec extends SparkSpec {
     import spark.implicits._
     // a 100 TB table is never rewritten when a column lands — new files
     // carry it, old files must keep answering
-    val dir = java.nio.file.Files.createTempDirectory("graft-evolve").toString
+    val dir = Fixture.dir("graft-evolve")
     Seq((1L, "a"), (2L, "b")).toDF("id", "v")
       .write.parquet(s"$dir/batch=0")
     Seq((3L, "c", 30L), (4L, "d", 40L)).toDF("id", "v", "score")

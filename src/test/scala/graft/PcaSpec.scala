@@ -88,7 +88,7 @@ class PcaSpec extends SparkSpec {
   }
 
   test("PCA model round-trips through the registry bit-for-bit") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-pcamodel").toString
+    val dir = Fixture.dir("graft-pcamodel")
     val n = Pca.normalized(emb, "vec_id", "embedding")
     val trained = Pca.train(spark, n, "vec_id", "nv", outDims = 4)
     Models.savePca(spark, trained, s"$dir/pca")

@@ -23,7 +23,7 @@ class QuarantineIngestSpec extends SparkSpec {
     Expectations.inSet("event_type", Seq("click", "view", "purchase")))
 
   private def dirs() = {
-    val base = java.nio.file.Files.createTempDirectory("graft-quar").toString
+    val base = Fixture.dir("graft-quar")
     (s"$base/clean", s"$base/quar", s"$base/ckpt")
   }
 

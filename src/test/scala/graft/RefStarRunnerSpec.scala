@@ -18,7 +18,7 @@ class RefStarRunnerSpec extends SparkSpec {
   // path-independent; every sibling warehouse spec already isolates
   // this way.
   private val whTmp =
-    java.nio.file.Files.createTempDirectory("graft-runner-wh").toString
+    Fixture.dir("graft-runner-wh")
 
   override def beforeAll(): Unit = {
     sys.props("graft.warehouse.dir") = whTmp

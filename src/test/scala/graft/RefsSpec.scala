@@ -9,7 +9,7 @@ import graft.sources.{Refs, Snapshots}
 class RefsSpec extends SparkSpec {
 
   private def freshTable(): String =
-    java.nio.file.Files.createTempDirectory("graft-refs").toString
+    Fixture.dir("graft-refs")
 
   private def names(df: org.apache.spark.sql.DataFrame): Set[String] =
     df.select("name").collect().map(_.getString(0)).toSet

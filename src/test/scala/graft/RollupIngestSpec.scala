@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -23,7 +21,7 @@ class RollupIngestSpec extends SparkSpec {
   test("streamed exact rollup equals the batch recompute across batches") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val tmp = Files.createTempDirectory("graft-rollup-ingest").toString
+    val tmp = Fixture.dir("graft-rollup-ingest")
     val path = s"$tmp/rollup"
     val mem = MemoryStream[(java.sql.Timestamp, String, Double)]
     val q = RollupIngest.start(spark,
@@ -53,7 +51,7 @@ class RollupIngestSpec extends SparkSpec {
 
   test("a replayed batch id is a no-op — exact sums never double-count") {
     import spark.implicits._
-    val tmp = Files.createTempDirectory("graft-rollup-replay").toString
+    val tmp = Fixture.dir("graft-rollup-replay")
     val path = s"$tmp/rollup"
     val batch = Seq((ts(1), "click", 1.5), (ts(2), "view", 2.5))
       .toDF("ts", "event_type", "value")

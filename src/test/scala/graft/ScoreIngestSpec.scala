@@ -18,7 +18,7 @@ class ScoreIngestSpec extends SparkSpec {
     Tables(spark, sfDir, "documents").select("doc_id", "text")
 
   private def trainedModelPath(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_scm").toString
+    val dir = Fixture.dir("graft_scm")
     val teacher = TextAnalysis
       .qualityScore(Tables(spark, sfDir, "documents"), "doc_id", "text")
       .select(col("doc_id"),
@@ -38,7 +38,7 @@ class ScoreIngestSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val mp = trainedModelPath()
-    val out = java.nio.file.Files.createTempDirectory("graft_sci").toString
+    val out = Fixture.dir("graft_sci")
     val all = docs.as[(Long, String)].collect()
     val batches = Seq(all.take(7).toSeq, all.slice(7, 60).toSeq,
       all.drop(60).toSeq)
@@ -60,7 +60,7 @@ class ScoreIngestSpec extends SparkSpec {
 
   test("a replayed micro-batch leaves the served scores unchanged") {
     val mp = trainedModelPath()
-    val out = java.nio.file.Files.createTempDirectory("graft_sci2").toString
+    val out = Fixture.dir("graft_sci2")
     val b0 = docs.filter(col("doc_id") < 50)
     ScoreIngest.applyBatch(spark, b0, "doc_id", "text", mp, out, 0L)
     val before = rows(ScoreIngest.serve(spark, out))

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -20,7 +18,7 @@ class SketchIngestSpec extends SparkSpec {
   test("streamed sketch rollup matches the batch sketch estimate") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val tmp = Files.createTempDirectory("graft-sketch-ingest").toString
+    val tmp = Fixture.dir("graft-sketch-ingest")
     val path = s"$tmp/rollup"
     val mem = MemoryStream[(java.sql.Timestamp, Long)]
     val q = SketchIngest.start(spark,
@@ -52,7 +50,7 @@ class SketchIngestSpec extends SparkSpec {
 
   test("replaying a batch is a no-op (register-wise max union)") {
     import spark.implicits._
-    val tmp = Files.createTempDirectory("graft-sketch-replay").toString
+    val tmp = Fixture.dir("graft-sketch-replay")
     val path = s"$tmp/rollup"
     val batch = (1L to 50L).map(u => (ts(u.toInt), u)).toDF("ts", "user_id")
     SketchIngest.applyBatch(spark, batch, path)

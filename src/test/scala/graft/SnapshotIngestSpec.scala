@@ -15,8 +15,8 @@ class SnapshotIngestSpec extends SparkSpec {
   test("each micro-batch commits one version; the union is the feed") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-snaping").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-snaping-ck").toString
+    val dir = Fixture.dir("graft-snaping")
+    val ckpt = Fixture.dir("graft-snaping-ck")
     val mem = MemoryStream[Long]
     val q = SnapshotIngest.start(spark,
       mem.toDF().select(col("value").as("k")), dir, ckpt)
@@ -38,7 +38,7 @@ class SnapshotIngestSpec extends SparkSpec {
     "reads work on a live feed, replay still no-ops") {
     import spark.implicits._
     import graft.sources.PartitionSpec
-    val dir = java.nio.file.Files.createTempDirectory("graft-snappart").toString
+    val dir = Fixture.dir("graft-snappart")
     val spec = Seq(("bucket8", "k"))
     assert(SnapshotIngest.ingestBatch(spark, dir,
       (1L to 40L).toDF("k"), 0L, spec))
@@ -60,7 +60,7 @@ class SnapshotIngestSpec extends SparkSpec {
 
   test("a replayed batch is a no-op: no duplicate rows, no new version") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-snaprep").toString
+    val dir = Fixture.dir("graft-snaprep")
     val b0 = Seq(1L, 2L, 3L).toDF("k")
     val b1 = Seq(4L, 5L).toDF("k")
     assert(SnapshotIngest.ingestBatch(spark, dir, b0, 0L))
@@ -80,7 +80,7 @@ class SnapshotIngestSpec extends SparkSpec {
 
   test("replay stays a no-op across interleaved maintenance and manual commits") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-snapmix").toString
+    val dir = Fixture.dir("graft-snapmix")
     assert(SnapshotIngest.ingestBatch(spark, dir, Seq(1L, 2L).toDF("k"), 0L))
     assert(SnapshotIngest.ingestBatch(spark, dir, Seq(3L).toDF("k"), 1L))
     // compaction commits WITHOUT ingest meta of its own — it must carry
@@ -102,7 +102,7 @@ class SnapshotIngestSpec extends SparkSpec {
 
   test("out-of-order batch ids fail loudly instead of corrupting history") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-snapooo").toString
+    val dir = Fixture.dir("graft-snapooo")
     assert(SnapshotIngest.ingestBatch(spark, dir, Seq(1L).toDF("k"), 5L))
     val ex = intercept[IllegalArgumentException] {
       SnapshotIngest.ingestBatch(spark, dir, Seq(2L).toDF("k"), 3L)

@@ -11,7 +11,7 @@ import graft.sources.Snapshots
 class SnapshotsSpec extends SparkSpec {
 
   private def freshTable(): String =
-    java.nio.file.Files.createTempDirectory("graft-snap").toString
+    Fixture.dir("graft-snap")
 
   private def keys(df: org.apache.spark.sql.DataFrame): Set[Long] =
     df.select("n_nationkey").collect().map(_.getAs[Number](0).longValue).toSet

@@ -20,7 +20,7 @@ class StatsManifestSpec extends SparkSpec {
   }
 
   test("range read prunes files on a sorted layout and matches the full scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-manifest").toString
+    val dir = Fixture.dir("graft-manifest")
     val orders = Tables(spark, sfDir, "orders")
     orders.repartition(8).write.mode("overwrite").parquet(dir)
     Maintenance.compact(spark, dir, targetBytes = 8L << 10,
@@ -45,7 +45,7 @@ class StatsManifestSpec extends SparkSpec {
 
   test("two-level manifest plans from partition summaries, opening per-file " +
       "stats for a strict subset of partitions") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-manifest2l").toString
+    val dir = Fixture.dir("graft-manifest2l")
     val base = Tables(spark, sfDir, "orders")
       .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
     // 8 key bands regardless of scale factor
@@ -81,7 +81,7 @@ class StatsManifestSpec extends SparkSpec {
     // gets new files after the manifest refresh: the file count
     // mismatch forces the per-file stats open, where the unknown files
     // are conservatively kept — stale under-prunes, never loses rows
-    val dir = java.nio.file.Files.createTempDirectory("graft-manifest2s").toString
+    val dir = Fixture.dir("graft-manifest2s")
     import spark.implicits._
     Seq((1L, "a"), (2L, "b")).toDF("k", "v")
       .withColumn("p", lit("p0")).unionByName(
@@ -103,7 +103,7 @@ class StatsManifestSpec extends SparkSpec {
 
   test("refreshStalePartitions re-scans only stale partitions and restores " +
       "the tight prune") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-manifest2r").toString
+    val dir = Fixture.dir("graft-manifest2r")
     import spark.implicits._
     Seq((1L, "a"), (2L, "b")).toDF("k", "v").withColumn("p", lit("p0"))
       .unionByName(Seq((100L, "c")).toDF("k", "v").withColumn("p", lit("p1")))
@@ -135,7 +135,7 @@ class StatsManifestSpec extends SparkSpec {
 
   test("two-level bloom manifest skips whole partitions on point lookups " +
       "and keeps late files") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bloom2l").toString
+    val dir = Fixture.dir("graft-bloom2l")
     import spark.implicits._
     // 4 partitions x 2 files, keys unique and scattered across files
     val df = (1L to 400L).map(k => (k, s"v$k")).toDF("k", "v")
@@ -169,7 +169,7 @@ class StatsManifestSpec extends SparkSpec {
     // count-only staleness signal would drop the whole partition on a
     // range-disjoint probe and lose the new rows. The recorded
     // fingerprint of the partition's file names must catch it.
-    val dir = java.nio.file.Files.createTempDirectory("graft-manifest2f").toString
+    val dir = Fixture.dir("graft-manifest2f")
     import spark.implicits._
     Seq((1L, "a"), (2L, "b")).toDF("k", "v").coalesce(1)
       .withColumn("p", lit("p0")).unionByName(
@@ -182,7 +182,7 @@ class StatsManifestSpec extends SparkSpec {
     val p0 = new java.io.File(dir, "p=p0")
     val old = p0.listFiles().filter(_.getName.endsWith(".parquet"))
     assert(old.length == 1, s"test needs exactly one file, got ${old.length}")
-    val scratch = java.nio.file.Files.createTempDirectory("graft-repl").toString
+    val scratch = Fixture.dir("graft-repl")
     Seq((50L, "swapped")).toDF("k", "v").coalesce(1)
       .write.mode("overwrite").parquet(scratch)
     val repl = new java.io.File(scratch).listFiles()
@@ -215,7 +215,7 @@ class StatsManifestSpec extends SparkSpec {
 
   test("refreshStaleBloomPartitions re-scans only stale partitions and " +
       "restores partition skipping") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bloom2r").toString
+    val dir = Fixture.dir("graft-bloom2r")
     import spark.implicits._
     val df = (1L to 400L).map(k => (k, s"v$k")).toDF("k", "v")
       .withColumn("p", concat(lit("p"), pmod(col("k"), lit(4L))))
@@ -231,7 +231,7 @@ class StatsManifestSpec extends SparkSpec {
     val p2 = new java.io.File(dir, "p=p2")
     val old = p2.listFiles().filter(_.getName.endsWith(".parquet"))
     assert(old.length == 1)
-    val scratch = java.nio.file.Files.createTempDirectory("graft-replbr").toString
+    val scratch = Fixture.dir("graft-replbr")
     Seq((77777L, "swapped")).toDF("k", "v").coalesce(1)
       .write.mode("overwrite").parquet(scratch)
     java.nio.file.Files.copy(
@@ -266,7 +266,7 @@ class StatsManifestSpec extends SparkSpec {
 
   test("a missing per-file bloom filter file is a conservative keep — " +
       "readers are safe during the refresh swap window") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bloom2w").toString
+    val dir = Fixture.dir("graft-bloom2w")
     import spark.implicits._
     val df = (1L to 400L).map(k => (k, s"v$k")).toDF("k", "v")
       .withColumn("p", concat(lit("p"), pmod(col("k"), lit(4L))))
@@ -287,7 +287,7 @@ class StatsManifestSpec extends SparkSpec {
 
   test("an equal-count replacement can't hide from the two-level bloom " +
       "manifest either") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bloom2f").toString
+    val dir = Fixture.dir("graft-bloom2f")
     import spark.implicits._
     val df = (1L to 400L).map(k => (k, s"v$k")).toDF("k", "v")
       .withColumn("p", concat(lit("p"), pmod(col("k"), lit(4L))))
@@ -299,7 +299,7 @@ class StatsManifestSpec extends SparkSpec {
     val p1 = new java.io.File(dir, "p=p1")
     val old = p1.listFiles().filter(_.getName.endsWith(".parquet"))
     assert(old.length == 1)
-    val scratch = java.nio.file.Files.createTempDirectory("graft-replb").toString
+    val scratch = Fixture.dir("graft-replb")
     Seq((77777L, "swapped")).toDF("k", "v").coalesce(1)
       .write.mode("overwrite").parquet(scratch)
     java.nio.file.Files.copy(
@@ -320,7 +320,7 @@ class StatsManifestSpec extends SparkSpec {
     // raw string made a path with a space produce garbage keys and the
     // prune silently kept everything (and a quote broke the spliced
     // SQL literal outright). Both now decode exactly like the reader.
-    val dir = java.nio.file.Files.createTempDirectory("graft man'fest").toString
+    val dir = Fixture.dir("graft man'fest")
     import spark.implicits._
     Seq((1L, "a"), (2L, "b")).toDF("k", "v").coalesce(1)
       .withColumn("p", lit("p0")).unionByName(
@@ -342,7 +342,7 @@ class StatsManifestSpec extends SparkSpec {
   }
 
   test("a stale manifest keeps unknown files — under-prunes, never loses rows") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-manifest2").toString
+    val dir = Fixture.dir("graft-manifest2")
     val nation = Tables(spark, sfDir, "nation")
     nation.filter(col("n_nationkey") < 10).write.mode("overwrite").parquet(dir)
     StatsManifest.write(spark, dir, Seq("n_nationkey"))
@@ -357,7 +357,7 @@ class StatsManifestSpec extends SparkSpec {
   }
 
   test("compaction refreshes a maintained manifest across the swap") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-manifest4").toString
+    val dir = Fixture.dir("graft-manifest4")
     val orders = Tables(spark, sfDir, "orders")
     orders.repartition(8).write.mode("overwrite").parquet(dir)
     StatsManifest.write(spark, dir, Seq("o_orderkey"))
@@ -375,7 +375,7 @@ class StatsManifestSpec extends SparkSpec {
   }
 
   test("decimal stats compare numerically, not as text") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-manifest5").toString
+    val dir = Fixture.dir("graft-manifest5")
     import spark.implicits._
     // file A holds [9.5, 9.9], file B holds [12.0, 15.0]: under TEXT
     // comparison '9.5' > '12.0', so a [12, 15] range probe would prune
@@ -393,7 +393,7 @@ class StatsManifestSpec extends SparkSpec {
   }
 
   test("un-orderable column types are rejected at write time") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-manifest6").toString
+    val dir = Fixture.dir("graft-manifest6")
     import spark.implicits._
     Seq((1L, true), (2L, false)).toDF("k", "flag")
       .write.mode("overwrite").parquet(dir)
@@ -403,7 +403,7 @@ class StatsManifestSpec extends SparkSpec {
   }
 
   test("delimiter characters in string stats round-trip without corrupting the manifest") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-manifest7").toString
+    val dir = Fixture.dir("graft-manifest7")
     import spark.implicits._
     // min contains a tab, max contains a newline that LOOKS like a
     // well-formed stats row for a fabricated path — unescaped, that row
@@ -425,7 +425,7 @@ class StatsManifestSpec extends SparkSpec {
   }
 
   test("rangeRead keeps directory-partition columns in the schema") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-manifest8").toString
+    val dir = Fixture.dir("graft-manifest8")
     val orders = Tables(spark, sfDir, "orders")
       .withColumn("yr", year(col("o_orderdate")))
     orders.write.mode("overwrite").partitionBy("yr").parquet(dir)
@@ -443,7 +443,7 @@ class StatsManifestSpec extends SparkSpec {
   }
 
   test("appendMissing keeps the prune tight under appends and replays as a no-op") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-manifest9").toString
+    val dir = Fixture.dir("graft-manifest9")
     val nation = Tables(spark, sfDir, "nation")
     nation.filter(col("n_nationkey") < 10).coalesce(1)
       .write.mode("overwrite").parquet(dir)
@@ -478,7 +478,7 @@ class StatsManifestSpec extends SparkSpec {
   }
 
   test("manifest composes with z-order: both columns prune") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-manifest3").toString
+    val dir = Fixture.dir("graft-manifest3")
     val events = Tables(spark, sfDir, "events")
       .select("event_id", "user_id", "event_type", "value")
     events.repartition(8).write.mode("overwrite").parquet(dir)
@@ -502,8 +502,8 @@ class StatsManifestSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-manifest-sink").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-manifest-ckpt").toString
+    val dir = Fixture.dir("graft-manifest-sink")
+    val ckpt = Fixture.dir("graft-manifest-ckpt")
     val mem = MemoryStream[Long]
     val q = mem.toDF().select(col("value").as("k"))
       .writeStream.format("parquet")
@@ -514,7 +514,7 @@ class StatsManifestSpec extends SparkSpec {
     // fake an aborted micro-batch attempt: a well-formed, NON-hidden
     // data file in the sink dir that the commit log never admitted —
     // exactly what FileStreamSink leaves behind on task failure
-    val scratch = java.nio.file.Files.createTempDirectory("graft-orphan").toString
+    val scratch = Fixture.dir("graft-orphan")
     spark.range(100, 110).select(col("id").as("k"))
       .coalesce(1).write.mode("overwrite").parquet(scratch)
     val part = new java.io.File(scratch).listFiles()
@@ -539,7 +539,7 @@ class StatsManifestSpec extends SparkSpec {
 
   test("bloom manifest prunes point lookups min/max stats can't") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-bloom").toString
+    val dir = Fixture.dir("graft-bloom")
     // keys hash-scattered across 8 files: every file's [min, max]
     // spans ~the whole domain, so the stats prune keeps all of them —
     // exactly the layout blooms exist for

@@ -44,7 +44,7 @@ class TarShardsSpec extends SparkSpec {
       .select(col("pos"),
         concat(lit("doc-"), col("doc_id"), lit(".txt")).as("name"),
         col("text").cast("binary").as("content"))
-    val dir = Files.createTempDirectory("graft_corpus_tar").toString
+    val dir = Fixture.dir("graft_corpus_tar")
     TarShards.exportCorpus(shuffled, dir, shards = 8)
     val back = TarShards.read(spark, dir)
     // shard-major, entry-order read == the seeded global order
@@ -64,7 +64,7 @@ class TarShardsSpec extends SparkSpec {
   }
 
   test("shard read parallelizes by shard and preserves every entry") {
-    val dir = Files.createTempDirectory("graft_tar_shards")
+    val dir = Fixture.dir("graft_tar_shards")
     val a = entries(Seq(64, 700))
     val b = entries(Seq(513)).map { case (n, c) => (s"b-$n", c) }
     TarShards.writeTar(s"$dir/shard-000.tar", a)

@@ -21,7 +21,7 @@ class TopKIngestSpec extends SparkSpec {
     "displaced rows leave") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft-topk").toString
+    val base = Fixture.dir("graft-topk")
     val (path, ckpt) = (s"$base/board", s"$base/ckpt")
     val mem = MemoryStream[Event]
     val q = TopKIngest.start(spark, mem.toDF(), path, ckpt, k = 2)

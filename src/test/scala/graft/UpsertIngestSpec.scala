@@ -15,8 +15,8 @@ class UpsertIngestSpec extends SparkSpec {
   test("CDC stream: bootstrap, delta upserts/deletes, delta-sized writes") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-upsing").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-upsing-ck").toString
+    val dir = Fixture.dir("graft-upsing")
+    val ckpt = Fixture.dir("graft-upsing-ck")
     val mem = MemoryStream[(Long, String, Boolean)]
     val q = UpsertIngest.start(spark,
       mem.toDF().toDF("k", "s", "del"), dir, ckpt, Seq("k"), "del")
@@ -45,7 +45,7 @@ class UpsertIngestSpec extends SparkSpec {
 
   test("replay is a no-op, and exactly-once survives mid-stream compaction") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-upsrep").toString
+    val dir = Fixture.dir("graft-upsrep")
     val b0 = Seq((1L, "a", false), (2L, "b", false)).toDF("k", "s", "del")
     val b1 = Seq((2L, "B", false), (3L, "c", false)).toDF("k", "s", "del")
     assert(UpsertIngest.ingestBatch(spark, dir, b0, 0L, Seq("k"), "del"))

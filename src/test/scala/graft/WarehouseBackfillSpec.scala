@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions.col
 
 import graft.refstar.Warehouse
@@ -22,7 +20,7 @@ class WarehouseBackfillSpec extends SparkSpec {
   }
 
   test("single-year backfill: identical content, untouched years and dims") {
-    val tmp = Files.createTempDirectory("graft-wh-backfill").toString
+    val tmp = Fixture.dir("graft-wh-backfill")
     sys.props("graft.warehouse.dir") = tmp
     try {
       Warehouse.rebuild(spark)
@@ -58,7 +56,7 @@ class WarehouseBackfillSpec extends SparkSpec {
     "hashes stable and untouched partitions byte-identical") {
     import graft.operators.Maintenance
     import graft.sources.StatsManifest
-    val tmp = Files.createTempDirectory("graft-wh-composed").toString
+    val tmp = Fixture.dir("graft-wh-composed")
     sys.props("graft.warehouse.dir") = tmp
     try {
       Warehouse.rebuild(spark)

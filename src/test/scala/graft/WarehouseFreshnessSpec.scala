@@ -13,7 +13,7 @@ import graft.refstar.{RefStar, Warehouse}
   */
 class WarehouseFreshnessSpec extends SparkSpec {
 
-  private val tmp = Files.createTempDirectory("graft-wh-spec").toString
+  private val tmp = Fixture.dir("graft-wh-spec")
 
   override def afterAll(): Unit = {
     sys.props.remove("graft.warehouse.dir")

@@ -47,7 +47,7 @@ class WebPipelineSpec extends SparkSpec {
     val feats = Classifier.featurizeText(survivors, "doc_id", "text",
       dims = 16).join(teacher, "doc_id").localCheckpoint()
     val model = Classifier.trainLogisticNewton(feats, "x", "y", iters = 3)
-    val mdir = java.nio.file.Files.createTempDirectory("graft_wp").toString
+    val mdir = Fixture.dir("graft_wp")
     Models.saveLinear(spark, model, s"$mdir/lin")
     ScoreIngest.applyBatch(spark, survivors, "doc_id", "text",
       s"$mdir/lin", mdir, 0L)
