@@ -2,8 +2,6 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every gated query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line (driver contract). Each query is fully executed
   * through a noop data sink — `.count()` alone would let Catalyst prune
@@ -33,16 +31,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session("graft-bench")
 
     // one warm-up pass so JIT/codegen/classloading don't dominate query 1
     SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()

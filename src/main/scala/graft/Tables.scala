@@ -33,8 +33,4 @@ object Tables {
       }
     } else spark.read.parquet(s"$dir/$name.parquet")
   }
-
-  /** Register every table as a temp view so spark.sql can see them. */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => apply(spark, dir, n).createOrReplaceTempView(n))
 }

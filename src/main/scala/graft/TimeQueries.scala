@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-loop timing probe: run the named gates (by prefix) a few times
   * at a given sf dir and print per-pass wall times. NOT the bench —
   * no archive, no regression math; just the quick "did my change make
@@ -15,15 +13,7 @@ object TimeQueries {
       "usage: runMain graft.TimeQueries <sfDir> <prefix> [<prefix> ...]")
     val dir = args.head
     val prefixes = args.tail.toSeq
-    // honors the bench's core-count env so core-ratio probes (the sf1
-    // scaling evidence) run through the same knob the driver uses
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSpark.session("graft-time-queries")
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => prefixes.exists(n.startsWith))
     if (names.isEmpty)

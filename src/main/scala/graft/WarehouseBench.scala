@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dedicated min-of-N timer for the one-shot star build — the number
   * compared against the reference's 16 s Snowflake dimensional ETL
   * (BASELINE.md). The full Bench measures it single-shot, which two
@@ -14,16 +12,7 @@ import org.apache.spark.sql.SparkSession
 object WarehouseBench {
   def main(args: Array[String]): Unit = {
     val passes = args.headOption.map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-warehouse-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSpark.session("graft-warehouse-bench")
     // untimed warm build: JIT/codegen + fixture CSV generation
     graft.refstar.Warehouse.ensure(spark)
     val times = (1 to passes).map { _ =>

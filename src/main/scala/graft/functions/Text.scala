@@ -92,16 +92,10 @@ object Text {
   def jlSignsSql(j: Int): String =
     s"list_value(${JlSigns(j).map(v => if (v > 0) "1.0" else "-1.0").mkString(",")})"
 
-  /** Spark SQL text of the ±1 vote of word hash `h` on simhash bit `j`. */
-  def simVoteExpr(h: String, j: String): String = {
-    val aArr = s"array(${SimAs.map(_ + "L").mkString(",")})"
-    val bArr = s"array(${SimBs.map(_ + "L").mkString(",")})"
-    val t = s"CAST($j div $SimChunkWidth AS INT) + 1"
-    s"(CAST(shiftright((element_at($aArr, $t) * $h + element_at($bArr, $t)) % ${Mod}L, " +
-      s"CAST($j % $SimChunkWidth AS INT)) & 1 AS BIGINT) * 2 - 1)"
-  }
-
-  /** DuckDB mirror of [[simVoteExpr]] — same affine image, shift, vote. */
+  /** DuckDB text of the ±1 vote of word hash `h` on simhash bit `j` —
+    * the same affine image, shift and vote as Dedup.simhash's per-chunk
+    * columns.
+    */
   def simVoteSql(h: String, j: String): String = {
     val aArr = s"list_value(${SimAs.mkString(",")})"
     val bArr = s"list_value(${SimBs.mkString(",")})"

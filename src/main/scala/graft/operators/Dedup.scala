@@ -561,7 +561,8 @@ object Dedup {
   /** Simhash (word-frequency weighted, `bits` low bits, default 60 to
     * stay in a positive BIGINT): explode word hashes x bit positions,
     * majority vote per bit, reassemble. Bit j votes on a PERMUTED hash
-    * chunk (Text.simVoteExpr) rather than bit j of the raw polyhash:
+    * chunk (the `__h<t>` affine images below; Text.simVoteSql is the
+    * oracles' twin) rather than bit j of the raw polyhash:
     * polyhash values sit below 2^30, so raw bits 30+ are structurally
     * constant and banding over them degenerates (see
     * simhashNearDupPairs).

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, CreateArray, EqualNullSafe, EqualTo, Explode, Expression, If, IsNull, Literal, Or}
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{Generate, Join, LogicalPlan, Project}
@@ -60,7 +60,8 @@ object OrNullJoinRewrite extends Rule[LogicalPlan] {
 }
 
 /** Session extensions entry point: install with
-  * `SparkSession.builder().withExtensions(GraftExtensions.apply)`.
+  * `SparkSession.builder().withExtensions(GraftExtensions.apply)`, or
+  * take a session on the running SparkContext from [[session]].
   *
   * Injects the optimizer rule AND registers the custom expressions as
   * SQL functions (`graft_polyhash`, `graft_dot`), so the pure-SQL
@@ -71,6 +72,22 @@ object OrNullJoinRewrite extends Rule[LogicalPlan] {
 object GraftExtensions {
   import org.apache.spark.sql.catalyst.FunctionIdentifier
   import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+
+  /** A new session with these extensions on the running SparkContext.
+    * The caller's active and default sessions are restored before it
+    * returns, so only code handed the extended session ever uses it.
+    */
+  def session(): SparkSession = {
+    val active = SparkSession.getActiveSession
+    val default = SparkSession.getDefaultSession
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try SparkSession.builder().withExtensions(apply).getOrCreate()
+    finally {
+      active.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
+      default.fold(SparkSession.clearDefaultSession())(SparkSession.setDefaultSession)
+    }
+  }
 
   def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => OrNullJoinRewrite)

@@ -1,13 +1,14 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Tables, etl}
 import graft.etl.StarSchema
 import graft.functions.Exact._
 import graft.operators.Sessions
 
-/** End-to-end ETL-shape queries: batch sessionization and the full
-  * dimensional build (dims with surrogate keys -> fact with FK lookups
-  * -> aggregate), each reproduced exactly by the DuckDB oracle.
+/** End-to-end ETL-shape queries: the generated date dimension, batch
+  * sessionization and the full dimensional build (dims with surrogate
+  * keys -> fact with FK lookups -> aggregate), each reproduced exactly
+  * by the DuckDB oracle.
   */
 object Etl {
 
@@ -108,5 +109,9 @@ object Etl {
           min(col("dim_order_date_key")).as("first_date_key"),
           dsum(col("revenue")).as("revenue"))
     },
+
+    Q("q27_date_dim", etl.DateDim.oracleSql()) { (s, _) =>
+      etl.DateDim.build(s)
+    }
   )
 }

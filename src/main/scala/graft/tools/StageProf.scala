@@ -3,7 +3,6 @@ package graft.tools
 import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Stage-level profiler (measurement harness, not part of the gate):
   * runs a named gate once warm, then once instrumented, and prints
@@ -15,15 +14,7 @@ import org.apache.spark.sql.SparkSession
 object StageProf {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-stageprof")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSpark.session("graft-stageprof")
     val byName = graft.SparkEntry.allQueries.map(q => q.name -> q).toMap
 
     case class St(name: String, wallMs: Long, taskMs: Long, tasks: Int)

@@ -13,20 +13,8 @@ class OrNullJoinRewriteSpec extends SparkSpec {
 
   private def withExtendedSession[T](f: SparkSession => T): T = {
     // a second SparkSession on the same SparkContext, with extensions
-    val prev = spark // force shared session init first
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .withExtensions(GraftExtensions.apply)
-      .getOrCreate()
-    try f(s)
-    finally {
-      SparkSession.setActiveSession(prev)
-      SparkSession.setDefaultSession(prev)
-    }
+    spark // force shared session init first
+    f(GraftExtensions.session())
   }
 
   private def thetaJoin(s: SparkSession) = {

@@ -13,22 +13,11 @@ import graft.plans.GraftExtensions
 class RangeBinJoinRewriteSpec extends SparkSpec {
 
   private def withExtendedSession[T](width: Long)(f: SparkSession => T): T = {
-    val prev = spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .withExtensions(GraftExtensions.apply)
-      .getOrCreate()
+    spark // force shared session init first
+    val s = GraftExtensions.session()
     s.conf.set("spark.graft.rangeJoin.binWidth", width.toString)
     try f(s)
-    finally {
-      s.conf.unset("spark.graft.rangeJoin.binWidth")
-      SparkSession.setActiveSession(prev)
-      SparkSession.setDefaultSession(prev)
-    }
+    finally s.conf.unset("spark.graft.rangeJoin.binWidth")
   }
 
   private def points(s: SparkSession) = {
