@@ -1,7 +1,7 @@
 package graft.etl
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructType}
 
@@ -13,7 +13,8 @@ import org.apache.spark.sql.types.{StringType, StructType}
   *    reader takes a single nullValue, so 'NULL' is handled at parse
   *    time and the remaining variants by a normalization pass
   *  - ON_ERROR='CONTINUE': PERMISSIVE mode with a corrupt-record
-  *    column; bad rows are counted and dropped, not fatal
+  *    column; bad rows are counted and dropped, not fatal (counted
+  *    eagerly by `read`, or by the consuming pass itself with `stage`)
   *  - LIST-before-load: empty-glob guard instead of failing the read
   *
   * Schemas are always declared (schema-on-load like the reference's
@@ -40,28 +41,61 @@ object CsvStageReader {
     */
   case class Loaded(df: DataFrame, errorRows: Long)
 
+  /** Eager form: the parse is cached and its rejected rows counted up
+    * front, so `errorRows` is known before `df` is used. The cache is
+    * required, not an optimisation: Spark's CSV source refuses a query
+    * whose only referenced column is the corrupt-record column.
+    */
   def read(spark: SparkSession, path: String, schema: StructType): Loaded = {
-    val withCorrupt = schema.add(CorruptCol, StringType)
-    val raw = spark.read
+    val raw = parse(spark, path, schema).cache()
+    Loaded(clean(raw, schema), raw.filter(col(CorruptCol).isNotNull).count())
+  }
+
+  /** Single-pass result: the clean rows of an uncached parse, and the
+    * `Observation` that the first action over `df` fills with the rows
+    * kept and rejected. `kept` and `rejected` block until that action
+    * has run.
+    */
+  case class Staged(df: DataFrame, metrics: Observation) {
+    def kept: Long = metrics.get("kept").asInstanceOf[Long]
+    def rejected: Long = metrics.get("rejected").asInstanceOf[Long]
+  }
+
+  /** Single-pass form for a loader that consumes the rows once (the
+    * staging write): no cache and no count job; the ON_ERROR=CONTINUE
+    * accounting rides on the pass that reads the file.
+    */
+  def stage(spark: SparkSession, path: String, schema: StructType): Staged = {
+    val metrics = Observation()
+    val bad = col(CorruptCol).isNotNull
+    val raw = parse(spark, path, schema).observe(metrics,
+      count_if(!bad).as("kept"), count_if(bad).as("rejected"))
+    Staged(clean(raw, schema), metrics)
+  }
+
+  /** The PERMISSIVE parse, with the corrupt-record column, uncached. */
+  private def parse(spark: SparkSession, path: String,
+      schema: StructType): DataFrame =
+    spark.read
       .option("header", "true")
       .option("nullValue", "NULL")
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", CorruptCol)
-      .schema(withCorrupt)
+      .schema(schema.add(CorruptCol, StringType))
       .csv(path)
-      .cache()
-    val bad = raw.filter(col(CorruptCol).isNotNull).count()
-    val clean = raw.filter(col(CorruptCol).isNull).drop(CorruptCol)
-    // second NULL_IF token + EMPTY_FIELD_AS_NULL for string columns
-    val normalized = schema.fields.foldLeft(clean) { (df, f) =>
-      if (f.dataType == StringType)
-        df.withColumn(f.name,
-          when(col(f.name) === "null" || col(f.name) === "", lit(null))
-            .otherwise(col(f.name)))
-      else df
+
+  /** Rejected rows dropped, then the second NULL_IF token and
+    * EMPTY_FIELD_AS_NULL applied to the string columns.
+    */
+  private def clean(raw: DataFrame, schema: StructType): DataFrame =
+    schema.fields.foldLeft(raw.filter(col(CorruptCol).isNull).drop(CorruptCol)) {
+      (df, f) =>
+        if (f.dataType == StringType)
+          df.withColumn(f.name,
+            when(col(f.name) === "null" || col(f.name) === "", lit(null))
+              .otherwise(col(f.name)))
+        else df
     }
-    Loaded(normalized, bad)
-  }
 
   /** The reference's two observed source timestamp styles
     * (`1/1/13 20:54` and `2013-01-01 21:20:22`,

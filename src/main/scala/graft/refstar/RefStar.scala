@@ -26,6 +26,11 @@ import graft.etl.{DateDim, SurrogateKeys}
   * which co-partitions on the header key. Surrogate keys use the
   * dims-only single-partition row_number (see SurrogateKeys scaladoc);
   * facts carry natural keys.
+  *
+  * Staging rows: the dimension and target-fact recipes read each staging
+  * entity through their `stage` argument. It defaults to the CSV itself
+  * (`Staging.load`); `Warehouse.build` passes the persisted staging
+  * parquet instead, so a rebuild parses every CSV exactly once.
   */
 object RefStar {
 
@@ -49,10 +54,11 @@ object RefStar {
 
   val LocationCols = Seq("Address", "City", "PostalCode", "State_Province", "Country")
 
-  def dimLocation(spark: SparkSession): DataFrame = {
-    val base = locationRows(Staging.load(spark, "customer"))
-      .union(locationRows(Staging.load(spark, "store")))
-      .union(locationRows(Staging.load(spark, "reseller")))
+  def dimLocation(spark: SparkSession,
+      stage: Staging.Source = Staging.load): DataFrame = {
+    val base = locationRows(stage(spark, "customer"))
+      .union(locationRows(stage(spark, "store")))
+      .union(locationRows(stage(spark, "reseller")))
       .distinct()
     SurrogateKeys.withUnknownMemberOrdered(spark, base, "DimLocationID",
       LocationCols, unknown = LocationCols.map(_ -> "Unknown").toMap)
@@ -79,9 +85,10 @@ object RefStar {
       .drop("__loc_key", "__l_addr", "__l_city", "__l_postal", "__l_state", "__l_country")
   }
 
-  def dimChannel(spark: SparkSession): DataFrame = {
-    val base = Staging.load(spark, "channel")
-      .join(Staging.load(spark, "channelcategory")
+  def dimChannel(spark: SparkSession,
+      stage: Staging.Source = Staging.load): DataFrame = {
+    val base = stage(spark, "channel")
+      .join(stage(spark, "channelcategory")
           .select(col("CHANNELCATEGORYID").as("__cc_id"), col("CHANNELCATEGORY")),
         col("CHANNELCATEGORYID") === col("__cc_id"))
       .filter(col("CHANNEL").isNotNull)
@@ -95,9 +102,10 @@ object RefStar {
         "ChannelName" -> "Unknown Channel", "ChannelCategory" -> "Unknown"))
   }
 
-  def dimCustomer(spark: SparkSession, dimLoc: DataFrame): DataFrame = {
+  def dimCustomer(spark: SparkSession, dimLoc: DataFrame,
+      stage: Staging.Source = Staging.load): DataFrame = {
     val base = withLocationKey(
-      Staging.load(spark, "customer").filter(col("CUSTOMERID").isNotNull), dimLoc)
+      stage(spark, "customer").filter(col("CUSTOMERID").isNotNull), dimLoc)
       .select(
         col("CUSTOMERID").as("CustomerID"),
         col("DimLocationID"),
@@ -112,9 +120,10 @@ object RefStar {
         "CustomerLastName" -> "Unknown", "CustomerGender" -> "Unknown"))
   }
 
-  def dimReseller(spark: SparkSession, dimLoc: DataFrame): DataFrame = {
+  def dimReseller(spark: SparkSession, dimLoc: DataFrame,
+      stage: Staging.Source = Staging.load): DataFrame = {
     val base = withLocationKey(
-      Staging.load(spark, "reseller").filter(col("RESELLERID").isNotNull), dimLoc)
+      stage(spark, "reseller").filter(col("RESELLERID").isNotNull), dimLoc)
       .select(
         col("RESELLERID").as("ResellerID"),
         col("DimLocationID"),
@@ -128,9 +137,10 @@ object RefStar {
         "PhoneNumber" -> "Unknown", "Email" -> "Unknown"))
   }
 
-  def dimStore(spark: SparkSession, dimLoc: DataFrame): DataFrame = {
+  def dimStore(spark: SparkSession, dimLoc: DataFrame,
+      stage: Staging.Source = Staging.load): DataFrame = {
     val base = withLocationKey(
-      Staging.load(spark, "store").filter(col("STOREID").isNotNull), dimLoc)
+      stage(spark, "store").filter(col("STOREID").isNotNull), dimLoc)
       .select(
         col("STOREID").as("StoreID"),
         col("DimLocationID"),
@@ -144,16 +154,17 @@ object RefStar {
         "StoreManager" -> "Unknown"))
   }
 
-  def dimProduct(spark: SparkSession): DataFrame = {
+  def dimProduct(spark: SparkSession,
+      stage: Staging.Source = Staging.load): DataFrame = {
     val price = coalesce(col("PRICE"), lit(0.0))
     val cost = coalesce(col("COST"), lit(0.0))
     val wholesale = coalesce(col("WHOLESALEPRICE"), lit(0.0))
-    val base = Staging.load(spark, "product")
-      .join(Staging.load(spark, "producttype")
+    val base = stage(spark, "product")
+      .join(stage(spark, "producttype")
           .select(col("PRODUCTTYPEID").as("__pt_id"), col("PRODUCTTYPE"),
             col("PRODUCTCATEGORYID")),
         col("PRODUCTTYPEID") === col("__pt_id"))
-      .join(Staging.load(spark, "productcategory")
+      .join(stage(spark, "productcategory")
           .select(col("PRODUCTCATEGORYID").as("__pc_id"), col("PRODUCTCATEGORY")),
         col("PRODUCTCATEGORYID") === col("__pc_id"))
       .filter(col("PRODUCTID").isNotNull)
@@ -321,8 +332,9 @@ object RefStar {
   /** Fact_ProductSalesTarget: product targets keyed to Jan-1 of the
     * target year (yyyyMMdd), unknown-product fallback.
     */
-  def factProductSalesTarget(spark: SparkSession, product: DataFrame): DataFrame =
-    Staging.load(spark, "targetdataproduct")
+  def factProductSalesTarget(spark: SparkSession, product: DataFrame,
+      stage: Staging.Source = Staging.load): DataFrame =
+    stage(spark, "targetdataproduct")
       .join(product.select(col("DimProductID"), col("ProductID").as("__p_pid")),
         col("PRODUCTID") === col("__p_pid"), "left")
       .select(
@@ -336,8 +348,9 @@ object RefStar {
     * Store' that exist only in the source file).
     */
   def factSrcSalesTarget(spark: SparkSession, store: DataFrame,
-                         reseller: DataFrame, channel: DataFrame): DataFrame =
-    Staging.load(spark, "targetdatachannel")
+      reseller: DataFrame, channel: DataFrame,
+      stage: Staging.Source = Staging.load): DataFrame =
+    stage(spark, "targetdatachannel")
       .join(channel.select(col("DimChannelID"), col("ChannelName").as("__ch_nm")),
         col("CHANNELNAME") === col("__ch_nm"), "left")
       .join(store.select(col("DimStoreID"), col("StoreName").as("__s_nm")),

@@ -57,11 +57,27 @@ object Staging {
     "targetdataproduct" -> StructType(
       Seq(l("PRODUCTID"), s("PRODUCT"), l("YEAR"), l("SALESQUANTITYTARGET"))))
 
-  /** Load one staging entity through the CSV stage reader (NULL_IF,
-    * empty-as-null, error-tolerant) with its declared schema.
+  /** Where a recipe reads a staging entity's rows from: `load` (the
+    * CSV) or the Warehouse's persisted staging table.
     */
-  def load(spark: SparkSession, entity: String): DataFrame = {
-    val root = Fixtures.ensure()
-    CsvStageReader.read(spark, s"$root/$entity/$entity.csv", schemas(entity)).df
-  }
+  type Source = (SparkSession, String) => DataFrame
+
+  /** Load one staging entity through the CSV stage reader (NULL_IF,
+    * empty-as-null, error-tolerant) with its declared schema. Cached and
+    * counted up front (`CsvStageReader.read`); a frame that is consumed
+    * once should come from `stage` instead.
+    */
+  def load(spark: SparkSession, entity: String): DataFrame =
+    CsvStageReader.read(spark, csv(entity), schemas(entity)).df
+
+  /** The same rows as `load`, parsed in the pass that consumes them: no
+    * cache and no count job; the rows kept and rejected are reported by
+    * that pass (`CsvStageReader.stage`). This is the staging write's
+    * COPY INTO.
+    */
+  def stage(spark: SparkSession, entity: String): CsvStageReader.Staged =
+    CsvStageReader.stage(spark, csv(entity), schemas(entity))
+
+  private def csv(entity: String): String =
+    s"${Fixtures.ensure()}/$entity/$entity.csv"
 }

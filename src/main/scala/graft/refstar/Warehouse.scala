@@ -2,8 +2,10 @@ package graft.refstar
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, floor}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{col, count, floor, lit}
+
+import graft.Waves
 
 /** The materialized star — the reference's core architecture, which the
   * lazy `RefStar` recipes alone do not reproduce: the reference *persists*
@@ -18,6 +20,8 @@ import org.apache.spark.sql.functions.{col, floor}
   * entities that look it up, rahil/run_dimensional_etl.py:31-59), then
   * the 3 facts FROM THE PERSISTED DIMS (like load_fact_tables.py joining
   * dimension tables, not re-deriving them) — and writes each as parquet.
+  * Dims and facts alike read the persisted staging layer, so each CSV is
+  * parsed once per build, by its staging write.
   * `table` hands out a plain parquet scan, so every downstream view is a
   * columnar read with pushdown/pruning instead of a CSV star rebuild.
   *
@@ -123,6 +127,12 @@ object Warehouse {
       .drop(FactYearCol)
   }
 
+  /** A staging entity as the build persisted it: the `Staging.Source`
+    * every recipe of the build reads, in place of the CSV.
+    */
+  private val staged: Staging.Source =
+    (spark, entity) => spark.read.parquet(path(s"stg_$entity"))
+
   /** The resolved sales fact (with the `SaleYear` partition column),
     * derived from the PERSISTED staging layer and the given persisted
     * dims — the one recipe shared by the full build and the incremental
@@ -134,10 +144,10 @@ object Warehouse {
   private def salesFactFrame(spark: SparkSession, product: DataFrame,
       store: DataFrame, customer: DataFrame, reseller: DataFrame,
       channel: DataFrame, years: Option[Seq[Int]] = None): DataFrame = {
-    val detail = spark.read.parquet(path("stg_salesdetail"))
+    val detail = staged(spark, "salesdetail")
       .select("SALESDETAILID", "SALESHEADERID", "PRODUCTID", "SALESQUANTITY",
         "SALESAMOUNT")
-    val headerAll = spark.read.parquet(path("stg_salesheader"))
+    val headerAll = staged(spark, "salesheader")
       .select(col("SALESHEADERID").as("__h_hid"), col("DATE"), col("CHANNELID"),
         col("STOREID"), col("CUSTOMERID"), col("RESELLERID"))
     val header = years.fold(headerAll)(ys => headerAll.filter(
@@ -195,7 +205,12 @@ object Warehouse {
       .filter(col(FactYearCol).isin(years: _*)).count()
   }
 
-  case class Step(name: String, rows: Long, seconds: Double)
+  /** One persisted table's accounting: rows written, wall seconds from
+    * the start of its recipe to the end of its write (0 when a fresh
+    * store was reused), and, for a staging table, the CSV rows rejected
+    * under ON_ERROR=CONTINUE.
+    */
+  case class Step(name: String, rows: Long, seconds: Double, rejected: Long = 0L)
 
   @volatile private var memo: Option[Seq[Step]] = None
 
@@ -268,77 +283,75 @@ object Warehouse {
     graft.runner.RefStarRunner.invalidate(spark)
   }
 
-  /** The build runs in dependency WAVES, each wave's independent writes
-    * submitted as concurrent Spark jobs (the scheduler interleaves
-    * them across the same executors — exactly what a production ETL
-    * driver does): staging ∥ → (date ∥ channel ∥ product ∥ location) →
-    * (customer ∥ reseller ∥ store) → (sales fact ∥ both target facts).
-    * Barriers between waves preserve the reference's dependency order
-    * (Location before the dims that look it up, dims before facts).
+  /** The build runs in dependency waves (`graft.Waves`): staging ∥ →
+    * (date ∥ channel ∥ product ∥ location) → (customer ∥ reseller ∥
+    * store) → (sales fact ∥ both target facts). Barriers between waves
+    * preserve the reference's dependency order (Location before the dims
+    * that look it up, dims before facts). Every table is written in one
+    * pass: its `Step` row count is observed on the write itself
+    * (`Dataset.observe`), never read back, and its clock starts before
+    * the recipe is built, so eager recipe work (surrogate-key jobs) is
+    * charged to the table that pays for it.
     */
   private def build(spark: SparkSession): Seq[Step] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     val steps = scala.collection.mutable.ArrayBuffer.empty[Step]
 
-    def write(name: String, df: DataFrame,
-              partitionCols: Seq[String] = Nil): DataFrame = {
-      val t0 = System.nanoTime()
-      val w = df.write.mode("overwrite")
-      (if (partitionCols.isEmpty) w else w.partitionBy(partitionCols: _*))
-        .parquet(path(name))
-      val back = spark.read.parquet(path(name))
-      val n = back.count()
+    def record(name: String, t0: Long, rows: Long, rejected: Long = 0L): Unit =
       steps.synchronized {
-        steps += Step(name, n, (System.nanoTime() - t0) / 1e9)
+        steps += Step(name, rows, (System.nanoTime() - t0) / 1e9, rejected)
       }
-      back
+
+    // the loaded staging database (COPY INTO equivalent): each CSV is
+    // parsed once, by its write, which also reports the rows it rejected
+    def stage(entity: String): Unit = {
+      val t0 = System.nanoTime()
+      val staged = Staging.stage(spark, entity)
+      staged.df.write.mode("overwrite").parquet(path(s"stg_$entity"))
+      record(s"stg_$entity", t0, staged.kept, staged.rejected)
     }
 
-    // finite barrier: an executor-side hang surfaces as a loud build
-    // failure (caught by the runner's abort-on-failure accounting)
-    // instead of a silent forever-blocked driver
-    def wave[A](fs: Seq[() => A]): Seq[A] =
-      Await.result(Future.sequence(fs.map(f => Future(f()))),
-        Duration(15, scala.concurrent.duration.MINUTES))
+    def write(name: String, partitionCols: Seq[String] = Nil)(
+        recipe: => DataFrame): DataFrame = {
+      val t0 = System.nanoTime()
+      val rows = Observation()
+      val w = recipe.observe(rows, count(lit(1)).as("rows")).write.mode("overwrite")
+      (if (partitionCols.isEmpty) w else w.partitionBy(partitionCols: _*))
+        .parquet(path(name))
+      record(name, t0, rows.get("rows").asInstanceOf[Long])
+      spark.read.parquet(path(name))
+    }
 
-    try {
-      // staging layer: the loaded staging database (COPY INTO equivalent)
-      wave(Staging.schemas.keys.toSeq.sorted.map(e =>
-        () => write(s"stg_$e", Staging.load(spark, e))))
+    Waves(Staging.schemas.keys.toSeq.sorted.map(e => () => stage(e)))
 
-      // independent dims + the location root of the dependency chain
-      val Seq(_, channel, product, loc) = wave(Seq(
-        () => write("dim_date", RefStar.dimDate(spark)),
-        () => write("dim_channel", RefStar.dimChannel(spark).coalesce(1)),
-        () => write("dim_product", RefStar.dimProduct(spark).coalesce(1)),
-        () => write("dim_location", RefStar.dimLocation(spark).coalesce(1))))
+    // independent dims + the location root of the dependency chain; from
+    // here on every recipe reads the persisted staging layer, not a CSV
+    val Seq(_, channel, product, loc) = Waves(Seq(
+      () => write("dim_date")(RefStar.dimDate(spark)),
+      () => write("dim_channel")(RefStar.dimChannel(spark, staged).coalesce(1)),
+      () => write("dim_product")(RefStar.dimProduct(spark, staged).coalesce(1)),
+      () => write("dim_location")(RefStar.dimLocation(spark, staged).coalesce(1))))
 
-      // the three location-dependent entity dims
-      val Seq(customer, reseller, store) = wave(Seq(
-        () => write("dim_customer", RefStar.dimCustomer(spark, loc).coalesce(1)),
-        () => write("dim_reseller", RefStar.dimReseller(spark, loc).coalesce(1)),
-        () => write("dim_store", RefStar.dimStore(spark, loc).coalesce(1))))
+    // the three location-dependent entity dims
+    val Seq(customer, reseller, store) = Waves(Seq(
+      () => write("dim_customer")(
+        RefStar.dimCustomer(spark, loc, staged).coalesce(1)),
+      () => write("dim_reseller")(
+        RefStar.dimReseller(spark, loc, staged).coalesce(1)),
+      () => write("dim_store")(RefStar.dimStore(spark, loc, staged).coalesce(1))))
 
-      // facts join the PERSISTED dims (reference load_fact_tables.py:102)
-      // and read the PERSISTED staging layer — the reference's facts load
-      // from staging tables, and the 187 K-row CSVs were already parsed
-      // once when the staging layer was written above. The sales fact is
-      // written DATE-PARTITIONED by derived year: each write task emits
-      // one file per year it holds (no extra shuffle in the timed build),
-      // and year-filtered views prune at listing time
-      wave(Seq(
-        () => write("fact_salesactual",
-          salesFactFrame(spark, product, store, customer, reseller, channel),
-          partitionCols = Seq(FactYearCol)),
-        () => write("fact_productsalestarget",
-          RefStar.factProductSalesTarget(spark, product)),
-        () => write("fact_srcsalestarget",
-          RefStar.factSrcSalesTarget(spark, store, reseller, channel))))
-    } finally pool.shutdown()
+    // facts join the PERSISTED dims (reference load_fact_tables.py:102)
+    // and read the persisted staging layer, as the reference's facts
+    // load from staging tables. The sales fact is written
+    // DATE-PARTITIONED by derived year: each write task emits one file
+    // per year it holds (no extra shuffle in the timed build), and
+    // year-filtered views prune at listing time
+    Waves(Seq(
+      () => write("fact_salesactual", partitionCols = Seq(FactYearCol))(
+        salesFactFrame(spark, product, store, customer, reseller, channel)),
+      () => write("fact_productsalestarget")(
+        RefStar.factProductSalesTarget(spark, product, staged)),
+      () => write("fact_srcsalestarget")(
+        RefStar.factSrcSalesTarget(spark, store, reseller, channel, staged))))
 
     steps.toSeq
   }

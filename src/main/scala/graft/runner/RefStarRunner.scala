@@ -2,10 +2,11 @@ package graft.runner
 
 import org.apache.spark.sql.SparkSession
 
+import graft.Waves
 import graft.refstar.{RefStarViewsSql, Views, Warehouse}
 
-/** Sequenced driver for the reference-entity star, mirroring the
-  * reference's three entry points:
+/** Driver for the reference-entity star, mirroring the reference's
+  * three entry points:
   *
   *  - `runStaging`     — rahil/run_etl.py:24-46: staging database +
   *    the 12 loaded staging tables
@@ -24,7 +25,9 @@ import graft.refstar.{RefStarViewsSql, Views, Warehouse}
   * over the Warehouse parquet — the catalog is metadata; the data was
   * materialized once by the Warehouse build (INSERT INTO…SELECT
   * equivalent). Per-step row-count accounting reproduces the
-  * reference's checkpoint prints (rahil/load_data.py:47-60).
+  * reference's checkpoint prints (rahil/load_data.py:47-60). Unlike the
+  * reference's one-statement-at-a-time scripts, `run` issues its catalog
+  * steps in dependency waves, so abort-on-failure is per wave.
   */
 object RefStarRunner {
 
@@ -112,32 +115,42 @@ object RefStarRunner {
   case class StepResult(step: String, ok: Boolean, rows: Long,
                         error: Option[String])
 
-  /** Full pipeline: staging → dimensional → views, abort-on-failure. */
+  /** Full pipeline: staging → dimensional → views, abort-on-failure.
+    *
+    * The catalog steps run in dependency waves (`graft.Waves`), each
+    * step depending only on the tables it names: the databases; then the
+    * 12 staging and 10 star registrations; then the 10 pass-through and
+    * 7 analytical views. A wave with a failed step stops every later
+    * wave. Results are listed in declared step order whatever order the
+    * steps finished in.
+    */
   def run(spark: SparkSession): Seq[StepResult] = {
     val rs = scala.collection.mutable.ArrayBuffer.empty[StepResult]
 
-    def step(name: String)(f: => Long): Unit =
-      if (!rs.exists(!_.ok)) // abort-on-failure sequencing
-        try {
-          val n = f
-          rs += StepResult(name, n > 0, n, if (n > 0) None else Some("empty result"))
-        } catch {
-          case e: Exception =>
-            rs += StepResult(name, ok = false, 0L, Some(e.getMessage))
-        }
+    def step(name: String)(f: => Long): () => StepResult = () =>
+      try {
+        val n = f
+        StepResult(name, n > 0, n, if (n > 0) None else Some("empty result"))
+      } catch {
+        case e: Exception => StepResult(name, ok = false, 0L, Some(e.getMessage))
+      }
+
+    // abort-on-failure sequencing, one wave at a time
+    def wave(steps: Seq[() => StepResult]): Unit =
+      if (rs.forall(_.ok)) rs ++= Waves(steps)
 
     // phase 0: the two databases (create_database.py:41-46)
-    step("create_databases") {
+    wave(Seq(step("create_databases") {
       spark.sql(s"CREATE DATABASE IF NOT EXISTS $StagingDb")
       spark.sql(s"CREATE DATABASE IF NOT EXISTS $DimensionDb")
       2L
-    }
+    }))
 
     // phase 1+2: materialize (or reuse) the warehouse — the Warehouse
     // build itself runs staging → dims (Location first) → facts in the
     // reference's dependency order; surface its per-table accounting
     // as runner steps so the checkpoint trail matches run_etl's.
-    if (!rs.exists(!_.ok)) {
+    if (rs.forall(_.ok)) {
       val built = try Warehouse.ensure(spark) catch {
         case e: Exception =>
           rs += StepResult("warehouse_build", ok = false, 0L, Some(e.getMessage))
@@ -149,8 +162,11 @@ object RefStarRunner {
       }
     }
 
-    // register staging tables under the staging database
-    (Warehouse.StagingTables).foreach { tbl =>
+    // register staging tables under the staging database, and star
+    // tables under the dimension database; the sales fact is
+    // date-partitioned on disk, so its external table needs its
+    // partition metadata recovered before the catalog serves any rows
+    wave(Warehouse.StagingTables.map { tbl =>
       val entity = tbl.stripPrefix("stg_")
       step(s"register_$StagingDb.$entity") {
         spark.sql(s"DROP TABLE IF EXISTS $StagingDb.$entity")
@@ -158,12 +174,7 @@ object RefStarRunner {
           s"LOCATION '${Warehouse.path(tbl)}'")
         spark.table(s"$StagingDb.$entity").count()
       }
-    }
-
-    // register star tables under the dimension database; the sales fact
-    // is date-partitioned on disk, so its external table needs its
-    // partition metadata recovered before the catalog serves any rows
-    (Warehouse.DimTables ++ Warehouse.FactTables).foreach { tbl =>
+    } ++ (Warehouse.DimTables ++ Warehouse.FactTables).map { tbl =>
       step(s"register_$DimensionDb.$tbl") {
         spark.sql(s"DROP TABLE IF EXISTS $DimensionDb.$tbl")
         spark.sql(s"CREATE TABLE $DimensionDb.$tbl USING parquet " +
@@ -172,39 +183,39 @@ object RefStarRunner {
           spark.sql(s"ALTER TABLE $DimensionDb.$tbl RECOVER PARTITIONS")
         spark.table(s"$DimensionDb.$tbl").count()
       }
-    }
+    })
 
-    // phase 3: the 17 views (run_views_etl.py)
-    PassThroughViews.foreach { case (view, tbl, cols) =>
-      step(s"view_$view") {
-        val colList = cols.map(c => s"`$c`").mkString(", ")
-        spark.sql(s"CREATE OR REPLACE VIEW $DimensionDb.$view AS " +
-          s"SELECT $colList FROM $DimensionDb.$tbl")
-        spark.table(s"$DimensionDb.$view").count()
-      }
-    }
+    // phase 3: the 17 views (run_views_etl.py).
     // The shared view SQL names star tables bare; CREATE VIEW under
     // USE <DimensionDb> captures that database as the view's resolution
     // context (Spark stores it with the view), so bare names resolve
     // through the CATALOG — no text rewriting, and a CTE that happens
     // to be named dim_*/fact_* still shadows the table, as SQL says it
     // must (a previous regex-rewrite here would have qualified it).
-    // The CREATEs run in a sibling session (shared catalog, EMPTY temp
-    // namespace): CREATE VIEW analyzes its body in the creating session,
-    // where a session temp view named dim_* — session-local scratch
-    // state, no analogue in the reference's Snowflake catalog — would
-    // outrank the catalog table and hijack resolution (the round-12
-    // suite hit exactly that: an unrelated suite's temp `dim_date`
-    // broke vw_salesperformancesummary's creation).
-    if (!rs.exists(!_.ok)) {
+    // The analytical CREATEs run in a sibling session (shared catalog,
+    // EMPTY temp namespace): CREATE VIEW analyzes its body in the
+    // creating session, where a session temp view named dim_* —
+    // session-local scratch state, no analogue in the reference's
+    // Snowflake catalog — would outrank the catalog table and hijack
+    // resolution (the round-12 suite hit exactly that: an unrelated
+    // suite's temp `dim_date` broke vw_salesperformancesummary's
+    // creation).
+    if (rs.forall(_.ok)) {
       val clean = spark.newSession()
       clean.sql(s"USE $DimensionDb")
-      AnalyticalViews.foreach { case (view, sql) =>
+      wave(PassThroughViews.map { case (view, tbl, cols) =>
+        step(s"view_$view") {
+          val colList = cols.map(c => s"`$c`").mkString(", ")
+          spark.sql(s"CREATE OR REPLACE VIEW $DimensionDb.$view AS " +
+            s"SELECT $colList FROM $DimensionDb.$tbl")
+          spark.table(s"$DimensionDb.$view").count()
+        }
+      } ++ AnalyticalViews.map { case (view, sql) =>
         step(s"view_$view") {
           clean.sql(s"CREATE OR REPLACE VIEW $DimensionDb.$view AS $sql")
           spark.table(s"$DimensionDb.$view").count()
         }
-      }
+      })
     }
 
     rs.toSeq

@@ -30,6 +30,14 @@ class EtlSpec extends SparkSpec {
     assert(rows.length == 3)
     assert(rows(1).isNullAt(1) && rows(1).isNullAt(2)) // NULL + null tokens
     assert(rows(2).isNullAt(2)) // empty field as null
+    // the single-pass form: the staging write itself reports the
+    // ON_ERROR=CONTINUE accounting, with no cache and no count job
+    val staged = CsvStageReader.stage(spark, f.getAbsolutePath, schema)
+    val out = new java.io.File(dir, "channel.parquet").getAbsolutePath
+    staged.df.write.parquet(out)
+    assert(staged.rejected == 1 && staged.kept == 3)
+    assert(spark.read.parquet(out).orderBy("CHANNELID").collect().toSeq ==
+      rows.toSeq)
     assert(CsvStageReader.stageHasFiles(spark, f.getAbsolutePath))
     assert(!CsvStageReader.stageHasFiles(spark, new java.io.File(dir, "missing*.csv").getAbsolutePath))
   }

@@ -194,4 +194,33 @@ class RefStarRunnerSpec extends SparkSpec {
     assert(perYear.keySet == Set(2013, 2014) && perYear.values.sum == 187320L,
       perYear.toString)
   }
+
+  test("a failed step stops every later wave; results keep declared order") {
+    // its own warehouse, so the suite's shared `results` are untouched:
+    // built, then one star table's parquet removed under the memoised
+    // build, so only its catalog registration can fail
+    sys.props("graft.warehouse.dir") = Fixture.dir("graft-runner-abort")
+    Warehouse.invalidateMemo()
+    try {
+      Warehouse.ensure(spark)
+      Fixture.deleteTree(new java.io.File(Warehouse.path("dim_store")))
+      val rs = RefStarRunner.run(spark)
+      val dim = RefStarRunner.DimensionDb
+      assert(rs.filterNot(_.ok).map(_.step) == Seq(s"register_$dim.dim_store"),
+        rs.filterNot(_.ok).map(r => s"${r.step}: ${r.error}").mkString("; "))
+      val steps = rs.map(_.step)
+      assert(!steps.exists(_.startsWith("view_")), steps)
+      val loads = steps.filter(_.startsWith("load_"))
+      assert(loads.size == 22, loads)
+      val registrations = Warehouse.StagingTables.map(t =>
+        s"register_${RefStarRunner.StagingDb}.${t.stripPrefix("stg_")}") ++
+        (Warehouse.DimTables ++ Warehouse.FactTables).map(t => s"register_$dim.$t")
+      assert(steps == Seq("create_databases") ++ loads ++ registrations, steps)
+    } finally {
+      // point the catalog back at the suite's warehouse
+      sys.props("graft.warehouse.dir") = whTmp
+      Warehouse.invalidateMemo()
+      RefStarRunner.run(spark)
+    }
+  }
 }
