@@ -1,8 +1,11 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, input_file_name, max, min}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row, SparkSession}
+import org.apache.spark.sql.functions.{array, broadcast, col, concat, concat_ws,
+  count, explode, hex, input_file_name, length, lit, locate, max, min,
+  regexp_extract, regexp_replace, when}
+import org.apache.spark.sql.types.{DataType, IntegerType, StringType, StructField, StructType}
 
 /** Persisted per-file min/max statistics for driver-side scan planning —
   * the manifest half of the lakehouse layout story (Delta/Iceberg keep
@@ -18,10 +21,10 @@ import org.apache.spark.sql.functions.{col, input_file_name, max, min}
   * task-skipping time.
   *
   * Format: `_stats_manifest` (underscore prefix — Spark data readers
-  * ignore it) holding one line per data file:
-  * `relativePath\tcol\tmin\tmax` with values in a compare-stable text
-  * encoding (numerics zero-padded via SQL `format_string`? no — see
-  * below: values are stored raw and compared TYPED at prune time).
+  * ignore it) holding one line per (data file, column):
+  * `relativePath\tcol\ttype\tmin\tmax`. Values are stored raw, with the
+  * field and record delimiters percent-escaped ([[enc]]), and compared
+  * TYPED at prune time by the recorded type name ([[cmp]]).
   *
   * The manifest is rebuilt in ONE distributed pass (group-by on
   * `input_file_name`), so refreshing it after compaction costs a scan
@@ -32,6 +35,9 @@ import org.apache.spark.sql.functions.{col, input_file_name, max, min}
 object StatsManifest {
 
   private def manifestPath(table: String) = new Path(table, "_stats_manifest")
+
+  private def fsOf(spark: SparkSession, table: String): FileSystem =
+    new Path(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Orderable types the manifest supports. Anything else is rejected at
     * write() time — a type cmp() can't order (boolean, binary, array,
@@ -77,25 +83,47 @@ object StatsManifest {
     sb.toString
   }
 
+  /** The lines of `p`, or None when it does not exist. */
+  private def readLines(fs: FileSystem, p: Path): Option[List[String]] =
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      try Some(scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList)
+      finally in.close()
+    }
+
+  /** `rel -> middle fields` of the per-file lines for `column`: the
+    * fields between `rel\tcol` and the line's end, `width` of them.
+    */
+  private def perFileFields(lines: Seq[String], column: String,
+                            width: Int): Map[String, Array[String]] =
+    lines.map(_.split('\t')).collect {
+      case a if a.length == 2 + width && a(1) == column => dec(a(0)) -> a.drop(2)
+    }.toMap
+
+  /** Type names of `cols`, rejecting any type `layer` can't prune by. */
+  private def typesOf(df: DataFrame, cols: Seq[String],
+                      layer: Layer): Map[String, String] = {
+    val types = cols.map(c => c -> df.schema(c).dataType.typeName).toMap
+    val bad = cols.filterNot(c => layer.accepts(types(c)))
+    if (bad.nonEmpty)
+      throw new IllegalArgumentException(
+        layer.rejects + bad.map(c => s"$c:${types(c)}").mkString(", "))
+    types
+  }
+
   /** One manifest line per (file, column) of `df`, which must read from
     * under `table` (stats grouped by `input_file_name`).
     */
   private def statsLines(table: String, df: DataFrame, cols: Seq[String]): String = {
-    val types = cols.map(c => c -> df.schema(c).dataType.typeName).toMap
-    val bad = cols.filterNot(c => supportedType(types(c)))
-    if (bad.nonEmpty)
-      throw new IllegalArgumentException(
-        s"StatsManifest: unsupported (un-orderable) column types: " +
-          bad.map(c => s"$c:${types(c)}").mkString(", "))
-    val aggs = cols.flatMap(c => Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
+    val types = typesOf(df, cols, Stats)
+    val aggs = cols.flatMap(Stats.fileAggs)
     val rows = df.groupBy(input_file_name().as("__file"))
       .agg(aggs.head, aggs.tail: _*)
       .collect() // one row per data FILE: driver metadata, like the listing
-    val root = new Path(table).toUri.getPath
     val sb = new StringBuilder
     rows.foreach { r =>
-      val uri = new java.net.URI(r.getAs[String]("__file")).getPath
-      val rel = uri.stripPrefix(root).stripPrefix("/")
+      val rel = relOf(table, new java.net.URI(r.getAs[String]("__file")).getPath)
       cols.foreach { c =>
         val lo = r.getAs[Any](s"min_$c")
         val hi = r.getAs[Any](s"max_$c")
@@ -106,14 +134,14 @@ object StatsManifest {
     sb.toString
   }
 
-  /** Atomic write-then-rename publish (readers see old or new, whole). */
-  private def publish(spark: SparkSession, table: String, content: String): Unit =
-    publishAt(spark, table, manifestPath(table), "._stats_manifest.tmp", content)
-
-  private def publishAt(spark: SparkSession, table: String, target: Path,
-                        tmpName: String, content: String): Unit = {
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(table, tmpName)
+  /** Atomic write-then-rename publish of `table/name` (readers see old
+    * or new, whole), staged at `table/.name.tmp`.
+    */
+  private def publishAt(spark: SparkSession, table: String, name: String,
+                        content: String): Unit = {
+    val fs = fsOf(spark, table)
+    val target = new Path(table, name)
+    val tmp = new Path(table, s".$name.tmp")
     val out = fs.create(tmp, true)
     try out.write(content.getBytes("UTF-8")) finally out.close()
     fs.delete(target, false)
@@ -126,7 +154,8 @@ object StatsManifest {
     * prune time from the recorded type name).
     */
   def write(spark: SparkSession, table: String, cols: Seq[String]): Unit =
-    publish(spark, table, statsLines(table, spark.read.parquet(table), cols))
+    publishAt(spark, table, "_stats_manifest",
+      statsLines(table, spark.read.parquet(table), cols))
 
   /** Extend the manifest to files it doesn't cover yet — the streaming
     * companion to [[write]]: a continuous ingest appends files every
@@ -139,19 +168,14 @@ object StatsManifest {
     */
   def appendMissing(spark: SparkSession, table: String,
                     colsIfNew: Seq[String] = Nil): Int = {
-    val fs = manifestPath(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, table)
     val cols = columnsOf(spark, table) match {
       case Nil => colsIfNew
       case cs => cs
     }
     if (cols.isEmpty) return 0
-    val existing =
-      if (!fs.exists(manifestPath(table))) ""
-      else {
-        val in = fs.open(manifestPath(table))
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      }
-    val covered = existing.linesIterator.flatMap(_.split('\t') match {
+    val existing = readLines(fs, manifestPath(table)).getOrElse(Nil)
+    val covered = existing.flatMap(_.split('\t') match {
       case Array(rel, _, _, _, _) => Some(dec(rel))
       case _ => None
     }).toSet
@@ -159,7 +183,8 @@ object StatsManifest {
       .filterNot(f => covered.contains(relOf(table, f)))
     if (missing.isEmpty) return 0
     val df = spark.read.option("basePath", table).parquet(missing: _*)
-    publish(spark, table, existing + statsLines(table, df, cols))
+    publishAt(spark, table, "_stats_manifest",
+      existing.map(_ + "\n").mkString + statsLines(table, df, cols))
     missing.size
   }
 
@@ -167,17 +192,12 @@ object StatsManifest {
     * lets a rewrite (compaction) refresh the manifest for the same
     * columns without the caller re-stating them.
     */
-  def columnsOf(spark: SparkSession, table: String): Seq[String] = {
-    val fs = manifestPath(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(manifestPath(table))) return Nil
-    val in = fs.open(manifestPath(table))
-    val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-    finally in.close()
-    lines.flatMap(_.split('\t') match {
-      case Array(_, c, _, _, _) => Some(c)
-      case _ => None
-    }).distinct
-  }
+  def columnsOf(spark: SparkSession, table: String): Seq[String] =
+    readLines(fsOf(spark, table), manifestPath(table)).getOrElse(Nil)
+      .flatMap(_.split('\t') match {
+        case Array(_, c, _, _, _) => Some(c)
+        case _ => None
+      }).distinct
 
   private def cmp(typeName: String, a: String, b: String): Int = typeName match {
     case "integer" | "long" | "short" | "byte" => java.lang.Long.compare(a.toLong, b.toLong)
@@ -187,11 +207,10 @@ object StatsManifest {
     case _ => a.compareTo(b) // string / date / timestamp: ISO text orders correctly
   }
 
-  /** Files of `table` whose [min,max] for `column` intersects [lo,hi] —
-    * the driver-side prune. Files with no manifest row for the column
-    * (written after the last refresh, or all-NULL) are conservatively
-    * KEPT, so a stale manifest can only under-prune, never lose rows.
-    */
+  /** Whether stats middle fields (type, min, max) can intersect [lo, hi]. */
+  private def overlaps(m: Array[String], lo: String, hi: String): Boolean =
+    cmp(m(0), dec(m(2)), lo) >= 0 && cmp(m(0), dec(m(1)), hi) <= 0
+
   private def relOf(table: String, file: String): String =
     file.stripPrefix(new Path(table).toUri.getPath).stripPrefix("/")
 
@@ -210,8 +229,7 @@ object StatsManifest {
     * sink root we enumerate COMMITTED files the same way a reader
     * does: plan a read of the table and take its `inputFiles`.
     */
-  private def listDataFiles(spark: SparkSession,
-                            fs: org.apache.hadoop.fs.FileSystem,
+  private def listDataFiles(spark: SparkSession, fs: FileSystem,
                             table: String): Seq[String] = {
     if (fs.exists(new Path(table, "_spark_metadata"))) {
       spark.read.parquet(table).inputFiles.toSeq
@@ -230,11 +248,15 @@ object StatsManifest {
     }
   }
 
+  /** Files of `table` whose [min,max] for `column` intersects [lo,hi] —
+    * the driver-side prune. Files with no manifest row for the column
+    * (written after the last refresh, or all-NULL) are conservatively
+    * KEPT, so a stale manifest can only under-prune, never lose rows.
+    */
   def candidateFiles(spark: SparkSession, table: String, column: String,
-                     lo: String, hi: String): Seq[String] = {
-    val fs = manifestPath(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    filterByStats(spark, table, listDataFiles(spark, fs, table), column, lo, hi)
-  }
+                     lo: String, hi: String): Seq[String] =
+    filterByStats(spark, table, listDataFiles(spark, fsOf(spark, table), table),
+      column, lo, hi)
 
   /** Prune an EXPLICIT file universe (absolute paths under `table`) by
     * the manifest's per-file stats — the composition point for layers
@@ -245,64 +267,52 @@ object StatsManifest {
     */
   def filterByStats(spark: SparkSession, table: String, files: Seq[String],
                     column: String, lo: String, hi: String): Seq[String] = {
-    val fs = manifestPath(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(manifestPath(table))) return files
-    val in = fs.open(manifestPath(table))
-    val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-    finally in.close()
-    val root = new Path(table).toUri.getPath
-    val stats = lines.flatMap { l =>
-      l.split('\t') match {
-        case Array(rel, c, tn, mn, mx) if c == column =>
-          Some(dec(rel) -> (tn, dec(mn), dec(mx)))
-        case _ => None
-      }
-    }.toMap
-    files.filter { f =>
-      val rel = f.stripPrefix(root).stripPrefix("/")
-      stats.get(rel) match {
-        case Some((tn, mn, mx)) => cmp(tn, mx, lo) >= 0 && cmp(tn, mn, hi) <= 0
-        case None => true // unknown file: keep (stale manifest is safe)
-      }
-    }
+    val stats = perFileFields(
+      readLines(fsOf(spark, table), manifestPath(table)).getOrElse(Nil),
+      column, Stats.width)
+    // unknown file: keep (stale manifest is safe)
+    files.filter(f => stats.get(relOf(table, f)).forall(overlaps(_, lo, hi)))
   }
 
-  // ----- Two-level (partition-grouped) stats manifest -------------------
+  // ----- Two-level (partition-grouped) manifests ------------------------
   //
-  // The single-file manifest above collects one row per data file on
-  // the driver at WRITE time and parses every line at PRUNE time —
-  // fine at gate scale (10³ files), but at 100 TB ≈ 10⁶ files that is
-  // GBs of driver state for a query touching one key range. The
-  // two-level layout bounds driver state by PARTITION count instead:
+  // The single-file manifests collect one row per data file on the
+  // driver at WRITE time and parse every line at PRUNE time — fine at
+  // gate scale (10³ files), but at 100 TB ≈ 10⁶ files that is GBs of
+  // driver state for a query touching one key range. The two-level
+  // layout bounds driver state by PARTITION count instead:
   //
-  //   _stats_manifest_parts            one line per (partition dir,
-  //                                    col): part, col, type, min,
-  //                                    max, n_files, file-set
+  //   <name>_parts                     one line per (partition dir,
+  //                                    col): part, col, <middle
+  //                                    fields>, n_files, file-set
   //                                    fingerprint — partition-scale,
   //                                    read whole at prune time
-  //   _stats_manifest_files/<part>     that partition's per-file lines
-  //                                    (the write() 5-field format) —
+  //   <name>_files/<enc(part)>         that partition's per-file lines
+  //                                    (rel, col, <middle fields>) —
   //                                    opened ONLY for partitions the
   //                                    parts summary could not decide
   //
-  // Write side is ONE distributed pass: per-file stats group by
+  // One engine serves two layers ([[Layer]]): min/max stats
+  // (`_stats_manifest`, middle fields type, min, max) and Bloom
+  // membership (`_bloom_manifest`, middle fields hash count, filter
+  // hex). A write rebuilds every partition; a refresh rebuilds only the
+  // stale ones and passes the other summary lines through verbatim.
+  //
+  // A rebuild is ONE distributed pass: per-file aggregates group by
   // input_file_name exactly as statsLines, but the per-file rows are
   // WRITTEN BY SPARK (partitionBy on a partition index) instead of
   // collected — the driver holds only the partition-scale summary and
   // the partition-name index, never a per-file row.
   //
-  // Prune side decides per partition: range intersects → open that
-  // partition's per-file lines and prune file by file; range disjoint
-  // AND the universe's file set matches the recorded one (count AND
+  // Prune side decides per partition: the probe may match → open that
+  // partition's per-file lines and prune file by file; no match AND the
+  // universe's file set matches the recorded one (count AND
   // fingerprint — count alone misses an equal-count replacement) →
-  // drop the whole partition WITHOUT touching per-file rows; disjoint
+  // drop the whole partition WITHOUT touching per-file rows; no match
   // but set mismatch (files appended/replaced since the manifest) →
   // open and prune per file, keeping unknown files. Unknown
   // partitions and unknown files are always kept — the same
   // stale-manifest-is-safe, never-lose-rows contract as filterByStats.
-
-  private def partsPath(table: String) = new Path(table, "_stats_manifest_parts")
-  private def filesDir(table: String) = new Path(table, "_stats_manifest_files")
 
   /** Per-partition prune outcome: the surviving files, how many
     * partitions the universe spanned, and how many per-file stats
@@ -312,12 +322,10 @@ object StatsManifest {
   final case class TwoLevelPrune(files: Seq[String], partsTotal: Int,
                                  partsOpened: Int)
 
-  private def encCol(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.regexp_replace
+  private def encCol(c: Column): Column =
     // %-escape first, then the delimiters — mirrors enc()
     regexp_replace(regexp_replace(regexp_replace(regexp_replace(
       c, "%", "%25"), "\t", "%09"), "\n", "%0A"), "\r", "%0D")
-  }
 
   /** Order-independent fingerprint of a partition's file SET (XOR of
     * xxhash64 over relative paths, seed 42 — the SQL `xxhash64`
@@ -343,7 +351,7 @@ object StatsManifest {
   }
 
   /** The distributed twin of [[fpOf]] over a `__rel` column. */
-  private def fpAgg: org.apache.spark.sql.Column =
+  private def fpAgg: Column =
     org.apache.spark.sql.functions.expr("bit_xor(xxhash64(__rel))")
 
   /** `input_file_name()` is a URI — percent-encoded — while the rel
@@ -361,64 +369,182 @@ object StatsManifest {
   private val uriPathUdf = org.apache.spark.sql.functions.udf((s: String) =>
     try new java.net.URI(s).getPath catch { case _: Exception => s })
 
-  private def relColOf(rootPath: String): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{length, lit, locate, when}
+  private def relColOf(rootPath: String): Column = {
     val p = uriPathUdf(col("__file"))
     val pos = locate(rootPath + "/", p)
     when(pos > 0, p.substr(pos + lit(rootPath.length + 1), length(p)))
       .otherwise(p)
   }
 
-  /** Rebuild the two-level manifest for a DIRECTORY-PARTITIONED table
-    * (every data file under at least one subdirectory of `table`; the
-    * first path segment is the partition). One distributed stats pass;
-    * driver state is partition-scale only.
+  /** A file's partition: the first segment of its table-relative path,
+    * or "" for a file directly under the root. The driver (listings)
+    * and Spark (per-file rows) must key by this ONE pattern: were they
+    * to disagree on a root-level file, a refresh would summarize it
+    * under a key the driver never looks up, and find it stale on every
+    * call.
     */
-  def writePartitioned(spark: SparkSession, table: String,
-                       cols: Seq[String]): Unit = {
-    import org.apache.spark.sql.functions.{concat_ws, count, expr, lit,
-      substring_index, array, struct, explode}
-    val df = spark.read.parquet(table)
-    val types = cols.map(c => c -> df.schema(c).dataType.typeName).toMap
-    val bad = cols.filterNot(c => supportedType(types(c)))
-    if (bad.nonEmpty)
-      throw new IllegalArgumentException(
-        s"StatsManifest: unsupported (un-orderable) column types: " +
-          bad.map(c => s"$c:${types(c)}").mkString(", "))
+  private val PartKey = "^([^/]*)/"
+  private val PartKeyRe = PartKey.r
+  private def partOf(rel: String): String =
+    PartKeyRe.findFirstMatchIn(rel).fold("")(_.group(1))
+  private def partCol(rel: Column): Column = regexp_extract(rel, PartKey, 1)
+
+  /** One layer of the two-level manifest: what it aggregates per file
+    * and per partition, and how it spells a line's `width` middle
+    * fields. Partition aggregates come from the per-file rows
+    * (`partAggs`, min/max) or straight from the data (`dataAggs`, Bloom
+    * unions, which need their own capacity).
+    */
+  private sealed abstract class Layer(val name: String, val width: Int) {
+    def accepts(typeName: String): Boolean
+    def rejects: String
+    def fileAggs(c: String): Seq[Column]
+    def partAggs(c: String): Seq[Column] = Nil
+    def dataAggs(c: String): Seq[Column] = Nil
+    /** middle fields of a per-file row for `c`; null writes no line */
+    def fileLine(c: String, typeName: String): Column
+    /** middle fields of a summary row for `c`; None writes no line */
+    def partLine(r: Row, c: String, typeName: String): Option[String]
+    /** the layer a refresh rebuilds with, given the recorded summary */
+    def sizedFrom(fs: FileSystem, table: String, recorded: Seq[PartLine]): Layer = this
+    def parts(table: String) = new Path(table, name + "_parts")
+    def files(table: String) = new Path(table, name + "_files")
+  }
+
+  private object Stats extends Layer("_stats_manifest", 3) {
+    def accepts(typeName: String) = supportedType(typeName)
+    def rejects = "StatsManifest: unsupported (un-orderable) column types: "
+    def fileAggs(c: String) = Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"))
+    override def partAggs(c: String) =
+      Seq(min(col(s"min_$c")).as(s"pmin_$c"), max(col(s"max_$c")).as(s"pmax_$c"))
+    def fileLine(c: String, typeName: String) = {
+      val lo = col(s"min_$c").cast("string")
+      val hi = col(s"max_$c").cast("string")
+      when(lo.isNotNull && hi.isNotNull,
+        concat_ws("\t", lit(c), lit(typeName), encCol(lo), encCol(hi)))
+    }
+    def partLine(r: Row, c: String, typeName: String) =
+      for (lo <- Option(r.getAs[Any](s"pmin_$c")); hi <- Option(r.getAs[Any](s"pmax_$c")))
+        yield s"$typeName\t${enc(lo.toString)}\t${enc(hi.toString)}"
+  }
+
+  private val BloomHashes = 6
+
+  private def hexOf(bytes: Array[Byte]): String =
+    bytes.map(b => f"${b & 0xff}%02x").mkString
+
+  /** Whether Bloom middle fields (hash count, filter hex) might hold `value`. */
+  private def mightContain(m: Array[String], value: Any): Boolean =
+    graft.expressions.BloomAgg.mightContain(
+      m(1).grouped(2).map(Integer.parseInt(_, 16).toByte).toArray, m(0).toInt, value)
+
+  /** Bloom layer at `fileBits` per file filter, `partBits` per partition
+    * union; [[Blooms]] is the capacity-free shape reads and refreshes
+    * start from.
+    */
+  private final case class Bloom(fileBits: Int, partBits: Int)
+      extends Layer("_bloom_manifest", 2) {
+    def accepts(typeName: String) =
+      Set("integer", "long", "short", "byte", "string").contains(typeName)
+    def rejects = "bloom manifest supports integral/string columns only: "
+    private def agg(c: String, bits: Int) = GraftColumnBridge.column(
+      graft.expressions.BloomAgg(
+        GraftColumnBridge.expression(col(c)), bits, BloomHashes)
+        .toAggregateExpression()).as(s"bloom_$c")
+    def fileAggs(c: String) = Seq(agg(c, fileBits))
+    override def dataAggs(c: String) = Seq(agg(c, partBits))
+    def fileLine(c: String, typeName: String) =
+      concat_ws("\t", lit(c), lit(BloomHashes.toString), hex(col(s"bloom_$c")))
+    def partLine(r: Row, c: String, typeName: String) =
+      Some(s"$BloomHashes\t${hexOf(r.getAs[Array[Byte]](s"bloom_$c"))}")
+    /** Both capacities from the existing hex (4 bits per hex char): the
+      * union width from the summary, the file width from any per-file
+      * line.
+      */
+    override def sizedFrom(fs: FileSystem, table: String,
+                           recorded: Seq[PartLine]): Layer = {
+      val partBits = recorded.head.mid(1).length * 4
+      val dirs = if (fs.exists(files(table))) fs.listStatus(files(table)).toSeq else Nil
+      val fileBits = dirs.iterator
+        .flatMap(st => readLines(fs, st.getPath).getOrElse(Nil).headOption)
+        .flatMap(_.split('\t') match {
+          case Array(_, _, _, hx) => Some(hx.length * 4)
+          case _ => None
+        }).nextOption().getOrElse(partBits / 16 max 64)
+      Bloom(fileBits, partBits)
+    }
+  }
+  private val Blooms = Bloom(0, 0)
+
+  /** One parts-summary line of a layer. Legacy lines, one field short,
+    * predate the file-set fingerprint and parse with fp = None: they
+    * never drop whole and always read as stale, so the first refresh
+    * upgrades them in place.
+    */
+  private final case class PartLine(part: String, column: String,
+                                    mid: Array[String], nf: Long,
+                                    fp: Option[String], raw: String)
+
+  private def readParts(fs: FileSystem, table: String,
+                        layer: Layer): Seq[PartLine] = {
+    val n = 2 + layer.width
+    readLines(fs, layer.parts(table)).getOrElse(Nil).flatMap { l =>
+      val a = l.split('\t')
+      if (a.length != n + 1 && a.length != n + 2) None
+      else Some(PartLine(dec(a(0)), a(1), a.slice(2, n), a(n).toLong, a.lift(n + 1), l))
+    }
+  }
+
+  /** Whether `pfiles` is exactly the file set `s` describes: count AND
+    * fingerprint must match (see [[fpOf]]).
+    */
+  private def covers(s: PartLine, table: String, pfiles: Seq[String]): Boolean =
+    pfiles.size == s.nf && s.fp.contains(fpOf(pfiles.map(relOf(table, _))))
+
+  /** Build `layer`'s two-level manifest for the partitions of the files
+    * `df` reads: every partition for a write, the stale ones for a
+    * refresh, whose `recorded` summary lines for other partitions pass
+    * through verbatim. One distributed stats pass (plus, for Blooms,
+    * one union pass); driver state is partition-scale only.
+    */
+  private def rebuild(spark: SparkSession, table: String, layer: Layer,
+                      cols: Seq[String], df: DataFrame,
+                      recorded: Seq[PartLine]): Unit = {
+    val types = typesOf(df, cols, layer)
     val rootPath = new Path(table).toUri.getPath
-    val aggs = cols.flatMap(c =>
-      Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
+    val fileAggs = cols.flatMap(layer.fileAggs)
     val perFile = df.groupBy(input_file_name().as("__file"))
-      .agg(aggs.head, aggs.tail: _*)
+      .agg(fileAggs.head, fileAggs.tail: _*)
       .withColumn("__rel", relColOf(rootPath))
-      .withColumn("__part", substring_index(col("__rel"), "/", 1))
+      .withColumn("__part", partCol(col("__rel")))
       .localCheckpoint() // two consumers below; stats scan runs once
 
-    // partition-scale summary: (part, per-col min/max, file count,
-    // file-set fingerprint)
-    val partAggs = cols.flatMap(c =>
-      Seq(min(col(s"min_$c")).as(s"pmin_$c"), max(col(s"max_$c")).as(s"pmax_$c")))
-    val partRows = perFile.groupBy("__part")
-      .agg(count(lit(1)).as("__nf"), partAggs :+ fpAgg.as("__fp"): _*)
+    // partition-scale summary: file count, file-set fingerprint and the
+    // layer's partition aggregates
+    val meta = perFile.groupBy("__part")
+      .agg(count(lit(1)).as("__nf"), fpAgg.as("__fp") +: cols.flatMap(layer.partAggs): _*)
       .collect() // ONE row per partition dir: bounded driver metadata
-    val parts = partRows.map(_.getAs[String]("__part")).sorted
-    if (parts.exists(p => p == null || !p.contains("=") && p.endsWith(".parquet")))
+    val parts = meta.map(_.getAs[String]("__part")).sorted
+    if (parts.exists(p => p == null || p.isEmpty))
       throw new IllegalArgumentException(
-        "writePartitioned needs a directory-partitioned table " +
-          "(files directly under the root: use write() instead)")
-    val sb = new StringBuilder
-    partRows.foreach { r =>
+        "a two-level manifest needs a directory-partitioned table " +
+          "(files directly under the root: use write() or writeBlooms() instead)")
+    // Bloom unions from the DATA at partition capacity (identical bit
+    // math to OR-ing the file filters, but correctly sized)
+    val dataAggs = cols.flatMap(layer.dataAggs)
+    val summary = if (dataAggs.isEmpty) meta else df
+      .withColumn("__file", input_file_name())
+      .withColumn("__part", partCol(relColOf(rootPath)))
+      .groupBy("__part")
+      .agg(dataAggs.head, dataAggs.tail: _*)
+      .collect() // ONE filter per partition dir: bounded driver metadata
+    val counts = meta.map(r => r.getAs[String]("__part") ->
+      s"${r.getAs[Long]("__nf")}\t${java.lang.Long.toHexString(r.getAs[Long]("__fp"))}").toMap
+    val fresh = summary.map { r =>
       val part = r.getAs[String]("__part")
-      val nf = r.getAs[Long]("__nf")
-      val fp = java.lang.Long.toHexString(r.getAs[Long]("__fp"))
-      cols.foreach { c =>
-        val lo = r.getAs[Any](s"pmin_$c")
-        val hi = r.getAs[Any](s"pmax_$c")
-        if (lo != null && hi != null)
-          sb.append(s"${enc(part)}\t$c\t${types(c)}\t${enc(lo.toString)}" +
-            s"\t${enc(hi.toString)}\t$nf\t$fp\n")
-      }
-    }
+      part -> cols.flatMap(c => layer.partLine(r, c, types(c))
+        .map(m => s"${enc(part)}\t$c\t$m\t${counts(part)}\n")).mkString
+    }.toMap
 
     // per-file lines, written BY SPARK under a numeric partition index
     // (numeric so partitionBy never escapes the directory name), then
@@ -426,177 +552,47 @@ object StatsManifest {
     // partition-scale, row data never visits the driver
     val pidx = parts.zipWithIndex.toMap
     val idxDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        pidx.toSeq.map { case (p, i) =>
-          org.apache.spark.sql.Row(p, i)
-        }, 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("__part",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("__pidx",
-          org.apache.spark.sql.types.IntegerType))))
-    val lineStructs = cols.map(c => struct(
-      lit(c).as("c"), lit(types(c)).as("t"),
-      col(s"min_$c").cast("string").as("lo"),
-      col(s"max_$c").cast("string").as("hi")))
-    val lines = perFile
-      .join(org.apache.spark.sql.functions.broadcast(idxDf), Seq("__part"))
-      .select(col("__pidx"), col("__rel"), explode(array(lineStructs: _*)).as("s"))
-      .filter(col("s.lo").isNotNull && col("s.hi").isNotNull)
-      .select(col("__pidx"), concat_ws("\t",
-        encCol(col("__rel")), col("s.c"), col("s.t"),
-        encCol(col("s.lo")), encCol(col("s.hi"))).as("line"))
-    writePerPartLines(spark, table, lines, pidx, filesDir(table),
-      "._stats_manifest_files.tmp")
+      spark.sparkContext.parallelize(pidx.toSeq.map { case (p, i) => Row(p, i) }, 1),
+      StructType(Seq(StructField("__part", StringType), StructField("__pidx", IntegerType))))
+    val lines = perFile.join(broadcast(idxDf), Seq("__part"))
+      .select(col("__pidx"), explode(array(cols.map(c => concat(
+        encCol(col("__rel")), lit("\t"), layer.fileLine(c, types(c)))): _*)).as("line"))
+      .filter(col("line").isNotNull)
+    writePerPartLines(spark, table, layer, lines, pidx, full = recorded.isEmpty)
     // the parts summary is published LAST: readers treat a missing
-    // parts file as "no two-level manifest" and fall back to keeping
-    // everything, so a crash mid-write can only under-prune
-    publishAt(spark, table, partsPath(table), "._stats_manifest_parts.tmp",
-      sb.toString)
+    // parts file as "no two-level manifest" and keep everything, and a
+    // crash mid-refresh leaves the old (count-mismatched,
+    // open-and-keep) summary — never one that claims coverage the
+    // files dir doesn't have
+    val kept = recorded.filterNot(l => fresh.contains(l.part)).map(_.raw + "\n")
+    publishAt(spark, table, layer.name + "_parts",
+      kept.mkString + fresh.toSeq.sortBy(_._1).map(_._2).mkString)
   }
 
   /** Spark-write a (__pidx, line) frame as one text file per partition
-    * under `target/<enc(part)>` — the per-file rows of both two-level
-    * manifests go through here, so row data never visits the driver;
-    * the rename loop is partition-scale.
+    * under `layer.files(table)/<enc(part)>`, so row data never visits
+    * the driver; the rename loop is partition-scale. A full write
+    * replaces the directory; a refresh swaps its partitions' files one
+    * by one (a reader in the swap window finds no per-file file and
+    * keeps the partition whole).
     */
   private def writePerPartLines(spark: SparkSession, table: String,
-                                lines: DataFrame, pidx: Map[String, Int],
-                                target: Path, stagingName: String): Unit = {
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new Path(table, stagingName)
+                                layer: Layer, lines: DataFrame,
+                                pidx: Map[String, Int], full: Boolean): Unit = {
+    val fs = fsOf(spark, table)
+    val staging = new Path(table,
+      s".${layer.name}_${if (full) "files" else "refresh"}.tmp")
     fs.delete(staging, true)
     lines.repartition(col("__pidx"))
       .write.partitionBy("__pidx").text(staging.toString)
-    fs.delete(target, true)
+    val target = layer.files(table)
+    if (full) fs.delete(target, true)
     fs.mkdirs(target)
     pidx.foreach { case (part, i) =>
       val src = new Path(staging, s"__pidx=$i")
-      val dst = new Path(target, enc(part))
       if (fs.exists(src)) {
         // usually one text part-file per index (repartition by __pidx);
         // concatenate defensively if the writer split it
-        val texts = fs.listStatus(src).map(_.getPath)
-          .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-        if (texts.length == 1) fs.rename(texts.head, dst)
-        else {
-          val out = fs.create(dst, true)
-          try texts.foreach { t =>
-            val in = fs.open(t)
-            try {
-              val buf = new Array[Byte](1 << 16)
-              var n = in.read(buf)
-              while (n > 0) { out.write(buf, 0, n); n = in.read(buf) }
-            } finally in.close()
-          } finally out.close()
-        }
-      }
-    }
-    fs.delete(staging, true)
-  }
-
-  /** Extend the two-level manifest to partitions whose on-disk file
-    * count no longer matches the recorded one — the streaming
-    * companion to [[writePartitioned]] (the [[appendMissing]]
-    * discipline at partition granularity): a continuous ingest appends
-    * files every micro-batch, and without maintenance every touched
-    * partition decays to open-and-keep-unknowns. Re-scans ONLY the
-    * stale partitions' files (one distributed pass over that subset),
-    * rewrites only their per-file stats files, and republishes the
-    * parts summary last. Untouched partitions' stats files are not
-    * read, not rewritten. Idempotent: a replay sees matching counts
-    * and no-ops. Returns the number of refreshed partitions.
-    */
-  def refreshStalePartitions(spark: SparkSession, table: String): Int = {
-    import org.apache.spark.sql.functions.{concat_ws, count, expr, lit,
-      substring_index, array, struct, explode}
-    val fs = partsPath(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(partsPath(table))) return 0
-    val in = fs.open(partsPath(table))
-    val plines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-    finally in.close()
-    // (part, col, nfiles, fp?, raw line) rows; legacy 6-field lines
-    // (pre-fingerprint) parse with fp = None and therefore always read
-    // as stale below — the first refresh upgrades them in place
-    val rows = plines.flatMap { l =>
-      l.split('\t') match {
-        case a if a.length == 6 || a.length == 7 =>
-          Some((dec(a(0)), a(1), a(5).toLong,
-            if (a.length == 7) Some(a(6)) else None, l))
-        case _ => None
-      }
-    }
-    val cols = rows.map(_._2).distinct
-    if (cols.isEmpty) return 0
-    val recorded = rows.groupBy(_._1).view
-      .mapValues(h => (h.head._3, h.head._4)).toMap
-    val byPart = listDataFiles(spark, fs, table).groupBy { f =>
-      val rel = relOf(table, f)
-      if (rel.contains("/")) rel.substring(0, rel.indexOf('/')) else ""
-    }
-    // stale = count OR file-set fingerprint mismatch: an equal-count
-    // replacement (delete one file, append another) must refresh too,
-    // or the drop-whole prune would trust a summary describing files
-    // that no longer exist
-    val stale = byPart.filter { case (p, fl) =>
-      recorded.get(p) match {
-        case Some((nf, fp)) =>
-          fl.size != nf || !fp.contains(fpOf(fl.map(relOf(table, _))))
-        case None => true // brand-new partition
-      }
-    }
-    if (stale.isEmpty) return 0
-
-    val df = spark.read.option("basePath", table)
-      .parquet(stale.values.flatten.toSeq: _*)
-    val types = cols.map(c => c -> df.schema(c).dataType.typeName).toMap
-    val rootPath = new Path(table).toUri.getPath
-    val aggs = cols.flatMap(c =>
-      Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-    val perFile = df.groupBy(input_file_name().as("__file"))
-      .agg(aggs.head, aggs.tail: _*)
-      .withColumn("__rel", relColOf(rootPath))
-      .withColumn("__part", substring_index(col("__rel"), "/", 1))
-      .localCheckpoint()
-    val partAggs = cols.flatMap(c =>
-      Seq(min(col(s"min_$c")).as(s"pmin_$c"), max(col(s"max_$c")).as(s"pmax_$c")))
-    val partRows = perFile.groupBy("__part")
-      .agg(count(lit(1)).as("__nf"), partAggs :+ fpAgg.as("__fp"): _*)
-      .collect() // stale partitions only: bounded driver metadata
-
-    // rewrite ONLY the stale partitions' per-file stats files
-    val parts = partRows.map(_.getAs[String]("__part")).sorted
-    val pidx = parts.zipWithIndex.toMap
-    val idxDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        pidx.toSeq.map { case (p, i) => org.apache.spark.sql.Row(p, i) }, 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("__part",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("__pidx",
-          org.apache.spark.sql.types.IntegerType))))
-    val lineStructs = cols.map(c => struct(
-      lit(c).as("c"), lit(types(c)).as("t"),
-      col(s"min_$c").cast("string").as("lo"),
-      col(s"max_$c").cast("string").as("hi")))
-    val lines = perFile
-      .join(org.apache.spark.sql.functions.broadcast(idxDf), Seq("__part"))
-      .select(col("__pidx"), col("__rel"), explode(array(lineStructs: _*)).as("s"))
-      .filter(col("s.lo").isNotNull && col("s.hi").isNotNull)
-      .select(col("__pidx"), concat_ws("\t",
-        encCol(col("__rel")), col("s.c"), col("s.t"),
-        encCol(col("s.lo")), encCol(col("s.hi"))).as("line"))
-    // per-partition target files swap individually (write to a staging
-    // dir, then rename each refreshed partition's file into place)
-    val staging = new Path(table, "._stats_manifest_refresh.tmp")
-    fs.delete(staging, true)
-    lines.repartition(col("__pidx"))
-      .write.partitionBy("__pidx").text(staging.toString)
-    val target = filesDir(table)
-    fs.mkdirs(target)
-    pidx.foreach { case (part, i) =>
-      val src = new Path(staging, s"__pidx=$i")
-      if (fs.exists(src)) {
         val texts = fs.listStatus(src).map(_.getPath)
           .filter(_.getName.startsWith("part-")).sortBy(_.getName)
         val dst = new Path(target, enc(part))
@@ -605,115 +601,93 @@ object StatsManifest {
         else {
           val out = fs.create(dst, true)
           try texts.foreach { t =>
-            val tin = fs.open(t)
-            try {
-              val buf = new Array[Byte](1 << 16)
-              var n = tin.read(buf)
-              while (n > 0) { out.write(buf, 0, n); n = tin.read(buf) }
-            } finally tin.close()
+            val in = fs.open(t)
+            try in.transferTo(out) finally in.close()
           } finally out.close()
         }
       }
     }
     fs.delete(staging, true)
+  }
 
-    // republish the parts summary: fresh rows for stale partitions,
-    // existing rows for the rest — LAST, so a crash mid-refresh leaves
-    // the old (count-mismatched, open-and-keep) behavior, never a
-    // summary that claims coverage the files dir doesn't have
-    val freshByPart = partRows.map { r =>
-      val part = r.getAs[String]("__part")
-      val nf = r.getAs[Long]("__nf")
-      val fp = java.lang.Long.toHexString(r.getAs[Long]("__fp"))
-      val sb = new StringBuilder
-      cols.foreach { c =>
-        val lo = r.getAs[Any](s"pmin_$c")
-        val hi = r.getAs[Any](s"pmax_$c")
-        if (lo != null && hi != null)
-          sb.append(s"${enc(part)}\t$c\t${types(c)}\t${enc(lo.toString)}" +
-            s"\t${enc(hi.toString)}\t$nf\t$fp\n")
-      }
-      part -> sb.toString
-    }.toMap
-    val keptLines = rows.filterNot(r => freshByPart.contains(r._1))
-      .map(_._5 + "\n") // non-stale lines pass through verbatim
-    publishAt(spark, table, partsPath(table), "._stats_manifest_parts.tmp",
-      keptLines.mkString + freshByPart.toSeq.sortBy(_._1).map(_._2).mkString)
+  /** Rebuild the partitions of `shape`'s manifest whose on-disk file
+    * SET no longer matches the recorded one, for the recorded columns.
+    * Stale = count OR fingerprint mismatch (an equal-count replacement
+    * must refresh too, or the drop-whole prune would trust a summary
+    * describing files that no longer exist), or a brand-new partition.
+    * Files directly under the root are never summarized: they stay
+    * unknown, and kept. Returns the number of refreshed partitions.
+    */
+  private def refresh(spark: SparkSession, table: String, shape: Layer): Int = {
+    val fs = fsOf(spark, table)
+    val recorded = readParts(fs, table, shape)
+    val cols = recorded.map(_.column).distinct
+    if (cols.isEmpty) return 0
+    val byPart = recorded.groupBy(_.part).view.mapValues(_.head).toMap
+    val stale = listDataFiles(spark, fs, table).groupBy(f => partOf(relOf(table, f)))
+      .filter { case (p, fl) => p.nonEmpty && !byPart.get(p).exists(covers(_, table, fl)) }
+    if (stale.isEmpty) return 0
+    rebuild(spark, table, shape.sizedFrom(fs, table, recorded), cols,
+      spark.read.option("basePath", table).parquet(stale.values.flatten.toSeq: _*),
+      recorded)
     stale.size
   }
 
   /** Two-level prune of an explicit file universe (absolute paths
-    * under `table`). See the layout comment above for the per-partition
-    * decision table; the returned partsOpened counts how many
-    * partitions' per-file stats the prune had to read.
+    * under `table`) — the decision table of the layout comment above,
+    * shared by both layers: `mayMatch` tests a line's middle fields
+    * against the probe. partsOpened counts the partitions whose
+    * per-file lines the prune had to read.
     */
-  def filterByStatsPartitioned(spark: SparkSession, table: String,
-                               files: Seq[String], column: String,
-                               lo: String, hi: String): TwoLevelPrune = {
-    val fs = partsPath(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val byPart = files.groupBy { f =>
-      val rel = relOf(table, f)
-      if (rel.contains("/")) rel.substring(0, rel.indexOf('/')) else ""
-    }
-    if (!fs.exists(partsPath(table)))
-      return TwoLevelPrune(files, byPart.size, 0)
-    val in = fs.open(partsPath(table))
-    val plines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-    finally in.close()
-    // 7-field lines carry the partition file-set fingerprint; legacy
-    // 6-field lines parse with fp = None and can never drop-whole
-    // (the per-file stats are consulted instead — conservative)
-    val partStats = plines.flatMap(_.split('\t') match {
-      case Array(p, c, tn, mn, mx, nf) if c == column =>
-        Some(dec(p) -> ((tn, dec(mn), dec(mx), nf.toLong,
-          None: Option[String])))
-      case Array(p, c, tn, mn, mx, nf, fp) if c == column =>
-        Some(dec(p) -> ((tn, dec(mn), dec(mx), nf.toLong, Some(fp))))
-      case _ => None
-    }).toMap
-
+  private def pruneTwoLevel(spark: SparkSession, table: String, layer: Layer,
+                            files: Seq[String], column: String)
+                           (mayMatch: Array[String] => Boolean): TwoLevelPrune = {
+    val fs = fsOf(spark, table)
+    val byPart = files.groupBy(f => partOf(relOf(table, f)))
+    val summary = readParts(fs, table, layer)
+      .filter(_.column == column).map(l => l.part -> l).toMap
     var opened = 0
-    val kept = Seq.newBuilder[String]
-
-    def openAndPrune(part: String, pfiles: Seq[String]): Unit = {
-      val pf = new Path(filesDir(table), enc(part))
-      if (!fs.exists(pf)) { kept ++= pfiles; return }
-      opened += 1
-      val pin = fs.open(pf)
-      val flines = try scala.io.Source.fromInputStream(pin, "UTF-8").getLines().toList
-      finally pin.close()
-      val stats = flines.flatMap(_.split('\t') match {
-        case Array(rel, c, tn, mn, mx) if c == column =>
-          Some(dec(rel) -> ((tn, dec(mn), dec(mx))))
-        case _ => None
-      }).toMap
-      pfiles.foreach { f =>
-        stats.get(relOf(table, f)) match {
-          case Some((tn, mn, mx)) =>
-            if (cmp(tn, mx, lo) >= 0 && cmp(tn, mn, hi) <= 0) kept += f
-          case None => kept += f // unknown file: keep (stale is safe)
-        }
+    val kept = byPart.toSeq.flatMap { case (part, pfiles) =>
+      summary.get(part) match {
+        case None => pfiles // unknown partition: keep whole
+        case Some(s) if !mayMatch(s.mid) && covers(s, table, pfiles) =>
+          Nil // no match, complete coverage: drop whole
+        case _ => // may match, or stale: unknown files survive
+          readLines(fs, new Path(layer.files(table), enc(part))) match {
+            case None => pfiles // no per-file lines (refresh swap): keep
+            case Some(lines) =>
+              opened += 1
+              val perFile = perFileFields(lines, column, layer.width)
+              pfiles.filter(f => perFile.get(relOf(table, f)).forall(mayMatch))
+          }
       }
     }
-
-    byPart.foreach { case (part, pfiles) =>
-      partStats.get(part) match {
-        case None => kept ++= pfiles // unknown partition: keep whole
-        case Some((tn, mn, mx, nf, fp)) =>
-          val intersects = cmp(tn, mx, lo) >= 0 && cmp(tn, mn, hi) <= 0
-          // drop-whole needs count AND file-set fingerprint to match:
-          // an equal-count replacement (or a pinned-snapshot universe
-          // of coincidentally equal size) would otherwise drop files
-          // the summary never described — see fpOf
-          val covered = pfiles.size == nf &&
-            fp.contains(fpOf(pfiles.map(relOf(table, _))))
-          if (intersects) openAndPrune(part, pfiles)
-          else if (covered) () // complete coverage: drop whole
-          else openAndPrune(part, pfiles) // stale: unknown files survive
-      }
-    }
-    TwoLevelPrune(kept.result(), byPart.size, opened)
+    TwoLevelPrune(kept, byPart.size, opened)
   }
+
+  /** Rebuild the two-level manifest for a DIRECTORY-PARTITIONED table
+    * (every data file under at least one subdirectory of `table`; the
+    * first path segment is the partition). One distributed stats pass;
+    * driver state is partition-scale only.
+    */
+  def writePartitioned(spark: SparkSession, table: String,
+                       cols: Seq[String]): Unit =
+    rebuild(spark, table, Stats, cols, spark.read.parquet(table), Nil)
+
+  /** Extend the two-level manifest to partitions whose on-disk file
+    * set no longer matches the recorded one — the streaming companion
+    * to [[writePartitioned]] (the [[appendMissing]] discipline at
+    * partition granularity): a continuous ingest appends files every
+    * micro-batch, and without maintenance every touched partition
+    * decays to open-and-keep-unknowns. Re-scans ONLY the stale
+    * partitions' files (one distributed pass over that subset),
+    * rewrites only their per-file stats files, and republishes the
+    * parts summary last. Untouched partitions' stats files are not
+    * read, not rewritten. Idempotent: a replay sees matching file sets
+    * and no-ops. Returns the number of refreshed partitions.
+    */
+  def refreshStalePartitions(spark: SparkSession, table: String): Int =
+    refresh(spark, table, Stats)
 
   /** Two-level manifest-pruned range read — [[rangeRead]] with the
     * partition-grouped prune. Same exactness contract: the prune is a
@@ -721,25 +695,15 @@ object StatsManifest {
     */
   def rangeReadTwoLevel(spark: SparkSession, table: String, column: String,
                         lo: String, hi: String): (DataFrame, TwoLevelPrune) = {
-    import org.apache.spark.sql.functions.lit
-    val fs = partsPath(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val universe = listDataFiles(spark, fs, table)
-    val prune = filterByStatsPartitioned(spark, table, universe, column, lo, hi)
-    val base =
-      if (prune.files.isEmpty)
-        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-          spark.read.parquet(table).schema)
-      else spark.read.option("basePath", table).parquet(prune.files: _*)
+    val universe = listDataFiles(spark, fsOf(spark, table), table)
+    val prune = pruneTwoLevel(spark, table, Stats, universe, column)(overlaps(_, lo, hi))
+    val base = readFiles(spark, table, prune.files)
     val t = base.schema(column).dataType
     (base.filter(col(column) >= lit(lo).cast(t) && col(column) <= lit(hi).cast(t)),
       prune)
   }
 
   // ----- Bloom membership manifest (point-lookup file skipping) --------
-
-  private def bloomPath(table: String) = new Path(table, "_bloom_manifest")
-
-  private val BloomHashes = 6
 
   /** Per-file Bloom filters for `cols` — the point-lookup complement to
     * min/max stats: on a column the layout is NOT sorted by, every
@@ -753,37 +717,21 @@ object StatsManifest {
     */
   def writeBlooms(spark: SparkSession, table: String, cols: Seq[String],
                   bits: Int = 8192): Unit = {
-    import org.apache.spark.sql.GraftColumnBridge
+    val layer = Bloom(bits, bits)
     val df = spark.read.parquet(table)
-    val types = cols.map(c => c -> df.schema(c).dataType.typeName).toMap
-    val bad = cols.filterNot(c => Set("integer", "long", "short", "byte",
-      "string").contains(types(c)))
-    if (bad.nonEmpty)
-      throw new IllegalArgumentException(
-        "bloom manifest supports integral/string columns only: " +
-          bad.map(c => s"$c:${types(c)}").mkString(", "))
-    val aggs = cols.map { c =>
-      GraftColumnBridge.column(
-        graft.expressions.BloomAgg(
-          GraftColumnBridge.expression(col(c)), bits, BloomHashes)
-          .toAggregateExpression()).as(s"bloom_$c")
-    }
+    typesOf(df, cols, layer) // rejects un-hashable columns
+    val aggs = cols.flatMap(layer.fileAggs)
     val rows = df.groupBy(input_file_name().as("__file"))
       .agg(aggs.head, aggs.tail: _*)
       .collect() // one fixed-size filter per (file, column): driver metadata
-    val root = new Path(table).toUri.getPath
     val sb = new StringBuilder
     rows.foreach { r =>
-      val uri = new java.net.URI(r.getAs[String]("__file")).getPath
-      val rel = uri.stripPrefix(root).stripPrefix("/")
+      val rel = relOf(table, new java.net.URI(r.getAs[String]("__file")).getPath)
       cols.foreach { c =>
-        val hex = r.getAs[Array[Byte]](s"bloom_$c")
-          .map(b => f"${b & 0xff}%02x").mkString
-        sb.append(s"${enc(rel)}\t$c\t$BloomHashes\t$hex\n")
+        sb.append(s"${enc(rel)}\t$c\t$BloomHashes\t${hexOf(r.getAs[Array[Byte]](s"bloom_$c"))}\n")
       }
     }
-    publishAt(spark, table, bloomPath(table), "._bloom_manifest.tmp",
-      sb.toString)
+    publishAt(spark, table, "_bloom_manifest", sb.toString)
   }
 
   /** Files that might contain `value` in `column` per the bloom
@@ -791,48 +739,25 @@ object StatsManifest {
     */
   def filterByBloom(spark: SparkSession, table: String, files: Seq[String],
                     column: String, value: Any): Seq[String] = {
-    val fs = bloomPath(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(bloomPath(table))) return files
-    val in = fs.open(bloomPath(table))
-    val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-    finally in.close()
-    val blooms = lines.flatMap(_.split('\t') match {
-      case Array(rel, c, k, hex) if c == column =>
-        Some(dec(rel) -> ((k.toInt,
-          hex.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray)))
-      case _ => None
-    }).toMap
-    val root = new Path(table).toUri.getPath
-    files.filter { f =>
-      val rel = f.stripPrefix(root).stripPrefix("/")
-      blooms.get(rel) match {
-        case Some((k, bytes)) =>
-          graft.expressions.BloomAgg.mightContain(bytes, k, value)
-        case None => true
-      }
-    }
+    val blooms = perFileFields(
+      readLines(fsOf(spark, table), new Path(table, "_bloom_manifest")).getOrElse(Nil),
+      column, Blooms.width)
+    files.filter(f => blooms.get(relOf(table, f)).forall(mightContain(_, value)))
   }
 
   // ----- Two-level (partition-grouped) bloom manifest -------------------
   //
-  // The writePartitioned/filterByStatsPartitioned layout applied to
-  // point lookups: writeBlooms collects one fixed-size filter per
-  // (file, column) on the driver — ~1 KB each is GBs at 10⁶ files —
-  // and filterByBloom parses them all per probe. Here the driver keeps
-  // only a PARTITION-level bloom union (the OR of the partition's file
-  // filters, computed directly as one BloomAgg over the partition's
-  // rows — same bit math) plus file counts; per-file filters live in
-  // one Spark-written text file per partition, opened only when the
-  // partition union says "might contain". Unions need their own
-  // capacity: a partition holds many files' keys, so `partBits` should
-  // be ~12 bits per PARTITION row where `fileBits` is per-file sized.
-  // Same never-lose-rows contract: unknown partitions/files are kept,
-  // and a file-count mismatch (late appends) forces the per-file open.
-
-  private def bloomPartsPath(table: String) =
-    new Path(table, "_bloom_manifest_parts")
-  private def bloomFilesDir(table: String) =
-    new Path(table, "_bloom_manifest_files")
+  // The two-level layout applied to point lookups: writeBlooms collects
+  // one fixed-size filter per (file, column) on the driver — ~1 KB each
+  // is GBs at 10⁶ files — and filterByBloom parses them all per probe.
+  // Here the driver keeps only a PARTITION-level bloom union (the OR of
+  // the partition's file filters, computed directly as one BloomAgg
+  // over the partition's rows — same bit math) plus file counts and
+  // fingerprints; per-file filters live in one Spark-written text file
+  // per partition, opened only when the partition union says "might
+  // contain". Unions need their own capacity: a partition holds many
+  // files' keys, so `partBits` should be ~12 bits per PARTITION row
+  // where `fileBits` is per-file sized.
 
   /** Rebuild the two-level bloom manifest for a directory-partitioned
     * table. Two distributed passes (per-file filters, per-partition
@@ -840,84 +765,9 @@ object StatsManifest {
     */
   def writeBloomsPartitioned(spark: SparkSession, table: String,
                              cols: Seq[String], fileBits: Int = 8192,
-                             partBits: Int = 131072): Unit = {
-    import org.apache.spark.sql.GraftColumnBridge
-    import org.apache.spark.sql.functions.{concat_ws, count, expr, hex, lit,
-      substring_index, array, struct, explode}
-    val df = spark.read.parquet(table)
-    val types = cols.map(c => c -> df.schema(c).dataType.typeName).toMap
-    val bad = cols.filterNot(c => Set("integer", "long", "short", "byte",
-      "string").contains(types(c)))
-    if (bad.nonEmpty)
-      throw new IllegalArgumentException(
-        "bloom manifest supports integral/string columns only: " +
-          bad.map(c => s"$c:${types(c)}").mkString(", "))
-    def agg(c: String, bits: Int) = GraftColumnBridge.column(
-      graft.expressions.BloomAgg(
-        GraftColumnBridge.expression(col(c)), bits, BloomHashes)
-        .toAggregateExpression())
-    val rootPath = new Path(table).toUri.getPath
-
-    val fileAggs = cols.map(c => agg(c, fileBits).as(s"bloom_$c"))
-    val perFile = df.groupBy(input_file_name().as("__file"))
-      .agg(fileAggs.head, fileAggs.tail: _*)
-      .withColumn("__rel", relColOf(rootPath))
-      .withColumn("__part", substring_index(col("__rel"), "/", 1))
-      .localCheckpoint() // consumed twice: file counts + line write
-
-    // partition unions from the DATA at partition capacity (identical
-    // bit math to OR-ing the file filters, but correctly sized)
-    val partAggs = cols.map(c => agg(c, partBits).as(s"bloom_$c"))
-    val partRows = df
-      .withColumn("__file", input_file_name())
-      .withColumn("__part", substring_index(relColOf(rootPath), "/", 1))
-      .groupBy("__part")
-      .agg(partAggs.head, partAggs.tail: _*)
-      .collect() // ONE filter per partition dir: bounded driver metadata
-    val partMeta = perFile.groupBy("__part")
-      .agg(count(lit(1)).as("n"), fpAgg.as("fp"))
-      .collect()
-      .map(r => r.getString(0) ->
-        ((r.getLong(1), java.lang.Long.toHexString(r.getLong(2))))).toMap
-    val parts = partMeta.keys.toSeq.sorted
-    if (parts.exists(p => p == null || p.endsWith(".parquet")))
-      throw new IllegalArgumentException(
-        "writeBloomsPartitioned needs a directory-partitioned table " +
-          "(files directly under the root: use writeBlooms instead)")
-    val sb = new StringBuilder
-    partRows.foreach { r =>
-      val part = r.getAs[String]("__part")
-      val (nf, fp) = partMeta(part)
-      cols.foreach { c =>
-        val hx = r.getAs[Array[Byte]](s"bloom_$c")
-          .map(b => f"${b & 0xff}%02x").mkString
-        sb.append(s"${enc(part)}\t$c\t$BloomHashes\t$hx\t$nf\t$fp\n")
-      }
-    }
-
-    val pidx = parts.zipWithIndex.toMap
-    val idxDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        pidx.toSeq.map { case (p, i) => org.apache.spark.sql.Row(p, i) }, 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("__part",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("__pidx",
-          org.apache.spark.sql.types.IntegerType))))
-    val lineStructs = cols.map(c => struct(
-      lit(c).as("c"), hex(col(s"bloom_$c")).as("hx")))
-    val lines = perFile
-      .join(org.apache.spark.sql.functions.broadcast(idxDf), Seq("__part"))
-      .select(col("__pidx"), col("__rel"),
-        explode(array(lineStructs: _*)).as("s"))
-      .select(col("__pidx"), concat_ws("\t",
-        encCol(col("__rel")), col("s.c"), lit(BloomHashes.toString),
-        col("s.hx")).as("line"))
-    writePerPartLines(spark, table, lines, pidx, bloomFilesDir(table),
-      "._bloom_manifest_files.tmp")
-    publishAt(spark, table, bloomPartsPath(table),
-      "._bloom_manifest_parts.tmp", sb.toString)
-  }
+                             partBits: Int = 131072): Unit =
+    rebuild(spark, table, Bloom(fileBits, partBits), cols,
+      spark.read.parquet(table), Nil)
 
   /** Extend the two-level bloom manifest to partitions whose on-disk
     * file SET no longer matches the recorded one — the streaming
@@ -927,233 +777,19 @@ object StatsManifest {
     * the layer's recorded file capacity, partition unions from the
     * data at the recorded union capacity — both inferred from the
     * existing manifest's hex widths), rewrites only their per-file
-    * filter files, republishes the parts summary last. Stale = count
-    * OR fingerprint mismatch, so equal-count replacements refresh
-    * too; legacy no-fingerprint lines always read as stale and
-    * upgrade in place. Idempotent: a replay sees matching sets and
-    * no-ops. Returns the number of refreshed partitions.
+    * filter files, republishes the parts summary last. Idempotent: a
+    * replay sees matching sets and no-ops. Returns the number of
+    * refreshed partitions.
     */
-  def refreshStaleBloomPartitions(spark: SparkSession, table: String): Int = {
-    import org.apache.spark.sql.GraftColumnBridge
-    import org.apache.spark.sql.functions.{concat_ws, count, hex, lit,
-      substring_index, array, struct, explode}
-    val fs = bloomPartsPath(table)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(bloomPartsPath(table))) return 0
-    val in = fs.open(bloomPartsPath(table))
-    val plines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-    finally in.close()
-    // (part, col, union hex width, nfiles, fp?, raw line)
-    val rows = plines.flatMap { l =>
-      l.split('\t') match {
-        case a if a.length == 5 || a.length == 6 =>
-          Some((dec(a(0)), a(1), a(3).length, a(4).toLong,
-            if (a.length == 6) Some(a(5)) else None, l))
-        case _ => None
-      }
-    }
-    val cols = rows.map(_._2).distinct
-    if (cols.isEmpty) return 0
-    val partBits = rows.head._3 * 4 // 2 hex chars per byte
-    // per-file capacity from any existing per-file line
-    val fileBits = {
-      val dirs = if (fs.exists(bloomFilesDir(table)))
-        fs.listStatus(bloomFilesDir(table)).toSeq else Nil
-      dirs.iterator.flatMap { st =>
-        val pin = fs.open(st.getPath)
-        val ls = try scala.io.Source.fromInputStream(pin, "UTF-8")
-          .getLines().take(1).toList finally pin.close()
-        ls.flatMap(_.split('\t') match {
-          case Array(_, _, _, hx) => Some(hx.length * 4)
-          case _ => None
-        })
-      }.nextOption().getOrElse(partBits / 16 max 64)
-    }
-    val recorded = rows.groupBy(_._1).view
-      .mapValues(h => (h.head._4, h.head._5)).toMap
-    val byPart = listDataFiles(spark, fs, table).groupBy { f =>
-      val rel = relOf(table, f)
-      if (rel.contains("/")) rel.substring(0, rel.indexOf('/')) else ""
-    }
-    val stale = byPart.filter { case (p, fl) =>
-      recorded.get(p) match {
-        case Some((nf, fp)) =>
-          fl.size != nf || !fp.contains(fpOf(fl.map(relOf(table, _))))
-        case None => true
-      }
-    }
-    if (stale.isEmpty) return 0
+  def refreshStaleBloomPartitions(spark: SparkSession, table: String): Int =
+    refresh(spark, table, Blooms)
 
-    def agg(c: String, bits: Int) = GraftColumnBridge.column(
-      graft.expressions.BloomAgg(
-        GraftColumnBridge.expression(col(c)), bits, BloomHashes)
-        .toAggregateExpression())
-    val df = spark.read.option("basePath", table)
-      .parquet(stale.values.flatten.toSeq: _*)
-    val rootPath = new Path(table).toUri.getPath
-    val fileAggs = cols.map(c => agg(c, fileBits).as(s"bloom_$c"))
-    val perFile = df.groupBy(input_file_name().as("__file"))
-      .agg(fileAggs.head, fileAggs.tail: _*)
-      .withColumn("__rel", relColOf(rootPath))
-      .withColumn("__part", substring_index(col("__rel"), "/", 1))
-      .localCheckpoint()
-    val partAggs = cols.map(c => agg(c, partBits).as(s"bloom_$c"))
-    val partRows = df
-      .withColumn("__file", input_file_name())
-      .withColumn("__part", substring_index(relColOf(rootPath), "/", 1))
-      .groupBy("__part")
-      .agg(partAggs.head, partAggs.tail: _*)
-      .collect() // stale partitions only: bounded driver metadata
-    val partMeta = perFile.groupBy("__part")
-      .agg(count(lit(1)).as("n"), fpAgg.as("fp"))
-      .collect()
-      .map(r => r.getString(0) ->
-        ((r.getLong(1), java.lang.Long.toHexString(r.getLong(2))))).toMap
-
-    // rewrite ONLY the stale partitions' per-file filter files
-    val parts = partMeta.keys.toSeq.sorted
-    val pidx = parts.zipWithIndex.toMap
-    val idxDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        pidx.toSeq.map { case (p, i) => org.apache.spark.sql.Row(p, i) }, 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("__part",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("__pidx",
-          org.apache.spark.sql.types.IntegerType))))
-    val lineStructs = cols.map(c => struct(
-      lit(c).as("c"), hex(col(s"bloom_$c")).as("hx")))
-    val lines = perFile
-      .join(org.apache.spark.sql.functions.broadcast(idxDf), Seq("__part"))
-      .select(col("__pidx"), col("__rel"),
-        explode(array(lineStructs: _*)).as("s"))
-      .select(col("__pidx"), concat_ws("\t",
-        encCol(col("__rel")), col("s.c"), lit(BloomHashes.toString),
-        col("s.hx")).as("line"))
-    val staging = new Path(table, "._bloom_manifest_refresh.tmp")
-    fs.delete(staging, true)
-    lines.repartition(col("__pidx"))
-      .write.partitionBy("__pidx").text(staging.toString)
-    val target = bloomFilesDir(table)
-    fs.mkdirs(target)
-    pidx.foreach { case (part, i) =>
-      val src = new Path(staging, s"__pidx=$i")
-      if (fs.exists(src)) {
-        val texts = fs.listStatus(src).map(_.getPath)
-          .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-        val dst = new Path(target, enc(part))
-        fs.delete(dst, false)
-        if (texts.length == 1) fs.rename(texts.head, dst)
-        else {
-          val out = fs.create(dst, true)
-          try texts.foreach { t =>
-            val tin = fs.open(t)
-            try {
-              val buf = new Array[Byte](1 << 16)
-              var n = tin.read(buf)
-              while (n > 0) { out.write(buf, 0, n); n = tin.read(buf) }
-            } finally tin.close()
-          } finally out.close()
-        }
-      }
-    }
-    fs.delete(staging, true)
-
-    // republish the parts summary LAST: fresh rows for stale
-    // partitions, raw pass-through for the rest
-    val freshByPart = partRows.map { r =>
-      val part = r.getAs[String]("__part")
-      val (nf, fp) = partMeta(part)
-      val sb = new StringBuilder
-      cols.foreach { c =>
-        val hx = r.getAs[Array[Byte]](s"bloom_$c")
-          .map(b => f"${b & 0xff}%02x").mkString
-        sb.append(s"${enc(part)}\t$c\t$BloomHashes\t$hx\t$nf\t$fp\n")
-      }
-      part -> sb.toString
-    }.toMap
-    val keptLines = rows.filterNot(r => freshByPart.contains(r._1))
-      .map(_._6 + "\n")
-    publishAt(spark, table, bloomPartsPath(table),
-      "._bloom_manifest_parts.tmp",
-      keptLines.mkString + freshByPart.toSeq.sortBy(_._1).map(_._2).mkString)
-    stale.size
-  }
-
-  /** Two-level bloom prune of an explicit file universe: partition
-    * unions first, per-file filters only for partitions that might
-    * contain `value` (or whose file count no longer matches — late
-    * appends are conservatively kept).
+  /** `value` as the probe [[graft.expressions.BloomAgg]] hashes for a
+    * column of type `t`.
     */
-  def filterByBloomPartitioned(spark: SparkSession, table: String,
-                               files: Seq[String], column: String,
-                               value: Any): TwoLevelPrune = {
-    val fs = bloomPartsPath(table)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val byPart = files.groupBy { f =>
-      val rel = relOf(table, f)
-      if (rel.contains("/")) rel.substring(0, rel.indexOf('/')) else ""
-    }
-    if (!fs.exists(bloomPartsPath(table)))
-      return TwoLevelPrune(files, byPart.size, 0)
-    val in = fs.open(bloomPartsPath(table))
-    val plines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-    finally in.close()
-    // 6-field lines carry the partition file-set fingerprint; legacy
-    // 5-field lines parse with fp = None and can never drop-whole
-    val partBlooms = plines.flatMap(_.split('\t') match {
-      case Array(p, c, k, hx, nf) if c == column =>
-        Some(dec(p) -> ((k.toInt,
-          hx.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray,
-          nf.toLong, None: Option[String])))
-      case Array(p, c, k, hx, nf, fp) if c == column =>
-        Some(dec(p) -> ((k.toInt,
-          hx.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray,
-          nf.toLong, Some(fp))))
-      case _ => None
-    }).toMap
-
-    var opened = 0
-    val kept = Seq.newBuilder[String]
-
-    def openAndPrune(part: String, pfiles: Seq[String]): Unit = {
-      val pf = new Path(bloomFilesDir(table), enc(part))
-      if (!fs.exists(pf)) { kept ++= pfiles; return }
-      opened += 1
-      val pin = fs.open(pf)
-      val flines = try scala.io.Source.fromInputStream(pin, "UTF-8").getLines().toList
-      finally pin.close()
-      val blooms = flines.flatMap(_.split('\t') match {
-        case Array(rel, c, k, hx) if c == column =>
-          Some(dec(rel) -> ((k.toInt,
-            hx.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray)))
-        case _ => None
-      }).toMap
-      pfiles.foreach { f =>
-        blooms.get(relOf(table, f)) match {
-          case Some((k, bytes)) =>
-            if (graft.expressions.BloomAgg.mightContain(bytes, k, value))
-              kept += f
-          case None => kept += f // unknown file: keep (stale is safe)
-        }
-      }
-    }
-
-    byPart.foreach { case (part, pfiles) =>
-      partBlooms.get(part) match {
-        case None => kept ++= pfiles
-        case Some((k, bytes, nf, fp)) =>
-          val might = graft.expressions.BloomAgg.mightContain(bytes, k, value)
-          // same drop-whole discipline as the stats prune: count AND
-          // file-set fingerprint must both match (see fpOf)
-          val covered = pfiles.size == nf &&
-            fp.contains(fpOf(pfiles.map(relOf(table, _))))
-          if (might) openAndPrune(part, pfiles)
-          else if (covered) () // union says no, coverage complete
-          else openAndPrune(part, pfiles) // stale: unknown files survive
-      }
-    }
-    TwoLevelPrune(kept.result(), byPart.size, opened)
+  private def probeOf(t: DataType, value: String): Any = t.typeName match {
+    case "integer" | "long" | "short" | "byte" => value.toLong
+    case _ => value
   }
 
   /** Two-level bloom-pruned point lookup — [[pointRead]]'s layout-aware
@@ -1165,22 +801,11 @@ object StatsManifest {
     */
   def pointReadTwoLevel(spark: SparkSession, table: String, column: String,
                         value: String): (DataFrame, TwoLevelPrune) = {
-    import org.apache.spark.sql.functions.lit
-    val fs = bloomPartsPath(table)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val universe = listDataFiles(spark, fs, table)
+    val universe = listDataFiles(spark, fsOf(spark, table), table)
     val t = spark.read.parquet(table).schema(column).dataType
-    val typed: Any = t.typeName match {
-      case "integer" | "long" | "short" | "byte" => value.toLong
-      case _ => value
-    }
-    val prune = filterByBloomPartitioned(spark, table, universe, column, typed)
-    val base =
-      if (prune.files.isEmpty)
-        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-          spark.read.parquet(table).schema)
-      else spark.read.option("basePath", table).parquet(prune.files: _*)
-    (base.filter(col(column) === lit(value).cast(t)), prune)
+    val probe = probeOf(t, value)
+    val prune = pruneTwoLevel(spark, table, Blooms, universe, column)(mightContain(_, probe))
+    (readFiles(spark, table, prune.files).filter(col(column) === lit(value).cast(t)), prune)
   }
 
   /** Bloom + stats pruned point lookup: `column = value` served by
@@ -1191,22 +816,11 @@ object StatsManifest {
     */
   def pointRead(spark: SparkSession, table: String, column: String,
                 value: String): DataFrame = {
-    import org.apache.spark.sql.functions.lit
-    val fs = manifestPath(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val universe = listDataFiles(spark, fs, table)
+    val universe = listDataFiles(spark, fsOf(spark, table), table)
     val byStats = filterByStats(spark, table, universe, column, value, value)
     val t = spark.read.parquet(table).schema(column).dataType
-    val typed: Any = t.typeName match {
-      case "integer" | "long" | "short" | "byte" => value.toLong
-      case _ => value
-    }
-    val files = filterByBloom(spark, table, byStats, column, typed)
-    val base =
-      if (files.isEmpty)
-        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-          spark.read.parquet(table).schema)
-      else spark.read.option("basePath", table).parquet(files: _*)
-    base.filter(col(column) === lit(value).cast(t))
+    val files = filterByBloom(spark, table, byStats, column, probeOf(t, value))
+    readFiles(spark, table, files).filter(col(column) === lit(value).cast(t))
   }
 
   /** Manifest-pruned range read: scans ONLY intersecting files, then
@@ -1228,35 +842,34 @@ object StatsManifest {
     */
   def multiRangeRead(spark: SparkSession, table: String,
                      preds: Seq[(String, String, String)]): DataFrame = {
-    import org.apache.spark.sql.functions.lit
     require(preds.nonEmpty)
     // ONE listing, narrowed per predicate over the SAME universe — two
     // independent listings intersected would silently drop a file a
     // concurrent writer commits between them (it appears only in the
     // later listing), violating the never-lose-rows contract that
     // unknown-to-the-manifest files are conservatively kept.
-    val fs = manifestPath(table)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val universe = listDataFiles(spark, fs, table)
+    val universe = listDataFiles(spark, fsOf(spark, table), table)
     val files = preds.foldLeft(universe) { case (fl, (c, lo, hi)) =>
       filterByStats(spark, table, fl, c, lo, hi)
     }
-    // basePath keeps directory-partition columns in the schema when the
-    // scan is built from explicit leaf files — without it a partitioned
-    // table's pruned read would drop (or fail to resolve) those columns
-    // and break the documented full-scan+filter equivalence. The
-    // everything-pruned case builds a schema-only empty frame: a
-    // limit(0) over the table would still PLAN every file, and a
-    // caller's planned-vs-on-disk prune assert would invert exactly
-    // when pruning worked best.
-    val base =
-      if (files.isEmpty)
-        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-          spark.read.parquet(table).schema)
-      else spark.read.option("basePath", table).parquet(files: _*)
-    preds.foldLeft(base) { case (df, (c, lo, hi)) =>
+    preds.foldLeft(readFiles(spark, table, files)) { case (df, (c, lo, hi)) =>
       val t = df.schema(c).dataType
       df.filter(col(c) >= lit(lo).cast(t) && col(c) <= lit(hi).cast(t))
     }
   }
+
+  /** The kept `files` as one frame. basePath keeps directory-partition
+    * columns in the schema when the scan is built from explicit leaf
+    * files — without it a partitioned table's pruned read would drop
+    * (or fail to resolve) those columns and break the documented
+    * full-scan+filter equivalence. The everything-pruned case builds a
+    * schema-only empty frame: a limit(0) over the table would still
+    * PLAN every file, and a caller's planned-vs-on-disk prune assert
+    * would invert exactly when pruning worked best.
+    */
+  private def readFiles(spark: SparkSession, table: String,
+                        files: Seq[String]): DataFrame =
+    if (files.isEmpty)
+      spark.createDataFrame(new java.util.ArrayList[Row](), spark.read.parquet(table).schema)
+    else spark.read.option("basePath", table).parquet(files: _*)
 }

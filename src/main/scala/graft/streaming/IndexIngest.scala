@@ -31,20 +31,11 @@ import graft.operators.Retrieval
   */
 object IndexIngest {
 
-  private val BatchCol = "__last_batch"
+  import RollupIngest.{BatchCol, lastBatch}
 
   private def postingsPath(path: String) = s"$path/postings"
   private def vocabPath(path: String) = s"$path/vocab"
   private def statsPath(path: String) = s"$path/stats"
-
-  private def lastBatch(spark: SparkSession, table: String): Long = {
-    val fs = new Path(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(table))) -1L
-    else spark.read.parquet(table).select(max(col(BatchCol))).head() match {
-      case r if r.isNullAt(0) => -1L
-      case r => r.getLong(0)
-    }
-  }
 
   /** Absorb one micro-batch of documents. Idempotent per `batchId`:
     * the postings directory overwrite is naturally so; vocab and stats

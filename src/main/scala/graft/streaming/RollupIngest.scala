@@ -27,7 +27,7 @@ import graft.functions.Exact
   */
 object RollupIngest {
 
-  private val BatchCol = "__last_batch"
+  private[streaming] val BatchCol = "__last_batch"
 
   /** Last micro-batch id absorbed into the rollup at `path`, or -1. */
   def lastBatch(spark: SparkSession, path: String): Long = {

@@ -26,17 +26,7 @@ import graft.functions.Text
   */
 object TopKIngest {
 
-  private val BatchCol = "__last_batch"
-
-  /** Last micro-batch id absorbed at `path`, or -1. */
-  def lastBatch(spark: SparkSession, path: String): Long = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(path))) -1L
-    else spark.read.parquet(path).select(max(col(BatchCol))).head() match {
-      case r if r.isNullAt(0) => -1L
-      case r => r.getLong(0)
-    }
-  }
+  import RollupIngest.{BatchCol, lastBatch}
 
   private def topk(df: DataFrame, k: Int): DataFrame =
     df.groupBy("event_type")

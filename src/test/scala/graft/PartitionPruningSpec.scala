@@ -32,7 +32,8 @@ class PartitionPruningSpec extends SparkSpec {
     // the scan must carry a dynamicpruning subquery that waits for the
     // dim's build side. At 100 TB this is how a star join reads one
     // partition instead of the full fact history.
-    val dir = new java.io.File(Fixture.dir("graft-dpp"))
+    val root = Fixture.dir("graft-dpp")
+    val dir = new java.io.File(root, "fact")
     Tables(spark, sfDir, "events")
       .write.partitionBy("event_type").mode("overwrite")
       .parquet(dir.getAbsolutePath)
@@ -41,8 +42,8 @@ class PartitionPruningSpec extends SparkSpec {
     // detection would see no filter at all
     Seq(("click", "hot"), ("view", "cold"), ("purchase", "cold"))
       .toDF("et", "tier")
-      .write.mode("overwrite").parquet(s"${dir.getAbsolutePath}__dim")
-    val dim = spark.read.parquet(s"${dir.getAbsolutePath}__dim")
+      .write.mode("overwrite").parquet(s"$root/dim")
+    val dim = spark.read.parquet(s"$root/dim")
     val joined = spark.read.parquet(dir.getAbsolutePath)
       .join(broadcast(dim).filter(col("tier") === "hot"),
         col("event_type") === col("et"))

@@ -578,4 +578,90 @@ class StatsManifestSpec extends SparkSpec {
     assert(late.collect().map(_.getLong(0)).toSeq == Seq(4050L),
       "files newer than the bloom manifest must stay visible")
   }
+
+  /** The lines of a two-level manifest `name`: its parts summary and
+    * each per-file file, all as sets (line order is the writer's).
+    */
+  private def twoLevelLines(dir: String, name: String) = {
+    import scala.jdk.CollectionConverters._
+    def lines(f: java.io.File) =
+      java.nio.file.Files.readAllLines(f.toPath).asScala.toSet
+    val perFile = new java.io.File(dir, name + "_files").listFiles()
+      .filterNot(_.getName.startsWith(".")).map(f => f.getName -> lines(f)).toMap
+    (lines(new java.io.File(dir, name + "_parts")), perFile)
+  }
+
+  test("a refresh of every partition rebuilds exactly what a write built, " +
+      "for both layers") {
+    import scala.jdk.CollectionConverters._
+    val dir = Fixture.dir("graft-manifest2eq")
+    import spark.implicits._
+    (1L to 400L).map(k => (k, s"v$k")).toDF("k", "v")
+      .withColumn("p", concat(lit("p"), pmod(col("k"), lit(4L))))
+      .repartition(2).write.mode("overwrite").partitionBy("p").parquet(dir)
+    StatsManifest.writePartitioned(spark, dir, Seq("k", "v"))
+    StatsManifest.writeBloomsPartitioned(spark, dir, Seq("k", "v"),
+      fileBits = 1024, partBits = 4096)
+    val (_, stats) = StatsManifest.rangeReadTwoLevel(spark, dir, "k", "1", "1")
+    assert(stats.partsTotal == 4)
+
+    for ((name, refresh) <- Seq[(String, () => Int)](
+        "_stats_manifest" -> (() => StatsManifest.refreshStalePartitions(spark, dir)),
+        "_bloom_manifest" -> (() => StatsManifest.refreshStaleBloomPartitions(spark, dir)))) {
+      val written = twoLevelLines(dir, name)
+      // rewrite the summary in the legacy format, without the file-set
+      // fingerprint, so every partition reads as stale (the checksum
+      // sidecar would reject the edited bytes)
+      val summary = java.nio.file.Paths.get(dir, name + "_parts")
+      java.nio.file.Files.write(summary, java.nio.file.Files.readAllLines(summary)
+        .asScala.map(_.split('\t').dropRight(1).mkString("\t")).asJava)
+      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(dir, s".${name}_parts.crc"))
+      assert(twoLevelLines(dir, name)._1 != written._1)
+
+      assert(refresh() == stats.partsTotal, s"$name: every partition is stale")
+      assert(twoLevelLines(dir, name) == written,
+        s"$name: a refresh of every partition must rebuild the written lines")
+    }
+  }
+
+  test("a file directly under the table root keeps both refreshes " +
+      "idempotent and stays readable") {
+    val dir = Fixture.dir("graft-manifest2root")
+    import spark.implicits._
+    Seq((1L, "a"), (2L, "b")).toDF("k", "v").coalesce(1)
+      .withColumn("p", lit("p0")).unionByName(
+        Seq((100L, "c")).toDF("k", "v").withColumn("p", lit("p1")))
+      .write.mode("overwrite").partitionBy("p").parquet(dir)
+    StatsManifest.writePartitioned(spark, dir, Seq("k"))
+    StatsManifest.writeBloomsPartitioned(spark, dir, Seq("k"),
+      fileBits = 1024, partBits = 4096)
+    // one parquet file lands at the root, beside the partition dirs
+    val scratch = Fixture.dir("graft-rootfile")
+    Seq((50L, "root")).toDF("k", "v").coalesce(1)
+      .write.mode("overwrite").parquet(scratch)
+    java.nio.file.Files.copy(
+      new java.io.File(scratch).listFiles()
+        .find(_.getName.endsWith(".parquet")).get.toPath,
+      new java.io.File(dir, "part-root-0000.snappy.parquet").toPath)
+
+    // a root-level file belongs to no partition: no refresh summarizes
+    // it, so none ever finds it stale again
+    for (_ <- 1 to 2) {
+      assert(StatsManifest.refreshStalePartitions(spark, dir) == 0)
+      assert(StatsManifest.refreshStaleBloomPartitions(spark, dir) == 0)
+    }
+    // a table whose files all sit at its root has no partition to key
+    // by: both two-level writes reject it
+    intercept[IllegalArgumentException] {
+      StatsManifest.writePartitioned(spark, scratch, Seq("k"))
+    }
+    intercept[IllegalArgumentException] {
+      StatsManifest.writeBloomsPartitioned(spark, scratch, Seq("k"))
+    }
+    // it stays unknown, so both prunes keep it
+    val (got, _) = StatsManifest.rangeReadTwoLevel(spark, dir, "k", "40", "60")
+    assert(got.select("k").collect().map(_.getLong(0)).toSeq == Seq(50L))
+    val (hit, _) = StatsManifest.pointReadTwoLevel(spark, dir, "k", "50")
+    assert(hit.select("k").collect().map(_.getLong(0)).toSeq == Seq(50L))
+  }
 }
