@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -13,7 +12,7 @@ import graft.functions.Text
   * ("active both weeks") exactly, from the stored blobs alone — never a
   * raw-event rescan. Each micro-batch bitmaps its own rows (one
   * partial-agg shuffle over the BATCH, not the history) and OR-merges
-  * into the stored table through the crash-recoverable AtomicSwap.
+  * into the stored table through [[Sink.mergeSwap]], guard-free.
   *
   * Exactly-once by the same algebra as HLL: bitmap OR is idempotent, so
   * re-merging a replayed batch's blob is a NO-OP — at-least-once replay
@@ -28,29 +27,18 @@ object BitmapIngest {
     * and OR-merge them into the rollup table at `path`.
     */
   def applyBatch(spark: SparkSession, batch: DataFrame, path: String): Unit = {
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    AtomicSwap.recover(fs, path)
     val daily = batch
       .groupBy(date_trunc("DAY", col("ts")).as("d"))
       .agg(Text.bitmapAgg(col("user_id")).as("bm"))
-    val cur =
-      if (fs.exists(new Path(path))) spark.read.parquet(path)
-      else daily.limit(0)
-    val merged = cur.unionByName(daily)
-      .groupBy("d").agg(Text.bitmapOr(col("bm")).as("bm"))
-    AtomicSwap.rewrite(fs, path, merged)
+    Sink.mergeSwap(spark, path, None)(daily.limit(0)) { cur =>
+      cur.unionByName(daily).groupBy("d").agg(Text.bitmapOr(col("bm")).as("bm"))
+    }
   }
 
   /** Start continuous exact-rollup maintenance over an event stream. */
   def start(spark: SparkSession, events: DataFrame, path: String,
             checkpoint: String): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyBatch(spark, batch, path)
-      }
-      .start()
+    Sink.start(events, checkpoint)((batch, _) => applyBatch(spark, batch, path))
 
   /** EXACT distinct-user count over [from, to] (inclusive days) from
     * the stored blobs alone — no raw events touched.

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -17,10 +16,9 @@ import graft.operators.Dedup
   * so per-batch partials are append-only directories (corpus-scale
   * state written ONCE, the property that survives 100 TB) and the
   * cross-batch merge happens at serve time over unique-content-scale
-  * rows, not at ingest time over the corpus. Replay idempotency is the
-  * overwrite of the batch's own directory (the IndexIngest postings
-  * discipline); no transactional guard is needed because no shared
-  * table is rewritten.
+  * rows, not at ingest time over the corpus. The state is [[Sink]]'s
+  * batch directories under [[BatchMarkers]]; no transactional guard is
+  * needed because no shared table is rewritten.
   *
   * [[serve]] is bit-identical to running [[Dedup.exact]] over the full
   * corpus: min-of-mins and sum-of-counts over disjoint batches equal
@@ -33,42 +31,33 @@ object DedupIngest {
 
   /** Absorb one micro-batch of (id, content) documents. Idempotent per
     * `batchId`: the directory overwrite replays to identical rows, and
-    * a durable [[BatchMarkers]] marker (written last) makes a replay
-    * arriving AFTER [[compact]] relocated this batch's rows a complete
-    * no-op — without it the replay would re-create the batch directory
-    * beside the compacted partials and serve() would double-count
-    * n_copies.
+    * the marker makes a replay arriving AFTER [[compact]] relocated
+    * this batch's rows a complete no-op — without it the replay would
+    * re-create the batch directory beside the compacted partials and
+    * serve() would double-count n_copies.
     */
   def applyBatch(batch: DataFrame, idCol: String, contentCol: String,
-                 path: String, batchId: Long): Unit = {
-    val fs = new Path(path)
-      .getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-    if (BatchMarkers.isAbsorbed(fs, path, batchId)) return
-    Dedup.exact(batch, idCol, contentCol)
-      .write.mode("overwrite")
-      .parquet(s"${statePath(path)}/batch=$batchId")
-    BatchMarkers.record(fs, path, batchId)
-  }
+                 path: String, batchId: Long): Unit =
+    Sink.absorbOnce(batch.sparkSession, path, batchId) {
+      Sink.writeBatch(Dedup.exact(batch, idCol, contentCol), statePath(path), batchId)
+    }
 
   /** Start continuous dedup-state maintenance over a document stream. */
   def start(docs: DataFrame, idCol: String, contentCol: String,
             path: String, checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        applyBatch(batch, idCol, contentCol, path, id)
-      }
-      .start()
+    Sink.start(docs, checkpoint)(applyBatch(_, idCol, contentCol, path, _))
 
   /** The merged dedup view: (content, keep_id, n_copies) with
     * [[Dedup.exact]]'s exact schema and values — one shuffle over
     * unique-content-scale partials, never a corpus rescan.
     */
   def serve(spark: SparkSession, path: String, contentCol: String): DataFrame =
-    spark.read.parquet(statePath(path))
-      .groupBy(contentCol)
-      .agg(min(col("keep_id")).as("keep_id"),
-        sum(col("n_copies")).as("n_copies"))
+    merge(spark.read.parquet(statePath(path)), contentCol)
+
+  /** The (min, sum) merge of dedup partials per content key. */
+  private def merge(partials: DataFrame, contentCol: String): DataFrame =
+    partials.groupBy(contentCol)
+      .agg(min(col("keep_id")).as("keep_id"), sum(col("n_copies")).as("n_copies"))
 
   /** True when `id` was already absorbed — lets a caller driving
     * applyBatch by hand (tests, backfills) skip work. The answer is
@@ -77,73 +66,25 @@ object DedupIngest {
     * batch id, every other absorbed batch's directory is gone, and a
     * layout-based check would report those batches missing — a
     * backfill driver trusting it would re-apply them and (pre-marker)
-    * double-count n_copies. Directory presence is kept as a fallback
-    * for state written before markers existed.
+    * double-count n_copies. A [[Sink.committed]] directory is kept as
+    * a fallback for state written before markers existed.
     */
   def hasBatch(spark: SparkSession, path: String, id: Long): Boolean = {
-    val p = new Path(s"${statePath(path)}/batch=$id")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    BatchMarkers.isAbsorbed(fs, path, id) || fs.exists(p)
+    val fs = Sink.fs(spark, path)
+    BatchMarkers.isAbsorbed(fs, path, id) ||
+      Sink.committed(fs, Sink.batchDir(statePath(path), id))
   }
 
-  /** Collapse the accumulated per-batch state directories into one —
-    * the same small-files housekeeping [[IndexIngest.compactPostings]]
-    * does for postings (10k micro-batches = 10k directories; scan
-    * planning cost grows with file count). The compacted rows are the
-    * MERGED partials (min keep_id, summed n_copies per content), so
-    * serving is value-identical before and after.
-    *
-    * Same id discipline as the postings compaction: rows land under
-    * the OLDEST included MARKED batch id, and the AtomicSwap rewrite
-    * vacuums every superseded per-batch directory in the same rename.
-    * Replays arriving after that are no-ops — but only for batches
-    * whose marker exists, and applyBatch writes the marker AFTER the
-    * state write, so a crash in between leaves a committed directory
-    * with no marker. Compacting that directory's rows and then
-    * replaying the batch would double-count n_copies. So compact
-    * first RECONSTRUCTS the missing marker when the directory itself
-    * proves full commit (dedup state is single-table: the batch
-    * directory's _SUCCESS is the whole applyBatch transaction), and
-    * any batch it still can't prove passes through UNDER ITS OWN
-    * BATCH ID — the replay's directory overwrite then lands exactly
-    * where the rows live, and a later compact absorbs them once the
-    * marker exists (DedupIngestSpec locks both the replay-after-
-    * compaction and the crash-window shapes to a value-identical
-    * serve).
+  /** Collapse the accumulated per-batch state directories into one by
+    * [[Sink.compact]]. The compacted rows are the MERGED partials (min
+    * keep_id, summed n_copies per content), so serving is
+    * value-identical before and after. Dedup state is single-table, so
+    * a committed batch directory is the whole applyBatch transaction
+    * and proves a missing marker (DedupIngestSpec locks both the
+    * replay-after-compaction and the crash-window shapes to a
+    * value-identical serve).
     */
   def compact(spark: SparkSession, path: String, contentCol: String,
-              files: Int = 1): Unit = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = statePath(path)
-    AtomicSwap.recover(fs, root)
-    val rootP = new Path(root)
-    if (!fs.exists(rootP)) return
-    val ids = fs.listStatus(rootP).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-      .map(_.getPath.getName.stripPrefix("batch=").toLong)
-    // marker reconstruction: a committed directory (_SUCCESS present)
-    // IS the full transaction for this single-table state
-    ids.filterNot(BatchMarkers.isAbsorbed(fs, path, _)).foreach { id =>
-      if (fs.exists(new Path(rootP, s"batch=$id/_SUCCESS")))
-        BatchMarkers.record(fs, path, id)
-    }
-    val (marked, unmarked) = ids.partition(BatchMarkers.isAbsorbed(fs, path, _))
-    if (marked.isEmpty) return
-    val minBatch = marked.min
-    val cur = spark.read.parquet(root)
-    val markedRows =
-      if (unmarked.isEmpty) cur else cur.filter(!col("batch").isin(unmarked: _*))
-    val merged = markedRows
-      .drop("batch")
-      .groupBy(contentCol)
-      .agg(min(col("keep_id")).as("keep_id"),
-        sum(col("n_copies")).as("n_copies"))
-      .repartition(files)
-      .withColumn("batch", lit(minBatch))
-    val out =
-      if (unmarked.isEmpty) merged
-      else merged.unionByName(cur.filter(col("batch").isin(unmarked: _*))
-        .withColumn("batch", col("batch").cast("long")))
-    AtomicSwap.rewrite(fs, root, out, partitionCols = Seq("batch"))
-  }
+              files: Int = 1): Unit =
+    Sink.compact(spark, statePath(path), path, files)(merge(_, contentCol))
 }

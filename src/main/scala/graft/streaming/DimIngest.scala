@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -13,25 +13,18 @@ import graft.etl.Scd2
   * their date dim, rahil/create_views.py:70-72).
   *
   * Each micro-batch of source updates is merged into the persisted
-  * dimension path with `Scd2.merge` inside `foreachBatch` — the
-  * micro-batch is the transaction: read current state, merge, write to
-  * a staging path, swap via renames. Dimensions are bounded and
-  * slow-changing, so the full-rewrite-per-batch is the right trade at
-  * any scale (the unbounded table is the FACT, which appends —
-  * FactIngest — and never rewrites).
+  * dimension path with `Scd2.merge` — the micro-batch is the
+  * transaction, a guard-free [[Sink.mergeSwap]] (whose AtomicSwap
+  * recovers every crash window before each batch). Dimensions are
+  * bounded and slow-changing, so the full-rewrite-per-batch is the
+  * right trade at any scale (the unbounded table is the FACT, which
+  * appends — FactIngest — and never rewrites).
   *
-  * Crash safety, precisely: the swap is write-staging → rename live
-  * aside (`__prev`) → rename staging in → drop `__prev`. Readers can
-  * race only the two metadata renames (not a recursive delete of the
-  * old files, the earlier design's window), and every crash point is
-  * recoverable: `recover` runs before each batch and restores the live
-  * path from `__staging` (which is always COMPLETE whenever the live
-  * path is missing — staging is fully written while the live dimension
-  * still exists) or, failing that, `__prev`. Batch replay after
-  * recovery is IDEMPOTENT — re-applying an update whose attributes
-  * already match the open row is a no-op by Scd2's null-safe change
-  * predicate — so at-least-once replay yields exactly-once dimension
-  * state (spec-tested, incl. kill/restart and crash-window recovery).
+  * Batch replay after recovery is IDEMPOTENT — re-applying an update
+  * whose attributes already match the open row is a no-op by Scd2's
+  * null-safe change predicate — so at-least-once replay yields
+  * exactly-once dimension state (spec-tested, incl. kill/restart and
+  * crash-window recovery).
   *
   * Bootstrap: a first-ever batch against an absent `dimPath` merges
   * into an empty current state with the batch-derived schema, so the
@@ -48,19 +41,14 @@ object DimIngest {
     */
   def applyBatch(spark: SparkSession, batch: DataFrame, dimPath: String,
                  keyCol: String, tracked: Seq[String], asOf: String): Unit = {
-    val fs = new Path(dimPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    AtomicSwap.recover(fs, dimPath)
-    val cur =
-      if (fs.exists(new Path(dimPath))) spark.read.parquet(dimPath)
-      else // bootstrap: empty current state with the expected schema
-        batch.select((keyCol +: tracked).map(col): _*).limit(0)
-          .withColumn("effective_date", lit(null).cast("date"))
-          .withColumn("expiration_date", lit(null).cast("date"))
-          .withColumn("current_row_ind", lit(null).cast("string"))
-    val merged = Scd2.merge(cur,
-      batch.select((keyCol +: tracked).map(col): _*), keyCol, tracked, asOf)
-    AtomicSwap.rewrite(fs, dimPath, merged)
+    val updates = batch.select((keyCol +: tracked).map(col): _*)
+    // bootstrap: empty current state with the expected schema
+    val empty = updates.limit(0)
+      .withColumn("effective_date", lit(null).cast("date"))
+      .withColumn("expiration_date", lit(null).cast("date"))
+      .withColumn("current_row_ind", lit(null).cast("string"))
+    Sink.mergeSwap(spark, dimPath, None)(empty)(
+      Scd2.merge(_, updates, keyCol, tracked, asOf))
   }
 
   /** Start the continuous maintenance stream. `asOfForBatch` maps the
@@ -70,10 +58,7 @@ object DimIngest {
   def start(spark: SparkSession, updates: DataFrame, dimPath: String,
             keyCol: String, tracked: Seq[String], checkpoint: String,
             asOfForBatch: Long => String): StreamingQuery =
-    updates.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        applyBatch(spark, batch, dimPath, keyCol, tracked, asOfForBatch(id))
-      }
-      .start()
+    Sink.start(updates, checkpoint) { (batch, id) =>
+      applyBatch(spark, batch, dimPath, keyCol, tracked, asOfForBatch(id))
+    }
 }

@@ -14,11 +14,11 @@ import graft.operators.{Models, UnigramLm}
   * forever with the registry artifact, so shard N of a 100 TB encode
   * is comparable with shard 0 however long the backfill runs.
   *
-  * Encoded batches land as `pieces/batch=<id>/` parquet; replay
-  * idempotency is the overwrite of the batch's own directory (the
-  * ScoreIngest/NoveltyIngest discipline), and [[serve]] is a plain
-  * union read — no merge step, because encoding is row-local given
-  * the frozen vocabulary (batches never interact).
+  * Encoded batches land as `pieces/batch=<id>/` parquet, [[Sink]]'s
+  * batch directories without markers (nothing ever compacts them),
+  * and [[serve]] is a plain union read — no merge step, because
+  * encoding is row-local given the frozen vocabulary (batches never
+  * interact).
   *
   * Determinism: [[UnigramLm.encode]] is a pure function of
   * (batch rows, vocabulary), piece counts are exact integers, and
@@ -52,8 +52,8 @@ object EncodeIngest {
                  textCol: String, vocabPath: String, path: String,
                  batchId: Long, maxPieceLen: Int = 6): Unit = {
     val vocab = vocabAt(spark, vocabPath)
-    UnigramLm.encode(batch, idCol, textCol, vocab, maxPieceLen)
-      .write.mode("overwrite").parquet(s"${piecesPath(path)}/batch=$batchId")
+    Sink.writeBatch(UnigramLm.encode(batch, idCol, textCol, vocab, maxPieceLen),
+      piecesPath(path), batchId)
   }
 
   /** Start continuous encoding over a document stream. */
@@ -64,13 +64,10 @@ object EncodeIngest {
     // starts: a missing/empty vocab fails here, loudly, not inside the
     // first micro-batch
     vocabAt(docs.sparkSession, vocabPath)
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        applyBatch(batch.sparkSession, batch, idCol, textCol, vocabPath,
-          path, id, maxPieceLen)
-      }
-      .start()
+    Sink.start(docs, checkpoint) { (batch, id) =>
+      applyBatch(batch.sparkSession, batch, idCol, textCol, vocabPath,
+        path, id, maxPieceLen)
+    }
   }
 
   /** All encoded rows across batches: (idCol, pieces, n_pieces, batch). */

@@ -30,13 +30,9 @@ import graft.operators.Ivf
   * an ingest-time obligation. The doubles round-trip through parquet
   * exactly, so persistence adds no drift.
   *
-  * Crash discipline is [[DedupIngest]]'s: replay idempotency is the
-  * batch directory overwrite, a durable [[BatchMarkers]] marker
-  * (written last) makes replays after [[compact]] complete no-ops,
-  * and compact reconstructs a missing marker only when the directory
-  * itself proves full commit (single-table state: _SUCCESS is the
-  * whole transaction), passing unprovable batches through under their
-  * own ids.
+  * Crash discipline is [[DedupIngest]]'s: [[Sink]]'s batch
+  * directories under [[BatchMarkers]], single-table state, so a
+  * committed directory is the whole transaction.
   *
   * RETRACTIONS: [[applyDeletes]] absorbs takedown/prune batches as
   * TOMBSTONES in their own batch-id + marker namespace; serving
@@ -83,15 +79,10 @@ object IvfIngest {
     * `model`. Idempotent per `batchId` (directory overwrite + marker).
     */
   def applyBatch(batch: DataFrame, model: Ivf.Model, idCol: String,
-                 vecCol: String, path: String, batchId: Long): Unit = {
-    val fs = new Path(path)
-      .getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-    if (BatchMarkers.isAbsorbed(fs, path, batchId)) return
-    Ivf.assign(batch, model, idCol, vecCol)
-      .write.mode("overwrite")
-      .parquet(s"${statePath(path)}/batch=$batchId")
-    BatchMarkers.record(fs, path, batchId)
-  }
+                 vecCol: String, path: String, batchId: Long): Unit =
+    Sink.absorbOnce(batch.sparkSession, path, batchId) {
+      Sink.writeBatch(Ivf.assign(batch, model, idCol, vecCol), statePath(path), batchId)
+    }
 
   /** Absorb one micro-batch of DELETIONS (takedowns, dedup-driven
     * prunes — the retractions a real corpus makes that an append-only
@@ -107,36 +98,24 @@ object IvfIngest {
     * (overwrite + marker, exactly [[applyBatch]]'s contract).
     */
   def applyDeletes(batch: DataFrame, idCol: String, path: String,
-                   batchId: Long): Unit = {
-    val fs = new Path(path)
-      .getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-    if (BatchMarkers.isAbsorbed(fs, tombPath(path), batchId)) return
-    batch.select(col(idCol).as("vid")).distinct()
-      .write.mode("overwrite")
-      .parquet(s"${tombStatePath(path)}/batch=$batchId")
-    BatchMarkers.record(fs, tombPath(path), batchId)
-  }
+                   batchId: Long): Unit =
+    Sink.absorbOnce(batch.sparkSession, tombPath(path), batchId) {
+      Sink.writeBatch(batch.select(col(idCol).as("vid")).distinct(),
+        tombStatePath(path), batchId)
+    }
 
   /** The standing tombstone set (empty frame when no deletes ever
     * arrived — schema taken from the assignment state's vid column).
     */
-  private def tombstones(spark: SparkSession, path: String): Option[DataFrame] = {
-    val tp = new Path(tombStatePath(path))
-    val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(tp)) Some(spark.read.parquet(tombStatePath(path))
-      .select("vid").distinct())
+  private def tombstones(spark: SparkSession, path: String): Option[DataFrame] =
+    if (Sink.fs(spark, path).exists(new Path(tombStatePath(path))))
+      Some(spark.read.parquet(tombStatePath(path)).select("vid").distinct())
     else None
-  }
 
   /** Start continuous index maintenance over an embedding stream. */
   def start(docs: DataFrame, model: Ivf.Model, idCol: String,
             vecCol: String, path: String, checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        applyBatch(batch, model, idCol, vecCol, path, id)
-      }
-      .start()
+    Sink.start(docs, checkpoint)(applyBatch(_, model, idCol, vecCol, path, _))
 
   /** The maintained corpus assignment, bookkeeping stripped and
     * tombstoned ids suppressed (see [[applyDeletes]]).
@@ -150,12 +129,13 @@ object IvfIngest {
   }
 
   /** True when `batchId` was absorbed — durable across [[compact]]
-    * (marker-first, directory presence as the pre-marker fallback).
+    * (marker-first, a [[Sink.committed]] directory as the pre-marker
+    * fallback).
     */
   def hasBatch(spark: SparkSession, path: String, id: Long): Boolean = {
-    val p = new Path(s"${statePath(path)}/batch=$id")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    BatchMarkers.isAbsorbed(fs, path, id) || fs.exists(p)
+    val fs = Sink.fs(spark, path)
+    BatchMarkers.isAbsorbed(fs, path, id) ||
+      Sink.committed(fs, Sink.batchDir(statePath(path), id))
   }
 
   /** ANN top-k served from the maintained index — [[Ivf.searchAssigned]]
@@ -174,8 +154,8 @@ object IvfIngest {
     */
   def currentModel(spark: SparkSession, path: String): Option[Ivf.Model] = {
     val mp = new Path(modelSubdir(statePath(path)))
-    val fs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(mp)) Some(graft.operators.Models.loadIvf(spark, mp.toString))
+    if (Sink.fs(spark, path).exists(mp))
+      Some(graft.operators.Models.loadIvf(spark, mp.toString))
     else None
   }
 
@@ -219,19 +199,15 @@ object IvfIngest {
   def retrainSwap(spark: SparkSession, path: String, k: Int,
                   iters: Int = 3): Ivf.Model = {
     val root = statePath(path)
-    val fs = new Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = Sink.fs(spark, root)
     AtomicSwap.recover(fs, root)
     // one row per surviving vid (a re-ingested id collapses here —
     // same id means same vector in this index's contract)
     val corpus = assigned(spark, path).select("vid", "v")
       .dropDuplicates("vid")
     val model = Ivf.train(spark, corpus, "vid", "v", k, iters)
-    val ids = fs.listStatus(new Path(root)).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-      .map(_.getPath.getName.stripPrefix("batch=").toLong)
     val (marked, unmarked) =
-      ids.partition(BatchMarkers.isAbsorbed(fs, path, _))
+      Sink.batchIds(fs, root).partition(BatchMarkers.isAbsorbed(fs, path, _))
     val minBatch = if (marked.nonEmpty) marked.min else 0L
     val all = spark.read.parquet(root)
       .withColumn("batch", col("batch").cast("long"))
@@ -281,9 +257,8 @@ object IvfIngest {
     */
   def drift(spark: SparkSession, path: String): Option[(Double, Double)] = {
     val model = currentModel(spark, path).getOrElse(return None)
-    val mp = new Path(modelSubdir(statePath(path)))
-    val fs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val rf = driftRefFile(mp.toString)
+    val fs = Sink.fs(spark, path)
+    val rf = driftRefFile(modelSubdir(statePath(path)))
     if (!fs.exists(rf)) return None
     val in = fs.open(rf)
     val ref =
@@ -328,13 +303,8 @@ object IvfIngest {
   }
 
   /** Collapse the accumulated per-batch assignment directories into
-    * one — same small-files housekeeping and marker discipline as
-    * [[DedupIngest.compact]]: rows are relocation-only (assignments
-    * never merge), marked batches land under the oldest marked id, a
-    * missing marker is reconstructed when the directory's _SUCCESS
-    * proves the (single-table) transaction committed, and unprovable
-    * batches pass through under their own ids for the pending replay
-    * to overwrite.
+    * one by [[Sink.compact]] — rows are relocation-only (assignments
+    * never merge).
     */
   def compact(spark: SparkSession, path: String, files: Int = 4): Unit = {
     // Tombstone side FIRST (marker reconstruction + collapse), so the
@@ -346,9 +316,16 @@ object IvfIngest {
     // Tombstones are compacted but NEVER discarded, so a post-compact
     // replay that re-adds a deleted id stays suppressed (deletes are
     // terminal).
-    compactOne(spark, tombStatePath(path), tombPath(path), files, None)
-    compactOne(spark, statePath(path), path, files,
-      committedTombstones(spark, path))
+    Sink.compact(spark, tombStatePath(path), tombPath(path), files)(identity)
+    val applyTomb = committedTombstones(spark, path)
+    // A published model ([[retrainSwap]]) lives INSIDE this root as the
+    // _model subdir, so it is kept: a plain rewrite would silently drop
+    // it and break [[currentModel]] after routine maintenance, and
+    // re-staging it keeps the (model, assignment) pair atomic across
+    // compaction too.
+    Sink.compact(spark, statePath(path), path, files, keep = Seq("_model")) { rows =>
+      applyTomb.fold(rows)(rows.join(_, Seq("vid"), "left_anti"))
+    }
   }
 
   /** The vids of every MARKED (committed) tombstone batch — the set
@@ -356,67 +333,11 @@ object IvfIngest {
     */
   private def committedTombstones(spark: SparkSession,
                                   path: String): Option[DataFrame] = {
-    val tp = new Path(tombStatePath(path))
-    val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(tp)) return None
-    val marked = fs.listStatus(tp).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-      .map(_.getPath.getName.stripPrefix("batch=").toLong)
+    val fs = Sink.fs(spark, path)
+    val marked = Sink.batchIds(fs, tombStatePath(path))
       .filter(BatchMarkers.isAbsorbed(fs, tombPath(path), _))
     if (marked.isEmpty) None
     else Some(spark.read.parquet(tombStatePath(path))
       .filter(col("batch").isin(marked: _*)).select("vid").distinct())
-  }
-
-  private def compactOne(spark: SparkSession, root: String,
-                         markerBase: String, files: Int,
-                         applyTomb: Option[DataFrame]): Unit = {
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    AtomicSwap.recover(fs, root)
-    val rootP = new Path(root)
-    if (!fs.exists(rootP)) return
-    val ids = fs.listStatus(rootP).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-      .map(_.getPath.getName.stripPrefix("batch=").toLong)
-    ids.filterNot(BatchMarkers.isAbsorbed(fs, markerBase, _)).foreach { id =>
-      if (fs.exists(new Path(rootP, s"batch=$id/_SUCCESS")))
-        BatchMarkers.record(fs, markerBase, id)
-    }
-    val (marked, unmarked) =
-      ids.partition(BatchMarkers.isAbsorbed(fs, markerBase, _))
-    if (marked.isEmpty) return
-    val minBatch = marked.min
-    val cur = spark.read.parquet(root)
-    val markedRows0 =
-      if (unmarked.isEmpty) cur else cur.filter(!col("batch").isin(unmarked: _*))
-    // physical tombstone apply (assignment side only): marked rows for
-    // marked tombstone ids leave the state here — the serve-time
-    // anti-join keeps covering everything else
-    val markedRows = applyTomb match {
-      case Some(t) => markedRows0.join(t, Seq("vid"), "left_anti")
-      case None => markedRows0
-    }
-    val flat = markedRows.drop("batch")
-      .repartition(files)
-      .withColumn("batch", lit(minBatch))
-    val out =
-      if (unmarked.isEmpty) flat
-      else flat.unionByName(cur.filter(col("batch").isin(unmarked: _*))
-        .withColumn("batch", col("batch").cast("long")))
-    // A published model ([[retrainSwap]]) lives INSIDE this root as the
-    // _model subdir — invisible to the parquet read above, so a plain
-    // rewrite would silently drop it and break [[currentModel]] after
-    // routine maintenance. Re-stage it byte-for-byte alongside the
-    // compacted rows so the (model, assignment) pair stays atomic
-    // across compaction too. (The tombstone root never carries one.)
-    val model = new Path(root, "_model")
-    AtomicSwap.rewriteStaged(fs, root) { staging =>
-      val w = out.write.mode("overwrite")
-      w.partitionBy("batch").parquet(staging.toString)
-      if (fs.exists(model))
-        org.apache.hadoop.fs.FileUtil.copy(fs, model, fs,
-          new Path(staging, "_model"), false,
-          spark.sparkContext.hadoopConfiguration)
-    }
   }
 }

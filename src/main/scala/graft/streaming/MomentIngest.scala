@@ -8,12 +8,13 @@ import graft.operators.Pca
 /** Train-on-the-stream moment maintenance for PCA: each micro-batch
   * contributes its raw-moment partials (count, Σx_j, Σx_j·x_k — the
   * [[graft.operators.Pca.momentRows]] schema, DECIMAL(38,18)) as
-  * `moments/batch=<id>/` parquet, overwritten idempotently per batch
-  * id. Because decimal addition is exact and associative, the merged
-  * stream totals are BIT-IDENTICAL to a single batch pass over the
-  * union — so [[model]] returns the EXACT model a batch
-  * [[graft.operators.Pca.train]] over all rows would (MomentIngestSpec
-  * locks equality to the last double), not an approximation. This is
+  * `moments/batch=<id>/` parquet, [[Sink]]'s batch directories
+  * without markers (nothing ever compacts them). Because decimal
+  * addition is exact and associative, the merged stream totals are
+  * BIT-IDENTICAL to a single batch pass over the union — so [[model]]
+  * returns the EXACT model a batch [[graft.operators.Pca.train]] over
+  * all rows would (MomentIngestSpec locks equality to the last double),
+  * not an approximation. This is
   * the property float sums cannot give: with doubles, the batch split
   * would change the model.
   *
@@ -29,19 +30,14 @@ object MomentIngest {
   /** Absorb one micro-batch of vectors. Idempotent per `batchId`. */
   def applyBatch(batch: DataFrame, vecCol: String, path: String,
                  batchId: Long): Unit =
-    Pca.momentRows(batch, vecCol)
-      .coalesce(1) // d(d+3)/2 + 1 rows: metadata-scale
-      .write.mode("overwrite").parquet(s"${momPath(path)}/batch=$batchId")
+    Sink.writeBatch(Pca.momentRows(batch, vecCol)
+      .coalesce(1), // d(d+3)/2 + 1 rows: metadata-scale
+      momPath(path), batchId)
 
   /** Start continuous moment maintenance over a vector stream. */
   def start(vecs: DataFrame, vecCol: String, path: String,
             checkpoint: String): StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        applyBatch(batch, vecCol, path, id)
-      }
-      .start()
+    Sink.start(vecs, checkpoint)(applyBatch(_, vecCol, path, _))
 
   /** The model from the merged stream state — bit-identical to batch
     * training over the union of all absorbed batches.

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -17,8 +16,8 @@ import graft.functions.Text
   *    (sh, first_id = min doc id in batch) rows. min is a monoid, so
   *    the global first occurrence is the min over batch partials,
   *    merged at SERVE time — corpus-scale state is written ONCE
-  *    (the DedupIngest/IndexIngest postings discipline; replay
-  *    idempotency is the overwrite of the batch's own directory).
+  *    ([[Sink]]'s batch directories, without markers: nothing ever
+  *    compacts them).
   *  - `docs/batch=<id>/` — (doc_id, n_shingles) per document, the
   *    denominator side.
   *
@@ -45,10 +44,10 @@ object NoveltyIngest {
   def applyBatch(batch: DataFrame, idCol: String, textCol: String,
                  path: String, batchId: Long, n: Int = 3): Unit = {
     val e = exploded(batch, idCol, textCol, n)
-    e.groupBy("sh").agg(min(col(idCol)).as("first_id"))
-      .write.mode("overwrite").parquet(s"${shPath(path)}/batch=$batchId")
-    e.groupBy(idCol).agg(count(lit(1)).as("n_shingles"))
-      .write.mode("overwrite").parquet(s"${docPath(path)}/batch=$batchId")
+    Sink.writeBatch(e.groupBy("sh").agg(min(col(idCol)).as("first_id")),
+      shPath(path), batchId)
+    Sink.writeBatch(e.groupBy(idCol).agg(count(lit(1)).as("n_shingles")),
+      docPath(path), batchId)
   }
 
   /** Start continuous novelty-state maintenance over a document
@@ -56,12 +55,7 @@ object NoveltyIngest {
     */
   def start(docs: DataFrame, idCol: String, textCol: String,
             path: String, checkpoint: String, n: Int = 3): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        applyBatch(batch, idCol, textCol, path, id, n)
-      }
-      .start()
+    Sink.start(docs, checkpoint)(applyBatch(_, idCol, textCol, path, _, n))
 
   /** The merged per-document novelty view, with
     * [[graft.operators.Dedup.firstOccurrenceNovelty]]'s exact schema
@@ -81,16 +75,17 @@ object NoveltyIngest {
     graft.operators.Dedup.noveltyOf(nsh.select(col(idCol)), nsh, novel, idCol)
   }
 
-  /** True when `id` was FULLY absorbed — both state tables checked,
-    * because applyBatch's two writes are not atomic together: a crash
-    * between them must read as "not absorbed" so the caller replays
-    * (the replay overwrite is a value-level no-op). Testing only the
-    * first-written directory would report a half-applied batch as done
-    * and silently drop its documents from serve().
+  /** True when `id` was FULLY absorbed — both state tables'
+    * directories [[Sink.committed]], because applyBatch's two writes
+    * are not atomic together: a crash between them must read as "not
+    * absorbed" so the caller replays (the replay overwrite is a
+    * value-level no-op). Testing only the first-written directory would
+    * report a half-applied batch as done and silently drop its
+    * documents from serve().
     */
   def hasBatch(spark: SparkSession, path: String, id: Long): Boolean = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    Seq(s"${shPath(path)}/batch=$id", s"${docPath(path)}/batch=$id")
-      .forall { d => val p = new Path(d); p.getFileSystem(conf).exists(p) }
+    val fs = Sink.fs(spark, path)
+    Seq(shPath(path), docPath(path))
+      .forall(root => Sink.committed(fs, Sink.batchDir(root, id)))
   }
 }

@@ -20,19 +20,18 @@ import graft.etl.Expectations.{FkRule, Rule}
   * dot-temp dir and renaming (atomic on HDFS-likes; partition
   * discovery never lists dot-dirs, so a crashed half-write is
   * invisible). A replayed batch sees its directory already published
-  * and no-ops — per sink, so a crash between the clean publish and the
+  * and no-ops — publish-once, stronger than the overwrite of
+  * [[Sink.writeBatch]] — per sink, so a crash between the clean publish and the
   * quarantine publish replays into convergence. Appends are
   * batch-proportional (RollupIngest's whole-table swap is for
   * metadata-scale rollups; a quarantine log must scale with input).
   */
 object QuarantineIngest {
 
-  private def batchDir(path: String, id: Long) = new Path(path, s"batch=$id")
-
   /** Clear leftover temp dirs from crashed publishes. */
   private def recover(spark: SparkSession, path: String): Unit = {
     val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = Sink.fs(spark, path)
     if (fs.exists(p))
       fs.listStatus(p).filter(_.getPath.getName.startsWith("."))
         .foreach(s => fs.delete(s.getPath, true))
@@ -40,8 +39,8 @@ object QuarantineIngest {
 
   private def publish(spark: SparkSession, df: DataFrame, path: String,
                       id: Long): Unit = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val target = batchDir(path, id)
+    val fs = Sink.fs(spark, path)
+    val target = Sink.batchDir(path, id)
     if (fs.exists(target)) return // replayed batch: already published
     val token = java.util.UUID.randomUUID().toString.take(8)
     val tmp = new Path(path, s".tmp-$id-$token")
@@ -74,12 +73,8 @@ object QuarantineIngest {
             rules: Seq[Rule], fks: Seq[FkRule],
             cleanPath: String, quarantinePath: String,
             checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        applyBatch(spark, batch, rules, fks, cleanPath, quarantinePath, id)
-      }
-      .start()
+    Sink.start(stream, checkpoint)(
+      applyBatch(spark, _, rules, fks, cleanPath, quarantinePath, _))
 
   /** All clean rows (batch id surfaced as a partition column). */
   def readClean(spark: SparkSession, path: String): DataFrame =

@@ -10,11 +10,10 @@ import graft.operators.{Classifier, Models}
   * ([[graft.operators.Models.loadLinear]]) — the deploy shape of the
   * qt27 trainer: train once on a reference corpus (expensive full
   * passes), then score every ingest batch forever with the registry
-  * artifact. Scores land as `scores/batch=<id>/` parquet; replay
-  * idempotency is the overwrite of the batch's own directory (the
-  * NoveltyIngest discipline), and [[serve]] is a plain union read —
-  * no merge step, because scoring is row-local (batches never
-  * interact).
+  * artifact. Scores land as `scores/batch=<id>/` parquet, [[Sink]]'s
+  * batch directories without markers (nothing ever compacts them),
+  * and [[serve]] is a plain union read — no merge step, because
+  * scoring is row-local (batches never interact).
   *
   * Scale posture: the model is d+1 driver-side doubles folded into the
   * projection as literals — no broadcast table, no shuffle, the
@@ -37,21 +36,17 @@ object ScoreIngest {
                  batchId: Long, dims: Int = 16): Unit = {
     val model = Models.loadLinear(spark, modelPath)
     val feats = Classifier.featurizeText(batch, idCol, textCol, dims)
-    Classifier.predict(feats, model, idCol)
-      .write.mode("overwrite").parquet(s"${scorePath(path)}/batch=$batchId")
+    Sink.writeBatch(Classifier.predict(feats, model, idCol), scorePath(path), batchId)
   }
 
   /** Start continuous scoring over a document stream. */
   def start(docs: DataFrame, idCol: String, textCol: String,
             modelPath: String, path: String, checkpoint: String,
             dims: Int = 16): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        applyBatch(batch.sparkSession, batch, idCol, textCol, modelPath,
-          path, id, dims)
-      }
-      .start()
+    Sink.start(docs, checkpoint) { (batch, id) =>
+      applyBatch(batch.sparkSession, batch, idCol, textCol, modelPath,
+        path, id, dims)
+    }
 
   /** All scored rows across batches: (idCol, margin, pred, batch). */
   def serve(spark: SparkSession, path: String): DataFrame =

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -10,8 +9,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * answers "distinct users over any date range" with a union-merge of
   * sketches, never a raw-event rescan. Each micro-batch sketches its
   * own rows (one partial-agg shuffle over the BATCH, not the history)
-  * and merges into the stored table via `hll_union_agg`; the rewrite
-  * swap is the crash-recoverable AtomicSwap protocol.
+  * and merges into the stored table via `hll_union_agg` under
+  * [[Sink.mergeSwap]], guard-free.
   *
   * Exactly-once WITHOUT idempotent-sink bookkeeping: HLL union is a
   * register-wise max, so re-merging a replayed batch's sketch is a
@@ -25,29 +24,18 @@ object SketchIngest {
     * sketches and merge them into the rollup table at `path`.
     */
   def applyBatch(spark: SparkSession, batch: DataFrame, path: String): Unit = {
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    AtomicSwap.recover(fs, path)
     val daily = batch
       .groupBy(date_trunc("DAY", col("ts")).as("d"))
       .agg(expr("hll_sketch_agg(user_id)").as("sk"))
-    val cur =
-      if (fs.exists(new Path(path))) spark.read.parquet(path)
-      else daily.limit(0)
-    val merged = cur.unionByName(daily)
-      .groupBy("d").agg(expr("hll_union_agg(sk)").as("sk"))
-    AtomicSwap.rewrite(fs, path, merged)
+    Sink.mergeSwap(spark, path, None)(daily.limit(0)) { cur =>
+      cur.unionByName(daily).groupBy("d").agg(expr("hll_union_agg(sk)").as("sk"))
+    }
   }
 
   /** Start continuous rollup maintenance over an event stream. */
   def start(spark: SparkSession, events: DataFrame, path: String,
             checkpoint: String): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyBatch(spark, batch, path)
-      }
-      .start()
+    Sink.start(events, checkpoint)((batch, _) => applyBatch(spark, batch, path))
 
   /** Distinct-user estimate over [from, to] (inclusive days) from the
     * stored sketches alone — no raw events touched.

@@ -15,13 +15,11 @@ import graft.sources.Snapshots
   * readers that honor its `_spark_metadata`; this sink makes the
   * COMMIT the unit of atomicity instead: a replayed batch (listener
   * refire, checkpoint restart before the sink's own commit recorded)
-  * sees its id already in the latest manifest's metadata and no-ops —
-  * the same transactional-not-algebraic guard as RollupIngest, because
+  * sees its id already in the latest manifest's metadata and no-ops
+  * ([[Sink.replayed]]) — transactional, not algebraic, because
   * an append is not replay-idempotent.
   */
 object SnapshotIngest {
-
-  private val BatchKey = "batch_id"
 
   /** Commit one batch exactly once. Returns true if the batch was
     * applied, false if it was a replay no-op.
@@ -29,22 +27,12 @@ object SnapshotIngest {
   def ingestBatch(spark: SparkSession, table: String, batch: DataFrame,
                   batchId: Long,
                   partitionBy: Seq[(String, String)] = Nil): Boolean = {
-    // scan versions newest-first for the last APPLIED batch id: an
-    // interleaved meta-less commit (a manual Snapshots.commit) must
-    // not blind the replay guard. Snapshots.compact additionally
-    // carries meta forward, so the id also survives vacuumed history.
-    val applied = Snapshots.versions(spark, table).reverseIterator
-      .map(v => Snapshots.meta(spark, table, Some(v)).get(BatchKey))
-      .collectFirst { case Some(b) => b.toLong }
-    if (applied.contains(batchId)) return false
-    require(applied.forall(_ < batchId),
-      s"batch $batchId arrived after ${applied.get} was committed — " +
-        "out-of-order replay the checkpoint should make impossible")
+    if (Sink.replayed(spark, table, batchId)) return false
     if (batch.isEmpty) return false // parquet write of 0 rows has no files
     val mode =
       if (Snapshots.latestVersion(spark, table).isEmpty) "overwrite" else "append"
     Snapshots.commit(spark, table, batch, mode,
-      withMeta = Map(BatchKey -> batchId.toString),
+      withMeta = Map(Sink.BatchKey -> batchId.toString),
       partitionBy = partitionBy)
     true
   }
@@ -58,10 +46,7 @@ object SnapshotIngest {
   def start(spark: SparkSession, stream: DataFrame, table: String,
             checkpoint: String,
             partitionBy: Seq[(String, String)] = Nil): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(spark, table, batch, batchId, partitionBy); ()
-      }
-      .start()
+    Sink.start(stream, checkpoint) { (batch, batchId) =>
+      ingestBatch(spark, table, batch, batchId, partitionBy); ()
+    }
 }

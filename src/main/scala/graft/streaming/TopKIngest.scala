@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -17,16 +16,11 @@ import graft.functions.Text
   * equals top-k of per-part top-ks, proven partition-invariant in
   * GroupTopKSpec).
   *
-  * Exactly-once by the RollupIngest discipline: replaying a batch
-  * into the leaderboard could only WIDEN it incorrectly if ties moved,
-  * and more fundamentally the swap must be transactional — so the last
-  * applied micro-batch id rides the leaderboard table itself and
-  * commits in the same AtomicSwap rename as the data (a replayed batch
-  * sees itself applied and no-ops; no separate marker can decouple).
+  * Exactly-once by the RollupIngest discipline, [[Sink.mergeSwap]]'s
+  * transactional batch-id guard: replaying a batch into the
+  * leaderboard could WIDEN it incorrectly if ties moved.
   */
 object TopKIngest {
-
-  import RollupIngest.{BatchCol, lastBatch}
 
   private def topk(df: DataFrame, k: Int): DataFrame =
     df.groupBy("event_type")
@@ -39,33 +33,22 @@ object TopKIngest {
     */
   def applyBatch(spark: SparkSession, batch: DataFrame, path: String,
                  batchId: Long, k: Int): Unit = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    AtomicSwap.recover(fs, path)
-    if (batchId <= lastBatch(spark, path)) return // replayed batch: no-op
     val partial = topk(
       batch.select(col("event_type"), col("event_id"), col("value")), k)
-    val cur =
-      if (fs.exists(new Path(path))) spark.read.parquet(path).drop(BatchCol)
-      else partial.limit(0)
-    val merged = topk(cur.unionByName(partial), k)
-      .withColumn(BatchCol, lit(batchId))
-    AtomicSwap.rewrite(fs, path, merged)
+    Sink.mergeSwap(spark, path, Some(batchId))(partial.limit(0)) { cur =>
+      topk(cur.unionByName(partial), k)
+    }
   }
 
   /** Start continuous top-k maintenance over an event stream. */
   def start(spark: SparkSession, events: DataFrame, path: String,
             checkpoint: String, k: Int): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        applyBatch(spark, batch, path, id, k)
-      }
-      .start()
+    Sink.start(events, checkpoint)(applyBatch(spark, _, path, _, k))
 
   /** The leaderboard with ranks: (event_type, rk, event_id, value). */
   def read(spark: SparkSession, path: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    spark.read.parquet(path).drop(BatchCol)
+    spark.read.parquet(path).drop(Sink.BatchCol)
       .withColumn("rk", row_number().over(
         Window.partitionBy("event_type")
           .orderBy(col("value").desc, col("event_id"))))

@@ -20,13 +20,11 @@ import graft.sources.Snapshots
   * NOT idempotent at the file level (it would stack a duplicate delta
   * version), so the applied batch id rides the delta commit's own
   * manifest publish — a replayed batch sees its id and no-ops, the
-  * RollupIngest/SnapshotIngest guard. Batches must be key-unique
+  * SnapshotIngest guard ([[Sink.replayed]]). Batches must be key-unique
   * (fold multi-version CDC batches with `Scd2.foldCdc` upstream);
   * `commitDelta` enforces this loudly.
   */
 object UpsertIngest {
-
-  private val BatchKey = "batch_id"
 
   /** Apply one CDC batch exactly once. Returns true if applied, false
     * on a replay no-op.
@@ -34,13 +32,7 @@ object UpsertIngest {
   def ingestBatch(spark: SparkSession, table: String, batch: DataFrame,
                   batchId: Long, keyCols: Seq[String],
                   deleteCol: String): Boolean = {
-    val applied = Snapshots.versions(spark, table).reverseIterator
-      .map(v => Snapshots.meta(spark, table, Some(v)).get(BatchKey))
-      .collectFirst { case Some(b) => b.toLong }
-    if (applied.contains(batchId)) return false
-    require(applied.forall(_ < batchId),
-      s"batch $batchId arrived after ${applied.get} was committed — " +
-        "out-of-order replay the checkpoint should make impossible")
+    if (Sink.replayed(spark, table, batchId)) return false
     if (batch.isEmpty) return false
     if (Snapshots.latestVersion(spark, table).isEmpty) {
       // bootstrap: the first batch's upserts ARE the base version
@@ -48,10 +40,10 @@ object UpsertIngest {
       val base = batch.filter(!col(deleteCol)).drop(deleteCol)
       if (base.isEmpty) return false
       Snapshots.commit(spark, table, base, "overwrite",
-        withMeta = Map(BatchKey -> batchId.toString))
+        withMeta = Map(Sink.BatchKey -> batchId.toString))
     } else {
       Snapshots.commitDelta(spark, table, batch, keyCols, Some(deleteCol),
-        extraMeta = Map(BatchKey -> batchId.toString))
+        extraMeta = Map(Sink.BatchKey -> batchId.toString))
     }
     true
   }
@@ -60,10 +52,7 @@ object UpsertIngest {
   def start(spark: SparkSession, cdc: DataFrame, table: String,
             checkpoint: String, keyCols: Seq[String],
             deleteCol: String): StreamingQuery =
-    cdc.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(spark, table, batch, batchId, keyCols, deleteCol); ()
-      }
-      .start()
+    Sink.start(cdc, checkpoint) { (batch, batchId) =>
+      ingestBatch(spark, table, batch, batchId, keyCols, deleteCol); ()
+    }
 }
