@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -49,6 +49,131 @@ object CurationGates {
        |c${i + 1} AS (SELECT p.cid, COALESCE(c.mv, p.cv) AS cv
        |  FROM c$i p LEFT JOIN mc$i c ON p.cid = c.cid),""".stripMargin
 
+  /** qp03 oracle: Dedup.semanticNearDupPairs' k-means cells replayed
+    * over the double vectors of CTE `vecs` — normalized `n`, init from
+    * the first 8 ids, two Lloyd iterations, then the final assignment
+    * `sf` (vec_id, u, cid).
+    */
+  private def semanticCellsSql(vecs: String): String =
+    s"""n AS (SELECT vec_id, list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS u FROM $vecs),
+       |c0 AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS cid, u AS cv
+       |       FROM (SELECT vec_id, u FROM n ORDER BY vec_id LIMIT 8)),
+       |${lloydIterSql(0)}
+       |${lloydIterSql(1)}
+       |af AS (${assignSql("c2")}),
+       |sf AS (SELECT vec_id, u, cid FROM af WHERE rn = 1)""".stripMargin
+
+  /** qp04/qp13's fused report over the exact Jaccard pairs `jp` and an
+    * embedding pair CTE `ep` built by `epCtes` (from the double
+    * vectors `ee`): one row per pair flagged by either signal.
+    */
+  private def fusionSql(epCtes: String): String =
+    s"""WITH w AS ($wCte), sh AS ($shCte),
+       |${jaccardPairsCtes("jp")},
+       |ee AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
+       |$epCtes
+       |SELECT COALESCE(jp.doc_a, ep.vec_a) AS id_a,
+       |  COALESCE(jp.doc_b, ep.vec_b) AS id_b,
+       |  CAST(CASE WHEN jp.doc_a IS NULL THEN 0 ELSE 1 END AS BIGINT) AS text_dup,
+       |  CAST(CASE WHEN ep.vec_a IS NULL THEN 0 ELSE 1 END AS BIGINT) AS embed_dup
+       |FROM jp FULL OUTER JOIN ep
+       |  ON jp.doc_a = ep.vec_a AND jp.doc_b = ep.vec_b""".stripMargin
+
+  /** Spark twin of [[fusionSql]]'s SELECT: text pairs (doc_a, doc_b)
+    * full-outer-joined to embedding pairs (vec_a, vec_b).
+    */
+  private def fused(jp: DataFrame, ep: DataFrame): DataFrame =
+    jp.join(ep,
+        jp("doc_a") === ep("vec_a") && jp("doc_b") === ep("vec_b"), "full_outer")
+      .select(
+        coalesce(col("doc_a"), col("vec_a")).as("id_a"),
+        coalesce(col("doc_b"), col("vec_b")).as("id_b"),
+        when(col("doc_a").isNull, 0L).otherwise(1L).as("text_dup"),
+        when(col("vec_a").isNull, 0L).otherwise(1L).as("embed_dup"))
+
+  /** The DP gates' Laplace(1) draw `lap` per row of CTE `n`, by the
+    * inverse CDF at its uniform hash `v`, carrying `cols`: CTE `l`.
+    */
+  private def laplaceCte(cols: String): String =
+    s"""l AS (SELECT $cols,
+       |        -sign((v + 0.5) / 2147483648.0 - 0.5)
+       |          * ln(1.0 - 2.0 * abs((v + 0.5) / 2147483648.0 - 0.5))
+       |          AS lap
+       |      FROM n)""".stripMargin
+
+  /** qp01/qp05's first two stages on the oracle side (assumes `w`):
+    * quality floor `t` (>= 20 words), exact dedup `k` (min id per
+    * text), survivors `r` (doc_id, lang, tokens).
+    */
+  private val qualityDedupCtes =
+    """t AS (SELECT doc_id, text, CAST(len(ws) AS BIGINT) AS tokens
+      |      FROM w WHERE len(ws) >= 20),
+      |k AS (SELECT min(doc_id) AS doc_id FROM t GROUP BY text),
+      |r AS (SELECT t.doc_id, d.lang, t.tokens
+      |      FROM t JOIN k USING (doc_id) JOIN documents d USING (doc_id))""".stripMargin
+
+  /** `docs` with its whitespace word count as `tokens`. */
+  private def withTokens(docs: DataFrame): DataFrame =
+    docs.withColumn("tokens", size(expr(Text.wordsExpr("text"))).cast("long"))
+
+  /** qc02/qc14's oracle start: per-source running token sum `cb` before
+    * each doc in id order (the packByBudget discipline), in CTE `c`.
+    */
+  private val packedTokensSql =
+    s"""WITH w AS ($wCte),
+       |t AS (SELECT doc_id, CAST(len(ws) AS BIGINT) AS tokens FROM w),
+       |j AS (SELECT d.doc_id, d.source, t.tokens
+       |      FROM documents d JOIN t USING (doc_id)),
+       |c AS (SELECT doc_id, source, tokens,
+       |  CAST(COALESCE(SUM(tokens) OVER (PARTITION BY source ORDER BY doc_id
+       |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cb
+       |  FROM j)""".stripMargin
+
+  /** Spark twin of [[qualityDedupCtes]]: the survivors with `cols`. */
+  private def qualityDeduped(docs: DataFrame, cols: String*): DataFrame = {
+    val quality = withTokens(docs).filter(col("tokens") >= 20L)
+    val keep = Dedup.exact(quality, "doc_id", "text").select(col("keep_id"))
+    quality.join(keep, col("doc_id") === col("keep_id"))
+      .select("doc_id", cols: _*)
+  }
+
+  /** qq04/qq05's oracle start: each customer's quasi-identifiers
+    * (segment, nation) and sensitive value `b`, and the k = 20
+    * ladder's level-0 rung `k0` (groups already k-anonymous).
+    */
+  private val anonLevel0Ctes =
+    """b AS (SELECT c_mktsegment AS seg,
+      |             CAST(c_nationkey AS VARCHAR) AS nat,
+      |             CASE WHEN c_acctbal < 0 THEN 'neg' ELSE 'pos' END
+      |               AS sens
+      |           FROM customer),
+      |l0 AS (SELECT seg, nat, sens,
+      |         COUNT(*) OVER (PARTITION BY seg, nat) AS c0 FROM b),
+      |k0 AS (SELECT seg, nat, sens, 0 AS lvl FROM l0 WHERE c0 >= 20)""".stripMargin
+
+  /** Spark twin of [[anonLevel0Ctes]]'s `b`. */
+  private def anonBase(s: SparkSession, dir: String): DataFrame =
+    Tables(s, dir, "customer").select(
+      col("c_mktsegment").as("seg"),
+      col("c_nationkey").cast("string").as("nat"),
+      when(col("c_acctbal") < 0, "neg").otherwise("pos").as("sens"))
+
+  /** The l-diversity audit over published rows `u`: per published
+    * group, its size and its distinct sensitive values.
+    */
+  private val lDiversitySql =
+    """SELECT seg, nat, CAST(lvl AS BIGINT) AS anon_level,
+      |  CAST(COUNT(*) AS BIGINT) AS n,
+      |  CAST(COUNT(DISTINCT sens) AS BIGINT) AS l_distinct
+      |FROM u GROUP BY 1, 2, 3""".stripMargin
+
+  /** Spark twin of [[lDiversitySql]] over a kAnonymize output. */
+  private def lDiversity(anon: DataFrame): DataFrame =
+    anon.groupBy(col("seg"), col("nat"),
+        col("anon_level").cast("long").as("anon_level"))
+      .agg(count(lit(1)).as("n"),
+        countDistinct(col("sens")).as("l_distinct"))
+
   val all: Seq[Q] = Seq(
 
     // ----- near-dup PRUNE policy (clusters applied to the corpus) --------
@@ -58,24 +183,7 @@ object CurationGates {
     // components, and the anti-join policy under ONE oracle.
     Q("qp02_neardup_prune",
       s"""WITH RECURSIVE w AS ($wCte), sh AS ($shCte),
-         |e AS (SELECT doc_id, unnest(s) AS sh FROM sh),
-         |sz AS (SELECT doc_id, len(s) AS n FROM sh),
-         |inter AS (
-         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS i
-         |  FROM e a JOIN e b ON a.sh = b.sh AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2),
-         |pairs AS (
-         |  SELECT doc_a, doc_b
-         |  FROM inter JOIN sz x ON doc_a = x.doc_id JOIN sz y ON doc_b = y.doc_id
-         |  WHERE i * 1.0 / (x.n + y.n - i) >= 0.5),
-         |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-         |          UNION SELECT doc_b, doc_a FROM pairs),
-         |reach(node, lbl) AS (
-         |  SELECT DISTINCT src, src FROM edges
-         |  UNION
-         |  SELECT g.dst, r.lbl FROM reach r JOIN edges g ON g.src = r.node),
-         |cl AS (SELECT node AS doc_id, min(lbl) AS cluster
-         |       FROM reach GROUP BY node),
+         |$clusterCtes,
          |dropped AS (SELECT doc_id FROM cl WHERE cluster <> doc_id)
          |SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_survivors
          |FROM documents WHERE doc_id NOT IN (SELECT doc_id FROM dropped)
@@ -165,32 +273,8 @@ object CurationGates {
     // the per-source release manifest: sampled docs + token totals.
     Q("qp11_release_candidate",
       s"""WITH RECURSIVE w AS ($wCte), sh AS ($shCte),
-         |e AS (SELECT doc_id, unnest(s) AS sh FROM sh),
-         |sz AS (SELECT doc_id, len(s) AS n FROM sh),
-         |inter AS (
-         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS i
-         |  FROM e a JOIN e b ON a.sh = b.sh AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2),
-         |pairs AS (
-         |  SELECT doc_a, doc_b
-         |  FROM inter JOIN sz x ON doc_a = x.doc_id JOIN sz y ON doc_b = y.doc_id
-         |  WHERE i * 1.0 / (x.n + y.n - i) >= 0.5),
-         |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-         |          UNION SELECT doc_b, doc_a FROM pairs),
-         |reach(node, lbl) AS (
-         |  SELECT DISTINCT src, src FROM edges
-         |  UNION
-         |  SELECT g.dst, r.lbl FROM reach r JOIN edges g ON g.src = r.node),
-         |cl AS (SELECT node AS doc_id, min(lbl) AS cluster
-         |       FROM reach GROUP BY node),
-         |q AS (SELECT doc_id,
-         |        CASE WHEN CAST(len(ws) AS BIGINT) >= 40
-         |               AND CAST(len(list_distinct(ws)) AS BIGINT) * 1.0
-         |                   / CAST(len(ws) AS BIGINT) >= 0.35 THEN 2
-         |             WHEN CAST(len(ws) AS BIGINT) >= 20 THEN 1
-         |             ELSE 0 END AS qr,
-         |        CAST(len(list_distinct(ws)) AS BIGINT) AS ndw
-         |      FROM w),
+         |$clusterCtes,
+         |$qualityRankCte,
          |best AS (SELECT cluster, doc_id, row_number() OVER (
          |           PARTITION BY cluster
          |           ORDER BY qr DESC, ndw DESC, doc_id) AS rn
@@ -246,13 +330,7 @@ object CurationGates {
     // recall bound.
     Q("qp03_semantic_neardup",
       s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-         |n AS (SELECT vec_id, list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS u FROM e),
-         |c0 AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS cid, u AS cv
-         |       FROM (SELECT vec_id, u FROM n ORDER BY vec_id LIMIT 8)),
-         |${lloydIterSql(0)}
-         |${lloydIterSql(1)}
-         |af AS (${assignSql("c2")}),
-         |sf AS (SELECT vec_id, u, cid FROM af WHERE rn = 1),
+         |${semanticCellsSql("e")},
          |p AS (SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
          |        list_dot_product(a.u, b.u) AS sim
          |      FROM sf a JOIN sf b ON a.cid = b.cid AND a.vec_id < b.vec_id)
@@ -270,42 +348,18 @@ object CurationGates {
     // BASELINE ARM since r17: both arms here are deliberately the
     // EXACT quadratic formulations (all-pairs Jaccard, all-pairs
     // cosine) — qp13 below is the fusion a 100 TB pipeline ships.
-    Q("qp04_dedup_fusion",
-      s"""WITH w AS ($wCte), sh AS ($shCte),
-         |e AS (SELECT doc_id, unnest(s) AS sh FROM sh),
-         |sz AS (SELECT doc_id, len(s) AS n FROM sh),
-         |inter AS (
-         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS i
-         |  FROM e a JOIN e b ON a.sh = b.sh AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2),
-         |jp AS (
-         |  SELECT doc_a, doc_b
-         |  FROM inter JOIN sz x ON doc_a = x.doc_id JOIN sz y ON doc_b = y.doc_id
-         |  WHERE i * 1.0 / (x.n + y.n - i) >= 0.5),
-         |ee AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-         |nn AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM ee),
-         |ep AS (
-         |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
-         |  FROM nn a JOIN nn b ON a.vec_id < b.vec_id
-         |  WHERE list_dot_product(a.v, b.v) / (a.nrm * b.nrm) >= 0.4)
-         |SELECT COALESCE(jp.doc_a, ep.vec_a) AS id_a,
-         |  COALESCE(jp.doc_b, ep.vec_b) AS id_b,
-         |  CAST(CASE WHEN jp.doc_a IS NULL THEN 0 ELSE 1 END AS BIGINT) AS text_dup,
-         |  CAST(CASE WHEN ep.vec_a IS NULL THEN 0 ELSE 1 END AS BIGINT) AS embed_dup
-         |FROM jp FULL OUTER JOIN ep
-         |  ON jp.doc_a = ep.vec_a AND jp.doc_b = ep.vec_b""".stripMargin) { (s, dir) =>
+    Q("qp04_dedup_fusion", fusionSql(
+      """nn AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM ee),
+        |ep AS (
+        |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
+        |  FROM nn a JOIN nn b ON a.vec_id < b.vec_id
+        |  WHERE list_dot_product(a.v, b.v) / (a.nrm * b.nrm) >= 0.4)""".stripMargin)) { (s, dir) =>
       val jp = Dedup.ngramJaccardPairs(Tables(s, dir, "documents"),
           "doc_id", "text", n = 3, threshold = 0.5)
         .select(col("doc_a"), col("doc_b"))
       val ep = Dedup.embeddingNearDupPairs(Tables(s, dir, "embeddings"),
         "vec_id", "embedding", 0.4)
-      jp.join(ep,
-          jp("doc_a") === ep("vec_a") && jp("doc_b") === ep("vec_b"), "full_outer")
-        .select(
-          coalesce(col("doc_a"), col("vec_a")).as("id_a"),
-          coalesce(col("doc_b"), col("vec_b")).as("id_b"),
-          when(col("doc_a").isNull, 0L).otherwise(1L).as("text_dup"),
-          when(col("vec_a").isNull, 0L).otherwise(1L).as("embed_dup"))
+      fused(jp, ep)
     },
 
     // ----- dedup-signal fusion, THE SCALE PATH (r16 verdict #3) ----------
@@ -324,47 +378,17 @@ object CurationGates {
     // policy BY DEFINITION (its contract is "within-cell near-dups",
     // hash-gated, not a recall bound). Scale shape: prefix-filtered
     // candidate join + Σ cluster² instead of two O(n²) arms.
-    Q("qp13_dedup_fusion_scale",
-      s"""WITH w AS ($wCte), sh AS ($shCte),
-         |e AS (SELECT doc_id, unnest(s) AS sh FROM sh),
-         |sz AS (SELECT doc_id, len(s) AS n FROM sh),
-         |inter AS (
-         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS i
-         |  FROM e a JOIN e b ON a.sh = b.sh AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2),
-         |jp AS (
-         |  SELECT doc_a, doc_b
-         |  FROM inter JOIN sz x ON doc_a = x.doc_id JOIN sz y ON doc_b = y.doc_id
-         |  WHERE i * 1.0 / (x.n + y.n - i) >= 0.5),
-         |ee AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-         |n AS (SELECT vec_id, list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS u FROM ee),
-         |c0 AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS cid, u AS cv
-         |       FROM (SELECT vec_id, u FROM n ORDER BY vec_id LIMIT 8)),
-         |${lloydIterSql(0)}
-         |${lloydIterSql(1)}
-         |af AS (${assignSql("c2")}),
-         |sf AS (SELECT vec_id, u, cid FROM af WHERE rn = 1),
+    Q("qp13_dedup_fusion_scale", fusionSql(
+      s"""${semanticCellsSql("ee")},
          |ep AS (SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
          |       FROM sf a JOIN sf b ON a.cid = b.cid AND a.vec_id < b.vec_id
-         |       WHERE list_dot_product(a.u, b.u) >= 0.4)
-         |SELECT COALESCE(jp.doc_a, ep.vec_a) AS id_a,
-         |  COALESCE(jp.doc_b, ep.vec_b) AS id_b,
-         |  CAST(CASE WHEN jp.doc_a IS NULL THEN 0 ELSE 1 END AS BIGINT) AS text_dup,
-         |  CAST(CASE WHEN ep.vec_a IS NULL THEN 0 ELSE 1 END AS BIGINT) AS embed_dup
-         |FROM jp FULL OUTER JOIN ep
-         |  ON jp.doc_a = ep.vec_a AND jp.doc_b = ep.vec_b""".stripMargin) { (s, dir) =>
+         |       WHERE list_dot_product(a.u, b.u) >= 0.4)""".stripMargin)) { (s, dir) =>
       val jp = Dedup.ngramJaccardPairsPrefix(Tables(s, dir, "documents"),
           "doc_id", "text", n = 3, threshold = 0.5)
         .select(col("doc_a"), col("doc_b"))
       val ep = Dedup.semanticNearDupPairs(Tables(s, dir, "embeddings"),
         "vec_id", "embedding", k = 8, iters = 2, threshold = 0.4)
-      jp.join(ep,
-          jp("doc_a") === ep("vec_a") && jp("doc_b") === ep("vec_b"), "full_outer")
-        .select(
-          coalesce(col("doc_a"), col("vec_a")).as("id_a"),
-          coalesce(col("doc_b"), col("vec_b")).as("id_b"),
-          when(col("doc_a").isNull, 0L).otherwise(1L).as("text_dup"),
-          when(col("vec_a").isNull, 0L).otherwise(1L).as("embed_dup"))
+      fused(jp, ep)
     },
 
     // ----- deterministic stratified sampling (training-mix quotas) -------
@@ -402,19 +426,11 @@ object CurationGates {
 
     // ----- token-budget shard packing (per-source, id order) -------------
     Q("qc02_pack_budget",
-      s"""WITH w AS ($wCte),
-         |t AS (SELECT doc_id, CAST(len(ws) AS BIGINT) AS tokens FROM w),
-         |j AS (SELECT d.doc_id, d.source, t.tokens
-         |      FROM documents d JOIN t USING (doc_id)),
-         |c AS (SELECT doc_id, source, tokens,
-         |  CAST(COALESCE(SUM(tokens) OVER (PARTITION BY source ORDER BY doc_id
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cb
-         |  FROM j)
+      s"""$packedTokensSql
          |SELECT doc_id, source, tokens, CAST(cb // 512 AS BIGINT) AS shard
          |FROM c""".stripMargin) { (s, dir) =>
-      val docs = Tables(s, dir, "documents")
-        .withColumn("tokens", size(expr(Text.wordsExpr("text"))).cast("long"))
-      Curation.packByBudget(docs, "doc_id", "tokens", "source", budget = 512L)
+      Curation.packByBudget(withTokens(Tables(s, dir, "documents")),
+        "doc_id", "tokens", "source", budget = 512L)
     },
 
     // ----- fixed-token-window chunking with overlap ----------------------
@@ -443,11 +459,7 @@ object CurationGates {
     // library call the standalone gates use.
     Q("qp01_curation_pipeline",
       s"""WITH w AS ($wCte),
-         |t AS (SELECT doc_id, text, CAST(len(ws) AS BIGINT) AS tokens
-         |      FROM w WHERE len(ws) >= 20),
-         |k AS (SELECT min(doc_id) AS doc_id FROM t GROUP BY text),
-         |r AS (SELECT t.doc_id, d.lang, t.tokens
-         |      FROM t JOIN k USING (doc_id) JOIN documents d USING (doc_id)),
+         |$qualityDedupCtes,
          |sm AS (SELECT * FROM r
          |  WHERE ${Text.polyhashSql("CAST(doc_id AS VARCHAR)")} % 10000 <
          |    CASE WHEN lang = 'en' THEN 8000 ELSE 5000 END),
@@ -458,12 +470,7 @@ object CurationGates {
          |  FROM sm)
          |SELECT doc_id, lang, tokens, CAST(cb // 2048 AS BIGINT) AS shard
          |FROM c""".stripMargin) { (s, dir) =>
-      val withTok = Tables(s, dir, "documents")
-        .withColumn("tokens", size(expr(Text.wordsExpr("text"))).cast("long"))
-      val quality = withTok.filter(col("tokens") >= 20L)
-      val keep = Dedup.exact(quality, "doc_id", "text").select(col("keep_id"))
-      val reps = quality.join(keep, col("doc_id") === col("keep_id"))
-        .select("doc_id", "lang", "tokens")
+      val reps = qualityDeduped(Tables(s, dir, "documents"), "lang", "tokens")
       val sampled = Curation.stratifiedHashSample(reps, "doc_id", "lang",
         Map("en" -> 8000), defaultBp = 5000)
       Curation.packByBudget(sampled, "doc_id", "tokens", "lang", budget = 2048L)
@@ -495,18 +502,8 @@ object CurationGates {
     // counts. Every stage is a primitive gated elsewhere (qd15, qt17,
     // qc07, qd01's groupBy-min); the composition gate proves they
     // CHAIN — one hash over the final report.
-    Q("qp07_web_release", {
-      val v = "CAST(doc_id % 6 AS INTEGER)"
-      val pid = "CAST(doc_id // 6 AS VARCHAR)"
-      s"""WITH u AS (SELECT doc_id,
-         |  CASE $v
-         |    WHEN 0 THEN 'https://www.example.com/articles/' || $pid || '?a=1&b=2'
-         |    WHEN 1 THEN 'HTTPS://WWW.EXAMPLE.COM:443/articles/' || $pid || '/?b=2&a=1#section'
-         |    WHEN 2 THEN 'http://example.com:80/articles/' || $pid || '?utm_source=feed&a=1&b=2'
-         |    WHEN 3 THEN 'https://example.com/articles/' || $pid || '?b=2&utm_campaign=x&a=1'
-         |    WHEN 4 THEN 'https://example.com/other/' || $pid
-         |    ELSE 'https://blog.example.com/articles/' || $pid
-         |  END AS url FROM documents),
+    Q("qp07_web_release",
+      s"""WITH $urlVariantsCte,
          |c AS (SELECT doc_id, ${TextAnalysis.canonicalUrlSql("url")} AS canon
          |      FROM u),
          |k1 AS (SELECT MIN(doc_id) AS doc_id FROM c GROUP BY canon),
@@ -526,23 +523,10 @@ object CurationGates {
          |  FROM r)
          |SELECT lang, split, CAST(COUNT(*) AS BIGINT) AS n_docs,
          |  CAST(SUM(tokens) AS BIGINT) AS sum_tokens
-         |FROM sp GROUP BY lang, split""".stripMargin
-    }) { (s, dir) =>
+         |FROM sp GROUP BY lang, split""".stripMargin) { (s, dir) =>
       val docs = Tables(s, dir, "documents")
-      val pid = expr("doc_id div 6").cast("string")
-      val url = element_at(array(
-        concat(lit("https://www.example.com/articles/"), pid, lit("?a=1&b=2")),
-        concat(lit("HTTPS://WWW.EXAMPLE.COM:443/articles/"), pid,
-          lit("/?b=2&a=1#section")),
-        concat(lit("http://example.com:80/articles/"), pid,
-          lit("?utm_source=feed&a=1&b=2")),
-        concat(lit("https://example.com/articles/"), pid,
-          lit("?b=2&utm_campaign=x&a=1")),
-        concat(lit("https://example.com/other/"), pid),
-        concat(lit("https://blog.example.com/articles/"), pid)),
-        pmod(col("doc_id"), lit(6)).cast("int") + 1)
       val canonKeep = docs
-        .select(col("doc_id"), TextAnalysis.canonicalUrl(url).as("canon"))
+        .select(col("doc_id"), TextAnalysis.canonicalUrl(urlVariant).as("canon"))
         .groupBy("canon").agg(min("doc_id").as("doc_id"))
         .select("doc_id")
       val quality = docs.join(canonKeep, "doc_id")
@@ -581,11 +565,7 @@ object CurationGates {
 
     Q("qp05_decontaminated_corpus",
       s"""WITH w AS ($wCte),
-         |t AS (SELECT doc_id, text, CAST(len(ws) AS BIGINT) AS tokens
-         |      FROM w WHERE len(ws) >= 20),
-         |k AS (SELECT min(doc_id) AS doc_id FROM t GROUP BY text),
-         |r AS (SELECT t.doc_id, d.lang, t.tokens
-         |      FROM t JOIN k USING (doc_id) JOIN documents d USING (doc_id)),
+         |$qualityDedupCtes,
          |ev AS (SELECT doc_id FROM documents
          |  WHERE ${Text.polyhashSql("CAST(doc_id AS VARCHAR)")} % 10000 < 500),
          |tr AS (SELECT * FROM r WHERE doc_id NOT IN (SELECT doc_id FROM ev)),
@@ -605,12 +585,7 @@ object CurationGates {
          |  ${Text.polyhashSql("CAST(doc_id AS VARCHAR)")} % 10000 AS bucket
          |  FROM clean)""".stripMargin) { (s, dir) =>
       val docs = Tables(s, dir, "documents")
-      val withTok = docs
-        .withColumn("tokens", size(expr(Text.wordsExpr("text"))).cast("long"))
-      val quality = withTok.filter(col("tokens") >= 20L)
-      val keep = Dedup.exact(quality, "doc_id", "text").select(col("keep_id"))
-      val reps = quality.join(keep, col("doc_id") === col("keep_id"))
-        .select("doc_id", "lang", "tokens", "text")
+      val reps = qualityDeduped(docs, "lang", "tokens", "text")
       val evalSet = Curation.hashSample(docs, "doc_id", 500)
       val train = reps.join(evalSet.select(col("doc_id").as("__eid")),
         col("doc_id") === col("__eid"), "left_anti")
@@ -902,24 +877,7 @@ object CurationGates {
     Q("qc13_leakage_safe_split",
       s"""WITH RECURSIVE w AS ($wCte),
          |sh AS (SELECT doc_id, ${Text.shinglesSql("ws")} AS s FROM w),
-         |e AS (SELECT doc_id, unnest(s) AS sh FROM sh),
-         |sz AS (SELECT doc_id, len(s) AS n FROM sh),
-         |inter AS (
-         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS i
-         |  FROM e a JOIN e b ON a.sh = b.sh AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2),
-         |pairs AS (
-         |  SELECT doc_a, doc_b
-         |  FROM inter JOIN sz x ON doc_a = x.doc_id JOIN sz y ON doc_b = y.doc_id
-         |  WHERE i * 1.0 / (x.n + y.n - i) >= 0.5),
-         |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-         |          UNION SELECT doc_b, doc_a FROM pairs),
-         |reach(node, lbl) AS (
-         |  SELECT DISTINCT src, src FROM edges
-         |  UNION
-         |  SELECT g.dst, r.lbl FROM reach r JOIN edges g ON g.src = r.node),
-         |cl AS (SELECT node AS doc_id, min(lbl) AS cluster
-         |       FROM reach GROUP BY node),
+         |$clusterCtes,
          |g AS (SELECT d.doc_id, COALESCE(cl.cluster, d.doc_id) AS grp
          |      FROM documents d LEFT JOIN cl USING (doc_id))
          |SELECT doc_id, grp, bucket,
@@ -945,14 +903,7 @@ object CurationGates {
     // trainer: silent under-fill is wasted step time, systematic
     // overflow means the budget is mis-sized.
     Q("qc14_pack_stats",
-      s"""WITH w AS ($wCte),
-         |t AS (SELECT doc_id, CAST(len(ws) AS BIGINT) AS tokens FROM w),
-         |j AS (SELECT d.doc_id, d.source, t.tokens
-         |      FROM documents d JOIN t USING (doc_id)),
-         |c AS (SELECT doc_id, source, tokens,
-         |  CAST(COALESCE(SUM(tokens) OVER (PARTITION BY source ORDER BY doc_id
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cb
-         |  FROM j),
+      s"""$packedTokensSql,
          |packed AS (SELECT doc_id, source, tokens,
          |  CAST(cb // 512 AS BIGINT) AS shard FROM c)
          |SELECT source, shard,
@@ -962,10 +913,8 @@ object CurationGates {
          |  CAST(CASE WHEN SUM(tokens) > 512 THEN 1 ELSE 0 END AS BIGINT)
          |    AS over_budget
          |FROM packed GROUP BY source, shard""".stripMargin) { (s, dir) =>
-      val docs = Tables(s, dir, "documents")
-        .withColumn("tokens", size(expr(Text.wordsExpr("text"))).cast("long"))
-      val packed = Curation.packByBudget(docs, "doc_id", "tokens", "source",
-        budget = 512L)
+      val packed = Curation.packByBudget(withTokens(Tables(s, dir, "documents")),
+        "doc_id", "tokens", "source", budget = 512L)
       Curation.packStats(packed, "tokens", "source", budget = 512L)
     },
 
@@ -1215,14 +1164,7 @@ object CurationGates {
     // kAnonymize carries non-quasi payload columns through the
     // ladder untouched.
     Q("qq04_l_diversity",
-      """WITH b AS (SELECT c_mktsegment AS seg,
-        |             CAST(c_nationkey AS VARCHAR) AS nat,
-        |             CASE WHEN c_acctbal < 0 THEN 'neg' ELSE 'pos' END
-        |               AS sens
-        |           FROM customer),
-        |l0 AS (SELECT seg, nat, sens,
-        |         COUNT(*) OVER (PARTITION BY seg, nat) AS c0 FROM b),
-        |k0 AS (SELECT seg, nat, sens, 0 AS lvl FROM l0 WHERE c0 >= 20),
+      s"""WITH $anonLevel0Ctes,
         |r0 AS (SELECT seg, sens FROM l0 WHERE c0 < 20),
         |l1 AS (SELECT seg, sens,
         |         COUNT(*) OVER (PARTITION BY seg) AS c1 FROM r0),
@@ -1232,19 +1174,9 @@ object CurationGates {
         |k2 AS (SELECT '*' AS seg, '*' AS nat, sens, 2 AS lvl FROM r1),
         |u AS (SELECT * FROM k0 UNION ALL SELECT * FROM k1
         |      UNION ALL SELECT * FROM k2)
-        |SELECT seg, nat, CAST(lvl AS BIGINT) AS anon_level,
-        |  CAST(COUNT(*) AS BIGINT) AS n,
-        |  CAST(COUNT(DISTINCT sens) AS BIGINT) AS l_distinct
-        |FROM u GROUP BY 1, 2, 3""".stripMargin) { (s, dir) =>
-      val base = Tables(s, dir, "customer").select(
-        col("c_mktsegment").as("seg"),
-        col("c_nationkey").cast("string").as("nat"),
-        when(col("c_acctbal") < 0, "neg").otherwise("pos").as("sens"))
-      Curation.kAnonymize(base, Seq("seg", "nat"), k = 20)
-        .groupBy(col("seg"), col("nat"),
-          col("anon_level").cast("long").as("anon_level"))
-        .agg(count(lit(1)).as("n"),
-          countDistinct(col("sens")).as("l_distinct"))
+        |$lDiversitySql""".stripMargin) { (s, dir) =>
+      val base = anonBase(s, dir)
+      lDiversity(Curation.kAnonymize(base, Seq("seg", "nat"), k = 20))
     },
 
     // ----- tokenizer release composition ----------------------------------
@@ -1315,14 +1247,7 @@ object CurationGates {
     // risks a reviewer reads. The builder additionally REQUIRES every
     // published non-terminal group to satisfy k.
     Q("qq05_k_anon_hierarchy",
-      """WITH b AS (SELECT c_mktsegment AS seg,
-        |             CAST(c_nationkey AS VARCHAR) AS nat,
-        |             CASE WHEN c_acctbal < 0 THEN 'neg' ELSE 'pos' END
-        |               AS sens
-        |           FROM customer),
-        |l0 AS (SELECT seg, nat, sens,
-        |         COUNT(*) OVER (PARTITION BY seg, nat) AS c0 FROM b),
-        |k0 AS (SELECT seg, nat, sens, 0 AS lvl FROM l0 WHERE c0 >= 20),
+      s"""WITH $anonLevel0Ctes,
         |r0 AS (SELECT seg, nat, sens FROM l0 WHERE c0 < 20),
         |g1 AS (SELECT seg,
         |         'N' || CAST(CAST(nat AS BIGINT) // 5 AS VARCHAR) AS nat,
@@ -1339,15 +1264,9 @@ object CurationGates {
         |k3 AS (SELECT '*' AS seg, '*' AS nat, sens, 3 AS lvl FROM r2),
         |u AS (SELECT * FROM k0 UNION ALL SELECT * FROM k1
         |      UNION ALL SELECT * FROM k2 UNION ALL SELECT * FROM k3)
-        |SELECT seg, nat, CAST(lvl AS BIGINT) AS anon_level,
-        |  CAST(COUNT(*) AS BIGINT) AS n,
-        |  CAST(COUNT(DISTINCT sens) AS BIGINT) AS l_distinct
-        |FROM u GROUP BY 1, 2, 3""".stripMargin) { (s, dir) =>
+        |$lDiversitySql""".stripMargin) { (s, dir) =>
       val k = 20
-      val base = Tables(s, dir, "customer").select(
-        col("c_mktsegment").as("seg"),
-        col("c_nationkey").cast("string").as("nat"),
-        when(col("c_acctbal") < 0, "neg").otherwise("pos").as("sens"))
+      val base = anonBase(s, dir)
       // nation -> 5-wide bucket (nations 0..24 -> N0..N4); exact for
       // non-negative keys in both engines (floor-div of small ints)
       val natBucket: Column => Column = c =>
@@ -1355,11 +1274,7 @@ object CurationGates {
           .cast("string"))
       val anon = Curation.kAnonymizeHierarchical(base,
         Seq("seg" -> Seq.empty, "nat" -> Seq(natBucket)), k = k)
-      val out = anon
-        .groupBy(col("seg"), col("nat"),
-          col("anon_level").cast("long").as("anon_level"))
-        .agg(count(lit(1)).as("n"),
-          countDistinct(col("sens")).as("l_distinct"))
+      val out = lDiversity(anon)
       require(out.filter(col("anon_level") < 3 && col("n") < k).isEmpty,
         s"k-anonymity violated: a published non-terminal group has < $k rows")
       out
@@ -1380,7 +1295,7 @@ object CurationGates {
     // values sit >=6.6e-3 from every floor boundary (measured round
     // 17, all four sf scales), 13 orders of magnitude beyond a ulp.
     Q("qq06_dp_histogram",
-      """WITH g AS (SELECT c_mktsegment AS seg,
+      s"""WITH g AS (SELECT c_mktsegment AS seg,
         |             CAST(c_nationkey AS BIGINT) AS nat,
         |             COUNT(*) AS cnt
         |           FROM customer GROUP BY 1, 2),
@@ -1389,11 +1304,7 @@ object CurationGates {
         |             % 2147483648)
         |           * 2654435761 % 2147483648) + 12345) % 2147483648 AS v
         |      FROM g),
-        |l AS (SELECT seg, nat, cnt,
-        |        -sign((v + 0.5) / 2147483648.0 - 0.5)
-        |          * ln(1.0 - 2.0 * abs((v + 0.5) / 2147483648.0 - 0.5))
-        |          AS lap
-        |      FROM n),
+        |${laplaceCte("seg, nat, cnt")},
         |r AS (SELECT seg, nat,
         |        cnt + CAST(floor(lap * 2.0 + 0.5) AS BIGINT) AS noisy_count
         |      FROM l)
@@ -1426,7 +1337,7 @@ object CurationGates {
     // rounding boundary (measured round 17; same keys at every sf —
     // days and types don't scale).
     Q("qq07_dp_stream_release",
-      """WITH g AS (SELECT CAST(date_trunc('day', ts) AS DATE) AS d,
+      s"""WITH g AS (SELECT CAST(date_trunc('day', ts) AS DATE) AS d,
         |             event_type AS et, COUNT(*) AS cnt
         |           FROM events GROUP BY 1, 2),
         |k AS (SELECT d, et, cnt,
@@ -1436,11 +1347,7 @@ object CurationGates {
         |        (1103515245 * (((key + 98765431) % 2147483648)
         |           * 2654435761 % 2147483648) + 12345) % 2147483648 AS v
         |      FROM k),
-        |l AS (SELECT d, et, cnt,
-        |        -sign((v + 0.5) / 2147483648.0 - 0.5)
-        |          * ln(1.0 - 2.0 * abs((v + 0.5) / 2147483648.0 - 0.5))
-        |          AS lap
-        |      FROM n),
+        |${laplaceCte("d, et, cnt")},
         |r AS (SELECT d, et,
         |        cnt + CAST(floor(lap * 2.0 + 0.5) AS BIGINT) AS noisy_count
         |      FROM l)
@@ -1626,7 +1533,7 @@ object CurationGates {
     // (measured round 18 at sf0.001/0.01/0.1/1 — the group domain
     // doesn't scale past 125 keys).
     Q("qq10_dp_budget_enforce",
-      """WITH g AS (SELECT c_mktsegment AS seg,
+      s"""WITH g AS (SELECT c_mktsegment AS seg,
         |             CAST(c_nationkey AS BIGINT) AS nat,
         |             COUNT(*) AS cnt
         |           FROM customer GROUP BY 1, 2),
@@ -1641,11 +1548,7 @@ object CurationGates {
         |             % 2147483648)
         |           * 2654435761 % 2147483648) + 12345) % 2147483648 AS v
         |      FROM a),
-        |l AS (SELECT seg, nat, cnt, prior_spent_micro, admitted,
-        |        -sign((v + 0.5) / 2147483648.0 - 0.5)
-        |          * ln(1.0 - 2.0 * abs((v + 0.5) / 2147483648.0 - 0.5))
-        |          AS lap
-        |      FROM n),
+        |${laplaceCte("seg, nat, cnt, prior_spent_micro, admitted")},
         |r AS (SELECT seg, nat, prior_spent_micro, admitted,
         |        CASE WHEN admitted = 1
         |          THEN cnt + CAST(floor(lap * 4.0 + 0.5) AS BIGINT)

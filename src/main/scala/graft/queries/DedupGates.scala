@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.{Fixture, Tables}
@@ -17,6 +18,56 @@ import Shared._
   */
 object DedupGates {
 
+  /** Exact n-gram Jaccard >= 0.5 pairs: the brute-force oracle every
+    * near-dup pair formulation (inverted index, prefix filter, LSH) is
+    * gated against.
+    */
+  private val jaccardPairsSql =
+    s"""WITH w AS ($wCte), sh AS ($shCte),
+       |$interCtes
+       |SELECT doc_a, doc_b, i * 1.0 / (x.n + y.n - i) AS jaccard
+       |FROM inter JOIN sz x ON doc_a = x.doc_id JOIN sz y ON doc_b = y.doc_id
+       |WHERE i * 1.0 / (x.n + y.n - i) >= 0.5""".stripMargin
+
+  /** The 60-bit simhash's per-(doc, bit) weighted votes `b` (j, s). */
+  private val simVotesSql =
+    s"""WITH w AS ($wCte),
+       |wd AS (SELECT doc_id, unnest(ws) AS word FROM w),
+       |h AS (SELECT doc_id, ${Text.polyhashSql("word")} AS h FROM wd),
+       |b AS (
+       |  SELECT doc_id, j, SUM(${Text.simVoteSql("h", "j")}) AS s
+       |  FROM h, (SELECT CAST(range AS INTEGER) AS j FROM range(0, 60))
+       |  GROUP BY doc_id, j)""".stripMargin
+
+  /** qd07's oracle: the eval set is a deterministic 5% hash sample;
+    * per remaining doc, how many of its distinct 8-gram shingles
+    * appear anywhere in eval.
+    */
+  private val decontaminateSql =
+    s"""WITH w AS ($wCte),
+       |ev AS (SELECT doc_id FROM documents
+       |  WHERE ${Text.polyhashSql("CAST(doc_id AS VARCHAR)")} % 10000 < 500),
+       |tsh AS (SELECT doc_id, UNNEST(${Text.shinglesSql("ws", 8)}) AS shingle
+       |        FROM w WHERE doc_id NOT IN (SELECT doc_id FROM ev)),
+       |esh AS (SELECT DISTINCT UNNEST(${Text.shinglesSql("ws", 8)}) AS shingle
+       |        FROM w WHERE doc_id IN (SELECT doc_id FROM ev))
+       |SELECT t.doc_id, CAST(COUNT(*) AS BIGINT) AS n_shingles,
+       |  CAST(SUM(CASE WHEN e.shingle IS NOT NULL THEN 1 ELSE 0 END)
+       |    AS BIGINT) AS n_contaminated
+       |FROM tsh t LEFT JOIN esh e ON t.shingle = e.shingle
+       |GROUP BY t.doc_id""".stripMargin
+
+  /** qd07's train/eval split: `train` is every doc outside the eval
+    * hash sample, in the shape Curation.contamination takes.
+    */
+  private def decontaminationSplit(s: SparkSession, dir: String) = {
+    val docs = Tables(s, dir, "documents")
+    val evalSet = Curation.hashSample(docs, "doc_id", 500)
+    val train = docs.join(evalSet.select(col("doc_id").as("__eid")),
+      col("doc_id") === col("__eid"), "left_anti")
+    (train, evalSet)
+  }
+
   val all: Seq[Q] = Seq(
 
     // ----- exact dedup: hash group-by on content ------------------------
@@ -27,16 +78,7 @@ object DedupGates {
 
     // ----- exact n-gram Jaccard near-dup pairs (inverted index) ---------
     Q("qd02_ngram_jaccard",
-      s"""WITH w AS ($wCte), sh AS ($shCte),
-         |e AS (SELECT doc_id, unnest(s) AS sh FROM sh),
-         |sz AS (SELECT doc_id, len(s) AS n FROM sh),
-         |inter AS (
-         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS i
-         |  FROM e a JOIN e b ON a.sh = b.sh AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2)
-         |SELECT doc_a, doc_b, i * 1.0 / (x.n + y.n - i) AS jaccard
-         |FROM inter JOIN sz x ON doc_a = x.doc_id JOIN sz y ON doc_b = y.doc_id
-         |WHERE i * 1.0 / (x.n + y.n - i) >= 0.5""".stripMargin) { (s, dir) =>
+      jaccardPairsSql) { (s, dir) =>
       Dedup.ngramJaccardPairs(Tables(s, dir, "documents"), "doc_id", "text",
         n = 3, threshold = 0.5)
     },
@@ -95,39 +137,16 @@ object DedupGates {
     // Variants 0/1/3 MUST land identical canon strings or the group
     // counts (and the hash) break. Row-local canon + one partitioned
     // window; the dedup itself is then qd01's exact groupBy.
-    Q("qd15_url_canon", {
-      val v = "CAST(doc_id % 6 AS INTEGER)"
-      val pid = "CAST(doc_id // 6 AS VARCHAR)"
-      s"""WITH u AS (SELECT doc_id,
-         |  CASE $v
-         |    WHEN 0 THEN 'https://www.example.com/articles/' || $pid || '?a=1&b=2'
-         |    WHEN 1 THEN 'HTTPS://WWW.EXAMPLE.COM:443/articles/' || $pid || '/?b=2&a=1#section'
-         |    WHEN 2 THEN 'http://example.com:80/articles/' || $pid || '?utm_source=feed&a=1&b=2'
-         |    WHEN 3 THEN 'https://example.com/articles/' || $pid || '?b=2&utm_campaign=x&a=1'
-         |    WHEN 4 THEN 'https://example.com/other/' || $pid
-         |    ELSE 'https://blog.example.com/articles/' || $pid
-         |  END AS url FROM documents)
+    Q("qd15_url_canon",
+      s"""WITH $urlVariantsCte
          |SELECT doc_id, ${TextAnalysis.canonicalUrlSql("url")} AS canon_url,
          |  COUNT(*) OVER (PARTITION BY ${TextAnalysis.canonicalUrlSql("url")})
          |    AS n_same
-         |FROM u""".stripMargin
-    }) { (s, dir) =>
+         |FROM u""".stripMargin) { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
-      val pid = expr("doc_id div 6").cast("string")
-      val url = element_at(array(
-        concat(lit("https://www.example.com/articles/"), pid, lit("?a=1&b=2")),
-        concat(lit("HTTPS://WWW.EXAMPLE.COM:443/articles/"), pid,
-          lit("/?b=2&a=1#section")),
-        concat(lit("http://example.com:80/articles/"), pid,
-          lit("?utm_source=feed&a=1&b=2")),
-        concat(lit("https://example.com/articles/"), pid,
-          lit("?b=2&utm_campaign=x&a=1")),
-        concat(lit("https://example.com/other/"), pid),
-        concat(lit("https://blog.example.com/articles/"), pid)),
-        pmod(col("doc_id"), lit(6)).cast("int") + 1)
       Tables(s, dir, "documents")
         .select(col("doc_id"),
-          TextAnalysis.canonicalUrl(url).as("canon_url"))
+          TextAnalysis.canonicalUrl(urlVariant).as("canon_url"))
         .withColumn("n_same",
           count(lit(1)).over(Window.partitionBy(col("canon_url"))))
     },
@@ -151,16 +170,7 @@ object DedupGates {
     },
 
     Q("qd09_ngram_prefix",
-      s"""WITH w AS ($wCte), sh AS ($shCte),
-         |e AS (SELECT doc_id, unnest(s) AS sh FROM sh),
-         |sz AS (SELECT doc_id, len(s) AS n FROM sh),
-         |inter AS (
-         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS i
-         |  FROM e a JOIN e b ON a.sh = b.sh AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2)
-         |SELECT doc_a, doc_b, i * 1.0 / (x.n + y.n - i) AS jaccard
-         |FROM inter JOIN sz x ON doc_a = x.doc_id JOIN sz y ON doc_b = y.doc_id
-         |WHERE i * 1.0 / (x.n + y.n - i) >= 0.5""".stripMargin) { (s, dir) =>
+      jaccardPairsSql) { (s, dir) =>
       Dedup.ngramJaccardPairsPrefix(Tables(s, dir, "documents"), "doc_id",
         "text", n = 3, threshold = 0.5)
     },
@@ -179,13 +189,7 @@ object DedupGates {
 
     // ----- simhash (60-bit, word-frequency weighted) --------------------
     Q("qd04_simhash",
-      s"""WITH w AS ($wCte),
-         |wd AS (SELECT doc_id, unnest(ws) AS word FROM w),
-         |h AS (SELECT doc_id, ${Text.polyhashSql("word")} AS h FROM wd),
-         |b AS (
-         |  SELECT doc_id, j, SUM(${Text.simVoteSql("h", "j")}) AS s
-         |  FROM h, (SELECT CAST(range AS INTEGER) AS j FROM range(0, 60))
-         |  GROUP BY doc_id, j)
+      s"""$simVotesSql
          |SELECT doc_id,
          |  CAST(SUM(CASE WHEN s > 0 THEN (CAST(1 AS BIGINT) << j) ELSE 0 END) AS BIGINT) AS simhash
          |FROM b GROUP BY doc_id""".stripMargin) { (s, dir) =>
@@ -194,13 +198,7 @@ object DedupGates {
 
     // ----- simhash near-dup pairs (banded Hamming, pigeonhole recall 1) --
     Q("qd08_simhash_neardup",
-      s"""WITH w AS ($wCte),
-         |wd AS (SELECT doc_id, unnest(ws) AS word FROM w),
-         |h AS (SELECT doc_id, ${Text.polyhashSql("word")} AS h FROM wd),
-         |b AS (
-         |  SELECT doc_id, j, SUM(${Text.simVoteSql("h", "j")}) AS s
-         |  FROM h, (SELECT CAST(range AS INTEGER) AS j FROM range(0, 60))
-         |  GROUP BY doc_id, j),
+      s"""$simVotesSql,
          |sh AS (SELECT doc_id,
          |  CAST(SUM(CASE WHEN s > 0 THEN (CAST(1 AS BIGINT) << j) ELSE 0 END)
          |    AS BIGINT) AS simhash
@@ -231,16 +229,7 @@ object DedupGates {
     // flows through the bucketed exact-verify join, so precision is
     // unaffected and the extra work is proportional to true near-dups.
     Q("qd05_minhash_lsh",
-      s"""WITH w AS ($wCte), sh AS ($shCte),
-         |e AS (SELECT doc_id, unnest(s) AS sh FROM sh),
-         |sz AS (SELECT doc_id, len(s) AS n FROM sh),
-         |inter AS (
-         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS i
-         |  FROM e a JOIN e b ON a.sh = b.sh AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2)
-         |SELECT doc_a, doc_b, i * 1.0 / (x.n + y.n - i) AS jaccard
-         |FROM inter JOIN sz x ON doc_a = x.doc_id JOIN sz y ON doc_b = y.doc_id
-         |WHERE i * 1.0 / (x.n + y.n - i) >= 0.5""".stripMargin) { (s, dir) =>
+      jaccardPairsSql) { (s, dir) =>
       Dedup.minhashLshPairs(Tables(s, dir, "documents"), "doc_id", "text",
         k = 48, bands = 24, threshold = 0.5)
     },
@@ -252,16 +241,7 @@ object DedupGates {
     // its measured recall transfers; oracle = exact pairs with at least
     // one incoming member.
     Q("qd10_incremental_neardup",
-      s"""WITH w AS ($wCte), sh AS ($shCte),
-         |e AS (SELECT doc_id, unnest(s) AS sh FROM sh),
-         |sz AS (SELECT doc_id, len(s) AS n FROM sh),
-         |inter AS (
-         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS i
-         |  FROM e a JOIN e b ON a.sh = b.sh AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2)
-         |SELECT doc_a, doc_b, i * 1.0 / (x.n + y.n - i) AS jaccard
-         |FROM inter JOIN sz x ON doc_a = x.doc_id JOIN sz y ON doc_b = y.doc_id
-         |WHERE i * 1.0 / (x.n + y.n - i) >= 0.5
+      s"""$jaccardPairsSql
          |  AND NOT (doc_a % 2 = 0 AND doc_b % 2 = 0)""".stripMargin) { (s, dir) =>
       val docs = Tables(s, dir, "documents")
       Dedup.incrementalNearDupPairs(
@@ -271,27 +251,10 @@ object DedupGates {
     },
 
     // ----- near-dup clusters: LSH pairs closed under transitivity --------
-    // Spark runs iterative min-label propagation (one shuffle per round,
-    // <= diameter rounds); the oracle computes the same component-min
-    // labeling via a recursive CTE over the brute-force exact pairs.
+    // (the two engines' labelings: see Shared.reachCtes)
     Q("qd06_dedup_clusters",
       s"""WITH RECURSIVE w AS ($wCte), sh AS ($shCte),
-         |e AS (SELECT doc_id, unnest(s) AS sh FROM sh),
-         |sz AS (SELECT doc_id, len(s) AS n FROM sh),
-         |inter AS (
-         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS i
-         |  FROM e a JOIN e b ON a.sh = b.sh AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2),
-         |pairs AS (
-         |  SELECT doc_a, doc_b
-         |  FROM inter JOIN sz x ON doc_a = x.doc_id JOIN sz y ON doc_b = y.doc_id
-         |  WHERE i * 1.0 / (x.n + y.n - i) >= 0.5),
-         |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-         |          UNION SELECT doc_b, doc_a FROM pairs),
-         |reach(node, lbl) AS (
-         |  SELECT DISTINCT src, src FROM edges
-         |  UNION
-         |  SELECT g.dst, r.lbl FROM reach r JOIN edges g ON g.src = r.node)
+         |$reachCtes
          |SELECT node AS doc_id, min(lbl) AS cluster
          |FROM reach GROUP BY node""".stripMargin) { (s, dir) =>
       clustersOf(s, dir)
@@ -306,32 +269,8 @@ object DedupGates {
     // exactly (no float argmax).
     Q("qd17_cluster_best_keep",
       s"""WITH RECURSIVE w AS ($wCte), sh AS ($shCte),
-         |e AS (SELECT doc_id, unnest(s) AS sh FROM sh),
-         |sz AS (SELECT doc_id, len(s) AS n FROM sh),
-         |inter AS (
-         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS i
-         |  FROM e a JOIN e b ON a.sh = b.sh AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2),
-         |pairs AS (
-         |  SELECT doc_a, doc_b
-         |  FROM inter JOIN sz x ON doc_a = x.doc_id JOIN sz y ON doc_b = y.doc_id
-         |  WHERE i * 1.0 / (x.n + y.n - i) >= 0.5),
-         |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-         |          UNION SELECT doc_b, doc_a FROM pairs),
-         |reach(node, lbl) AS (
-         |  SELECT DISTINCT src, src FROM edges
-         |  UNION
-         |  SELECT g.dst, r.lbl FROM reach r JOIN edges g ON g.src = r.node),
-         |cl AS (SELECT node AS doc_id, min(lbl) AS cluster
-         |       FROM reach GROUP BY node),
-         |q AS (SELECT doc_id,
-         |        CASE WHEN CAST(len(ws) AS BIGINT) >= 40
-         |               AND CAST(len(list_distinct(ws)) AS BIGINT) * 1.0
-         |                   / CAST(len(ws) AS BIGINT) >= 0.35 THEN 2
-         |             WHEN CAST(len(ws) AS BIGINT) >= 20 THEN 1
-         |             ELSE 0 END AS qr,
-         |        CAST(len(list_distinct(ws)) AS BIGINT) AS ndw
-         |      FROM w),
+         |$clusterCtes,
+         |$qualityRankCte,
          |m AS (SELECT cluster, doc_id, row_number() OVER (
          |        PARTITION BY cluster
          |        ORDER BY qr DESC, ndw DESC, doc_id) AS rn,
@@ -346,25 +285,8 @@ object DedupGates {
     },
 
     // ----- train/eval decontamination (8-gram overlap accounting) --------
-    // eval set = deterministic 5% hash sample; per remaining doc, how
-    // many of its distinct 8-gram shingles appear anywhere in eval
-    Q("qd07_decontaminate",
-      s"""WITH w AS ($wCte),
-         |ev AS (SELECT doc_id FROM documents
-         |  WHERE ${Text.polyhashSql("CAST(doc_id AS VARCHAR)")} % 10000 < 500),
-         |tsh AS (SELECT doc_id, UNNEST(${Text.shinglesSql("ws", 8)}) AS shingle
-         |        FROM w WHERE doc_id NOT IN (SELECT doc_id FROM ev)),
-         |esh AS (SELECT DISTINCT UNNEST(${Text.shinglesSql("ws", 8)}) AS shingle
-         |        FROM w WHERE doc_id IN (SELECT doc_id FROM ev))
-         |SELECT t.doc_id, CAST(COUNT(*) AS BIGINT) AS n_shingles,
-         |  CAST(SUM(CASE WHEN e.shingle IS NOT NULL THEN 1 ELSE 0 END)
-         |    AS BIGINT) AS n_contaminated
-         |FROM tsh t LEFT JOIN esh e ON t.shingle = e.shingle
-         |GROUP BY t.doc_id""".stripMargin) { (s, dir) =>
-      val docs = Tables(s, dir, "documents")
-      val evalSet = Curation.hashSample(docs, "doc_id", 500)
-      val train = docs.join(evalSet.select(col("doc_id").as("__eid")),
-        col("doc_id") === col("__eid"), "left_anti")
+    Q("qd07_decontaminate", decontaminateSql) { (s, dir) =>
+      val (train, evalSet) = decontaminationSplit(s, dir)
       Curation.contamination(train, evalSet, "doc_id", "text", n = 8)
     },
 
@@ -374,23 +296,8 @@ object DedupGates {
     // plus an fpp sliver reach the verify join — instead of every
     // shingle of a 100 TB corpus. No false negatives → exactly qd07's
     // answer, proven by gating both against the IDENTICAL oracle.
-    Q("qd11_bloom_decontaminate",
-      s"""WITH w AS ($wCte),
-         |ev AS (SELECT doc_id FROM documents
-         |  WHERE ${Text.polyhashSql("CAST(doc_id AS VARCHAR)")} % 10000 < 500),
-         |tsh AS (SELECT doc_id, UNNEST(${Text.shinglesSql("ws", 8)}) AS shingle
-         |        FROM w WHERE doc_id NOT IN (SELECT doc_id FROM ev)),
-         |esh AS (SELECT DISTINCT UNNEST(${Text.shinglesSql("ws", 8)}) AS shingle
-         |        FROM w WHERE doc_id IN (SELECT doc_id FROM ev))
-         |SELECT t.doc_id, CAST(COUNT(*) AS BIGINT) AS n_shingles,
-         |  CAST(SUM(CASE WHEN e.shingle IS NOT NULL THEN 1 ELSE 0 END)
-         |    AS BIGINT) AS n_contaminated
-         |FROM tsh t LEFT JOIN esh e ON t.shingle = e.shingle
-         |GROUP BY t.doc_id""".stripMargin) { (s, dir) =>
-      val docs = Tables(s, dir, "documents")
-      val evalSet = Curation.hashSample(docs, "doc_id", 500)
-      val train = docs.join(evalSet.select(col("doc_id").as("__eid")),
-        col("doc_id") === col("__eid"), "left_anti")
+    Q("qd11_bloom_decontaminate", decontaminateSql) { (s, dir) =>
+      val (train, evalSet) = decontaminationSplit(s, dir)
       Curation.bloomContamination(train, evalSet, "doc_id", "text", n = 8)
     },
 

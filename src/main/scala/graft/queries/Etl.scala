@@ -12,22 +12,30 @@ import graft.operators.Sessions
   */
 object Etl {
 
+  /** The gap-based sessions on the oracle side: a new session `new_s`
+    * starts after 30 minutes of a user's silence, and `s` numbers each
+    * user's sessions (session_seq), carrying the `carry` columns (each
+    * with a leading space and a trailing comma).
+    */
+  private def sessionCtes(carry: String): String =
+    s"""o AS (
+       |  SELECT user_id, event_id, ts,$carry
+       |    CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
+       |           OR ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
+       |              > INTERVAL 30 MINUTE
+       |         THEN 1 ELSE 0 END AS new_s
+       |  FROM events),
+       |s AS (
+       |  SELECT user_id, ts,$carry
+       |    CAST(SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
+       |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_seq
+       |  FROM o)""".stripMargin
+
   val all: Seq[Q] = Seq(
 
     // ----- gap-based sessionization (batch twin of the streaming op) ----
     Q("q31_events_sessions",
-      s"""WITH o AS (
-         |  SELECT user_id, event_id, ts, value,
-         |    CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-         |           OR ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-         |              > INTERVAL 30 MINUTE
-         |         THEN 1 ELSE 0 END AS new_s
-         |  FROM events),
-         |s AS (
-         |  SELECT user_id, ts, value,
-         |    CAST(SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-         |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_seq
-         |  FROM o)
+      s"""WITH ${sessionCtes(" value,")}
          |SELECT user_id, session_seq, COUNT(*) AS n_events,
          |  min(ts) AS session_start, max(ts) AS session_end,
          |  ${dsumSql("value")} AS total_value
@@ -42,18 +50,7 @@ object Etl {
     // ordered before -1 at ties — engine-exact (see
     // Sessions.peakConcurrency).
     Q("q67_peak_concurrency",
-      s"""WITH o AS (
-         |  SELECT user_id, event_id, ts,
-         |    CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-         |           OR ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-         |              > INTERVAL 30 MINUTE
-         |         THEN 1 ELSE 0 END AS new_s
-         |  FROM events),
-         |s AS (
-         |  SELECT user_id, ts,
-         |    CAST(SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-         |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_seq
-         |  FROM o),
+      s"""WITH ${sessionCtes("")},
          |iv AS (
          |  SELECT user_id, session_seq,
          |    epoch_us(min(ts)) AS st, epoch_us(max(ts)) AS en

@@ -1,5 +1,7 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -10,6 +12,54 @@ import graft.Tables
   * oracle that unrolls the same iterations in SQL.
   */
 object GraphGates {
+
+  private val S = "1000000000000"
+
+  /** The navigation graph on the oracle side: page views `ev` (the
+    * `k` prop of each event as a BIGINT page id) and each user's
+    * consecutive-event transitions `seq` (src, dst), dst NULL on a
+    * user's last event.
+    */
+  private val navigationCtes =
+    """ev AS (
+      |  SELECT user_id, ts, event_id,
+      |    CAST(json_extract_string(props, '$.k') AS BIGINT) AS page
+      |  FROM events),
+      |seq AS (
+      |  SELECT page AS src,
+      |    LEAD(page) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS dst
+      |  FROM ev)""".stripMargin
+
+  /** [[navigationCtes]] plus the weighted edge list `edges` (src, dst,
+    * w = transition count) and the page set `nodes`.
+    */
+  private val weightedGraphCtes =
+    s"""$navigationCtes,
+       |edges AS (
+       |  SELECT src, dst, CAST(COUNT(*) AS BIGINT) AS w
+       |  FROM seq WHERE dst IS NOT NULL GROUP BY 1, 2),
+       |nodes AS (SELECT DISTINCT page FROM ev)""".stripMargin
+
+  /** Spark twin of [[navigationCtes]]' `ev`. */
+  private def pageEvents(s: SparkSession, dir: String): DataFrame =
+    Tables(s, dir, "events").select(
+      col("user_id"), col("ts"), col("event_id"),
+      get_json_object(col("props"), "$.k").cast(LongType).as("page"))
+
+  /** Spark twin of `seq` without the NULL dst rows: (src, dst). */
+  private def transitions(ev: DataFrame): DataFrame = {
+    val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    ev.select(col("page").as("src"), lead(col("page"), 1).over(w).as("dst"))
+      .filter(col("dst").isNotNull)
+  }
+
+  /** Spark twin of [[weightedGraphCtes]]' `edges`. */
+  private def weightedEdges(ev: DataFrame): DataFrame =
+    transitions(ev).groupBy("src", "dst").agg(count(lit(1)).as("w"))
+
+  /** Spark twin of `nodes`, as (id). */
+  private def pageNodes(ev: DataFrame): DataFrame =
+    ev.select(col("page").as("id")).distinct()
 
   val all: Seq[Q] = Seq(
 
@@ -23,14 +73,7 @@ object GraphGates {
     // and never divide or sqrt (the q73 slope-pair discipline). One
     // row out; two key-partitioned joins and a partial-agg pass.
     Q("qg05_assortativity",
-      """WITH ev AS (
-        |  SELECT user_id, ts, event_id,
-        |    CAST(json_extract_string(props, '$.k') AS BIGINT) AS page
-        |  FROM events),
-        |seq AS (
-        |  SELECT page AS src,
-        |    LEAD(page) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS dst
-        |  FROM ev),
+      s"""WITH $navigationCtes,
         |ud AS (
         |  SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
         |  FROM seq WHERE dst IS NOT NULL AND src <> dst),
@@ -54,17 +97,12 @@ object GraphGates {
         |  m * s_xy - s_x * s_x AS r_num,
         |  m * s_x2 - s_x * s_x AS r_den
         |FROM mo""".stripMargin) { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val ev = Tables(s, dir, "events").select(
-        col("user_id"), col("ts"), col("event_id"),
-        get_json_object(col("props"), "$.k").cast(LongType).as("page"))
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+      val ev = pageEvents(s, dir)
       // ud feeds the degree count (twice) and the orientation join —
       // materialized once so the moment aggregation reads an in-memory
       // edge list instead of re-running the events window per branch
-      val ud = ev
-        .select(col("page").as("src"), lead(col("page"), 1).over(w).as("dst"))
-        .filter(col("dst").isNotNull && col("src") =!= col("dst"))
+      val ud = transitions(ev)
+        .filter(col("src") =!= col("dst"))
         .select(least(col("src"), col("dst")).as("a"),
           greatest(col("src"), col("dst")).as("b"))
         .distinct()
@@ -97,21 +135,13 @@ object GraphGates {
     // equi-join + one dst-keyed partial-agg shuffle; N and dangling
     // mass ride as broadcast 1-row scalars; no driver state.
     Q("qg01_pagerank", pagerankOracle) { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val ev = Tables(s, dir, "events").select(
-        col("user_id"), col("ts"), col("event_id"),
-        get_json_object(col("props"), "$.k").cast(LongType).as("page"))
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+      val ev = pageEvents(s, dir)
       // materialized once: the declarative recurrence references the
       // edge/node frames ~3^iters times, and un-checkpointed every
       // reference re-runs the events scan + JSON parse + session
       // window (bit-identical results — only the plan shape changes)
-      val edges = ev
-        .select(col("page").as("src"), lead(col("page"), 1).over(w).as("dst"))
-        .filter(col("dst").isNotNull)
-        .groupBy("src", "dst").agg(count(lit(1)).as("w"))
-        .localCheckpoint()
-      val nodes = ev.select(col("page").as("id")).distinct().localCheckpoint()
+      val edges = weightedEdges(ev).localCheckpoint()
+      val nodes = pageNodes(ev).localCheckpoint()
       graft.operators.Graph.pagerankFp(nodes, edges, iters = 3)
         .select(col("id").as("page"), col("r").as("rank_fp"))
     },
@@ -126,14 +156,7 @@ object GraphGates {
     // id-ordered triples — a different enumeration order of the SAME
     // triangle set, so the per-vertex counts hash-match exactly.
     Q("qg02_triangles",
-      s"""WITH ev AS (
-         |  SELECT user_id, ts, event_id,
-         |    CAST(json_extract_string(props, '$$.k') AS BIGINT) AS page
-         |  FROM events),
-         |seq AS (
-         |  SELECT page AS src,
-         |    LEAD(page) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS dst
-         |  FROM ev),
+      s"""WITH $navigationCtes,
          |nodes AS (SELECT DISTINCT page FROM ev),
          |ud AS (
          |  SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
@@ -157,15 +180,9 @@ object GraphGates {
          |FROM nodes n
          |LEFT JOIN deg d ON n.page = d.v
          |LEFT JOIN tcnt t ON n.page = t.v""".stripMargin) { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val ev = Tables(s, dir, "events").select(
-        col("user_id"), col("ts"), col("event_id"),
-        get_json_object(col("props"), "$.k").cast(LongType).as("page"))
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val edges = ev
-        .select(col("page").as("src"), lead(col("page"), 1).over(w).as("dst"))
-        .filter(col("dst").isNotNull)
-      val nodes = ev.select(col("page").as("id")).distinct()
+      val ev = pageEvents(s, dir)
+      val edges = transitions(ev)
+      val nodes = pageNodes(ev)
       graft.operators.Graph.triangleCounts(nodes, edges)
         .select(col("id").as("page"), col("deg"), col("n_tri"))
     },
@@ -183,16 +200,9 @@ object GraphGates {
     // silently kill the recursion). Same bit-exactness argument as
     // qg01, now composed with constant plan depth.
     Q("qg04_pagerank_deep", pagerankDeepOracle(12)) { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val ev = Tables(s, dir, "events").select(
-        col("user_id"), col("ts"), col("event_id"),
-        get_json_object(col("props"), "$.k").cast(LongType).as("page"))
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val edges = ev
-        .select(col("page").as("src"), lead(col("page"), 1).over(w).as("dst"))
-        .filter(col("dst").isNotNull)
-        .groupBy("src", "dst").agg(count(lit(1)).as("w"))
-      val nodes = ev.select(col("page").as("id")).distinct()
+      val ev = pageEvents(s, dir)
+      val edges = weightedEdges(ev)
+      val nodes = pageNodes(ev)
       graft.operators.Graph.pagerankFpMaterialized(nodes, edges, iters = 12)
         .select(col("id").as("page"), col("r").as("rank_fp"))
     },
@@ -205,16 +215,9 @@ object GraphGates {
     // Same exact-integer recurrence and oracle discipline as qg01,
     // plus one broadcast seed-membership join.
     Q("qg06_personalized_pagerank", personalizedOracle) { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val ev = Tables(s, dir, "events").select(
-        col("user_id"), col("ts"), col("event_id"),
-        get_json_object(col("props"), "$.k").cast(LongType).as("page"))
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val edges = ev
-        .select(col("page").as("src"), lead(col("page"), 1).over(w).as("dst"))
-        .filter(col("dst").isNotNull)
-        .groupBy("src", "dst").agg(count(lit(1)).as("w"))
-      val nodes = ev.select(col("page").as("id")).distinct()
+      val ev = pageEvents(s, dir)
+      val edges = weightedEdges(ev)
+      val nodes = pageNodes(ev)
       val seeds = nodes.filter(col("id") % 7 === 0)
       graft.operators.Graph.personalizedPagerankFp(nodes, edges, seeds, iters = 3)
         .select(col("id").as("page"), col("r").as("rank_fp"))
@@ -231,16 +234,9 @@ object GraphGates {
     // what makes them usable in a diffable corpus release. The oracle
     // unrolls the identical rounds.
     Q("qg03_label_prop", labelPropOracle) { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val ev = Tables(s, dir, "events").select(
-        col("user_id"), col("ts"), col("event_id"),
-        get_json_object(col("props"), "$.k").cast(LongType).as("page"))
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val transitions = ev
-        .select(col("page").as("src"), lead(col("page"), 1).over(w).as("dst"))
-        .filter(col("dst").isNotNull)
-      val nodes = ev.select(col("page").as("id")).distinct()
-      graft.operators.Graph.labelPropagation(nodes, transitions, iters = 3)
+      val ev = pageEvents(s, dir)
+      graft.operators.Graph.labelPropagation(pageNodes(ev), transitions(ev),
+          iters = 3)
         .select(col("id").as("page"), col("lab").as("community"))
     }
   )
@@ -248,52 +244,16 @@ object GraphGates {
   /** DuckDB oracle for qg06: the qg01 recurrence with teleport and
     * dangling mass restricted to the seed set (pages ≡ 0 mod 7).
     */
-  private def personalizedOracle: String = {
-    val S = "1000000000000"
-    def iter(i: Int): String = {
-      val p = i - 1
-      s"""d$p AS (
-         |  SELECT CAST(COALESCE(SUM(r), 0) AS BIGINT) AS dang
-         |  FROM r$p LEFT JOIN outw ON r$p.page = outw.src
-         |  WHERE outw.src IS NULL),
-         |c$i AS (
-         |  SELECT e.dst AS page,
-         |    CAST(SUM((r.r * e.w * 85) // (o.ow * 100)) AS BIGINT) AS s
-         |  FROM edges e
-         |  JOIN r$p r ON e.src = r.page
-         |  JOIN outw o ON e.src = o.src
-         |  GROUP BY e.dst),
-         |r$i AS (
-         |  SELECT nd.page,
-         |    CAST(CASE WHEN nd.page % 7 = 0 THEN
+  private def personalizedOracle: String =
+    unrolledPagerankSql(
+      "bb AS (SELECT CAST(COUNT(*) AS BIGINT) AS b FROM nodes WHERE page % 7 = 0)",
+      s"""r0 AS (SELECT nd.page,
+         |         CAST(CASE WHEN nd.page % 7 = 0 THEN $S // bb.b ELSE 0 END AS BIGINT) AS r
+         |       FROM nodes nd CROSS JOIN bb)""".stripMargin, "bb") { p =>
+      s"""CASE WHEN nd.page % 7 = 0 THEN
          |        ($S * 15) // (bb.b * 100) + (d$p.dang * 85) // (bb.b * 100)
-         |      ELSE 0 END
-         |      + COALESCE(c$i.s, 0) AS BIGINT) AS r
-         |  FROM nodes nd CROSS JOIN bb CROSS JOIN d$p
-         |  LEFT JOIN c$i ON nd.page = c$i.page)""".stripMargin
+         |      ELSE 0 END""".stripMargin
     }
-    s"""WITH ev AS (
-       |  SELECT user_id, ts, event_id,
-       |    CAST(json_extract_string(props, '$$.k') AS BIGINT) AS page
-       |  FROM events),
-       |seq AS (
-       |  SELECT page AS src,
-       |    LEAD(page) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS dst
-       |  FROM ev),
-       |edges AS (
-       |  SELECT src, dst, CAST(COUNT(*) AS BIGINT) AS w
-       |  FROM seq WHERE dst IS NOT NULL GROUP BY 1, 2),
-       |nodes AS (SELECT DISTINCT page FROM ev),
-       |bb AS (SELECT CAST(COUNT(*) AS BIGINT) AS b FROM nodes WHERE page % 7 = 0),
-       |outw AS (SELECT src, CAST(SUM(w) AS BIGINT) AS ow FROM edges GROUP BY 1),
-       |r0 AS (SELECT nd.page,
-       |         CAST(CASE WHEN nd.page % 7 = 0 THEN $S // bb.b ELSE 0 END AS BIGINT) AS r
-       |       FROM nodes nd CROSS JOIN bb),
-       |${iter(1)},
-       |${iter(2)},
-       |${iter(3)}
-       |SELECT page, r AS rank_fp FROM r3""".stripMargin
-  }
 
   /** DuckDB oracle for qg04: the qg01 integer recurrence driven to
     * `rounds` by a RECURSIVE CTE instead of unrolled CTEs. The
@@ -304,19 +264,7 @@ object GraphGates {
     * aggregate).
     */
   private def pagerankDeepOracle(rounds: Int): String = {
-    val S = "1000000000000"
-    s"""WITH RECURSIVE ev AS (
-       |  SELECT user_id, ts, event_id,
-       |    CAST(json_extract_string(props, '$$.k') AS BIGINT) AS page
-       |  FROM events),
-       |seq AS (
-       |  SELECT page AS src,
-       |    LEAD(page) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS dst
-       |  FROM ev),
-       |edges AS (
-       |  SELECT src, dst, CAST(COUNT(*) AS BIGINT) AS w
-       |  FROM seq WHERE dst IS NOT NULL GROUP BY 1, 2),
-       |nodes AS (SELECT DISTINCT page FROM ev),
+    s"""WITH RECURSIVE $weightedGraphCtes,
        |nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nodes),
        |outw AS (SELECT src, CAST(SUM(w) AS BIGINT) AS ow FROM edges GROUP BY 1),
        |it AS (
@@ -370,14 +318,7 @@ object GraphGates {
          |  JOIN l$p ON nd.page = l$p.page
          |  LEFT JOIN b$i ON nd.page = b$i.u)""".stripMargin
     }
-    s"""WITH ev AS (
-       |  SELECT user_id, ts, event_id,
-       |    CAST(json_extract_string(props, '$$.k') AS BIGINT) AS page
-       |  FROM events),
-       |seq AS (
-       |  SELECT page AS src,
-       |    LEAD(page) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS dst
-       |  FROM ev),
+    s"""WITH $navigationCtes,
        |pe AS (
        |  SELECT LEAST(src, dst) AS a, GREATEST(src, dst) AS b,
        |    CAST(COUNT(*) AS BIGINT) AS w
@@ -397,9 +338,24 @@ object GraphGates {
     * unrolled. S=1e12, d=85/100, 3 iterations (must mirror
     * Graph.pagerankFp's defaults exactly).
     */
-  private def pagerankOracle: String = {
-    val S = "1000000000000"
-    def iter(i: Int): String = {
+  private def pagerankOracle: String =
+    unrolledPagerankSql(
+      "nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nodes)",
+      s"""r0 AS (SELECT nd.page, CAST($S // nn.n AS BIGINT) AS r
+         |       FROM nodes nd CROSS JOIN nn)""".stripMargin, "nn") { p =>
+      s"""($S * 15) // (nn.n * 100)
+         |      + (d$p.dang * 85) // (nn.n * 100)""".stripMargin
+    }
+
+  /** Three unrolled rounds of the integer PageRank recurrence over
+    * [[weightedGraphCtes]]: the one-row scalar CTE `scalarCte` (named
+    * `scalar`) and the initial ranks `r0`, then per round i the
+    * dangling mass `d{i-1}` of the previous ranks, the damped in-link
+    * sums `c{i}`, and the ranks `r{i}` = `teleport(i - 1)` + c{i}.
+    */
+  private def unrolledPagerankSql(scalarCte: String, r0: String,
+      scalar: String)(teleport: Int => String): String = {
+    def round(i: Int): String = {
       val p = i - 1
       s"""d$p AS (
          |  SELECT CAST(COALESCE(SUM(r), 0) AS BIGINT) AS dang
@@ -414,31 +370,18 @@ object GraphGates {
          |  GROUP BY e.dst),
          |r$i AS (
          |  SELECT nd.page,
-         |    CAST(($S * 15) // (nn.n * 100)
-         |      + (d$p.dang * 85) // (nn.n * 100)
+         |    CAST(${teleport(p)}
          |      + COALESCE(c$i.s, 0) AS BIGINT) AS r
-         |  FROM nodes nd CROSS JOIN nn CROSS JOIN d$p
+         |  FROM nodes nd CROSS JOIN $scalar CROSS JOIN d$p
          |  LEFT JOIN c$i ON nd.page = c$i.page)""".stripMargin
     }
-    s"""WITH ev AS (
-       |  SELECT user_id, ts, event_id,
-       |    CAST(json_extract_string(props, '$$.k') AS BIGINT) AS page
-       |  FROM events),
-       |seq AS (
-       |  SELECT page AS src,
-       |    LEAD(page) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS dst
-       |  FROM ev),
-       |edges AS (
-       |  SELECT src, dst, CAST(COUNT(*) AS BIGINT) AS w
-       |  FROM seq WHERE dst IS NOT NULL GROUP BY 1, 2),
-       |nodes AS (SELECT DISTINCT page FROM ev),
-       |nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nodes),
+    s"""WITH $weightedGraphCtes,
+       |$scalarCte,
        |outw AS (SELECT src, CAST(SUM(w) AS BIGINT) AS ow FROM edges GROUP BY 1),
-       |r0 AS (SELECT nd.page, CAST($S // nn.n AS BIGINT) AS r
-       |       FROM nodes nd CROSS JOIN nn),
-       |${iter(1)},
-       |${iter(2)},
-       |${iter(3)}
+       |$r0,
+       |${round(1)},
+       |${round(2)},
+       |${round(3)}
        |SELECT page, r AS rank_fp FROM r3""".stripMargin
   }
 }

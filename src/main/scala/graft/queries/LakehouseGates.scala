@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{Fixture, Tables, functions, operators, sources}
@@ -15,6 +15,38 @@ import graft.{Fixture, Tables, functions, operators, sources}
   * pruning and layout must be invisible in the result.
   */
 object LakehouseGates {
+
+  /** Parquet data files anywhere under `f` (partition dirs included). */
+  private def parquetFilesUnder(f: java.io.File): Int =
+    if (f.isDirectory) f.listFiles().map(parquetFilesUnder).sum
+    else if (f.getName.endsWith(".parquet")) 1 else 0
+
+  /** qj12/qj14's upsert+delete source batch over customer rows `cust`:
+    * flagged deletes (key % 10 = 3), renamed updates (= 4) and
+    * shifted-key inserts (= 5), all with the `__del` flag column.
+    */
+  private def mergeBatch(cust: DataFrame): DataFrame = {
+    val dels = cust.filter(col("c_custkey") % 10 === 3L)
+      .withColumn("__del", lit(true))
+    val upds = cust.filter(col("c_custkey") % 10 === 4L)
+      .withColumn("c_name", concat(col("c_name"), lit("!")))
+      .withColumn("__del", lit(false))
+    val ins = cust.filter(col("c_custkey") % 10 === 5L)
+      .withColumn("c_custkey", col("c_custkey") + 1000000L)
+      .withColumn("__del", lit(false))
+    dels.unionByName(upds).unionByName(ins)
+  }
+
+  /** [[mergeBatch]]'s post-merge customer state, derived logically. */
+  private val mergedCustomerSql =
+    """SELECT c_custkey,
+      |  CASE WHEN c_custkey % 10 = 4 THEN c_name || '!' ELSE c_name END
+      |    AS c_name,
+      |  c_nationkey
+      |FROM customer WHERE c_custkey % 10 != 3
+      |UNION ALL
+      |SELECT c_custkey + 1000000, c_name, c_nationkey
+      |FROM customer WHERE c_custkey % 10 = 5""".stripMargin
 
   val all: Seq[Q] = Seq(
 
@@ -121,12 +153,7 @@ object LakehouseGates {
       require(stats.partsOpened < stats.partsTotal,
         s"two-level prune read per-file stats for every partition: " +
           s"${stats.partsOpened} of ${stats.partsTotal}")
-      val onDisk = {
-        def walk(f: java.io.File): Int =
-          if (f.isDirectory) f.listFiles().map(walk).sum
-          else if (f.getName.endsWith(".parquet")) 1 else 0
-        walk(new java.io.File(table))
-      }
+      val onDisk = parquetFilesUnder(new java.io.File(table))
       require(stats.files.size < onDisk,
         s"two-level prune had no effect: ${stats.files.size} of $onDisk files")
       pruned.select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
@@ -207,12 +234,7 @@ object LakehouseGates {
       require(stats.partsOpened < stats.partsTotal,
         s"two-level bloom prune opened per-file filters everywhere: " +
           s"${stats.partsOpened} of ${stats.partsTotal}")
-      val onDisk = {
-        def walk(f: java.io.File): Int =
-          if (f.isDirectory) f.listFiles().map(walk).sum
-          else if (f.getName.endsWith(".parquet")) 1 else 0
-        walk(new java.io.File(table))
-      }
+      val onDisk = parquetFilesUnder(new java.io.File(table))
       require(stats.files.size < onDisk,
         s"two-level bloom prune had no effect: ${stats.files.size} of $onDisk")
       hit.select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
@@ -328,29 +350,13 @@ object LakehouseGates {
     // oracle deriving the same post-merge state logically from the
     // source parquet.
     Q("qj12_snapshot_merge",
-      """SELECT c_custkey,
-        |  CASE WHEN c_custkey % 10 = 4 THEN c_name || '!' ELSE c_name END
-        |    AS c_name,
-        |  c_nationkey
-        |FROM customer WHERE c_custkey % 10 != 3
-        |UNION ALL
-        |SELECT c_custkey + 1000000, c_name, c_nationkey
-        |FROM customer WHERE c_custkey % 10 = 5""".stripMargin) { (s, dir) =>
+      mergedCustomerSql) { (s, dir) =>
       val table = Fixture.once("qj12_table", dir) {
         val t = Fixture.dir("graft_snapmerge")
         val cust = Tables(s, dir, "customer")
           .select("c_custkey", "c_name", "c_nationkey")
         sources.Snapshots.commit(s, t, cust) // v0
-        val dels = cust.filter(col("c_custkey") % 10 === 3L)
-          .withColumn("__del", lit(true))
-        val upds = cust.filter(col("c_custkey") % 10 === 4L)
-          .withColumn("c_name", concat(col("c_name"), lit("!")))
-          .withColumn("__del", lit(false))
-        val ins = cust.filter(col("c_custkey") % 10 === 5L)
-          .withColumn("c_custkey", col("c_custkey") + 1000000L)
-          .withColumn("__del", lit(false))
-        val v = sources.Snapshots.merge(s, t,
-          dels.unionByName(upds).unionByName(ins),
+        val v = sources.Snapshots.merge(s, t, mergeBatch(cust),
           Seq("c_custkey"), deleteCol = Some("__del"))
         require(v == 1, s"merge should commit version 1, got $v")
         t
@@ -367,29 +373,13 @@ object LakehouseGates {
     // rewrite vs this delta log — hash-gated to the same post-merge
     // state, which is the lakehouse MoR contract stated as a test.
     Q("qj14_mor_merge",
-      """SELECT c_custkey,
-        |  CASE WHEN c_custkey % 10 = 4 THEN c_name || '!' ELSE c_name END
-        |    AS c_name,
-        |  c_nationkey
-        |FROM customer WHERE c_custkey % 10 != 3
-        |UNION ALL
-        |SELECT c_custkey + 1000000, c_name, c_nationkey
-        |FROM customer WHERE c_custkey % 10 = 5""".stripMargin) { (s, dir) =>
+      mergedCustomerSql) { (s, dir) =>
       val table = Fixture.once("qj14_table", dir) {
         val t = Fixture.dir("graft_snapmor")
         val cust = Tables(s, dir, "customer")
           .select("c_custkey", "c_name", "c_nationkey")
         sources.Snapshots.commit(s, t, cust) // v0
-        val dels = cust.filter(col("c_custkey") % 10 === 3L)
-          .withColumn("__del", lit(true))
-        val upds = cust.filter(col("c_custkey") % 10 === 4L)
-          .withColumn("c_name", concat(col("c_name"), lit("!")))
-          .withColumn("__del", lit(false))
-        val ins = cust.filter(col("c_custkey") % 10 === 5L)
-          .withColumn("c_custkey", col("c_custkey") + 1000000L)
-          .withColumn("__del", lit(false))
-        val v = sources.Snapshots.commitDelta(s, t,
-          dels.unionByName(upds).unionByName(ins),
+        val v = sources.Snapshots.commitDelta(s, t, mergeBatch(cust),
           Seq("c_custkey"), deleteCol = Some("__del"))
         require(v == 1, s"delta should commit version 1, got $v")
         val f0 = sources.Snapshots.files(s, t, Some(0)).toSet

@@ -12,6 +12,16 @@ import graft.operators.{MediaFixtures, Multimodal}
   */
 object MultimodalGates {
 
+  /** The frame gates' oracle: the per-frame sidecar CSV `csv` written
+    * at fixture generation.
+    */
+  private def framesSql(csv: String): String =
+    s"""SELECT media_id, frame_id, width, height, sum_r, sum_g, sum_b
+       |FROM read_csv('$csv', header=true,
+       |  columns={'media_id': 'BIGINT', 'frame_id': 'BIGINT',
+       |    'width': 'BIGINT', 'height': 'BIGINT', 'sum_r': 'BIGINT',
+       |    'sum_g': 'BIGINT', 'sum_b': 'BIGINT'})""".stripMargin
+
   val all: Seq[Q] = Seq(
 
     // ----- multimodal metadata plumbing (stub decode) --------------------
@@ -84,11 +94,7 @@ object MultimodalGates {
     // must equal the generation-time sidecar bit-for-bit — a decoder
     // that subsamples, channel-swaps, or gamma-adjusts cannot pass.
     Q("qm08_video_frames",
-      s"""SELECT media_id, frame_id, width, height, sum_r, sum_g, sum_b
-         |FROM read_csv('${MediaFixtures.videoFramesCsv}', header=true,
-         |  columns={'media_id': 'BIGINT', 'frame_id': 'BIGINT',
-         |    'width': 'BIGINT', 'height': 'BIGINT', 'sum_r': 'BIGINT',
-         |    'sum_g': 'BIGINT', 'sum_b': 'BIGINT'})""".stripMargin) { (s, _) =>
+      framesSql(MediaFixtures.videoFramesCsv)) { (s, _) =>
       Multimodal.videoFrameFeatures(s, MediaFixtures.ensure())
     },
 
@@ -188,20 +194,12 @@ object MultimodalGates {
     // written — a decoder that trusts container metadata, subsamples,
     // or channel-swaps cannot reproduce them.
     Q("qm14_mjpeg_frames",
-      s"""SELECT media_id, frame_id, width, height, sum_r, sum_g, sum_b
-         |FROM read_csv('${MediaFixtures.mjpegFramesCsv}', header=true,
-         |  columns={'media_id': 'BIGINT', 'frame_id': 'BIGINT',
-         |    'width': 'BIGINT', 'height': 'BIGINT', 'sum_r': 'BIGINT',
-         |    'sum_g': 'BIGINT', 'sum_b': 'BIGINT'})""".stripMargin) { (s, _) =>
+      framesSql(MediaFixtures.mjpegFramesCsv)) { (s, _) =>
       Multimodal.videoFrameFeatures(s, MediaFixtures.ensureMjpeg())
     },
 
     Q("qm15_gif_frames",
-      s"""SELECT media_id, frame_id, width, height, sum_r, sum_g, sum_b
-         |FROM read_csv('${MediaFixtures.gifFramesCsv}', header=true,
-         |  columns={'media_id': 'BIGINT', 'frame_id': 'BIGINT',
-         |    'width': 'BIGINT', 'height': 'BIGINT', 'sum_r': 'BIGINT',
-         |    'sum_g': 'BIGINT', 'sum_b': 'BIGINT'})""".stripMargin) { (s, _) =>
+      framesSql(MediaFixtures.gifFramesCsv)) { (s, _) =>
       Multimodal.gifFrameFeatures(s, MediaFixtures.ensureGif())
     }
   )

@@ -1,5 +1,7 @@
 package graft.queries
 
+import org.apache.spark.sql.DataFrame
+
 import graft.refstar.{RefStarSql, RefStarViewsSql, Staging, Views, Warehouse}
 
 /** The reference-entity star, gated: one query per dimension and fact,
@@ -95,9 +97,7 @@ object RefStarQueries {
     // re-running the operator.
     Q("qr13_dim_store_scd2", scd2StoreOracle) { (s, _) =>
       val (cur, upd) = scd2StoreInputs(s)
-      graft.etl.Scd2.merge(cur, upd, "StoreID",
-        Seq("StoreName", "StoreNumber", "StoreManager", "DimLocationID"),
-        "2014-06-01")
+      mergeStores(cur, upd)
     },
 
     // CDC-fold twin of qr13: the same update batch arrives as a
@@ -118,9 +118,7 @@ object RefStarQueries {
         .withColumn("lsn", lit(1L))
       val cdc = v1.unionByName(upd.withColumn("lsn", lit(2L)))
       val folded = graft.etl.Scd2.foldCdc(cdc, "StoreID", "lsn").drop("lsn")
-      graft.etl.Scd2.merge(cur, folded, "StoreID",
-        Seq("StoreName", "StoreNumber", "StoreManager", "DimLocationID"),
-        "2014-06-01")
+      mergeStores(cur, folded)
     },
 
     // Point-in-time lookup over the VERSIONED dimension: as of
@@ -134,9 +132,7 @@ object RefStarQueries {
       over("""SELECT StoreID, StoreName, StoreNumber, StoreManager,
              |  DimLocationID FROM dim_store""".stripMargin)) { (s, _) =>
       val (cur, upd) = scd2StoreInputs(s)
-      val versioned = graft.etl.Scd2.merge(cur, upd, "StoreID",
-        Seq("StoreName", "StoreNumber", "StoreManager", "DimLocationID"),
-        "2014-06-01")
+      val versioned = mergeStores(cur, upd)
       graft.etl.Scd2.asOf(versioned, "2013-06-01")
     },
 
@@ -176,9 +172,7 @@ object RefStarQueries {
              |GROUP BY b.StoreNumber, v.StoreManager""".stripMargin)) { (s, _) =>
       import org.apache.spark.sql.functions._
       val (cur, upd) = scd2StoreInputs(s)
-      val versioned = graft.etl.Scd2.merge(cur, upd, "StoreID",
-        Seq("StoreName", "StoreNumber", "StoreManager", "DimLocationID"),
-        "2014-06-01")
+      val versioned = mergeStores(cur, upd)
         .select(col("StoreID").as("__v_sid"), col("StoreManager"),
           col("effective_date"), col("expiration_date"))
       val bridge = Warehouse.table(s, "dim_store")
@@ -341,6 +335,11 @@ object RefStarQueries {
            |SELECT CAST(999 AS BIGINT), 'Store 99', '99', 'New Manager',
            |  CAST(1 AS BIGINT), DATE '2014-06-01', DATE '9999-12-31',
            |  'Y'""".stripMargin)
+
+  /** The store scenario's SCD2 merge, effective 2014-06-01. */
+  private def mergeStores(cur: DataFrame, updates: DataFrame) =
+    graft.etl.Scd2.merge(cur, updates, "StoreID",
+      Seq("StoreName", "StoreNumber", "StoreManager", "DimLocationID"), "2014-06-01")
 
   /** (current dimension state, clean last-per-key update batch) for the
     * qr13/qr14 store SCD2 scenario.

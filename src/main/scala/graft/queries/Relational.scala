@@ -36,6 +36,53 @@ object Relational {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables(s, dir, name)
 
+  /** A gate whose builder runs its own oracle text through Spark's
+    * SQL surface, over `tables` registered as temp views.
+    */
+  private def sqlGate(name: String, tables: String*)(sql: String): Q =
+    Q(name, sql) { (s, dir) =>
+      tables.foreach(t => Tables(s, dir, t).createOrReplaceTempView(t))
+      s.sql(sql)
+    }
+
+  /** q35/q45: supplier count and exact balance per (region, nation)
+    * under grouping construct `groups` (ROLLUP or CUBE).
+    */
+  private def supplierBalanceSql(groups: String): String =
+    s"""SELECT r_name, n_name, COUNT(*) AS n_suppliers,
+       |  ${dsumSql("s_acctbal")} AS total_bal
+       |FROM supplier
+       |JOIN nation ON s_nationkey = n_nationkey
+       |JOIN region ON n_regionkey = r_regionkey
+       |GROUP BY $groups (r_name, n_name)""".stripMargin
+
+  /** The q19 window family's input: exact revenue per (nation,
+    * supplier), as oracle CTE `sup_rev` and its Spark twin.
+    */
+  private val supRevCte =
+    s"""sup_rev AS (
+       |  SELECT n_name, s_name,
+       |    ${dsumSql("l_extendedprice * (1 - l_discount)")} AS rev
+       |  FROM lineitem
+       |  JOIN supplier ON l_suppkey = s_suppkey
+       |  JOIN nation   ON s_nationkey = n_nationkey
+       |  GROUP BY n_name, s_name)""".stripMargin
+
+  private def supplierRevenue(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "lineitem")
+      .join(t(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
+      .join(broadcast(t(s, dir, "nation")), col("s_nationkey") === col("n_nationkey"))
+      .groupBy("n_name", "s_name")
+      .agg(dsum(revenue(col("l_extendedprice"), col("l_discount"))).as("rev"))
+
+  /** qa05/qa07's stored rollup: one user bitmap per epoch day. */
+  private def dailyBitmaps(s: SparkSession, dir: String): DataFrame =
+    Tables(s, dir, "events")
+      .select(datediff(col("ts").cast("date"), lit("1970-01-01"))
+        .cast(LongType).as("day"), col("user_id"))
+      .groupBy("day")
+      .agg(Text.bitmapAgg(col("user_id")).as("bm"))
+
   /** revenue expression used throughout (TPC-H style). */
   private def revenue(c: Column, d: Column): Column = c * (lit(1) - d)
 
@@ -332,43 +379,23 @@ object Relational {
 
     // ----- W1: rank over an aggregate (window-over-agg) -----------------
     Q("q19_rank_over_agg",
-      s"""WITH sup_rev AS (
-         |  SELECT n_name, s_name,
-         |    ${dsumSql("l_extendedprice * (1 - l_discount)")} AS rev
-         |  FROM lineitem
-         |  JOIN supplier ON l_suppkey = s_suppkey
-         |  JOIN nation   ON s_nationkey = n_nationkey
-         |  GROUP BY n_name, s_name)
+      s"""WITH $supRevCte
          |SELECT n_name, s_name, rev,
          |  RANK() OVER (PARTITION BY n_name ORDER BY rev DESC, s_name) AS sales_rank
          |FROM sup_rev""".stripMargin) { (s, dir) =>
-      val supRev = t(s, dir, "lineitem")
-        .join(t(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(t(s, dir, "nation")), col("s_nationkey") === col("n_nationkey"))
-        .groupBy("n_name", "s_name")
-        .agg(dsum(revenue(col("l_extendedprice"), col("l_discount"))).as("rev"))
+      val supRev = supplierRevenue(s, dir)
       val w = Window.partitionBy("n_name").orderBy(col("rev").desc, col("s_name"))
       supRev.withColumn("sales_rank", rank().over(w).cast(LongType))
     },
 
     // ----- W2: share-of-total window ------------------------------------
     Q("q20_share_of_total",
-      s"""WITH sup_rev AS (
-         |  SELECT n_name, s_name,
-         |    ${dsumSql("l_extendedprice * (1 - l_discount)")} AS rev
-         |  FROM lineitem
-         |  JOIN supplier ON l_suppkey = s_suppkey
-         |  JOIN nation   ON s_nationkey = n_nationkey
-         |  GROUP BY n_name, s_name)
+      s"""WITH $supRevCte
          |SELECT n_name, s_name, rev,
          |  (rev * 100) / CAST(CAST(SUM(CAST(rev AS DECIMAL(25,6)))
          |    OVER (PARTITION BY n_name) AS STRING) AS DOUBLE) AS pct_of_nation
          |FROM sup_rev""".stripMargin) { (s, dir) =>
-      val supRev = t(s, dir, "lineitem")
-        .join(t(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(t(s, dir, "nation")), col("s_nationkey") === col("n_nationkey"))
-        .groupBy("n_name", "s_name")
-        .agg(dsum(revenue(col("l_extendedprice"), col("l_discount"))).as("rev"))
+      val supRev = supplierRevenue(s, dir)
       val w = Window.partitionBy("n_name")
       supRev.withColumn("pct_of_nation",
         (col("rev") * 100) / sum(col("rev").cast(Dec)).over(w).cast(DoubleType))
@@ -376,24 +403,14 @@ object Relational {
 
     // ----- W3: comparative baseline (avg over window) -------------------
     Q("q21_avg_over_window",
-      s"""WITH sup_rev AS (
-         |  SELECT n_name, s_name,
-         |    ${dsumSql("l_extendedprice * (1 - l_discount)")} AS rev
-         |  FROM lineitem
-         |  JOIN supplier ON l_suppkey = s_suppkey
-         |  JOIN nation   ON s_nationkey = n_nationkey
-         |  GROUP BY n_name, s_name)
+      s"""WITH $supRevCte
          |SELECT n_name, s_name, rev,
          |  CAST(CAST(SUM(CAST(rev AS DECIMAL(25,6))) OVER (PARTITION BY n_name) AS STRING) AS DOUBLE)
          |    / COUNT(*) OVER (PARTITION BY n_name) AS nation_avg_rev,
          |  rev - CAST(CAST(SUM(CAST(rev AS DECIMAL(25,6))) OVER (PARTITION BY n_name) AS STRING) AS DOUBLE)
          |    / COUNT(*) OVER (PARTITION BY n_name) AS rev_vs_nation_avg
          |FROM sup_rev""".stripMargin) { (s, dir) =>
-      val supRev = t(s, dir, "lineitem")
-        .join(t(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(t(s, dir, "nation")), col("s_nationkey") === col("n_nationkey"))
-        .groupBy("n_name", "s_name")
-        .agg(dsum(revenue(col("l_extendedprice"), col("l_discount"))).as("rev"))
+      val supRev = supplierRevenue(s, dir)
       val w = Window.partitionBy("n_name")
       val nationAvg =
         sum(col("rev").cast(Dec)).over(w).cast(DoubleType) / count(lit(1)).over(w)
@@ -578,46 +595,16 @@ object Relational {
     },
 
     // ----- rollup subtotals ----------------------------------------------
-    Q("q35_rollup",
-      s"""SELECT r_name, n_name, COUNT(*) AS n_suppliers,
-         |  ${dsumSql("s_acctbal")} AS total_bal
-         |FROM supplier
-         |JOIN nation ON s_nationkey = n_nationkey
-         |JOIN region ON n_regionkey = r_regionkey
-         |GROUP BY ROLLUP (r_name, n_name)""".stripMargin) { (s, dir) =>
-      // via the SQL surface: DataFrame .rollup on a join output trips
-      // Spark 4's ambiguous-self-join detector (column lineage tags
-      // survive even a fresh select), while the parsed plan is clean
-      Seq("supplier", "nation", "region")
-        .foreach(t => Tables(s, dir, t).createOrReplaceTempView(t))
-      s.sql(
-        s"""SELECT r_name, n_name, COUNT(*) AS n_suppliers,
-           |  ${dsumSql("s_acctbal")} AS total_bal
-           |FROM supplier
-           |JOIN nation ON s_nationkey = n_nationkey
-           |JOIN region ON n_regionkey = r_regionkey
-           |GROUP BY ROLLUP (r_name, n_name)""".stripMargin)
-    },
+    // via the SQL surface: DataFrame .rollup on a join output trips
+    // Spark 4's ambiguous-self-join detector (column lineage tags
+    // survive even a fresh select), while the parsed plan is clean
+    sqlGate("q35_rollup", "supplier", "nation", "region")(
+      supplierBalanceSql("ROLLUP")),
 
     // ----- CUBE: all grouping-set combinations ---------------------------
-    Q("q45_cube",
-      s"""SELECT r_name, n_name, COUNT(*) AS n_suppliers,
-         |  ${dsumSql("s_acctbal")} AS total_bal
-         |FROM supplier
-         |JOIN nation ON s_nationkey = n_nationkey
-         |JOIN region ON n_regionkey = r_regionkey
-         |GROUP BY CUBE (r_name, n_name)""".stripMargin) { (s, dir) =>
-      // SQL surface for the same reason as q35 (see comment there)
-      Seq("supplier", "nation", "region")
-        .foreach(t => Tables(s, dir, t).createOrReplaceTempView(t))
-      s.sql(
-        s"""SELECT r_name, n_name, COUNT(*) AS n_suppliers,
-           |  ${dsumSql("s_acctbal")} AS total_bal
-           |FROM supplier
-           |JOIN nation ON s_nationkey = n_nationkey
-           |JOIN region ON n_regionkey = r_regionkey
-           |GROUP BY CUBE (r_name, n_name)""".stripMargin)
-    },
+    // SQL surface for the same reason as q35 (see comment there)
+    sqlGate("q45_cube", "supplier", "nation", "region")(
+      supplierBalanceSql("CUBE")),
 
     // ----- PIVOT: wide conditional aggregation ---------------------------
     // Spark's .pivot with an explicit value list compiles to the same
@@ -855,24 +842,14 @@ object Relational {
     // The third grouping shape next to ROLLUP (q35) / CUBE (q45):
     // explicit set list + GROUPING() flags so consumers can tell a real
     // NULL key from a subtotal row. SQL surface in both engines.
-    Q("q53_grouping_sets",
+    sqlGate("q53_grouping_sets", "lineitem")(
       s"""SELECT l_returnflag, l_linestatus,
          |  CAST(GROUPING(l_returnflag) AS BIGINT) AS g_flag,
          |  CAST(GROUPING(l_linestatus) AS BIGINT) AS g_status,
-         |  COUNT(*) AS n, ${graft.functions.Exact.dsumSql("l_quantity")} AS qty
+         |  COUNT(*) AS n, ${dsumSql("l_quantity")} AS qty
          |FROM lineitem
          |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
-         |  (l_returnflag), ())""".stripMargin) { (s, dir) =>
-      Tables(s, dir, "lineitem").createOrReplaceTempView("lineitem")
-      s.sql(
-        s"""SELECT l_returnflag, l_linestatus,
-           |  CAST(GROUPING(l_returnflag) AS BIGINT) AS g_flag,
-           |  CAST(GROUPING(l_linestatus) AS BIGINT) AS g_status,
-           |  COUNT(*) AS n, ${graft.functions.Exact.dsumSql("l_quantity")} AS qty
-           |FROM lineitem
-           |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
-           |  (l_returnflag), ())""".stripMargin)
-    },
+         |  (l_returnflag), ())""".stripMargin),
 
     // ----- mergeable sketch rollup (persisted-sketch pattern) ------------
     // The 100 TB distinct-count architecture: per-day HLL sketches are
@@ -1178,13 +1155,7 @@ object Relational {
     // (UNBOUNDED FOLLOWING); the default frame would peg it to the
     // current row.
     Q("q60_rank_distribution",
-      s"""WITH sup_rev AS (
-         |  SELECT n_name, s_name,
-         |    ${dsumSql("l_extendedprice * (1 - l_discount)")} AS rev
-         |  FROM lineitem
-         |  JOIN supplier ON l_suppkey = s_suppkey
-         |  JOIN nation   ON s_nationkey = n_nationkey
-         |  GROUP BY n_name, s_name)
+      s"""WITH $supRevCte
          |SELECT n_name, s_name, rev,
          |  percent_rank() OVER w AS pr,
          |  cume_dist() OVER w AS cd,
@@ -1194,15 +1165,8 @@ object Relational {
          |FROM sup_rev
          |WINDOW w AS (PARTITION BY n_name ORDER BY rev DESC, s_name)""".stripMargin) {
       (s, dir) =>
-        import org.apache.spark.sql.expressions.Window
-        val supRev = Tables(s, dir, "lineitem")
-          .join(Tables(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
-          .join(broadcast(Tables(s, dir, "nation")),
-            col("s_nationkey") === col("n_nationkey"))
-          .groupBy("n_name", "s_name")
-          .agg(dsum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("rev"))
         val w = Window.partitionBy("n_name").orderBy(col("rev").desc, col("s_name"))
-        supRev.select(col("n_name"), col("s_name"), col("rev"),
+        supplierRevenue(s, dir).select(col("n_name"), col("s_name"), col("rev"),
           percent_rank().over(w).as("pr"),
           cume_dist().over(w).as("cd"),
           first_value(col("s_name")).over(w).as("top_supplier"),
@@ -1286,21 +1250,12 @@ object Relational {
     // SQL stays declarative and the execution stays a hash join, not a
     // per-row probe. Runs through spark.sql to exercise the SQL entry
     // path end to end.
-    Q("q63_correlated_subquery",
+    sqlGate("q63_correlated_subquery", "orders", "lineitem")(
       """SELECT o_orderkey, o_totalprice,
         |  (SELECT COUNT(*) FROM lineitem l
         |   WHERE l.l_orderkey = o.o_orderkey) AS n_items
         |FROM orders o
-        |WHERE o_totalprice > 400000""".stripMargin) { (s, dir) =>
-      Tables(s, dir, "orders").createOrReplaceTempView("orders")
-      Tables(s, dir, "lineitem").createOrReplaceTempView("lineitem")
-      s.sql(
-        """SELECT o_orderkey, o_totalprice,
-          |  (SELECT COUNT(*) FROM lineitem l
-          |   WHERE l.l_orderkey = o.o_orderkey) AS n_items
-          |FROM orders o
-          |WHERE o_totalprice > 400000""".stripMargin)
-    },
+        |WHERE o_totalprice > 400000""".stripMargin),
 
     // ----- unpivot / melt (wide → long) ----------------------------------
     // The inverse of q46's pivot: per-year measures melt into
@@ -1698,12 +1653,7 @@ object Relational {
         |    AS week,
         |  CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
         |FROM events GROUP BY 1""".stripMargin) { (s, dir) =>
-      val daily = Tables(s, dir, "events")
-        .select(datediff(col("ts").cast("date"), lit("1970-01-01"))
-          .cast(LongType).as("day"), col("user_id"))
-        .groupBy("day")
-        .agg(graft.functions.Text.bitmapAgg(col("user_id")).as("bm"))
-      daily
+      dailyBitmaps(s, dir)
         .groupBy(expr("day div 7").as("week"))
         .agg(graft.functions.Text.bitmapOr(col("bm")).as("bm"))
         .select(col("week"),
@@ -1734,12 +1684,7 @@ object Relational {
       // the anchor list and the range probe consume it, and without the
       // cut each consumer re-scans raw events and re-builds the bitmaps
       // (the qt15 invariant-subtree discipline). Days-sized — tiny.
-      val daily = Tables(s, dir, "events")
-        .select(datediff(col("ts").cast("date"), lit("1970-01-01"))
-          .cast(LongType).as("day"), col("user_id"))
-        .groupBy("day")
-        .agg(graft.functions.Text.bitmapAgg(col("user_id")).as("bm"))
-        .localCheckpoint()
+      val daily = dailyBitmaps(s, dir).localCheckpoint()
       val anchors = daily.select(col("day").as("anchor"))
       anchors.join(daily,
           col("day").between(col("anchor") - 6, col("anchor")))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{Fixture, Tables}
@@ -46,9 +46,60 @@ object SearchGates {
       graft.streaming.MomentIngest.model(s, out, outDims = 32)
     }
 
-  private val pcaRecallOracleSql =
-    """SELECT vec_id AS query_id, CAST(1 AS BIGINT) AS recall_ok
-      |FROM embeddings WHERE vec_id % 100 = 0""".stripMargin
+  /** The ANN recall gates' oracle: every query's recall_ok flag and
+    * each of `flags` is 1 (see [[recallOk]]).
+    */
+  private def recallOracleSql(flags: String*): String =
+    "SELECT vec_id AS query_id, CAST(1 AS BIGINT) AS recall_ok" +
+      flags.map(f => s",\n  CAST(1 AS BIGINT) AS $f").mkString +
+      "\nFROM embeddings WHERE vec_id % 100 = 0"
+
+  /** The streaming IVF gates' index: `emb` absorbed under `model` as
+    * three micro-batches (vec_id mod 3).
+    */
+  private def ingestThirds(emb: DataFrame, model: Ivf.Model,
+      out: String): Unit =
+    (0 until 3).foreach { b =>
+      IvfIngest.applyBatch(emb.filter(col("vec_id") % 3 === b),
+        model, "vec_id", "embedding", out, b.toLong)
+    }
+
+  /** The recall gates' query set: vectors with id ≡ 0 (mod 100). It
+    * feeds BOTH the exact arm and the ANN arm (and recallHits' key
+    * sides); materialized once so every arm reads one tiny
+    * checkpointed frame instead of re-deriving the corpus scan +
+    * filter per reference — measured r19 on the recall family: qs06
+    * 1.46x, qs05 1.21x, qs09 1.16x (tools.AnnLab at commit 2706141,
+    * variants byte-identical). |q| = |corpus|/100 by construction, so
+    * the materialization is bounded at any scale.
+    */
+  private def queryFrame(vecs: DataFrame): DataFrame =
+    vecs.filter(col("vec_id") % 100 === 0).localCheckpoint()
+
+  /** Per query, whether the ANN top-k `ann` shares at least `floor`
+    * neighbors with the exact top-k `exact` (recall_ok), plus any
+    * constant `flags` the gate's oracle also states as 1. Both arms
+    * are deterministic, so the oracle knows every row must be 1 and
+    * ANY per-query recall regression below the floor breaks the hash.
+    */
+  private def recallOk(exact: DataFrame, ann: DataFrame, floor: Int,
+      flags: Column*): DataFrame =
+    Similarity.recallHits(exact, ann).select(Seq(col("query_id"),
+      (col("hits") >= floor).cast("long").as("recall_ok")) ++ flags: _*)
+
+  /** qs01/qs18's oracle: the exact cosine ranking `r` (query_id,
+    * neighbor_id, rnk) of every other vector for each query vector.
+    */
+  private val cosineRankSql =
+    s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
+       |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e),
+       |q AS (SELECT vec_id AS qid, v AS qv, nrm AS qnrm FROM n WHERE vec_id % 100 = 0),
+       |p AS (
+       |  SELECT qid, vec_id AS nid, list_dot_product(qv, v) / (qnrm * nrm) AS sim
+       |  FROM q, n WHERE vec_id <> qid),
+       |r AS (SELECT qid AS query_id, nid AS neighbor_id,
+       |        ROW_NUMBER() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS rnk
+       |      FROM p)""".stripMargin
 
   /** qs27's IVF model trained in qs25's projected space — the two
     * registry artifacts of the composed rung, built once per JVM.
@@ -186,15 +237,7 @@ object SearchGates {
 
     // ----- brute-force cosine top-k (ANN baseline) ----------------------
     Q("qs01_cosine_topk",
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-        |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e),
-        |q AS (SELECT vec_id AS qid, v AS qv, nrm AS qnrm FROM n WHERE vec_id % 100 = 0),
-        |p AS (
-        |  SELECT qid, vec_id AS nid, list_dot_product(qv, v) / (qnrm * nrm) AS sim
-        |  FROM q, n WHERE vec_id <> qid),
-        |r AS (SELECT qid AS query_id, nid AS neighbor_id,
-        |        ROW_NUMBER() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS rnk
-        |      FROM p)
+      s"""$cosineRankSql
         |SELECT query_id, neighbor_id, rnk FROM r WHERE rnk <= 10""".stripMargin) {
       (s, dir) =>
         val emb = Tables(s, dir, "embeddings")
@@ -220,23 +263,13 @@ object SearchGates {
     // recall assertions. Floors sit below the measured minima
     // (LSH 6+, IVF 4+ across SFs) by a safety margin.
     Q("qs05_lsh_recall",
-      """SELECT vec_id AS query_id, CAST(1 AS BIGINT) AS recall_ok
-        |FROM embeddings WHERE vec_id % 100 = 0""".stripMargin) { (s, dir) =>
+      recallOracleSql()) { (s, dir) =>
       val emb = Tables(s, dir, "embeddings")
-      // the bounded query frame feeds BOTH the exact arm and the ANN
-      // arm (and recallHits' key sides); materialized once so every
-      // arm reads one tiny checkpointed frame instead of re-deriving
-      // the corpus scan + filter per reference — measured r19 on the
-      // recall family: qs06 1.46x, qs05 1.21x, qs09 1.16x
-      // (tools.AnnLab at commit 2706141, variants byte-identical).
-      // |q| = |corpus|/100 by construction, so the materialization is
-      // bounded at any scale.
-      val q = emb.filter(col("vec_id") % 100 === 0).localCheckpoint()
+      val q = queryFrame(emb)
       val exact = Similarity.cosineTopK(emb, q, "vec_id", "embedding", k = 10)
       val ann = Similarity.lshCosineTopK(emb, q, "vec_id", "embedding", k = 10,
         planesPerTable = 3, tables = 24)
-      Similarity.recallHits(exact, ann)
-        .select(col("query_id"), (col("hits") >= 5).cast("long").as("recall_ok"))
+      recallOk(exact, ann, 5)
     },
 
     // PQ completes the ANN ladder (brute qs01 → LSH qs05 → IVF qs06 →
@@ -248,18 +281,15 @@ object SearchGates {
     // measured floors are identical at iters 1/2/3 on this corpus, so
     // the gate keeps one refinement pass and stops paying for more.
     Q("qs09_pq_recall",
-      """SELECT vec_id AS query_id, CAST(1 AS BIGINT) AS recall_ok
-        |FROM embeddings WHERE vec_id % 100 = 0""".stripMargin) { (s, dir) =>
+      recallOracleSql()) { (s, dir) =>
       val emb = Tables(s, dir, "embeddings")
-      // one bounded query frame for every arm (see qs05)
-      val q = emb.filter(col("vec_id") % 100 === 0).localCheckpoint()
+      val q = queryFrame(emb)
       val exact = Similarity.cosineTopK(emb, q, "vec_id", "embedding", k = 10)
       val model = graft.operators.Pq.train(s, emb, "vec_id", "embedding",
         m = 16, k = 16, iters = 2)
       val ann = graft.operators.Pq.search(s, emb, q, model, "vec_id",
         "embedding", k = 10, shortlist = 128)
-      Similarity.recallHits(exact, ann)
-        .select(col("query_id"), (col("hits") >= 2).cast("long").as("recall_ok"))
+      recallOk(exact, ann, 2)
     },
 
     // ----- MIPS: max-inner-product search via norm augmentation ----------
@@ -273,16 +303,13 @@ object SearchGates {
     // brute-force inner-product top-k; floor measured (min hits@10: 10
     // at sf0.001/sf0.01, 10 at sf0.1) with the qs05 safety margin.
     Q("qs13_mips_recall",
-      """SELECT vec_id AS query_id, CAST(1 AS BIGINT) AS recall_ok
-        |FROM embeddings WHERE vec_id % 100 = 0""".stripMargin) { (s, dir) =>
+      recallOracleSql()) { (s, dir) =>
       val emb = Tables(s, dir, "embeddings")
-      // one bounded query frame for every arm (see qs05)
-      val q = emb.filter(col("vec_id") % 100 === 0).localCheckpoint()
+      val q = queryFrame(emb)
       val exact = Similarity.mipsTopK(emb, q, "vec_id", "embedding", k = 10)
       val ann = Similarity.mipsLshTopK(emb, q, "vec_id", "embedding", k = 10,
         planesPerTable = 3, tables = 24)
-      Similarity.recallHits(exact, ann)
-        .select(col("query_id"), (col("hits") >= 5).cast("long").as("recall_ok"))
+      recallOk(exact, ann, 5)
     },
 
     // ----- IVF-PQ composed ANN (the billion-scale layout) ---------------
@@ -293,32 +320,26 @@ object SearchGates {
     // sf0.001 (8→6), so the gate trains one Lloyd pass per model and
     // stops paying for more. Floor 2, deterministic.
     Q("qs10_ivfpq_recall",
-      """SELECT vec_id AS query_id, CAST(1 AS BIGINT) AS recall_ok
-        |FROM embeddings WHERE vec_id % 100 = 0""".stripMargin) { (s, dir) =>
+      recallOracleSql()) { (s, dir) =>
       val emb = Tables(s, dir, "embeddings")
-      // one bounded query frame for every arm (see qs05)
-      val q = emb.filter(col("vec_id") % 100 === 0).localCheckpoint()
+      val q = queryFrame(emb)
       val exact = Similarity.cosineTopK(emb, q, "vec_id", "embedding", k = 10)
       val model = graft.operators.IvfPq.train(s, emb, "vec_id", "embedding",
         cells = 8, m = 16, k = 16, iters = 1)
       val ann = graft.operators.IvfPq.search(s, emb, q, model, "vec_id",
         "embedding", k = 10, nprobe = 4, shortlist = 128)
-      Similarity.recallHits(exact, ann)
-        .select(col("query_id"), (col("hits") >= 2).cast("long").as("recall_ok"))
+      recallOk(exact, ann, 2)
     },
 
     Q("qs06_ivf_recall",
-      """SELECT vec_id AS query_id, CAST(1 AS BIGINT) AS recall_ok
-        |FROM embeddings WHERE vec_id % 100 = 0""".stripMargin) { (s, dir) =>
+      recallOracleSql()) { (s, dir) =>
       val emb = Tables(s, dir, "embeddings")
-      // one bounded query frame for every arm (see qs05)
-      val q = emb.filter(col("vec_id") % 100 === 0).localCheckpoint()
+      val q = queryFrame(emb)
       val exact = Similarity.cosineTopK(emb, q, "vec_id", "embedding", k = 10)
       val model = graft.operators.Ivf.train(s, emb, "vec_id", "embedding", k = 8)
       val ann = graft.operators.Ivf.search(emb, q, model, "vec_id", "embedding",
         k = 10, nprobe = 4)
-      Similarity.recallHits(exact, ann)
-        .select(col("query_id"), (col("hits") >= 3).cast("long").as("recall_ok"))
+      recallOk(exact, ann, 3)
     },
 
     // ----- IVF incremental index maintenance -----------------------------
@@ -333,18 +354,15 @@ object SearchGates {
     // exactly like a stats manifest degrading gracefully under
     // appended files.
     Q("qs15_ivf_incremental",
-      """SELECT vec_id AS query_id, CAST(1 AS BIGINT) AS recall_ok
-        |FROM embeddings WHERE vec_id % 100 = 0""".stripMargin) { (s, dir) =>
+      recallOracleSql()) { (s, dir) =>
       val emb = Tables(s, dir, "embeddings")
       val preIngest = emb.filter(col("vec_id") % 5 =!= 0) // 80% at train time
-      // one bounded query frame for every arm (see qs05)
-      val q = emb.filter(col("vec_id") % 100 === 0).localCheckpoint()
+      val q = queryFrame(emb)
       val exact = Similarity.cosineTopK(emb, q, "vec_id", "embedding", k = 10)
       val model = graft.operators.Ivf.train(s, preIngest, "vec_id", "embedding", k = 8)
       val ann = graft.operators.Ivf.search(emb, q, model, "vec_id", "embedding",
         k = 10, nprobe = 4)
-      Similarity.recallHits(exact, ann)
-        .select(col("query_id"), (col("hits") >= 3).cast("long").as("recall_ok"))
+      recallOk(exact, ann, 3)
     },
 
     // ----- IVF index maintained by STREAMING ingest ----------------------
@@ -358,29 +376,22 @@ object SearchGates {
     // (IvfIngestSpec locks the equality) and the per-query recall gate
     // is qs06's oracle verbatim, floor 3.
     Q("qs24_ivf_stream_serve",
-      """SELECT vec_id AS query_id, CAST(1 AS BIGINT) AS recall_ok
-        |FROM embeddings WHERE vec_id % 100 = 0""".stripMargin) { (s, dir) =>
+      recallOracleSql()) { (s, dir) =>
       // built once per JVM — bench passes 2..n time the SERVE, not the
       // one-time multi-batch build
       val (path, model) = Fixture.once("qs24_ivf", dir) {
         val emb = Tables(s, dir, "embeddings")
         val m = graft.operators.Ivf.train(s, emb, "vec_id", "embedding", k = 8)
         val out = Fixture.dir("graft_qs24_ivf")
-        (0 until 3).foreach { b =>
-          graft.streaming.IvfIngest.applyBatch(
-            emb.filter(col("vec_id") % 3 === b),
-            m, "vec_id", "embedding", out, b.toLong)
-        }
+        ingestThirds(emb, m, out)
         (out, m)
       }
       val emb = Tables(s, dir, "embeddings")
-      // one bounded query frame for every arm (see qs05)
-      val q = emb.filter(col("vec_id") % 100 === 0).localCheckpoint()
+      val q = queryFrame(emb)
       val exact = Similarity.cosineTopK(emb, q, "vec_id", "embedding", k = 10)
       val ann = graft.streaming.IvfIngest.search(s, path, q, model,
         "vec_id", "embedding", k = 10, nprobe = 4)
-      Similarity.recallHits(exact, ann)
-        .select(col("query_id"), (col("hits") >= 3).cast("long").as("recall_ok"))
+      recallOk(exact, ann, 3)
     },
 
     // ----- per-label embedding centroids (element-wise exact mean) -------
@@ -453,15 +464,13 @@ object SearchGates {
     // behavior) → floor 2.
     // Training is one decimal-exact distributed moment pass, so the
     // model — and with it this gate — is bit-reproducible.
-    Q("qs25_pca_rerank_recall", pcaRecallOracleSql) { (s, dir) =>
+    Q("qs25_pca_rerank_recall", recallOracleSql()) { (s, dir) =>
       val emb = Tables(s, dir, "embeddings")
-      // one bounded query frame for every arm (see qs05)
-      val q = emb.filter(col("vec_id") % 100 === 0).localCheckpoint()
+      val q = queryFrame(emb)
       val exact = Similarity.cosineTopK(emb, q, "vec_id", "embedding", k = 10)
       val ann = Pca.searchRerank(emb, q, pcaModelOf(s, dir),
         "vec_id", "embedding", k = 10, shortlist = 256)
-      Similarity.recallHits(exact, ann)
-        .select(col("query_id"), (col("hits") >= 2).cast("long").as("recall_ok"))
+      recallOk(exact, ann, 2)
     },
 
     // ----- PCA trained ON THE STREAM --------------------------------------
@@ -471,15 +480,13 @@ object SearchGates {
     // BIT-IDENTICAL to qs25's batch model (MomentIngestSpec locks the
     // weights; this gate locks the served search under the same
     // oracle text).
-    Q("qs26_pca_stream_model", pcaRecallOracleSql) { (s, dir) =>
+    Q("qs26_pca_stream_model", recallOracleSql()) { (s, dir) =>
       val emb = Tables(s, dir, "embeddings")
-      // one bounded query frame for every arm (see qs05)
-      val q = emb.filter(col("vec_id") % 100 === 0).localCheckpoint()
+      val q = queryFrame(emb)
       val exact = Similarity.cosineTopK(emb, q, "vec_id", "embedding", k = 10)
       val ann = Pca.searchRerank(emb, q, pcaStreamModelOf(s, dir),
         "vec_id", "embedding", k = 10, shortlist = 256)
-      Similarity.recallHits(exact, ann)
-        .select(col("query_id"), (col("hits") >= 2).cast("long").as("recall_ok"))
+      recallOk(exact, ann, 2)
     },
 
     // ----- PCA × IVF: the composed production rung -------------------------
@@ -490,16 +497,14 @@ object SearchGates {
     // floor 2, same as qs25 — the index costs nothing the rerank
     // doesn't repair here, while cutting the candidate scan by
     // nprobe/ivfK.
-    Q("qs27_pca_ivf_recall", pcaRecallOracleSql) { (s, dir) =>
+    Q("qs27_pca_ivf_recall", recallOracleSql()) { (s, dir) =>
       val emb = Tables(s, dir, "embeddings")
-      // one bounded query frame for every arm (see qs05)
-      val q = emb.filter(col("vec_id") % 100 === 0).localCheckpoint()
+      val q = queryFrame(emb)
       val exact = Similarity.cosineTopK(emb, q, "vec_id", "embedding", k = 10)
       val ann = Pca.searchIvfRerank(s, emb, q,
         pcaModelOf(s, dir), pcaIvfModelOf(s, dir),
         "vec_id", "embedding", k = 10, shortlist = 256, nprobe = 4)
-      Similarity.recallHits(exact, ann)
-        .select(col("query_id"), (col("hits") >= 2).cast("long").as("recall_ok"))
+      recallOk(exact, ann, 2)
     },
 
     // ----- filtered vector search ----------------------------------------
@@ -572,8 +577,7 @@ object SearchGates {
     // floor 4 keeps the qs05-style safety margin under the measured
     // minima).
     Q("qs23_hybrid_ann_recall",
-      """SELECT vec_id AS query_id, CAST(1 AS BIGINT) AS recall_ok
-        |FROM embeddings WHERE vec_id % 100 = 0""".stripMargin) { (s, dir) =>
+      recallOracleSql()) { (s, dir) =>
       val emb = Tables(s, dir, "embeddings")
       // one bounded query frame for the ANN arm and the scoring key set
       // (the Pipeline qs05 materialization discipline)
@@ -637,15 +641,7 @@ object SearchGates {
     // scale the band rides whichever ANN arm replaces the exact
     // baseline (rank-band selection is arm-agnostic).
     Q("qs18_hard_negatives",
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-        |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e),
-        |q AS (SELECT vec_id AS qid, v AS qv, nrm AS qnrm FROM n WHERE vec_id % 100 = 0),
-        |p AS (
-        |  SELECT qid, vec_id AS nid, list_dot_product(qv, v) / (qnrm * nrm) AS sim
-        |  FROM q, n WHERE vec_id <> qid),
-        |r AS (SELECT qid AS query_id, nid AS neighbor_id,
-        |        ROW_NUMBER() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS rnk
-        |      FROM p)
+      s"""$cosineRankSql
         |SELECT query_id, neighbor_id, rnk FROM r
         |WHERE rnk BETWEEN 11 AND 30""".stripMargin) { (s, dir) =>
       val emb = Tables(s, dir, "embeddings")
@@ -698,20 +694,14 @@ object SearchGates {
     // for). Stream-vs-batch bit-identity on the surviving set plus
     // replay/compact interaction are IvfIngestSpec's locks.
     Q("qs28_ivf_delete_serve",
-      """SELECT vec_id AS query_id, CAST(1 AS BIGINT) AS recall_ok,
-        |  CAST(1 AS BIGINT) AS no_deleted
-        |FROM embeddings WHERE vec_id % 100 = 0""".stripMargin) { (s, dir) =>
+      recallOracleSql("no_deleted")) { (s, dir) =>
       // the gate's operator is the SERVE, so bench passes 2..n time the
       // tombstone-suppressed search, not the one-time ingest
       val (path, model) = Fixture.once("qs28_ivf", dir) {
         val emb = Tables(s, dir, "embeddings")
         val m = Ivf.train(s, emb, "vec_id", "embedding", k = 8)
         val out = Fixture.dir("graft_qs28_ivf")
-        (0 until 3).foreach { b =>
-          graft.streaming.IvfIngest.applyBatch(
-            emb.filter(col("vec_id") % 3 === b),
-            m, "vec_id", "embedding", out, b.toLong)
-        }
+        ingestThirds(emb, m, out)
         val doomed = emb.filter(col("vec_id") % 7 === 3).select("vec_id")
         graft.streaming.IvfIngest.applyDeletes(
           doomed.filter(col("vec_id") % 2 === 0), "vec_id", out, 0L)
@@ -722,19 +712,14 @@ object SearchGates {
       }
       val emb = Tables(s, dir, "embeddings")
       val survivors = emb.filter(col("vec_id") % 7 =!= 3)
-      // one bounded query frame for every arm (the Pipeline qs05
-      // materialization discipline)
-      val q = emb.filter(col("vec_id") % 100 === 0).localCheckpoint()
+      val q = queryFrame(emb)
       val exact = Similarity.cosineTopK(survivors, q, "vec_id", "embedding",
         k = 10)
       val ann = graft.streaming.IvfIngest.search(s, path, q, model,
         "vec_id", "embedding", k = 10, nprobe = 4)
       require(ann.filter(col("neighbor_id") % 7 === 3).isEmpty,
         "a tombstoned vector was served from the maintained index")
-      Similarity.recallHits(exact, ann)
-        .select(col("query_id"),
-          (col("hits") >= 3).cast("long").as("recall_ok"),
-          lit(1L).as("no_deleted"))
+      recallOk(exact, ann, 3, lit(1L).as("no_deleted"))
     },
 
     // ----- IVF retrain-and-swap under readers ------------------------------
@@ -753,9 +738,7 @@ object SearchGates {
     // recall oracle over the survivors, now against the RETRAINED
     // (full-corpus) centroids.
     Q("qs29_ivf_retrain_swap",
-      """SELECT vec_id AS query_id, CAST(1 AS BIGINT) AS recall_ok,
-        |  CAST(1 AS BIGINT) AS swap_consistent
-        |FROM embeddings WHERE vec_id % 100 = 0""".stripMargin) { (s, dir) =>
+      recallOracleSql("swap_consistent")) { (s, dir) =>
       // the gate's operator is the SERVE-after-swap, so bench passes
       // 2..n time the post-swap search, not the one-time build+retrain
       val (path, model) = Fixture.once("qs29_ivf", dir) {
@@ -763,11 +746,7 @@ object SearchGates {
         val stale = Ivf.train(s, emb.filter(col("vec_id") % 3 === 0),
           "vec_id", "embedding", k = 8)
         val out = Fixture.dir("graft_qs29_ivf") + "/ivf"
-        (0 until 3).foreach { b =>
-          graft.streaming.IvfIngest.applyBatch(
-            emb.filter(col("vec_id") % 3 === b),
-            stale, "vec_id", "embedding", out, b.toLong)
-        }
+        ingestThirds(emb, stale, out)
         graft.streaming.IvfIngest.applyDeletes(
           emb.filter(col("vec_id") % 7 === 3).select("vec_id"),
           "vec_id", out, 0L)
@@ -803,9 +782,7 @@ object SearchGates {
       }
       val emb = Tables(s, dir, "embeddings")
       val survivors = emb.filter(col("vec_id") % 7 =!= 3)
-      // one bounded query frame for every arm (the Pipeline qs05
-      // materialization discipline)
-      val q = emb.filter(col("vec_id") % 100 === 0).localCheckpoint()
+      val q = queryFrame(emb)
       val ann = graft.streaming.IvfIngest.search(s, path, q, model,
         "vec_id", "embedding", k = 10, nprobe = 4)
       // (c) deletes are terminal across the swap
@@ -813,10 +790,7 @@ object SearchGates {
         "a tombstoned vector was served after the retrain swap")
       val exact = Similarity.cosineTopK(survivors, q, "vec_id", "embedding",
         k = 10)
-      Similarity.recallHits(exact, ann)
-        .select(col("query_id"),
-          (col("hits") >= 3).cast("long").as("recall_ok"),
-          lit(1L).as("swap_consistent"))
+      recallOk(exact, ann, 3, lit(1L).as("swap_consistent"))
     },
 
     // ----- drift-TRIGGERED IVF maintenance ---------------------------------
@@ -834,9 +808,7 @@ object SearchGates {
     // The published check is the qs06 recall oracle over the shifted
     // corpus against the maintained index.
     Q("qs30_ivf_drift_maintain",
-      """SELECT vec_id AS query_id, CAST(1 AS BIGINT) AS recall_ok,
-        |  CAST(1 AS BIGINT) AS probe_fired
-        |FROM embeddings WHERE vec_id % 100 = 0""".stripMargin) { (s, dir) =>
+      recallOracleSql("probe_fired")) { (s, dir) =>
       // the gate's operator is the steady SERVE under the maintained
       // model, so bench passes 2..n time the post-maintenance search,
       // not the one-time build+drift+retrain
@@ -895,18 +867,14 @@ object SearchGates {
         emb.filter(col("vec_id") % 2 === 1)
           .withColumn("embedding",
             transform(col("embedding").cast("array<double>"), x => -x)))
-      // one bounded query frame for every arm (the Pipeline qs05
-      // materialization discipline) — saves re-deriving the
-      // union+negation per reference too
-      val q = full.filter(col("vec_id") % 100 === 0).localCheckpoint()
+      // the query frame also saves re-deriving the union+negation per
+      // reference
+      val q = queryFrame(full)
       val ann = IvfIngest.search(s, path, q, model,
         "vec_id", "embedding", k = 10, nprobe = 4)
       val exact = Similarity.cosineTopK(full, q, "vec_id", "embedding",
         k = 10)
-      Similarity.recallHits(exact, ann)
-        .select(col("query_id"),
-          (col("hits") >= 3).cast("long").as("recall_ok"),
-          lit(1L).as("probe_fired"))
+      recallOk(exact, ann, 3, lit(1L).as("probe_fired"))
     }
   )
 

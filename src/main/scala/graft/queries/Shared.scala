@@ -1,13 +1,14 @@
 package graft.queries
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.{Fixture, Tables}
 import graft.functions.{Exact, Text}
 import graft.operators.{Dedup, Retrieval}
 
-/** Oracle fragments and once-per-JVM fixtures used by gates in more
-  * than one domain registry.
+/** Oracle fragments, their Spark twins and once-per-JVM fixtures used
+  * by gates in more than one domain registry.
   */
 private[queries] object Shared {
 
@@ -25,6 +26,95 @@ private[queries] object Shared {
 
   def shCte =
     s"SELECT doc_id, ${Text.shinglesSql("ws")} AS s FROM w"
+
+  /** Exact shingle overlap (assumes `w` and `sh`): one row per shingle
+    * `e`, shingle-set sizes `sz`, and the intersection size `i` of
+    * every id-ordered doc pair sharing a shingle (`inter`).
+    */
+  val interCtes =
+    """e AS (SELECT doc_id, unnest(s) AS sh FROM sh),
+      |sz AS (SELECT doc_id, len(s) AS n FROM sh),
+      |inter AS (
+      |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS i
+      |  FROM e a JOIN e b ON a.sh = b.sh AND a.doc_id < b.doc_id
+      |  GROUP BY 1, 2)""".stripMargin
+
+  /** [[interCtes]] plus CTE `name`: the pairs at Jaccard >= 0.5. */
+  def jaccardPairsCtes(name: String): String =
+    s"""$interCtes,
+       |$name AS (
+       |  SELECT doc_a, doc_b
+       |  FROM inter JOIN sz x ON doc_a = x.doc_id JOIN sz y ON doc_b = y.doc_id
+       |  WHERE i * 1.0 / (x.n + y.n - i) >= 0.5)""".stripMargin
+
+  /** The near-dup clusters [[clustersOf]] serves, on the oracle side
+    * (assumes `w` and `sh`, under WITH RECURSIVE): Spark runs iterative
+    * min-label propagation (one shuffle per round, <= diameter rounds);
+    * the oracle computes the same component-min labeling as a
+    * recursive CTE `reach` over the brute-force exact pairs.
+    */
+  val reachCtes =
+    s"""${jaccardPairsCtes("pairs")},
+       |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
+       |          UNION SELECT doc_b, doc_a FROM pairs),
+       |reach(node, lbl) AS (
+       |  SELECT DISTINCT src, src FROM edges
+       |  UNION
+       |  SELECT g.dst, r.lbl FROM reach r JOIN edges g ON g.src = r.node)""".stripMargin
+
+  /** [[reachCtes]] plus the labels as CTE `cl` (doc_id, cluster). */
+  val clusterCtes =
+    s"""$reachCtes,
+       |cl AS (SELECT node AS doc_id, min(lbl) AS cluster
+       |       FROM reach GROUP BY node)""".stripMargin
+
+  /** Curation.keepBestPerCluster's argmax key on the oracle side
+    * (assumes `w`): TextAnalysis.qualityScore's bucket as rank `qr`
+    * (high 2, medium 1, low 0) and the distinct-word count `ndw`.
+    */
+  val qualityRankCte =
+    """q AS (SELECT doc_id,
+      |        CASE WHEN CAST(len(ws) AS BIGINT) >= 40
+      |               AND CAST(len(list_distinct(ws)) AS BIGINT) * 1.0
+      |                   / CAST(len(ws) AS BIGINT) >= 0.35 THEN 2
+      |             WHEN CAST(len(ws) AS BIGINT) >= 20 THEN 1
+      |             ELSE 0 END AS qr,
+      |        CAST(len(list_distinct(ws)) AS BIGINT) AS ndw
+      |      FROM w)""".stripMargin
+
+  /** The qd15 URL fixture as CTE `u` (doc_id, url): six URL variants
+    * per page id (doc_id // 6), picked by doc_id % 6. Variants 0, 1
+    * and 3 are the same page in different disguises.
+    */
+  val urlVariantsCte = {
+    val v = "CAST(doc_id % 6 AS INTEGER)"
+    val pid = "CAST(doc_id // 6 AS VARCHAR)"
+    s"""u AS (SELECT doc_id,
+       |  CASE $v
+       |    WHEN 0 THEN 'https://www.example.com/articles/' || $pid || '?a=1&b=2'
+       |    WHEN 1 THEN 'HTTPS://WWW.EXAMPLE.COM:443/articles/' || $pid || '/?b=2&a=1#section'
+       |    WHEN 2 THEN 'http://example.com:80/articles/' || $pid || '?utm_source=feed&a=1&b=2'
+       |    WHEN 3 THEN 'https://example.com/articles/' || $pid || '?b=2&utm_campaign=x&a=1'
+       |    WHEN 4 THEN 'https://example.com/other/' || $pid
+       |    ELSE 'https://blog.example.com/articles/' || $pid
+       |  END AS url FROM documents)""".stripMargin
+  }
+
+  /** Spark twin of [[urlVariantsCte]]: the same url as a column. */
+  def urlVariant: Column = {
+    val pid = expr("doc_id div 6").cast("string")
+    element_at(array(
+      concat(lit("https://www.example.com/articles/"), pid, lit("?a=1&b=2")),
+      concat(lit("HTTPS://WWW.EXAMPLE.COM:443/articles/"), pid,
+        lit("/?b=2&a=1#section")),
+      concat(lit("http://example.com:80/articles/"), pid,
+        lit("?utm_source=feed&a=1&b=2")),
+      concat(lit("https://example.com/articles/"), pid,
+        lit("?b=2&utm_campaign=x&a=1")),
+      concat(lit("https://example.com/other/"), pid),
+      concat(lit("https://blog.example.com/articles/"), pid)),
+      pmod(col("doc_id"), lit(6)).cast("int") + 1)
+  }
 
   /** qd06's near-dup cluster labels per sf dir, memoized to temp
     * parquet — five gates consume the identical frame (qd06, qp02,

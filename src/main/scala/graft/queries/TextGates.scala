@@ -21,6 +21,39 @@ object TextGates {
 
   private val langs = Text.Stopwords.map(_._1)
 
+  /** The tokenizer gates' oracle: every invariant flag of
+    * [[roundTripChecked]] must be 1, per document.
+    */
+  private val roundTripOracleSql =
+    """SELECT doc_id, CAST(1 AS BIGINT) AS roundtrip_ok,
+      |  CAST(1 AS BIGINT) AS bounds_ok
+      |FROM documents""".stripMargin
+
+  /** The INVARIANTS every correct subword encoder satisfies, per
+    * document of `docs`, over its output `enc` (doc_id, `pieces`
+    * array, `count`): concatenating the emitted pieces reproduces the
+    * concatenated words exactly (lossless segmentation), and the piece
+    * count sits in [n_words, n_chars]. Zero-word documents encode to
+    * the empty sequence. Same oracle discipline as the ANN recall_ok
+    * gates: the oracle knows every flag must be 1, so ANY encoder
+    * regression — dropped word, reordered piece, phantom merge —
+    * breaks the hash.
+    */
+  private def roundTripChecked(docs: DataFrame, enc: DataFrame,
+      pieces: String, count: String): DataFrame =
+    docs.select(col("doc_id"), expr(Text.wordsExpr("text")).as("__ws"))
+      .join(enc, Seq("doc_id"), "left")
+      .select(
+        col("doc_id"),
+        (concat_ws("", coalesce(col(pieces),
+          array().cast("array<string>"))) ===
+          concat_ws("", col("__ws"))).cast("long").as("roundtrip_ok"),
+        (coalesce(col(count), lit(0L)) >= size(col("__ws")).cast("long") &&
+          coalesce(col(count), lit(0L)) <=
+            aggregate(transform(col("__ws"), w => length(w)),
+              lit(0L), (a, x) => a + x))
+          .cast("long").as("bounds_ok"))
+
   /** qt27/qt28's trained quality classifier per sf dir, persisted once
     * per JVM through the Models registry (train = 4 Newton passes, the
     * expensive part; both gates then score from the SAME artifact —
@@ -617,35 +650,16 @@ object TextGates {
 
     // ----- BPE encode round-trip (train qt16 → encode → detokenize) ------
     // The learned merge table is data-dependent (not expressible as a
-    // static oracle), so the gate checks the INVARIANTS every correct
-    // encoder satisfies, per document: concatenating the emitted tokens
-    // reproduces the concatenated words exactly (lossless segmentation),
-    // and the token count sits in [n_words, n_chars] (every word is >= 1
-    // token, merges only shrink). Zero-word documents encode to the
-    // empty token sequence. Same oracle discipline as the ANN recall_ok
-    // gates: the oracle knows every flag must be 1, so ANY encoder
-    // regression — dropped word, reordered token, phantom merge — breaks
-    // the hash. Merge-priority correctness itself is locked by BpeSpec
-    // (batched == sequential, pair-for-pair).
+    // static oracle), so the gate checks the encoder INVARIANTS (see
+    // roundTripChecked): every word is >= 1 token, merges only shrink.
+    // Merge-priority correctness itself is locked by BpeSpec (batched
+    // == sequential, pair-for-pair).
     Q("qt18_bpe_encode",
-      """SELECT doc_id, CAST(1 AS BIGINT) AS roundtrip_ok,
-        |  CAST(1 AS BIGINT) AS bounds_ok
-        |FROM documents""".stripMargin) { (s, dir) =>
+      roundTripOracleSql) { (s, dir) =>
       val docs = Tables(s, dir, "documents")
       val merges = Bpe.trainBatched(docs, "text", numMerges = 16)
-      val enc = Bpe.encode(docs, "doc_id", "text", merges)
-      docs.select(col("doc_id"), expr(Text.wordsExpr("text")).as("__ws"))
-        .join(enc, Seq("doc_id"), "left")
-        .select(
-          col("doc_id"),
-          (concat_ws("", coalesce(col("tokens"),
-            array().cast("array<string>"))) ===
-            concat_ws("", col("__ws"))).cast("long").as("roundtrip_ok"),
-          (coalesce(col("n_tokens"), lit(0L)) >= size(col("__ws")).cast("long") &&
-            coalesce(col("n_tokens"), lit(0L)) <=
-              aggregate(transform(col("__ws"), w => length(w)),
-                lit(0L), (a, x) => a + x))
-            .cast("long").as("bounds_ok"))
+      roundTripChecked(docs, Bpe.encode(docs, "doc_id", "text", merges),
+        "tokens", "n_tokens")
     },
 
     // ----- n-gram novelty (first-occurrence attribution) -----------------
@@ -753,25 +767,11 @@ object TextGates {
     // determinism are locked by UnigramLmSpec (partitioning-invariant
     // piece table, EM convergence to multi-char pieces, coverage).
     Q("qt29_unigram_encode",
-      """SELECT doc_id, CAST(1 AS BIGINT) AS roundtrip_ok,
-        |  CAST(1 AS BIGINT) AS bounds_ok
-        |FROM documents""".stripMargin) { (s, dir) =>
+      roundTripOracleSql) { (s, dir) =>
       val docs = Tables(s, dir, "documents")
       val vocab = UnigramLm.train(docs, "text")
-      val enc = UnigramLm.encode(docs, "doc_id", "text", vocab)
-      docs.select(col("doc_id"), expr(Text.wordsExpr("text")).as("__ws"))
-        .join(enc, Seq("doc_id"), "left")
-        .select(
-          col("doc_id"),
-          (concat_ws("", coalesce(col("pieces"),
-            array().cast("array<string>"))) ===
-            concat_ws("", col("__ws"))).cast("long").as("roundtrip_ok"),
-          (coalesce(col("n_pieces"), lit(0L)) >=
-            size(col("__ws")).cast("long") &&
-            coalesce(col("n_pieces"), lit(0L)) <=
-              aggregate(transform(col("__ws"), w => length(w)),
-                lit(0L), (a, x) => a + x))
-            .cast("long").as("bounds_ok"))
+      roundTripChecked(docs, UnigramLm.encode(docs, "doc_id", "text", vocab),
+        "pieces", "n_pieces")
     },
 
     // ----- streaming tokenizer serving -----------------------------------
@@ -783,9 +783,7 @@ object TextGates {
     // qt29 verbatim. Stream-vs-batch bit-identity of the pieces
     // themselves is EncodeIngestSpec's lock.
     Q("qt30_stream_encoded",
-      """SELECT doc_id, CAST(1 AS BIGINT) AS roundtrip_ok,
-        |  CAST(1 AS BIGINT) AS bounds_ok
-        |FROM documents""".stripMargin) { (s, dir) =>
+      roundTripOracleSql) { (s, dir) =>
       val vp = ugVocabPath(s, dir)
       // one pieces dir per sf dir: applyBatch overwrites its own
       // batch=N subdirs, so re-invocations re-encode in place instead
@@ -800,19 +798,7 @@ object TextGates {
         docs.filter(col("doc_id") % 2 === 1), "doc_id", "text", vp, out, 1L)
       val enc = graft.streaming.EncodeIngest.serve(s, out)
         .select("doc_id", "pieces", "n_pieces")
-      docs.select(col("doc_id"), expr(Text.wordsExpr("text")).as("__ws"))
-        .join(enc, Seq("doc_id"), "left")
-        .select(
-          col("doc_id"),
-          (concat_ws("", coalesce(col("pieces"),
-            array().cast("array<string>"))) ===
-            concat_ws("", col("__ws"))).cast("long").as("roundtrip_ok"),
-          (coalesce(col("n_pieces"), lit(0L)) >=
-            size(col("__ws")).cast("long") &&
-            coalesce(col("n_pieces"), lit(0L)) <=
-              aggregate(transform(col("__ws"), w => length(w)),
-                lit(0L), (a, x) => a + x))
-            .cast("long").as("bounds_ok"))
+      roundTripChecked(docs, enc, "pieces", "n_pieces")
     },
 
     // ----- incremental-count BPE training --------------------------------
@@ -826,9 +812,7 @@ object TextGates {
     // gate fails loudly on any counts-maintenance drift), then gates
     // qt18's encoder invariants over the incremental merges.
     Q("qt32_bpe_incremental",
-      """SELECT doc_id, CAST(1 AS BIGINT) AS roundtrip_ok,
-        |  CAST(1 AS BIGINT) AS bounds_ok
-        |FROM documents""".stripMargin) { (s, dir) =>
+      roundTripOracleSql) { (s, dir) =>
       val docs = Tables(s, dir, "documents")
       val merges = graft.operators.Bpe.trainIncremental(
         docs, "text", numMerges = 12, compactEvery = 5)
@@ -840,20 +824,9 @@ object TextGates {
       }
       require(merges == seqRef,
         "incremental trainer diverged from the sequential merge sequence")
-      val enc = graft.operators.Bpe.encode(docs, "doc_id", "text", merges)
-      docs.select(col("doc_id"),
-          expr(graft.functions.Text.wordsExpr("text")).as("__ws"))
-        .join(enc, Seq("doc_id"), "left")
-        .select(
-          col("doc_id"),
-          (concat_ws("", coalesce(col("tokens"),
-            array().cast("array<string>"))) ===
-            concat_ws("", col("__ws"))).cast("long").as("roundtrip_ok"),
-          (coalesce(col("n_tokens"), lit(0L)) >= size(col("__ws")).cast("long") &&
-            coalesce(col("n_tokens"), lit(0L)) <=
-              aggregate(transform(col("__ws"), w => length(w)),
-                lit(0L), (a, x) => a + x))
-            .cast("long").as("bounds_ok"))
+      roundTripChecked(docs,
+        graft.operators.Bpe.encode(docs, "doc_id", "text", merges),
+        "tokens", "n_tokens")
     }
   )
 }

@@ -13,22 +13,18 @@ import graft.etl.StarSchema
   */
 object EtlRunner {
 
-  case class StepResult(step: String, ok: Boolean, rows: Long, error: Option[String])
-
   def run(spark: SparkSession, dir: String): Seq[StepResult] = {
-    val results = scala.collection.mutable.ArrayBuffer.empty[StepResult]
+    val steps = new Steps
 
     def step(name: String)(f: => DataFrame): Option[DataFrame] =
-      if (results.exists(!_.ok)) None // abort-on-failure sequencing
+      if (!steps.ok) None
       else try {
         val df = f
-        val n = df.count()
-        results += StepResult(name, ok = n > 0, n,
-          if (n > 0) None else Some("empty result"))
+        steps += StepResult.counted(name, df.count())
         Some(df)
       } catch {
         case e: Exception =>
-          results += StepResult(name, ok = false, 0L, Some(e.getMessage))
+          steps += StepResult.failed(name, e)
           None
       }
 
@@ -60,9 +56,9 @@ object EtlRunner {
           |FROM etl_fact_sales f JOIN etl_dim_date d
           |  ON f.dim_order_date_key = d.date_pkey
           |GROUP BY d.year_month""".stripMargin)
-      results += StepResult("views", ok = true,
+      steps += StepResult("views", ok = true,
         spark.table("vw_sales_by_nation").count(), None)
     }
-    results.toSeq
+    steps.results
   }
 }

@@ -2,7 +2,6 @@ package graft.runner
 
 import org.apache.spark.sql.SparkSession
 
-import graft.Waves
 import graft.refstar.{RefStarViewsSql, Views, Warehouse}
 
 /** Driver for the reference-entity star, mirroring the reference's
@@ -112,9 +111,6 @@ object RefStarRunner {
       "vw_store58dayofweekanalysis" -> (Views.store58DayOfWeek _),
       "vw_multistorevssinglestoreanalysis" -> (Views.multiStoreVsSingleStore _))
 
-  case class StepResult(step: String, ok: Boolean, rows: Long,
-                        error: Option[String])
-
   /** Full pipeline: staging → dimensional → views, abort-on-failure.
     *
     * The catalog steps run in dependency waves (`graft.Waves`), each
@@ -125,19 +121,8 @@ object RefStarRunner {
     * steps finished in.
     */
   def run(spark: SparkSession): Seq[StepResult] = {
-    val rs = scala.collection.mutable.ArrayBuffer.empty[StepResult]
-
-    def step(name: String)(f: => Long): () => StepResult = () =>
-      try {
-        val n = f
-        StepResult(name, n > 0, n, if (n > 0) None else Some("empty result"))
-      } catch {
-        case e: Exception => StepResult(name, ok = false, 0L, Some(e.getMessage))
-      }
-
-    // abort-on-failure sequencing, one wave at a time
-    def wave(steps: Seq[() => StepResult]): Unit =
-      if (rs.forall(_.ok)) rs ++= Waves(steps)
+    val steps = new Steps
+    import steps.{step, wave}
 
     // phase 0: the two databases (create_database.py:41-46)
     wave(Seq(step("create_databases") {
@@ -150,16 +135,13 @@ object RefStarRunner {
     // build itself runs staging → dims (Location first) → facts in the
     // reference's dependency order; surface its per-table accounting
     // as runner steps so the checkpoint trail matches run_etl's.
-    if (rs.forall(_.ok)) {
+    if (steps.ok) {
       val built = try Warehouse.ensure(spark) catch {
         case e: Exception =>
-          rs += StepResult("warehouse_build", ok = false, 0L, Some(e.getMessage))
+          steps += StepResult.failed("warehouse_build", e)
           Seq.empty
       }
-      built.foreach { s =>
-        rs += StepResult(s"load_${s.name}", s.rows > 0, s.rows,
-          if (s.rows > 0) None else Some("empty result"))
-      }
+      built.foreach(s => steps += StepResult.counted(s"load_${s.name}", s.rows))
     }
 
     // register staging tables under the staging database, and star
@@ -200,7 +182,7 @@ object RefStarRunner {
     // resolution (the round-12 suite hit exactly that: an unrelated
     // suite's temp `dim_date` broke vw_salesperformancesummary's
     // creation).
-    if (rs.forall(_.ok)) {
+    if (steps.ok) {
       val clean = spark.newSession()
       clean.sql(s"USE $DimensionDb")
       wave(PassThroughViews.map { case (view, tbl, cols) =>
@@ -218,7 +200,7 @@ object RefStarRunner {
       })
     }
 
-    rs.toSeq
+    steps.results
   }
 
   // one registration per session: the catalog is session state

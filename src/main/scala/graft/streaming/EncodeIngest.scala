@@ -31,19 +31,10 @@ object EncodeIngest {
 
   private def piecesPath(path: String) = s"$path/pieces"
 
-  /** The vocabulary is FROZEN by contract (retraining is a new path),
-    * so the load — whose non-empty validation runs an eager Spark job
-    * — happens once per (session, path), not once per micro-batch: a
-    * long-running [[start]] stream would otherwise pay one extra
-    * vocab-scan job on every foreachBatch invocation. Keyed by session
-    * too, so a cached frame never outlives the session that read it.
+  /** The vocabulary, loaded once per (session, path): its non-empty
+    * validation is an eager vocab-scan job.
     */
-  private val vocabCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-
-  private def vocabAt(spark: SparkSession, vocabPath: String): DataFrame =
-    vocabCache.computeIfAbsent((spark, vocabPath),
-      { case (s, p) => Models.loadVocab(s, p) })
+  private val vocabAt = new Sink.Frozen(Models.loadVocab)
 
   /** Encode one micro-batch of (id, text) documents with the
     * vocabulary at `vocabPath`. Idempotent per `batchId`.

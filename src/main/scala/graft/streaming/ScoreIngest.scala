@@ -10,10 +10,11 @@ import graft.operators.{Classifier, Models}
   * ([[graft.operators.Models.loadLinear]]) — the deploy shape of the
   * qt27 trainer: train once on a reference corpus (expensive full
   * passes), then score every ingest batch forever with the registry
-  * artifact. Scores land as `scores/batch=<id>/` parquet, [[Sink]]'s
-  * batch directories without markers (nothing ever compacts them),
-  * and [[serve]] is a plain union read — no merge step, because
-  * scoring is row-local (batches never interact).
+  * artifact, FROZEN by contract (retraining is a new path). Scores
+  * land as `scores/batch=<id>/` parquet, [[Sink]]'s batch directories
+  * without markers (nothing ever compacts them), and [[serve]] is a
+  * plain union read — no merge step, because scoring is row-local
+  * (batches never interact).
   *
   * Scale posture: the model is d+1 driver-side doubles folded into the
   * projection as literals — no broadcast table, no shuffle, the
@@ -28,13 +29,18 @@ object ScoreIngest {
 
   private def scorePath(path: String) = s"$path/scores"
 
+  /** The model, loaded once per (session, path): the load is two eager
+    * jobs (schema read and collect).
+    */
+  private val modelAt = new Sink.Frozen(Models.loadLinear)
+
   /** Score one micro-batch of (id, text) documents with the model at
     * `modelPath`. Idempotent per `batchId`.
     */
   def applyBatch(spark: SparkSession, batch: DataFrame, idCol: String,
                  textCol: String, modelPath: String, path: String,
                  batchId: Long, dims: Int = 16): Unit = {
-    val model = Models.loadLinear(spark, modelPath)
+    val model = modelAt(spark, modelPath)
     val feats = Classifier.featurizeText(batch, idCol, textCol, dims)
     Sink.writeBatch(Classifier.predict(feats, model, idCol), scorePath(path), batchId)
   }
@@ -42,11 +48,15 @@ object ScoreIngest {
   /** Start continuous scoring over a document stream. */
   def start(docs: DataFrame, idCol: String, textCol: String,
             modelPath: String, path: String, checkpoint: String,
-            dims: Int = 16): StreamingQuery =
+            dims: Int = 16): StreamingQuery = {
+    // validate the artifact (and warm the cache) BEFORE the stream
+    // starts, as EncodeIngest.start does
+    modelAt(docs.sparkSession, modelPath)
     Sink.start(docs, checkpoint) { (batch, id) =>
       applyBatch(batch.sparkSession, batch, idCol, textCol, modelPath,
         path, id, dims)
     }
+  }
 
   /** All scored rows across batches: (idCol, margin, pred, batch). */
   def serve(spark: SparkSession, path: String): DataFrame =

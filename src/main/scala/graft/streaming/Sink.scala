@@ -40,6 +40,22 @@ private[streaming] object Sink {
       .foreachBatch(apply)
       .start()
 
+  /** A serving artifact (model, vocabulary) read by `load`. It is
+    * FROZEN by contract (retraining is a new path), so the load — whose
+    * validation runs eager Spark jobs — happens once per (session,
+    * path), not once per micro-batch: a long-running [[start]] stream
+    * would otherwise pay the load's jobs on every foreachBatch
+    * invocation. Keyed by session too, so a cached value never
+    * outlives the session that read it.
+    */
+  final class Frozen[A](load: (SparkSession, String) => A) {
+    private val cache =
+      new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), A]()
+
+    def apply(spark: SparkSession, path: String): A =
+      cache.computeIfAbsent((spark, path), { case (s, p) => load(s, p) })
+  }
+
   val BatchCol = "__last_batch"
 
   /** Last micro-batch id merged into the table at `path`, or -1. */

@@ -6,8 +6,8 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, Ivf}
-import graft.streaming.{DedupIngest, IvfIngest, NoveltyIngest}
+import graft.operators.{Classifier, Dedup, Ivf, Models}
+import graft.streaming.{DedupIngest, IvfIngest, NoveltyIngest, ScoreIngest}
 
 /** The shared streaming sink: `hasBatch` means "committed" — a batch
   * directory whose write never reached `_SUCCESS` (Spark creates the
@@ -77,6 +77,42 @@ class SinkSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
     assert(rows(NoveltyIngest.serve(spark, dir, "doc_id")) ==
       rows(Dedup.firstOccurrenceNovelty(b0, "doc_id", "text", n = 3)))
+  }
+
+  test("ScoreIngest loads its frozen model once per session and path") {
+    val docs = Tables(spark, sfDir, "documents").select("doc_id", "text")
+    val dir = Fixture.dir("graft_sink_score")
+    val feats = Classifier.featurizeText(docs, "doc_id", "text", dims = 16)
+      .withColumn("y", (col("doc_id") % 2).cast("long")).localCheckpoint()
+    Models.saveLinear(spark,
+      Classifier.trainLogisticNewton(feats, "x", "y", iters = 1), s"$dir/lin")
+    val sc = spark.sparkContext
+    def inGroup(group: String)(f: => Unit): Unit = {
+      sc.setJobGroup(group, group)
+      try f finally sc.clearJobGroup()
+    }
+    // the Spark jobs batch `b` runs; the status listener is asynchronous
+    // but ordered, so once a later fence job is listed, so are the batch's
+    val out = s"$dir/out"
+    def batchJobs(b: Long): Int = {
+      val group = s"graft_sink_score_$b"
+      inGroup(group)(ScoreIngest.applyBatch(spark,
+        docs.filter(col("doc_id") % 2 === b), "doc_id", "text", s"$dir/lin",
+        out, b))
+      inGroup(s"${group}_fence")(sc.parallelize(Seq(1)).count())
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (sc.statusTracker.getJobIdsForGroup(s"${group}_fence").isEmpty &&
+          System.nanoTime() < deadline) Thread.sleep(10)
+      sc.statusTracker.getJobIdsForGroup(group).length
+    }
+    batchJobs(0L)
+    val n = batchJobs(1L)
+    assert(n == 1, s"the second batch ran $n jobs: the model load is not cached")
+    def rows(df: DataFrame) = df.select("doc_id", "margin", "pred").collect()
+      .map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSet
+    assert(rows(ScoreIngest.serve(spark, out)) ==
+      rows(Classifier.predict(feats, Models.loadLinear(spark, s"$dir/lin"),
+        "doc_id")))
   }
 
   test("only Sink.scala spells out foreachBatch, the batch= listing and " +
