@@ -26,8 +26,8 @@ import org.apache.spark.sql.SparkSession
   * RDD. It must only run BETWEEN suite entries (a truncated-lineage
   * RDD cannot be recomputed, so sweeping one that a live query still
   * needs would fail that query loudly); plan-level `.cache()`s are
-  * deliberately NOT swept — their lineage is intact and standing
-  * caches (the refstar view spine) are legitimate cross-pass state.
+  * deliberately NOT swept — their lineage is intact and a standing
+  * cache is legitimate cross-pass state.
   */
 object Blocks {
 

@@ -89,93 +89,49 @@ object GraftExtensions {
     }
   }
 
-  def apply(e: SparkSessionExtensions): Unit = {
-    e.injectOptimizerRule(_ => OrNullJoinRewrite)
-    e.injectOptimizerRule(_ => RangeBinJoinRewrite)
-    e.injectFunction((
-      FunctionIdentifier("graft_polyhash"),
-      new ExpressionInfo(classOf[graft.expressions.PolyHash].getName,
-        "graft_polyhash"),
-      (args: Seq[Expression]) => {
-        require(args.size == 1, "graft_polyhash(str)")
-        graft.expressions.PolyHash(args.head)
-      }))
-    e.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[graft.expressions.DotProduct].getName,
-        "graft_dot"),
-      (args: Seq[Expression]) => {
-        require(args.size == 2, "graft_dot(array, array)")
-        graft.expressions.DotProduct(args(0), args(1))
-      }))
-    e.injectFunction((
-      FunctionIdentifier("graft_jaro_winkler"),
-      new ExpressionInfo(classOf[graft.expressions.JaroWinklerSim].getName,
-        "graft_jaro_winkler"),
-      (args: Seq[Expression]) => {
-        require(args.size == 2, "graft_jaro_winkler(str, str)")
-        graft.expressions.JaroWinklerSim(args(0), args(1))
-      }))
-    e.injectFunction((
-      FunctionIdentifier("graft_jaro_winkler_cp"),
-      new ExpressionInfo(classOf[graft.expressions.JaroWinklerSimCp].getName,
-        "graft_jaro_winkler_cp"),
-      (args: Seq[Expression]) => {
-        require(args.size == 2, "graft_jaro_winkler_cp(str, str)")
-        graft.expressions.JaroWinklerSimCp(args(0), args(1))
-      }))
-    e.injectFunction((
-      FunctionIdentifier("graft_bitmap_count"),
-      new ExpressionInfo(classOf[graft.expressions.BitmapCount].getName,
-        "graft_bitmap_count"),
-      (args: Seq[Expression]) => {
-        require(args.size == 1, "graft_bitmap_count(blob)")
-        graft.expressions.BitmapCount(args.head)
-      }))
-    e.injectFunction((
-      FunctionIdentifier("graft_bitmap_and"),
-      new ExpressionInfo(classOf[graft.expressions.BitmapAnd].getName,
-        "graft_bitmap_and"),
-      (args: Seq[Expression]) => {
-        require(args.size == 2, "graft_bitmap_and(blob, blob)")
-        graft.expressions.BitmapAnd(args(0), args(1))
-      }))
-    e.injectFunction((
-      FunctionIdentifier("graft_nfc"),
-      new ExpressionInfo(classOf[graft.expressions.NfcNormalize].getName,
-        "graft_nfc"),
-      (args: Seq[Expression]) => {
-        require(args.size == 1, "graft_nfc(str)")
-        graft.expressions.NfcNormalize(args.head)
-      }))
-    e.injectFunction((
-      FunctionIdentifier("graft_bitmap_agg"),
-      new ExpressionInfo(classOf[graft.expressions.BitmapAgg].getName,
-        "graft_bitmap_agg"),
-      (args: Seq[Expression]) => {
-        require(args.size == 1, "graft_bitmap_agg(long)")
-        graft.expressions.BitmapAgg(args.head).toAggregateExpression()
-      }))
-    e.injectFunction((
-      FunctionIdentifier("graft_group_topk"),
-      new ExpressionInfo(classOf[graft.expressions.GroupTopK].getName,
-        "graft_group_topk"),
-      (args: Seq[Expression]) => {
-        require(args.size == 3, "graft_group_topk(value, id, k)")
-        val k = args(2) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
+  /** The `graft_*` SQL functions: name, implementing class, parameter
+    * names (the call must pass exactly these, in order) and the builder.
+    */
+  private val Functions: Seq[(String, Class[_], Seq[String], Seq[Expression] => Expression)] = {
+    import graft.expressions._
+    Seq(
+      ("graft_polyhash", classOf[PolyHash], Seq("str"), a => PolyHash(a(0))),
+      ("graft_dot", classOf[DotProduct], Seq("array", "array"),
+        a => DotProduct(a(0), a(1))),
+      ("graft_jaro_winkler", classOf[JaroWinklerSim], Seq("str", "str"),
+        a => JaroWinklerSim(a(0), a(1))),
+      ("graft_jaro_winkler_cp", classOf[JaroWinklerSimCp], Seq("str", "str"),
+        a => JaroWinklerSimCp(a(0), a(1))),
+      ("graft_bitmap_count", classOf[BitmapCount], Seq("blob"),
+        a => BitmapCount(a(0))),
+      ("graft_bitmap_and", classOf[BitmapAnd], Seq("blob", "blob"),
+        a => BitmapAnd(a(0), a(1))),
+      ("graft_nfc", classOf[NfcNormalize], Seq("str"), a => NfcNormalize(a(0))),
+      ("graft_bitmap_agg", classOf[BitmapAgg], Seq("long"),
+        a => BitmapAgg(a(0)).toAggregateExpression()),
+      ("graft_group_topk", classOf[GroupTopK], Seq("value", "id", "k"), a => {
+        val k = a(2) match {
+          case Literal(v: Int, _) => v
           case other => throw new IllegalArgumentException(
             s"k must be an integer literal, got $other")
         }
-        graft.expressions.GroupTopK(args(0), args(1), k).toAggregateExpression()
-      }))
-    e.injectFunction((
-      FunctionIdentifier("graft_bitmap_or_agg"),
-      new ExpressionInfo(classOf[graft.expressions.BitmapOrAgg].getName,
-        "graft_bitmap_or_agg"),
-      (args: Seq[Expression]) => {
-        require(args.size == 1, "graft_bitmap_or_agg(blob)")
-        graft.expressions.BitmapOrAgg(args.head).toAggregateExpression()
-      }))
+        GroupTopK(a(0), a(1), k).toAggregateExpression()
+      }),
+      ("graft_bitmap_or_agg", classOf[BitmapOrAgg], Seq("blob"),
+        a => BitmapOrAgg(a(0)).toAggregateExpression()))
+  }
+
+  def apply(e: SparkSessionExtensions): Unit = {
+    e.injectOptimizerRule(_ => OrNullJoinRewrite)
+    e.injectOptimizerRule(_ => RangeBinJoinRewrite)
+    Functions.foreach { case (name, cls, params, build) =>
+      e.injectFunction((
+        FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name),
+        (args: Seq[Expression]) => {
+          require(args.size == params.size, s"$name(${params.mkString(", ")})")
+          build(args)
+        }))
+    }
   }
 }

@@ -1,8 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.refstar.{RefStarSql, RefStarViewsSql, Staging, Views, Warehouse}
+import graft.refstar.{RefStarSql, RefStarViewsSql, Staging, Warehouse}
+import graft.runner.RefStarRunner
 
 /** The reference-entity star, gated: one query per dimension and fact,
   * each hash-compared against a DuckDB oracle that rebuilds the same
@@ -22,6 +23,13 @@ import graft.refstar.{RefStarSql, RefStarViewsSql, Staging, Views, Warehouse}
 object RefStarQueries {
 
   private def over(select: String): String = RefStarSql.over(select)
+
+  /** A view of the runner's dimension catalog, read as its users read it. */
+  private def catalog(view: String): (SparkSession, String) => DataFrame =
+    (s, _) => {
+      RefStarRunner.ensure(s)
+      s.table(s"${RefStarRunner.DimensionDb}.$view")
+    }
 
   val all: Seq[Q] = Seq(
 
@@ -75,19 +83,14 @@ object RefStarQueries {
         "ProductCategoryID, ProductName, ProductType, ProductCategory, " +
         "ProductRetailPrice, ProductWholesalePrice, ProductCost, " +
         "ProductRetailProfit, ProductWholesaleUnitProfit, " +
-        "ProductProfitMarginUnitPercent FROM dim_product")) { (s, _) =>
-      graft.runner.RefStarRunner.ensure(s)
-      s.table(s"${graft.runner.RefStarRunner.DimensionDb}.vw_dim_product")
-    },
+        "ProductProfitMarginUnitPercent FROM dim_product"))(
+      catalog("vw_dim_product")),
 
     // catalog path for an ANALYTICAL view: the runner registers all 7
     // in the dimension database (rahil/create_views.py:145-497 creates
     // them IN the database); this reads one back through the catalog
-    Q("qr12_vw_store58_catalog", over(RefStarViewsSql.store58Performance)) {
-      (s, _) =>
-        graft.runner.RefStarRunner.ensure(s)
-        s.table(s"${graft.runner.RefStarRunner.DimensionDb}.vw_store58performance")
-    },
+    Q("qr12_vw_store58_catalog", over(RefStarViewsSql.store58Performance))(
+      catalog("vw_store58performance")),
 
     // SCD Type 2 applied to the PERSISTED star: a store-manager update
     // batch (new manager for stores 5/8, one brand-new store) versions
@@ -193,37 +196,31 @@ object RefStarQueries {
     },
 
     // ----- the 7 analytical views (rahil/create_views.py:145-497) -------
-    // Oracles run the reference's ORIGINAL view SQL (exactness casts
-    // aside) over the same star — incl. qv03's naive 4-clause
-    // OR-IS-NULL fact join, proving the Spark-side equi-branch rewrite.
+    // Each gate serves the catalog view RefStarRunner registers. Oracles
+    // run the reference's ORIGINAL view SQL (exactness casts aside) over
+    // the same star — incl. qv03's naive 4-clause OR-IS-NULL fact join,
+    // proving the Spark body's equi-branch rewrite.
 
-    Q("qv01_sales_performance", over(RefStarViewsSql.salesPerformanceSummary)) {
-      (s, _) => Views.salesPerformanceSummary(s)
-    },
+    Q("qv01_sales_performance", over(RefStarViewsSql.salesPerformanceSummary))(
+      catalog("vw_salesperformancesummary")),
 
-    Q("qv02_customer_analysis", over(RefStarViewsSql.customerSalesAnalysis)) {
-      (s, _) => Views.customerSalesAnalysis(s)
-    },
+    Q("qv02_customer_analysis", over(RefStarViewsSql.customerSalesAnalysis))(
+      catalog("vw_customersalesanalysis")),
 
-    Q("qv03_target_vs_actual", over(RefStarViewsSql.targetVsActual)) {
-      (s, _) => Views.targetVsActual(s)
-    },
+    Q("qv03_target_vs_actual", over(RefStarViewsSql.targetVsActual))(
+      catalog("vw_targetvsactualperformance")),
 
-    Q("qv04_store58_performance", over(RefStarViewsSql.store58Performance)) {
-      (s, _) => Views.store58Performance(s)
-    },
+    Q("qv04_store58_performance", over(RefStarViewsSql.store58Performance))(
+      catalog("vw_store58performance")),
 
-    Q("qv05_store_bonus", over(RefStarViewsSql.storeBonusRecommendation)) {
-      (s, _) => Views.storeBonusRecommendation(s)
-    },
+    Q("qv05_store_bonus", over(RefStarViewsSql.storeBonusRecommendation))(
+      catalog("vw_storebonusrecommendation")),
 
-    Q("qv06_store58_dayofweek", over(RefStarViewsSql.store58DayOfWeek)) {
-      (s, _) => Views.store58DayOfWeek(s)
-    },
+    Q("qv06_store58_dayofweek", over(RefStarViewsSql.store58DayOfWeek))(
+      catalog("vw_store58dayofweekanalysis")),
 
-    Q("qv07_multistore_analysis", over(RefStarViewsSql.multiStoreVsSingleStore)) {
-      (s, _) => Views.multiStoreVsSingleStore(s)
-    },
+    Q("qv07_multistore_analysis", over(RefStarViewsSql.multiStoreVsSingleStore))(
+      catalog("vw_multistorevssinglestoreanalysis")),
 
     // Integrity audit over the persisted star: key uniqueness per dim,
     // referential integrity per fact FK, measure null counts — the
@@ -299,12 +296,11 @@ object RefStarQueries {
         |  CAST(SUM(SaleQuantity) AS BIGINT) AS sum_qty
         |FROM fact_salesactual GROUP BY 1""".stripMargin)) { (s, _) =>
       import org.apache.spark.sql.functions._
-      graft.runner.RefStarRunner.ensure(s)
-      val catalogFact =
-        s.table(s"${graft.runner.RefStarRunner.DimensionDb}.fact_salesactual")
+      RefStarRunner.ensure(s)
+      val catalogFact = s.table(s"${RefStarRunner.DimensionDb}.fact_salesactual")
       catalogFact.count() // warm: pin listing + partition metadata pre-rewrite
       Warehouse.rebuildPartitions(s, Seq(2014))
-      s.table(s"${graft.runner.RefStarRunner.DimensionDb}.fact_salesactual")
+      s.table(s"${RefStarRunner.DimensionDb}.fact_salesactual")
         .groupBy(floor(col("DimSaleDateID") / 10000L).cast("int")
           .as("sale_year"))
         .agg(count(lit(1)).as("n_rows"),

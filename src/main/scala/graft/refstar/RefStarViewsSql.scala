@@ -1,17 +1,24 @@
 package graft.refstar
 
-/** DuckDB oracle SQL for the 7 analytical views — the reference's
-  * ORIGINAL view bodies (rahil/create_views.py:145-497) over the
-  * RefStarSql star prefix, with the repo's cross-engine exactness
-  * rewrites applied on top:
+/** View SQL for the 7 analytical views: the DuckDB oracle text and the
+  * Spark catalog bodies.
+  *
+  * The oracle text is the reference's ORIGINAL view bodies
+  * (rahil/create_views.py:145-497) over the RefStarSql star prefix,
+  * with the repo's cross-engine exactness rewrites applied on top:
   *
   *  - double SUM/AVG through DECIMAL(25,6) (graft.functions.Exact)
   *  - computed integers CAST AS BIGINT (DuckDB SUM(BIGINT) is HUGEINT)
   *  - ROUND through decimal, not double, rounding
   *
-  * qv03's oracle keeps the reference's naive 4-clause OR-IS-NULL fact
-  * join verbatim, so the gate proves Views.targetVsActual's equi-join
-  * branch rewrite is semantics-preserving.
+  * Spark's catalog (RefStarRunner.AnalyticalViews) parses the same text
+  * for qv01, qv02 and qv04. qv03, qv05, qv06 and qv07 have Spark
+  * instances (`*Spark`): qv03's is the equi-branch rewrite of the
+  * reference's naive 4-clause OR-IS-NULL fact join, which its oracle
+  * keeps verbatim, so the gate proves the rewrite semantics-preserving;
+  * qv05-qv07's are the oracle body over the sales fact restricted to
+  * its `SaleYear` partitions, so the scan prunes the years the view's
+  * `YEAR IN (2013, 2014)` discards.
   */
 object RefStarViewsSql {
 
@@ -113,14 +120,24 @@ object RefStarViewsSql {
        |    OR SUM(fst.SalesTargetAmount) > 0""".stripMargin
   }
 
-  /** Spark-executable body for the qv03 CATALOG view: the same
-    * union-of-three-equi-branch rewrite Views.targetVsActual encodes as
-    * a DataFrame, rendered as SQL text (a CREATE VIEW body must be SQL,
-    * and the naive OR-IS-NULL shape above would plan as a
-    * BroadcastNestedLoopJoin). The DuckDB oracle keeps the reference's
-    * naive SQL verbatim, so the qv03 gate still proves this rewrite
-    * semantics-preserving; RefStarRunnerSpec additionally asserts the
-    * catalog view row-equals the DataFrame plan.
+  /** Spark body for the qv03 catalog view. The naive OR-IS-NULL shape
+    * above would plan as a BroadcastNestedLoopJoin (the spine's NULL
+    * keys match every fact row), so it is re-planned as a union of
+    * three equi-join branches, split by the spine's key null-pattern
+    * (fps and fst present / fps only / fst only): within a branch the
+    * IS-NULL disjuncts are constant, so the condition collapses to pure
+    * equi-keys. Spine rows where BOTH target facts are absent are
+    * dropped up front: their groups have SUM(target) = NULL on both
+    * sides, so the view's own HAVING discards them, and their group
+    * keys (all dim names NULL) cannot collide with any branch row's,
+    * since dim names are COALESCE'd non-null.
+    *
+    * At scale the spine is bounded by the entity-sized target facts,
+    * not by sales volume, so building it once per branch is bounded
+    * work; Spark's exchange reuse builds each of its broadcasts once
+    * and the other branches read them back (PlanChecksSpec). Branches
+    * with an empty slice collapse via AQE empty-relation propagation,
+    * so the data decides how many fact passes run.
     */
   val targetVsActualSpark: String = {
     val inYQ = "d_year = TargetYear AND d_qtr = TargetQuarter"
@@ -225,7 +242,19 @@ object RefStarViewsSql {
        |  d.YEAR, d.QUARTER, d.MONTH_NAME""".stripMargin
   }
 
-  val storeBonusRecommendation: String = {
+  /** The sales fact restricted to the years qv05-qv07 keep: `YEAR` on
+    * dim_date equals the fact's `SaleYear` partition (both derive from
+    * the same yyyyMMdd key), so the restriction prunes every other
+    * year's files at listing time (PlanChecksSpec asserts the
+    * PartitionFilters) and leaves the view's rows unchanged.
+    */
+  private val factSales2013to2014 =
+    "(SELECT * FROM fact_salesactual WHERE SaleYear IN (2013, 2014))"
+
+  val storeBonusRecommendation: String = storeBonusRecommendationOver("fact_salesactual")
+  val storeBonusRecommendationSpark: String = storeBonusRecommendationOver(factSales2013to2014)
+
+  private def storeBonusRecommendationOver(fact: String): String = {
     val part = "d.YEAR, p.ProductType"
     val salesShare = s"${ds("fs.SaleAmount")} / ${wds("fs.SaleAmount", part)}"
     val profitShare = s"${ds("fs.SaleTotalProfit")} / ${wds("fs.SaleTotalProfit", part)}"
@@ -251,7 +280,7 @@ object RefStarViewsSql {
        |  CASE d.YEAR WHEN 2013 THEN ${bonus(500000)}
        |              WHEN 2014 THEN ${bonus(400000)}
        |              ELSE 0 END AS RecommendedBonus
-       |FROM fact_salesactual fs
+       |FROM $fact fs
        |JOIN dim_store s ON fs.DimStoreID = s.DimStoreID
        |JOIN dim_location sl ON s.DimLocationID = sl.DimLocationID
        |JOIN dim_product p ON fs.DimProductID = p.DimProductID
@@ -263,7 +292,10 @@ object RefStarViewsSql {
        |  d.YEAR, p.ProductType""".stripMargin
   }
 
-  val store58DayOfWeek: String = {
+  val store58DayOfWeek: String = store58DayOfWeekOver("fact_salesactual")
+  val store58DayOfWeekSpark: String = store58DayOfWeekOver(factSales2013to2014)
+
+  private def store58DayOfWeekOver(fact: String): String = {
     val part = "s.StoreNumber, d.YEAR"
     val avgDaily = s"${wds("fs.SaleAmount", part)} / COUNT(*) OVER (PARTITION BY $part)"
     s"""SELECT s.StoreNumber, s.StoreName, d.DAY_NAME, d.DAY_NUM_IN_WEEK,
@@ -285,7 +317,7 @@ object RefStarViewsSql {
        |    WHEN 'Monday' THEN 1 WHEN 'Tuesday' THEN 2 WHEN 'Wednesday' THEN 3
        |    WHEN 'Thursday' THEN 4 WHEN 'Friday' THEN 5 WHEN 'Saturday' THEN 6
        |    WHEN 'Sunday' THEN 7 END AS BIGINT) AS DayOrder
-       |FROM fact_salesactual fs
+       |FROM $fact fs
        |JOIN dim_store s ON fs.DimStoreID = s.DimStoreID
        |JOIN dim_date d ON fs.DimSaleDateID = d.DATE_PKEY
        |WHERE s.StoreNumber IN ('5', '8') AND d.YEAR IN (2013, 2014)
@@ -293,7 +325,10 @@ object RefStarViewsSql {
        |  d.WEEKDAY_IND, d.YEAR""".stripMargin
   }
 
-  val multiStoreVsSingleStore: String = {
+  val multiStoreVsSingleStore: String = multiStoreVsSingleStoreOver("fact_salesactual")
+  val multiStoreVsSingleStoreSpark: String = multiStoreVsSingleStoreOver(factSales2013to2014)
+
+  private def multiStoreVsSingleStoreOver(fact: String): String = {
     def configAvg(config: String, metric: String): String =
       s"""CAST(CAST(SUM(CAST(CASE WHEN StoreConfiguration = '$config'
          |    THEN $metric END AS DECIMAL(25,6))) OVER (PARTITION BY YEAR) AS STRING) AS DOUBLE)
@@ -326,7 +361,7 @@ object RefStarViewsSql {
        |      AS ProfitMarginPercent,
        |    ${ds("fs.SaleAmount")} / NULLIF(COUNT(DISTINCT fs.SalesHeaderID), 0)
        |      AS AvgTransactionValue
-       |  FROM fact_salesactual fs
+       |  FROM $fact fs
        |  JOIN dim_store s ON fs.DimStoreID = s.DimStoreID
        |  JOIN dim_location l ON s.DimLocationID = l.DimLocationID
        |  JOIN dim_date d ON fs.DimSaleDateID = d.DATE_PKEY

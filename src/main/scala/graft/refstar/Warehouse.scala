@@ -37,7 +37,7 @@ import graft.Waves
   * FINGERPRINT of the compiled recipe code (every .class under
   * `graft/refstar` and `graft/etl`) — any recompiled recipe change
   * invalidates the store mechanically, with no version constant to
-  * forget to bump. GRAFT_WAREHOUSE_REBUILD=1 still forces a rebuild.
+  * forget to bump. `rebuild` forces a from-scratch build.
   */
 object Warehouse {
 
@@ -88,10 +88,9 @@ object Warehouse {
     md.digest().map("%02x".format(_)).mkString.take(16)
   }
 
-  /** System property first so specs can redirect to a temp store. */
+  /** `graft.warehouse.dir` redirects specs and benchmarks to a temp store. */
   def root: String =
     sys.props.get("graft.warehouse.dir")
-      .orElse(sys.env.get("GRAFT_WAREHOUSE_DIR"))
       .getOrElse("/root/repo/fixtures/warehouse")
 
   val DimTables: Seq[String] = Seq("dim_date", "dim_location", "dim_channel",
@@ -111,21 +110,10 @@ object Warehouse {
     * The fact is the ONLY unbounded star table; at 100× the year-filtered
     * views (reference rahil/create_views.py:356,413 `YEAR IN (2013,2014)`)
     * must prune whole years at the file-listing level, not scan the full
-    * history — `factSalesForYears` is the pruned entry point.
+    * history — their catalog bodies filter this column
+    * (RefStarViewsSql).
     */
   val FactYearCol = "SaleYear"
-
-  /** The sales fact restricted to `years` via the partition column, so
-    * the scan carries PartitionFilters (asserted in PlanChecksSpec) and
-    * skips every other year's files before reading a byte. Returns the
-    * same 14-column schema as `table(_, "fact_salesactual")`.
-    */
-  def factSalesForYears(spark: SparkSession, years: Seq[Int]): DataFrame = {
-    ensure(spark)
-    spark.read.parquet(path("fact_salesactual"))
-      .filter(col(FactYearCol).isin(years: _*))
-      .drop(FactYearCol)
-  }
 
   /** A staging entity as the build persisted it: the `Staging.Source`
     * every recipe of the build reads, in place of the CSV.
@@ -237,8 +225,7 @@ object Warehouse {
     memo.getOrElse {
       val marker = Paths.get(root, "VERSION")
       val tag = s"${Fixtures.Version}.$recipeFingerprint"
-      val forced = sys.env.get("GRAFT_WAREHOUSE_REBUILD").contains("1")
-      val fresh = !forced && Files.exists(marker) &&
+      val fresh = Files.exists(marker) &&
         new String(Files.readAllBytes(marker)).trim == tag
       val steps =
         if (fresh) (StagingTables ++ DimTables ++ FactTables).map { t =>
@@ -272,7 +259,7 @@ object Warehouse {
     * re-registration is mandatory after the directories are replaced).
     * Called by `rebuild` and `rebuildPartitions` — the round-12 bench
     * proved the failure mode for real: a pre-warmed session that
-    * registered the catalog and cached a view spine before an
+    * registered the catalog and cached a plan over the star before an
     * in-session rebuild failed every subsequent read with
     * deleted-file errors. At 100 TB this is the driver that backfills
     * a partition while downstream readers hold the table — the
