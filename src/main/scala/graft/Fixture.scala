@@ -1,10 +1,12 @@
 package graft
 
 import java.io.File
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
-/** Once-per-JVM gate state: memoised builds and the temp directories
-  * they live in.
+/** Once-per-JVM gate state: memoised builds, the temp directories
+  * they live in, and the versioned fixture directories under the
+  * checkout.
   *
   * A gate whose operator is the SERVE over some standing state (a
   * rewritten table, an ingested index, a trained model) builds that
@@ -36,9 +38,32 @@ object Fixture {
     }
   }
 
+  private val markers = new ConcurrentHashMap[String, AnyRef]()
+
+  /** Keep the directory behind `marker` at `version`: when the marker
+    * file is missing or holds another version, `write` runs and the
+    * marker is stamped after it, so a write that dies midway leaves the
+    * directory stale, not falsely fresh. Writes serialize per marker;
+    * a write may bring another marker's directory up to date first.
+    */
+  def versioned(marker: String, version: Int)(write: => Unit): Unit =
+    markers.computeIfAbsent(marker, _ => new Object).synchronized {
+      val m = Paths.get(marker)
+      if (!Files.exists(m) || new String(Files.readAllBytes(m)).trim != version.toString) {
+        write
+        Files.write(m, version.toString.getBytes)
+      }
+    }
+
+  /** `fixtures/<name>` under the working directory: the checkout, for
+    * sbt's forked tests and `run`, so each checkout keeps its own store.
+    */
+  def checkoutDir(name: String): String =
+    Paths.get("fixtures", name).toAbsolutePath.toString
+
   /** A fresh, empty directory under `java.io.tmpdir`, deleted at exit. */
   def dir(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    val d = Files.createTempDirectory(prefix).toFile
     dirs.add(d)
     d.toString
   }

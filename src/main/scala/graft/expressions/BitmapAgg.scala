@@ -36,31 +36,13 @@ case class BitmapAgg(
     child: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[LongMap[Long]] {
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-
-  override def createAggregationBuffer(): LongMap[Long] = LongMap.empty[Long]
+  extends BitmapBufferAgg {
 
   override def update(b: LongMap[Long], input: InternalRow): LongMap[Long] = {
     val v = child.eval(input)
     if (v != null) BitmapOps.set(b, v.asInstanceOf[Long])
     b
   }
-
-  override def merge(a: LongMap[Long], b: LongMap[Long]): LongMap[Long] = {
-    b.foreachEntry((idx, w) => a(idx) = a.getOrElse(idx, 0L) | w)
-    a
-  }
-
-  override def eval(b: LongMap[Long]): Any = BitmapOps.toBytes(b)
-
-  override def serialize(b: LongMap[Long]): Array[Byte] = BitmapOps.toBytes(b)
-
-  override def deserialize(bytes: Array[Byte]): LongMap[Long] =
-    BitmapOps.fromBytes(bytes)
 
   override def withNewMutableAggBufferOffset(o: Int): BitmapAgg =
     copy(mutableAggBufferOffset = o)
@@ -78,19 +60,34 @@ case class BitmapOrAgg(
     child: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[LongMap[Long]] {
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-
-  override def createAggregationBuffer(): LongMap[Long] = LongMap.empty[Long]
+  extends BitmapBufferAgg {
 
   override def update(b: LongMap[Long], input: InternalRow): LongMap[Long] = {
     val v = child.eval(input)
     if (v != null) BitmapOps.orInto(b, v.asInstanceOf[Array[Byte]])
     b
   }
+
+  override def withNewMutableAggBufferOffset(o: Int): BitmapOrAgg =
+    copy(mutableAggBufferOffset = o)
+  override def withNewInputAggBufferOffset(o: Int): BitmapOrAgg =
+    copy(inputAggBufferOffset = o)
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): BitmapOrAgg =
+    copy(child = c.head)
+}
+
+/** The sparse-bitset buffer both bitmap aggregates share: they differ
+  * only in how `update` folds one input row into it.
+  */
+sealed abstract class BitmapBufferAgg extends TypedImperativeAggregate[LongMap[Long]] {
+
+  def child: Expression
+
+  override def children: Seq[Expression] = Seq(child)
+  override def nullable: Boolean = false
+  override def dataType: DataType = BinaryType
+
+  override def createAggregationBuffer(): LongMap[Long] = LongMap.empty[Long]
 
   override def merge(a: LongMap[Long], b: LongMap[Long]): LongMap[Long] = {
     b.foreachEntry((idx, w) => a(idx) = a.getOrElse(idx, 0L) | w)
@@ -103,13 +100,6 @@ case class BitmapOrAgg(
 
   override def deserialize(bytes: Array[Byte]): LongMap[Long] =
     BitmapOps.fromBytes(bytes)
-
-  override def withNewMutableAggBufferOffset(o: Int): BitmapOrAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): BitmapOrAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): BitmapOrAgg =
-    copy(child = c.head)
 }
 
 /** Exact cardinality of a bitmap blob (popcount sum). Codegen'd — the

@@ -2,8 +2,11 @@ package graft.operators
 
 import java.awt.image.BufferedImage
 import java.io.ByteArrayOutputStream
+import java.nio.ByteBuffer
 import java.nio.file.{Files, Paths}
 import javax.imageio.ImageIO
+
+import graft.Fixture
 
 /** Deterministic PNG + WAV + MP4 fixture set for the REAL-decode
   * multimodal gates (qm02 images, qm03 audio, qm04 video containers):
@@ -31,7 +34,7 @@ object MediaFixtures {
   val Count = 64
 
   def root: String =
-    sys.env.getOrElse("GRAFT_MEDIA_FIXTURE_DIR", "/root/repo/fixtures/media")
+    sys.env.getOrElse("GRAFT_MEDIA_FIXTURE_DIR", Fixture.checkoutDir("media"))
 
   def metaCsv: String = s"$root/expected_meta.csv"
 
@@ -52,15 +55,30 @@ object MediaFixtures {
   def audioFeaturesCsv: String = s"$root/expected_audio_features.csv"
 
   /** Generate (once) and return the fixture root. Thread-safe in-JVM. */
-  def ensure(): String = synchronized {
-    val marker = Paths.get(root, "VERSION")
-    val fresh = Files.exists(marker) &&
-      new String(Files.readAllBytes(marker)).trim == Version.toString
-    if (!fresh) {
-      generate()
-      Files.write(marker, Version.toString.getBytes)
-    }
+  def ensure(): String = {
+    Fixture.versioned(s"$root/VERSION", Version)(generate())
     root
+  }
+
+  /** The 64-bit LCG step (Knuth's MMIX constants) behind every asset. */
+  private def lcg(seed: Long): Long =
+    seed * 6364136223846793005L + 1442695040888963407L
+
+  /** `n` noise bytes: bits 32-39 of successive LCG states from `seed`. */
+  private def lcgBytes(n: Int, seed: Long): Array[Byte] = {
+    var s = seed
+    Array.fill(n) { s = lcg(s); (s >>> 32).toByte }
+  }
+
+  /** `img` painted row-major, one LCG step per pixel from `seed`. */
+  private def lcgPaint(img: BufferedImage, seed: Long)(
+      rgb: Long => Int): BufferedImage = {
+    var s = seed
+    for (y <- 0 until img.getHeight; x <- 0 until img.getWidth) {
+      s = lcg(s)
+      img.setRGB(x, y, rgb(s))
+    }
+    img
   }
 
   private def generate(): Unit = {
@@ -76,20 +94,8 @@ object MediaFixtures {
     val db = new StringBuilder("media_id,dhash\n")
     def writeImage(id: Int, w: Int, h: Int, px: Array[Int]): Unit = {
       val img = new BufferedImage(w, h, BufferedImage.TYPE_3BYTE_BGR)
-      var (sumR, sumG, sumB) = (0L, 0L, 0L)
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) {
-          val rgb = px(y * w + x)
-          sumR += (rgb >> 16) & 0xff
-          sumG += (rgb >> 8) & 0xff
-          sumB += rgb & 0xff
-          img.setRGB(x, y, rgb)
-          x += 1
-        }
-        y += 1
-      }
+      img.setRGB(0, 0, w, h, px, 0, w)
+      val (sumR, sumG, sumB) = Multimodal.rgbSums(img)
       val bos = new ByteArrayOutputStream()
       ImageIO.write(img, "png", bos)
       val bytes = bos.toByteArray
@@ -107,7 +113,7 @@ object MediaFixtures {
       // brightness-invariant and the planted pairs differ only by the
       // deliberately repainted blocks)
       val px = Array.fill(w * h) {
-        seed = seed * 6364136223846793005L + 1442695040888963407L
+        seed = lcg(seed)
         (((seed >>> 24) & 0xffffff) & 0xf8f8f8).toInt
       }
       writeImage(id, w, h, px)
@@ -192,7 +198,7 @@ object MediaFixtures {
       // fingerprint is provably invariant to the gain change and the
       // planted pairs differ only by the deliberately muted windows
       val samples = Array.fill(frames * channels) {
-        seed = seed * 6364136223846793005L + 1442695040888963407L
+        seed = lcg(seed)
         (seed >>> 32).toShort.toInt & ~1
       }
       writeAudio(id, rate, channels, samples)
@@ -221,14 +227,124 @@ object MediaFixtures {
 
   private def box(typ: String, payload: Array[Byte]*): Array[Byte] = {
     val len = 8 + payload.map(_.length).sum
-    val bb = java.nio.ByteBuffer.allocate(len)
+    val bb = ByteBuffer.allocate(len)
     bb.putInt(len).put(typ.getBytes("ISO-8859-1"))
     payload.foreach(bb.put)
     bb.array()
   }
 
+  private def int32(v: Int): Array[Byte] = ByteBuffer.allocate(4).putInt(v).array()
+
   private val UnityMatrix: Array[Int] =
     Array(0x00010000, 0, 0, 0, 0x00010000, 0, 0, 0, 0x40000000)
+
+  /** Movie header; `v1` writes the 64-bit-times layout. */
+  private def mvhd(id: Int, timescale: Int, duration: Long, nextTrackId: Int,
+                   v1: Boolean = false): Array[Byte] = {
+    val bb = ByteBuffer.allocate(if (v1) 112 else 100)
+    bb.put((if (v1) 1 else 0).toByte).put(Array[Byte](0, 0, 0)) // ver/flags
+    if (v1) bb.putLong(3000000000L + id).putLong(3000000000L + id)
+      .putInt(timescale).putLong(duration)
+    else bb.putInt(0x30000000 + id).putInt(0x30000000 + id)
+      .putInt(timescale).putInt(duration.toInt)
+    bb.putInt(0x00010000).putShort(0x0100.toShort) // rate, volume
+    bb.put(new Array[Byte](10)) // reserved
+    UnityMatrix.foreach(bb.putInt)
+    bb.put(new Array[Byte](24)) // pre_defined
+    bb.putInt(nextTrackId)
+    box("mvhd", bb.array())
+  }
+
+  /** One track: tkhd, then mdia → (mdhd, hdlr, minf → stbl(`table`)).
+    * The tkhd presentation size is a FIXED 640x360 decoy on every
+    * track, so a reader that takes it instead of the stsd sample
+    * entry's coded size fails the gate.
+    */
+  private def trak(id: Int, trackId: Int, timescale: Int, duration: Long,
+                   handler: String, table: Array[Byte]*): Array[Byte] = {
+    val tkhd = ByteBuffer.allocate(84)
+    tkhd.put(0.toByte).put(Array[Byte](0, 0, 7)) // v0, enabled|movie|preview
+    tkhd.putInt(0x30000000 + id).putInt(0x30000000 + id)
+    tkhd.putInt(trackId).putInt(0) // track_ID, reserved
+    tkhd.putInt(duration.toInt)
+    tkhd.put(new Array[Byte](8)) // reserved
+    tkhd.putShort(0).putShort(0).putShort(0).putShort(0) // layer/group/vol/res
+    UnityMatrix.foreach(tkhd.putInt)
+    tkhd.putInt(640 << 16).putInt(360 << 16) // fixed-point decoy size
+    val mdhd = ByteBuffer.allocate(24)
+    mdhd.put(0.toByte).put(Array[Byte](0, 0, 0)) // v0/flags
+    mdhd.putInt(0).putInt(0) // ctime/mtime
+    mdhd.putInt(timescale).putInt(duration.toInt)
+    mdhd.putShort(0x55C4.toShort).putShort(0) // language 'und', pre_defined
+    val hdlr = box("hdlr",
+      new Array[Byte](8), // version/flags, pre_defined
+      handler.getBytes("ISO-8859-1"),
+      new Array[Byte](13)) // reserved x3 + empty name
+    box("trak", box("tkhd", tkhd.array()), box("mdia", box("mdhd", mdhd.array()),
+      hdlr, box("minf", box("stbl", table: _*))))
+  }
+
+  /** Sample descriptions holding the one sample entry `fourcc(entry)`. */
+  private def stsd(fourcc: String, entry: Array[Byte]): Array[Byte] =
+    box("stsd", Array[Byte](0, 0, 0, 0), int32(1), box(fourcc, entry)) // version/flags, entry_count
+
+  /** VisualSampleEntry body carrying the CODED width/height. */
+  private def visualEntry(w: Int, h: Int): Array[Byte] = {
+    val bb = ByteBuffer.allocate(78)
+    bb.put(new Array[Byte](6)).putShort(1) // reserved, data_ref_index
+    bb.putShort(0).putShort(0) // pre_defined, reserved
+    bb.put(new Array[Byte](12)) // pre_defined
+    bb.putShort(w.toShort).putShort(h.toShort) // CODED size
+    bb.putInt(0x00480000).putInt(0x00480000) // 72 dpi h/v
+    bb.putInt(0) // reserved
+    bb.putShort(1) // frame_count
+    bb.put(new Array[Byte](32)) // compressorname
+    bb.putShort(24) // depth
+    bb.putShort(-1) // pre_defined
+    bb.array()
+  }
+
+  /** A `vide` track whose samples are `frames`, with the full sample
+    * table: one sample per chunk (stts/stsc), per-sample sizes (stsz)
+    * and each chunk's FILE offset (stco, from `offsets`).
+    */
+  private def frameTrak(id: Int, trackId: Int, timescale: Int, duration: Long,
+      fourcc: String, w: Int, h: Int, frames: Array[Array[Byte]],
+      offsets: Seq[Long]): Array[Byte] = {
+    val n = frames.length
+    val stts = ByteBuffer.allocate(16).putInt(0).putInt(1).putInt(n).putInt(100)
+    val stsc = ByteBuffer.allocate(20).putInt(0).putInt(1).putInt(1).putInt(1).putInt(1)
+    val stsz = ByteBuffer.allocate(12 + 4 * n).putInt(0).putInt(0).putInt(n) // varying sizes
+    frames.foreach(f => stsz.putInt(f.length))
+    val stco = ByteBuffer.allocate(8 + 4 * n).putInt(0).putInt(n)
+    offsets.foreach(o => stco.putInt(o.toInt))
+    trak(id, trackId, timescale, duration, "vide", stsd(fourcc, visualEntry(w, h)),
+      box("stts", stts.array()), box("stsc", stsc.array()),
+      box("stsz", stsz.array()), box("stco", stco.array()))
+  }
+
+  /** ftyp + free + moov + mdat, where mdat holds `frames` and then
+    * `noiseBytes` of trailing LCG noise, so a decoder that reads "the
+    * rest of mdat" instead of the sample table fails. `moov` builds the
+    * movie box's children from the frames' file offsets. Two-pass: stco
+    * holds FILE offsets, which depend on moov's size — probe with zeros
+    * (same byte length), then patch real offsets.
+    */
+  private def mp4(id: Int, brand: String, freeBytes: Int,
+      frames: Array[Array[Byte]], noiseBytes: Int)(
+      moov: Seq[Long] => Seq[Array[Byte]]): Array[Byte] = {
+    val mdatPayload = frames.flatten ++ lcgBytes(noiseBytes, id * 0x9E3779B97F4A7C15L)
+    val ftyp = box("ftyp", brand.getBytes("ISO-8859-1"), int32(0x200),
+      "isommp42".getBytes("ISO-8859-1")) // compatible brands
+    def assemble(offsets: Seq[Long]): Array[Byte] =
+      ftyp ++ box("free", new Array[Byte](freeBytes)) ++
+        box("moov", moov(offsets): _*) ++ box("mdat", mdatPayload)
+    val probe = assemble(Seq.fill(frames.length)(0L))
+    val payloadStart = (probe.length - mdatPayload.length).toLong
+    val bytes = assemble(frames.scanLeft(payloadStart)((o, f) => o + f.length).init.toSeq)
+    require(bytes.length == probe.length, "offset patch changed layout")
+    bytes
+  }
 
   /** Minimal-but-real MP4 containers: ftyp + free + moov(mvhd + N trak)
     * + mdat, with per-id brand / timescale / duration / track count and
@@ -238,8 +354,7 @@ object MediaFixtures {
     * description subtree (tkhd + mdia/mdhd/hdlr/minf/stbl/stsd) with a
     * real VisualSampleEntry (codec fourcc, coded width/height) or
     * AudioSampleEntry — per-track metadata only recoverable by walking
-    * five levels of the box tree (the tkhd presentation size is a FIXED
-    * 640x360 decoy, so reading it instead of stsd fails the gate).
+    * five levels of the box tree.
     */
   private def generateVideo(): Unit = {
     val brands = Array("isom", "mp42", "avc1")
@@ -255,93 +370,28 @@ object MediaFixtures {
       val timescale = timescales(id % timescales.length)
       val duration = 100L + (id.toLong * 137L) % 5000L
       val nTracks = 1 + id % 3
-      val v1 = id % 5 == 0
-
-      val ftyp = box("ftyp",
-        brand.getBytes("ISO-8859-1"),
-        java.nio.ByteBuffer.allocate(4).putInt(0x200).array(),
-        "isommp42".getBytes("ISO-8859-1")) // compatible brands
-
-      val mvhd = {
-        val bb = java.nio.ByteBuffer.allocate(if (v1) 112 else 100)
-        bb.put((if (v1) 1 else 0).toByte).put(Array[Byte](0, 0, 0)) // ver/flags
-        if (v1) bb.putLong(3000000000L + id).putLong(3000000000L + id)
-          .putInt(timescale).putLong(duration)
-        else bb.putInt(0x30000000 + id).putInt(0x30000000 + id)
-          .putInt(timescale).putInt(duration.toInt)
-        bb.putInt(0x00010000).putShort(0x0100.toShort) // rate, volume
-        bb.put(new Array[Byte](10)) // reserved
-        UnityMatrix.foreach(bb.putInt)
-        bb.put(new Array[Byte](24)) // pre_defined
-        bb.putInt(nTracks + 2) // next_track_ID (raw track appended below)
-        box("mvhd", bb.array())
-      }
+      // next_track_ID counts the raw track appended below
+      val header = mvhd(id, timescale, duration, nTracks + 2, v1 = id % 5 == 0)
 
       val traks = (1 to nTracks).map { t =>
-        val tkhd = {
-          val bb = java.nio.ByteBuffer.allocate(84)
-          bb.put(0.toByte).put(Array[Byte](0, 0, 7)) // v0, enabled|movie|preview
-          bb.putInt(0x30000000 + id).putInt(0x30000000 + id)
-          bb.putInt(t) // track_ID
-          bb.putInt(0) // reserved
-          bb.putInt(duration.toInt)
-          bb.put(new Array[Byte](8)) // reserved
-          bb.putShort(0).putShort(0).putShort(0).putShort(0) // layer/group/vol/res
-          UnityMatrix.foreach(bb.putInt)
-          bb.putInt(640 << 16).putInt(360 << 16) // fixed-point decoy size
-          box("tkhd", bb.array())
-        }
         // track 2 of three-track assets is audio; the rest are video
         val isAudio = t == 2 && nTracks == 3
         val codec = if (isAudio) "mp4a" else vcodecs((id + t) % vcodecs.length)
         val w = if (isAudio) 0 else 160 + ((id * 7 + t * 31) % 16) * 8
         val h = if (isAudio) 0 else 90 + ((id * 13 + t * 17) % 16) * 8
-        val sampleEntry = {
-          val body =
-            if (isAudio) {
-              val bb = java.nio.ByteBuffer.allocate(28)
-              bb.put(new Array[Byte](6)).putShort(1) // reserved, data_ref_index
-              bb.put(new Array[Byte](8)) // reserved
-              bb.putShort((1 + id % 2).toShort).putShort(16) // channels, bits
-              bb.putShort(0).putShort(0) // pre_defined, reserved
-              bb.putInt(44100 << 16) // fixed-point sample rate
-              bb.array()
-            } else {
-              val bb = java.nio.ByteBuffer.allocate(78)
-              bb.put(new Array[Byte](6)).putShort(1) // reserved, data_ref_index
-              bb.putShort(0).putShort(0) // pre_defined, reserved
-              bb.put(new Array[Byte](12)) // pre_defined
-              bb.putShort(w.toShort).putShort(h.toShort) // CODED size
-              bb.putInt(0x00480000).putInt(0x00480000) // 72 dpi h/v
-              bb.putInt(0) // reserved
-              bb.putShort(1) // frame_count
-              bb.put(new Array[Byte](32)) // compressorname
-              bb.putShort(24) // depth
-              bb.putShort(-1) // pre_defined
-              bb.array()
-            }
-          box(codec, body)
-        }
-        val stsd = box("stsd",
-          Array[Byte](0, 0, 0, 0), // version/flags
-          java.nio.ByteBuffer.allocate(4).putInt(1).array(), // entry_count
-          sampleEntry)
-        val mdhd = {
-          val bb = java.nio.ByteBuffer.allocate(24)
-          bb.put(0.toByte).put(Array[Byte](0, 0, 0)) // v0/flags
-          bb.putInt(0).putInt(0) // ctime/mtime
-          bb.putInt(timescale).putInt(duration.toInt)
-          bb.putShort(0x55C4.toShort).putShort(0) // language 'und', pre_defined
-          box("mdhd", bb.array())
-        }
-        val hdlr = box("hdlr",
-          new Array[Byte](8), // version/flags, pre_defined
-          (if (isAudio) "soun" else "vide").getBytes("ISO-8859-1"),
-          new Array[Byte](13)) // reserved x3 + empty name
-        val mdia = box("mdia", mdhd, hdlr,
-          box("minf", box("stbl", stsd)))
+        val entry =
+          if (isAudio) {
+            val bb = ByteBuffer.allocate(28)
+            bb.put(new Array[Byte](6)).putShort(1) // reserved, data_ref_index
+            bb.put(new Array[Byte](8)) // reserved
+            bb.putShort((1 + id % 2).toShort).putShort(16) // channels, bits
+            bb.putShort(0).putShort(0) // pre_defined, reserved
+            bb.putInt(44100 << 16) // fixed-point sample rate
+            bb.array()
+          } else visualEntry(w, h)
         tb.append(s"$id,$t,$codec,$w,$h\n")
-        box("trak", tkhd, mdia)
+        trak(id, t, timescale, duration, if (isAudio) "soun" else "vide",
+          stsd(codec, entry))
       }
 
       // ----- the REAL track: uncompressed RGB24 frames ('raw ' fourcc,
@@ -351,15 +401,7 @@ object MediaFixtures {
       val wf = 8 + (id % 5) * 2
       val hf = 6 + (id % 3) * 2
       val frames = Array.tabulate(nFrames) { fi =>
-        val px = new Array[Byte](wf * hf * 3)
-        var seed = (id * 1000L + fi) * 0x9E3779B97F4A7C15L
-        var i = 0
-        while (i < px.length) {
-          seed = seed * 6364136223846793005L + 1442695040888963407L
-          px(i) = (seed >>> 32).toByte
-          i += 1
-        }
-        px
+        lcgBytes(wf * hf * 3, (id * 1000L + fi) * 0x9E3779B97F4A7C15L)
       }
       frames.zipWithIndex.foreach { case (px, fi) =>
         var (r, g, b) = (0L, 0L, 0L)
@@ -372,98 +414,10 @@ object MediaFixtures {
       }
       tb.append(s"$id,${nTracks + 1},raw,$wf,$hf\n")
 
-      def rawTrak(offsets: Seq[Long]): Array[Byte] = {
-        val tkhd = {
-          val bb = java.nio.ByteBuffer.allocate(84)
-          bb.put(0.toByte).put(Array[Byte](0, 0, 7))
-          bb.putInt(0x30000000 + id).putInt(0x30000000 + id)
-          bb.putInt(nTracks + 1) // track_ID
-          bb.putInt(0)
-          bb.putInt(duration.toInt)
-          bb.put(new Array[Byte](8))
-          bb.putShort(0).putShort(0).putShort(0).putShort(0)
-          UnityMatrix.foreach(bb.putInt)
-          bb.putInt(640 << 16).putInt(360 << 16) // same decoy size
-          box("tkhd", bb.array())
-        }
-        val sampleEntry = {
-          val bb = java.nio.ByteBuffer.allocate(78)
-          bb.put(new Array[Byte](6)).putShort(1)
-          bb.putShort(0).putShort(0)
-          bb.put(new Array[Byte](12))
-          bb.putShort(wf.toShort).putShort(hf.toShort) // CODED size
-          bb.putInt(0x00480000).putInt(0x00480000)
-          bb.putInt(0)
-          bb.putShort(1)
-          bb.put(new Array[Byte](32))
-          bb.putShort(24) // depth: RGB24
-          bb.putShort(-1)
-          bb.array()
-        }
-        val stsd = box("stsd",
-          Array[Byte](0, 0, 0, 0),
-          java.nio.ByteBuffer.allocate(4).putInt(1).array(),
-          box("raw ", sampleEntry))
-        val stts = {
-          val bb = java.nio.ByteBuffer.allocate(16)
-          bb.putInt(0).putInt(1).putInt(nFrames).putInt(100)
-          box("stts", bb.array())
-        }
-        val stsc = {
-          val bb = java.nio.ByteBuffer.allocate(20)
-          bb.putInt(0).putInt(1).putInt(1).putInt(1).putInt(1)
-          box("stsc", bb.array())
-        }
-        val stsz = {
-          val bb = java.nio.ByteBuffer.allocate(12 + 4 * nFrames)
-          bb.putInt(0).putInt(0).putInt(nFrames) // varying sizes
-          frames.foreach(f => bb.putInt(f.length))
-          box("stsz", bb.array())
-        }
-        val stco = {
-          val bb = java.nio.ByteBuffer.allocate(8 + 4 * nFrames)
-          bb.putInt(0).putInt(nFrames)
-          offsets.foreach(o => bb.putInt(o.toInt))
-          box("stco", bb.array())
-        }
-        val mdhd = {
-          val bb = java.nio.ByteBuffer.allocate(24)
-          bb.put(0.toByte).put(Array[Byte](0, 0, 0))
-          bb.putInt(0).putInt(0)
-          bb.putInt(timescale).putInt(duration.toInt)
-          bb.putShort(0x55C4.toShort).putShort(0)
-          box("mdhd", bb.array())
-        }
-        val hdlr = box("hdlr",
-          new Array[Byte](8), "vide".getBytes("ISO-8859-1"),
-          new Array[Byte](13))
-        box("trak", tkhd, box("mdia", mdhd, hdlr,
-          box("minf", box("stbl", stsd, stts, stsc, stsz, stco))))
+      val bytes = mp4(id, brand, 12, frames, 50 + (id * 53) % 400) { offs =>
+        (header +: traks) :+
+          frameTrak(id, nTracks + 1, timescale, duration, "raw ", wf, hf, frames, offs)
       }
-
-      val noise = {
-        val data = new Array[Byte](50 + (id * 53) % 400)
-        var seed = id * 0x9E3779B97F4A7C15L
-        var i = 0
-        while (i < data.length) {
-          seed = seed * 6364136223846793005L + 1442695040888963407L
-          data(i) = (seed >>> 32).toByte
-          i += 1
-        }
-        data
-      }
-      val mdatPayload = frames.flatten ++ noise
-      def assemble(offsets: Seq[Long]): Array[Byte] =
-        ftyp ++ box("free", new Array[Byte](12)) ++
-          box("moov", (mvhd +: traks :+ rawTrak(offsets)): _*) ++
-          box("mdat", mdatPayload)
-      // two-pass: stco holds FILE offsets, which depend on moov's size —
-      // probe with zeros (same byte length), then patch real offsets
-      val probe = assemble(Seq.fill(nFrames)(0L))
-      val payloadStart = (probe.length - mdatPayload.length).toLong
-      val offs = frames.scanLeft(payloadStart)((o, f) => o + f.length).init.toSeq
-      val bytes = assemble(offs)
-      require(bytes.length == probe.length, "offset patch changed layout")
       Files.write(Paths.get(root, f"vid_$id%04d.mp4"), bytes)
       sb.append(s"$id,$brand,$timescale,$duration,${nTracks + 1},${bytes.length}\n")
     }
@@ -492,14 +446,8 @@ object MediaFixtures {
     * them, and generation-time vs decode-time determinism holds
     * because both are the same pure-Java decoder on the same bytes.
     */
-  def ensureMjpeg(): String = synchronized {
-    val marker = Paths.get(mjpegDir, "VERSION")
-    val fresh = Files.exists(marker) &&
-      new String(Files.readAllBytes(marker)).trim == MjpegVersion.toString
-    if (!fresh) {
-      generateMjpeg()
-      Files.write(marker, MjpegVersion.toString.getBytes)
-    }
+  def ensureMjpeg(): String = {
+    Fixture.versioned(s"$mjpegDir/VERSION", MjpegVersion)(generateMjpeg())
     mjpegDir
   }
 
@@ -515,148 +463,22 @@ object MediaFixtures {
       val h = 16 + (id % 3) * 8
       // LCG-noise RGB frames, JPEG-encoded with the default writer
       val frames: Array[Array[Byte]] = Array.tabulate(nFrames) { fi =>
-        val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
-        var seed = (id * 1000L + fi) * 0x9E3779B97F4A7C15L
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            seed = seed * 6364136223846793005L + 1442695040888963407L
-            img.setRGB(x, y, ((seed >>> 32) & 0xFFFFFF).toInt)
-            x += 1
-          }
-          y += 1
-        }
+        val img = lcgPaint(new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB),
+          (id * 1000L + fi) * 0x9E3779B97F4A7C15L)(s => ((s >>> 32) & 0xFFFFFF).toInt)
         val baos = new ByteArrayOutputStream()
         require(ImageIO.write(img, "jpg", baos), "no JPEG writer available")
         baos.toByteArray
       }
-      // sidecar sums from the decoded (lossy) round-trip
       frames.zipWithIndex.foreach { case (jb, fi) =>
         val img = ImageIO.read(new java.io.ByteArrayInputStream(jb))
-        var (r, g, b) = (0L, 0L, 0L)
-        var y = 0
-        while (y < img.getHeight) {
-          var x = 0
-          while (x < img.getWidth) {
-            val px = img.getRGB(x, y)
-            r += (px >> 16) & 0xff; g += (px >> 8) & 0xff; b += px & 0xff
-            x += 1
-          }
-          y += 1
-        }
+        val (r, g, b) = Multimodal.rgbSums(img)
         vfb.append(
           s"$id,${fi + 1},${img.getWidth},${img.getHeight},$r,$g,$b\n")
       }
-
-      val ftyp = box("ftyp",
-        "isom".getBytes("ISO-8859-1"),
-        java.nio.ByteBuffer.allocate(4).putInt(0x200).array(),
-        "isommp42".getBytes("ISO-8859-1"))
-      val mvhd = {
-        val bb = java.nio.ByteBuffer.allocate(100)
-        bb.put(0.toByte).put(Array[Byte](0, 0, 0))
-        bb.putInt(0x30000000 + id).putInt(0x30000000 + id)
-        bb.putInt(timescale).putInt(duration.toInt)
-        bb.putInt(0x00010000).putShort(0x0100.toShort)
-        bb.put(new Array[Byte](10))
-        UnityMatrix.foreach(bb.putInt)
-        bb.put(new Array[Byte](24))
-        bb.putInt(2) // next_track_ID
-        box("mvhd", bb.array())
+      val bytes = mp4(id, "isom", 8, frames, 40 + (id * 29) % 200) { offs =>
+        Seq(mvhd(id, timescale, duration, nextTrackId = 2),
+          frameTrak(id, 1, timescale, duration, "jpeg", w, h, frames, offs))
       }
-      def jpegTrak(offsets: Seq[Long]): Array[Byte] = {
-        val tkhd = {
-          val bb = java.nio.ByteBuffer.allocate(84)
-          bb.put(0.toByte).put(Array[Byte](0, 0, 7))
-          bb.putInt(0x30000000 + id).putInt(0x30000000 + id)
-          bb.putInt(1) // track_ID
-          bb.putInt(0)
-          bb.putInt(duration.toInt)
-          bb.put(new Array[Byte](8))
-          bb.putShort(0).putShort(0).putShort(0).putShort(0)
-          UnityMatrix.foreach(bb.putInt)
-          bb.putInt(640 << 16).putInt(360 << 16) // decoy size, as ever
-          box("tkhd", bb.array())
-        }
-        val sampleEntry = {
-          val bb = java.nio.ByteBuffer.allocate(78)
-          bb.put(new Array[Byte](6)).putShort(1)
-          bb.putShort(0).putShort(0)
-          bb.put(new Array[Byte](12))
-          bb.putShort(w.toShort).putShort(h.toShort) // CODED size
-          bb.putInt(0x00480000).putInt(0x00480000)
-          bb.putInt(0)
-          bb.putShort(1)
-          bb.put(new Array[Byte](32))
-          bb.putShort(24)
-          bb.putShort(-1)
-          bb.array()
-        }
-        val stsd = box("stsd",
-          Array[Byte](0, 0, 0, 0),
-          java.nio.ByteBuffer.allocate(4).putInt(1).array(),
-          box("jpeg", sampleEntry))
-        val stts = {
-          val bb = java.nio.ByteBuffer.allocate(16)
-          bb.putInt(0).putInt(1).putInt(nFrames).putInt(100)
-          box("stts", bb.array())
-        }
-        val stsc = {
-          val bb = java.nio.ByteBuffer.allocate(20)
-          bb.putInt(0).putInt(1).putInt(1).putInt(1).putInt(1)
-          box("stsc", bb.array())
-        }
-        val stsz = {
-          val bb = java.nio.ByteBuffer.allocate(12 + 4 * nFrames)
-          bb.putInt(0).putInt(0).putInt(nFrames) // varying JPEG sizes
-          frames.foreach(f => bb.putInt(f.length))
-          box("stsz", bb.array())
-        }
-        val stco = {
-          val bb = java.nio.ByteBuffer.allocate(8 + 4 * nFrames)
-          bb.putInt(0).putInt(nFrames)
-          offsets.foreach(o => bb.putInt(o.toInt))
-          box("stco", bb.array())
-        }
-        val mdhd = {
-          val bb = java.nio.ByteBuffer.allocate(24)
-          bb.put(0.toByte).put(Array[Byte](0, 0, 0))
-          bb.putInt(0).putInt(0)
-          bb.putInt(timescale).putInt(duration.toInt)
-          bb.putShort(0x55C4.toShort).putShort(0)
-          box("mdhd", bb.array())
-        }
-        val hdlr = box("hdlr",
-          new Array[Byte](8), "vide".getBytes("ISO-8859-1"),
-          new Array[Byte](13))
-        box("trak", tkhd, box("mdia", mdhd, hdlr,
-          box("minf", box("stbl", stsd, stts, stsc, stsz, stco))))
-      }
-      // trailing LCG noise after the frames, so a decoder that reads
-      // "the rest of mdat" instead of the sample table fails
-      val noise = {
-        val data = new Array[Byte](40 + (id * 29) % 200)
-        var seed = id * 0x9E3779B97F4A7C15L
-        var i = 0
-        while (i < data.length) {
-          seed = seed * 6364136223846793005L + 1442695040888963407L
-          data(i) = (seed >>> 32).toByte
-          i += 1
-        }
-        data
-      }
-      val mdatPayload = frames.flatten ++ noise
-      def assemble(offsets: Seq[Long]): Array[Byte] =
-        ftyp ++ box("free", new Array[Byte](8)) ++
-          box("moov", mvhd, jpegTrak(offsets)) ++
-          box("mdat", mdatPayload)
-      val probe = assemble(Seq.fill(nFrames)(0L))
-      val payloadStart = (probe.length - mdatPayload.length).toLong
-      val offs = frames.scanLeft(payloadStart)((o, f) => o + f.length)
-        .init.toSeq
-      val bytes = assemble(offs)
-      require(bytes.length == probe.length, "offset patch changed layout")
       Files.write(Paths.get(mjpegDir, f"vid_$id%04d.mp4"), bytes)
     }
     Files.write(Paths.get(mjpegFramesCsv), vfb.toString.getBytes)
@@ -676,8 +498,29 @@ object MediaFixtures {
     * qm02 sidecar-oracle pattern: a reader must reproduce these exact
     * values from the tar bytes alone.
     */
-  def ensureTars(): String = synchronized {
-    ensureTarsImpl()
+  def ensureTars(): String = {
+    ensure()
+    Fixture.versioned(s"$tarDir/VERSION", TarVersion) {
+      Files.createDirectories(Paths.get(tarDir))
+      val files = new java.io.File(root).listFiles()
+        .filter(f => f.getName.matches(".*\\.(png|wav|mp4)$"))
+        .sortBy(_.getName)
+      val shards = 4
+      val sb = new StringBuilder("entry,n_bytes,magic\n")
+      (0 until shards).foreach { s =>
+        val entries = files.zipWithIndex.filter(_._2 % shards == s)
+          .map { case (f, _) =>
+            val bytes = Files.readAllBytes(f.toPath)
+            val magic = bytes.take(4).map(b => f"${b & 0xff}%02X").mkString
+            sb.append(s"${f.getName},${bytes.length},$magic\n")
+            f.getName -> bytes
+          }
+        graft.sources.TarShards.writeTar(
+          f"$tarDir/shard-$s%03d.tar", entries.toSeq)
+      }
+      Files.write(Paths.get(tarCsv), sb.toString.getBytes)
+    }
+    tarDir
   }
 
   // ----- animated GIF fixtures -----------------------------------------
@@ -700,14 +543,8 @@ object MediaFixtures {
     * Spark side runs, so agreement is by construction and any encoder
     * quirk (dithering, palette reorder) is captured, not assumed away.
     */
-  def ensureGif(): String = synchronized {
-    val marker = Paths.get(gifDir, "VERSION")
-    val fresh = Files.exists(marker) &&
-      new String(Files.readAllBytes(marker)).trim == GifVersion.toString
-    if (!fresh) {
-      generateGif()
-      Files.write(marker, GifVersion.toString.getBytes)
-    }
+  def ensureGif(): String = {
+    Fixture.versioned(s"$gifDir/VERSION", GifVersion)(generateGif())
     gifDir
   }
 
@@ -726,20 +563,8 @@ object MediaFixtures {
       val w = 12 + (id % 5) * 6
       val h = 12 + (id % 3) * 6
       val frames = Array.tabulate(nFrames) { fi =>
-        val img = new BufferedImage(w, h,
-          BufferedImage.TYPE_BYTE_INDEXED, cm)
-        var seed = (id * 1000L + fi) * 0x9E3779B97F4A7C15L
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            seed = seed * 6364136223846793005L + 1442695040888963407L
-            img.setRGB(x, y, pal((((seed >>> 32) % 8).toInt + 8) % 8))
-            x += 1
-          }
-          y += 1
-        }
-        img
+        lcgPaint(new BufferedImage(w, h, BufferedImage.TYPE_BYTE_INDEXED, cm),
+          (id * 1000L + fi) * 0x9E3779B97F4A7C15L)(s => pal((((s >>> 32) % 8).toInt + 8) % 8))
       }
       val baos = new ByteArrayOutputStream()
       val writers = ImageIO.getImageWritersByFormatName("gif")
@@ -763,34 +588,5 @@ object MediaFixtures {
       }
     }
     Files.write(Paths.get(gifFramesCsv), vfb.toString.getBytes)
-  }
-
-  private def ensureTarsImpl(): String = {
-    ensure()
-    val marker = Paths.get(tarDir, "VERSION")
-    val fresh = Files.exists(marker) &&
-      new String(Files.readAllBytes(marker)).trim == TarVersion.toString
-    if (!fresh) {
-      Files.createDirectories(Paths.get(tarDir))
-      val files = new java.io.File(root).listFiles()
-        .filter(f => f.getName.matches(".*\\.(png|wav|mp4)$"))
-        .sortBy(_.getName)
-      val shards = 4
-      val sb = new StringBuilder("entry,n_bytes,magic\n")
-      (0 until shards).foreach { s =>
-        val entries = files.zipWithIndex.filter(_._2 % shards == s)
-          .map { case (f, _) =>
-            val bytes = Files.readAllBytes(f.toPath)
-            val magic = bytes.take(4).map(b => f"${b & 0xff}%02X").mkString
-            sb.append(s"${f.getName},${bytes.length},$magic\n")
-            f.getName -> bytes
-          }
-        graft.sources.TarShards.writeTar(
-          f"$tarDir/shard-$s%03d.tar", entries.toSeq)
-      }
-      Files.write(Paths.get(tarCsv), sb.toString.getBytes)
-      Files.write(marker, TarVersion.toString.getBytes)
-    }
-    tarDir
   }
 }

@@ -1,5 +1,7 @@
 package graft.operators
 
+import java.awt.image.BufferedImage
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -100,12 +102,59 @@ object Multimodal {
     }
   }
 
+  /** One media kind's external stage: the `binaryFile` rows of a
+    * directory whose names end `<prefix>_<digits>.<ext>`, as
+    * (media_id, content). Every directory operator below reads its
+    * files here and decodes them in its own per-partition shape.
+    */
+  private final case class MediaKind(prefix: String, ext: String) {
+    def read(spark: SparkSession, dir: String): Dataset[(Long, Array[Byte])] = {
+      import spark.implicits._
+      spark.read.format("binaryFile")
+        .option("pathGlobFilter", s"*.$ext").load(dir)
+        .select(
+          regexp_extract(col("path"), s"${prefix}_(\\d+)\\.$ext$$", 1)
+            .cast(LongType).as("media_id"),
+          col("content"))
+        .as[(Long, Array[Byte])]
+    }
+  }
+
+  private val Png = MediaKind("img", "png")
+  private val Wav = MediaKind("aud", "wav")
+  private val Mp4 = MediaKind("vid", "mp4")
+  private val Gif = MediaKind("anim", "gif")
+
+  private def readImage(bytes: Array[Byte]): BufferedImage = {
+    val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
+    require(img != null, "not a decodable image")
+    img
+  }
+
+  /** Per-channel integer sums over every decoded pixel: the one pixel
+    * kernel of the PNG, Motion-JPEG and GIF feature paths and of the
+    * fixture sidecars that gate them.
+    */
+  private[operators] def rgbSums(img: BufferedImage): (Long, Long, Long) = {
+    var (r, g, b) = (0L, 0L, 0L)
+    var y = 0
+    while (y < img.getHeight) {
+      var x = 0
+      while (x < img.getWidth) {
+        val px = img.getRGB(x, y)
+        r += (px >> 16) & 0xff; g += (px >> 8) & 0xff; b += px & 0xff
+        x += 1
+      }
+      y += 1
+    }
+    (r, g, b)
+  }
+
   /** REAL decode for one format — PNG via the JDK's `javax.imageio`
     * (public stack, no external libs). Returns (width, height, bands).
     */
   def decodeImage(bytes: Array[Byte]): (Long, Long, Long) = {
-    val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-    require(img != null, "not a decodable image")
+    val img = readImage(bytes)
     (img.getWidth.toLong, img.getHeight.toLong,
       img.getRaster.getNumBands.toLong)
   }
@@ -119,14 +168,7 @@ object Multimodal {
     */
   def imageMeta(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val bin = spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.png").load(dir)
-      .select(
-        regexp_extract(col("path"), "img_(\\d+)\\.png$", 1)
-          .cast(LongType).as("media_id"),
-        col("content"))
-      .as[(Long, Array[Byte])]
-    bin.mapPartitions { it =>
+    Png.read(spark, dir).mapPartitions { it =>
       // real codec init happens once per partition here if needed
       it.map { case (id, bytes) =>
         val (w, h, c) = decodeImage(bytes)
@@ -146,21 +188,8 @@ object Multimodal {
     * that subsamples, channel-swaps, or gamma-adjusts cannot pass.
     */
   def decodeImageFeatures(bytes: Array[Byte]): (Long, Long, Long, Long) = {
-    val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-    require(img != null, "not a decodable image")
-    var (sumR, sumG, sumB) = (0L, 0L, 0L)
-    var y = 0
-    while (y < img.getHeight) {
-      var x = 0
-      while (x < img.getWidth) {
-        val rgb = img.getRGB(x, y)
-        sumR += (rgb >> 16) & 0xff
-        sumG += (rgb >> 8) & 0xff
-        sumB += rgb & 0xff
-        x += 1
-      }
-      y += 1
-    }
+    val img = readImage(bytes)
+    val (sumR, sumG, sumB) = rgbSums(img)
     (img.getWidth.toLong * img.getHeight, sumR, sumG, sumB)
   }
 
@@ -171,14 +200,7 @@ object Multimodal {
     */
   def imageFeatures(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val bin = spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.png").load(dir)
-      .select(
-        regexp_extract(col("path"), "img_(\\d+)\\.png$", 1)
-          .cast(LongType).as("media_id"),
-        col("content"))
-      .as[(Long, Array[Byte])]
-    bin.mapPartitions { it =>
+    Png.read(spark, dir).mapPartitions { it =>
       it.map { case (id, bytes) =>
         val (n, r, g, b) = decodeImageFeatures(bytes)
         ImageFeatures(id, n, r, g, b)
@@ -250,18 +272,9 @@ object Multimodal {
     */
   def imageDhash(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val bin = spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.png").load(dir)
-      .select(
-        regexp_extract(col("path"), "img_(\\d+)\\.png$", 1)
-          .cast(LongType).as("media_id"),
-        col("content"))
-      .as[(Long, Array[Byte])]
-    bin.mapPartitions { it =>
+    Png.read(spark, dir).mapPartitions { it =>
       it.map { case (id, bytes) =>
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(bytes))
-        require(img != null, "not a decodable image")
+        val img = readImage(bytes)
         ImageDhash(id, dhashFromPixels(img.getWidth, img.getHeight, img.getRGB))
       }
     }.select(col("id").as("media_id"), col("dhash"))
@@ -370,14 +383,7 @@ object Multimodal {
     */
   def audioDhash(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val bin = spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.wav").load(dir)
-      .select(
-        regexp_extract(col("path"), "aud_(\\d+)\\.wav$", 1)
-          .cast(LongType).as("media_id"),
-        col("content"))
-      .as[(Long, Array[Byte])]
-    bin.mapPartitions { it =>
+    Wav.read(spark, dir).mapPartitions { it =>
       it.map { case (id, bytes) =>
         AudioFp(id, audioFingerprintFromSamples(decodeAudioCh0(bytes)))
       }
@@ -415,14 +421,7 @@ object Multimodal {
     */
   def audioMeta(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val bin = spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.wav").load(dir)
-      .select(
-        regexp_extract(col("path"), "aud_(\\d+)\\.wav$", 1)
-          .cast(LongType).as("media_id"),
-        col("content"))
-      .as[(Long, Array[Byte])]
-    bin.mapPartitions { it =>
+    Wav.read(spark, dir).mapPartitions { it =>
       it.map { case (id, bytes) =>
         val (rate, ch, frames) = decodeAudio(bytes)
         AudioMeta(id, bytes.length.toLong, rate, ch, frames)
@@ -475,14 +474,7 @@ object Multimodal {
     */
   def audioFeatures(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val bin = spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.wav").load(dir)
-      .select(
-        regexp_extract(col("path"), "aud_(\\d+)\\.wav$", 1)
-          .cast(LongType).as("media_id"),
-        col("content"))
-      .as[(Long, Array[Byte])]
-    bin.mapPartitions { it =>
+    Wav.read(spark, dir).mapPartitions { it =>
       it.map { case (id, bytes) =>
         val (frames, s0, s1, pk) = decodeAudioFeatures(bytes)
         AudioFeatures(id, frames, s0, s1, pk)
@@ -540,24 +532,21 @@ object Multimodal {
     * (duration, track shape) before paying for any decode.
     */
   def decodeVideo(bytes: Array[Byte]): (String, Long, Long, Long) = {
-    def u32(off: Int): Long = beU32(bytes, off)
-    def walk(start: Int, end: Int)(f: (String, Int, Int) => Unit): Unit =
-      walkBoxes(bytes, start, end)(f)
     var brand = ""
     var timescale = 0L
     var duration = 0L
     var tracks = 0L
-    walk(0, bytes.length) { (typ, s, e) =>
+    walkBoxes(bytes, 0, bytes.length) { (typ, s, e) =>
       typ match {
         case "ftyp" => brand = new String(bytes, s, 4, "ISO-8859-1")
-        case "moov" => walk(s, e) { (child, cs, _) =>
+        case "moov" => walkBoxes(bytes, s, e) { (child, cs, _) =>
           child match {
             case "mvhd" =>
               if ((bytes(cs) & 0xff) == 1) { // v1: 64-bit times
-                timescale = u32(cs + 20)
+                timescale = beU32(bytes, cs + 20)
                 duration = java.nio.ByteBuffer.wrap(bytes).getLong(cs + 24)
               } else {
-                timescale = u32(cs + 12); duration = u32(cs + 16)
+                timescale = beU32(bytes, cs + 12); duration = beU32(bytes, cs + 16)
               }
             case "trak" => tracks += 1
             case _ => ()
@@ -585,37 +574,33 @@ object Multimodal {
     * 14496-12 specifies for the file layouts in the wild.
     */
   def decodeTracks(bytes: Array[Byte]): Seq[(Long, String, Long, Long)] = {
-    def u32(off: Int): Long = beU32(bytes, off)
-    def u16(off: Int): Long = beU16(bytes, off)
-    def walk(start: Int, end: Int)(f: (String, Int, Int) => Unit): Unit =
-      walkBoxes(bytes, start, end)(f)
     val out = Seq.newBuilder[(Long, String, Long, Long)]
-    walk(0, bytes.length) {
-      case ("moov", ms, me) => walk(ms, me) {
+    walkBoxes(bytes, 0, bytes.length) {
+      case ("moov", ms, me) => walkBoxes(bytes, ms, me) {
         case ("trak", ts, te) =>
           var trackId = -1L
           var handler = ""
           var codec = ""
           var w = 0L
           var h = 0L
-          walk(ts, te) {
+          walkBoxes(bytes, ts, te) {
             case ("tkhd", cs, _) =>
               // v0: id at +12 after ver/flags+ctime+mtime; v1: at +20
-              trackId = if ((bytes(cs) & 0xff) == 1) u32(cs + 20) else u32(cs + 12)
-            case ("mdia", ds, de) => walk(ds, de) {
+              trackId = beU32(bytes, if ((bytes(cs) & 0xff) == 1) cs + 20 else cs + 12)
+            case ("mdia", ds, de) => walkBoxes(bytes, ds, de) {
               case ("hdlr", cs, _) =>
                 handler = new String(bytes, cs + 8, 4, "ISO-8859-1")
-              case ("minf", fs, fe) => walk(fs, fe) {
-                case ("stbl", bs, be) => walk(bs, be) {
+              case ("minf", fs, fe) => walkBoxes(bytes, fs, fe) {
+                case ("stbl", bs, be) => walkBoxes(bytes, bs, be) {
                   case ("stsd", cs, _) =>
-                    require(u32(cs + 4) >= 1, "stsd with no sample entries")
+                    require(beU32(bytes, cs + 4) >= 1, "stsd with no sample entries")
                     val entry = cs + 8 // first entry's box header
                     // fourccs are space-padded ('raw ' is the QuickTime
                     // uncompressed entry); report them right-trimmed
                     codec = new String(bytes, entry + 4, 4, "ISO-8859-1").trim
                     if (handler == "vide") {
-                      w = u16(entry + 8 + 24)
-                      h = u16(entry + 8 + 26)
+                      w = beU16(bytes, entry + 8 + 24)
+                      h = beU16(bytes, entry + 8 + 26)
                     }
                   case _ => ()
                 }
@@ -641,13 +626,7 @@ object Multimodal {
     */
   def videoTrackMeta(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.mp4").load(dir)
-      .select(
-        regexp_extract(col("path"), "vid_(\\d+)\\.mp4$", 1)
-          .cast(LongType).as("media_id"),
-        col("content"))
-      .as[(Long, Array[Byte])]
+    Mp4.read(spark, dir)
       .flatMap { case (id, bytes) =>
         decodeTracks(bytes).map { case (tid, codec, w, h) =>
           TrackMeta(id, tid, codec, w, h)
@@ -676,13 +655,9 @@ object Multimodal {
     * inline. Returns one (frameIdx, w, h, sumR, sumG, sumB) per frame.
     */
   def decodeVideoFrames(bytes: Array[Byte]): Seq[(Long, Long, Long, Long, Long, Long)] = {
-    def u32(off: Int): Long = beU32(bytes, off)
-    def u16(off: Int): Long = beU16(bytes, off)
-    def walk(start: Int, end: Int)(f: (String, Int, Int) => Unit): Unit =
-      walkBoxes(bytes, start, end)(f)
     val out = Seq.newBuilder[(Long, Long, Long, Long, Long, Long)]
-    walk(0, bytes.length) {
-      case ("moov", ms, me) => walk(ms, me) {
+    walkBoxes(bytes, 0, bytes.length) {
+      case ("moov", ms, me) => walkBoxes(bytes, ms, me) {
         case ("trak", ts, te) =>
           var handler = ""
           var codec = ""
@@ -690,25 +665,25 @@ object Multimodal {
           var h = 0L
           var sizes: Array[Int] = Array.empty
           var offsets: Array[Long] = Array.empty
-          walk(ts, te) {
-            case ("mdia", ds, de) => walk(ds, de) {
+          walkBoxes(bytes, ts, te) {
+            case ("mdia", ds, de) => walkBoxes(bytes, ds, de) {
               case ("hdlr", cs, _) =>
                 handler = new String(bytes, cs + 8, 4, "ISO-8859-1")
-              case ("minf", fs, fe) => walk(fs, fe) {
-                case ("stbl", bs, be) => walk(bs, be) {
+              case ("minf", fs, fe) => walkBoxes(bytes, fs, fe) {
+                case ("stbl", bs, be) => walkBoxes(bytes, bs, be) {
                   case ("stsd", cs, _) =>
                     val entry = cs + 8
                     codec = new String(bytes, entry + 4, 4, "ISO-8859-1")
-                    w = u16(entry + 8 + 24); h = u16(entry + 8 + 26)
+                    w = beU16(bytes, entry + 8 + 24); h = beU16(bytes, entry + 8 + 26)
                   case ("stsz", cs, _) =>
-                    val fixed = u32(cs + 4)
-                    val n = u32(cs + 8).toInt
+                    val fixed = beU32(bytes, cs + 4)
+                    val n = beU32(bytes, cs + 8).toInt
                     sizes =
                       if (fixed != 0) Array.fill(n)(fixed.toInt)
-                      else Array.tabulate(n)(i => u32(cs + 12 + 4 * i).toInt)
+                      else Array.tabulate(n)(i => beU32(bytes, cs + 12 + 4 * i).toInt)
                   case ("stco", cs, _) =>
-                    val n = u32(cs + 4).toInt
-                    offsets = Array.tabulate(n)(i => u32(cs + 8 + 4 * i))
+                    val n = beU32(bytes, cs + 4).toInt
+                    offsets = Array.tabulate(n)(i => beU32(bytes, cs + 8 + 4 * i))
                   case _ => ()
                 }
                 case _ => ()
@@ -747,18 +722,7 @@ object Multimodal {
                 val img = javax.imageio.ImageIO.read(
                   new java.io.ByteArrayInputStream(bytes, o, sizes(fi)))
                 require(img != null, s"frame $fi is not decodable JPEG")
-                var (r, g, b) = (0L, 0L, 0L)
-                var y = 0
-                while (y < img.getHeight) {
-                  var x = 0
-                  while (x < img.getWidth) {
-                    val px = img.getRGB(x, y)
-                    r += (px >> 16) & 0xff; g += (px >> 8) & 0xff
-                    b += px & 0xff
-                    x += 1
-                  }
-                  y += 1
-                }
+                val (r, g, b) = rgbSums(img)
                 out += (((fi + 1).toLong, img.getWidth.toLong,
                   img.getHeight.toLong, r, g, b))
               }
@@ -779,13 +743,7 @@ object Multimodal {
     */
   def videoFrameFeatures(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.mp4").load(dir)
-      .select(
-        regexp_extract(col("path"), "vid_(\\d+)\\.mp4$", 1)
-          .cast(LongType).as("media_id"),
-        col("content"))
-      .as[(Long, Array[Byte])]
+    Mp4.read(spark, dir)
       .flatMap { case (id, bytes) =>
         decodeVideoFrames(bytes).map { case (fi, w, h, r, g, b) =>
           FrameFeatures(id, fi, w, h, r, g, b)
@@ -820,17 +778,7 @@ object Multimodal {
       require(n > 0, "GIF stream holds no frames")
       (0 until n).map { fi =>
         val img = reader.read(fi)
-        var (r, g, b) = (0L, 0L, 0L)
-        var y = 0
-        while (y < img.getHeight) {
-          var x = 0
-          while (x < img.getWidth) {
-            val px = img.getRGB(x, y)
-            r += (px >> 16) & 0xff; g += (px >> 8) & 0xff; b += px & 0xff
-            x += 1
-          }
-          y += 1
-        }
+        val (r, g, b) = rgbSums(img)
         ((fi + 1).toLong, img.getWidth.toLong, img.getHeight.toLong,
           r, g, b)
       }
@@ -848,13 +796,7 @@ object Multimodal {
     */
   def gifFrameFeatures(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.gif").load(dir)
-      .select(
-        regexp_extract(col("path"), "anim_(\\d+)\\.gif$", 1)
-          .cast(LongType).as("media_id"),
-        col("content"))
-      .as[(Long, Array[Byte])]
+    Gif.read(spark, dir)
       .flatMap { case (id, bytes) =>
         decodeGifFrames(bytes).map { case (fi, w, h, r, g, b) =>
           FrameFeatures(id, fi, w, h, r, g, b)
@@ -870,14 +812,7 @@ object Multimodal {
     */
   def videoMeta(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val bin = spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.mp4").load(dir)
-      .select(
-        regexp_extract(col("path"), "vid_(\\d+)\\.mp4$", 1)
-          .cast(LongType).as("media_id"),
-        col("content"))
-      .as[(Long, Array[Byte])]
-    bin.mapPartitions { it =>
+    Mp4.read(spark, dir).mapPartitions { it =>
       it.map { case (id, bytes) =>
         val (brand, ts, dur, tracks) = decodeVideo(bytes)
         VideoMeta(id, bytes.length.toLong, brand, ts, dur, tracks)

@@ -1,7 +1,6 @@
 package graft.refstar
 
 import java.io.{BufferedWriter, File, FileWriter}
-import java.nio.file.{Files, Paths}
 import java.time.LocalDate
 
 /** Deterministic generator for the reference's 12 staging CSV entities
@@ -32,19 +31,13 @@ object Fixtures {
   val Version = 3
 
   def root: String =
-    sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/fixtures/refstar")
+    sys.env.getOrElse("GRAFT_FIXTURE_DIR", graft.Fixture.checkoutDir("refstar"))
 
   def path(entity: String): String = s"$root/$entity/$entity.csv"
 
   /** Generate (once) and return the fixture root. Thread-safe in-JVM. */
-  def ensure(): String = synchronized {
-    val marker = Paths.get(root, "VERSION")
-    val fresh = Files.exists(marker) &&
-      new String(Files.readAllBytes(marker)).trim == Version.toString
-    if (!fresh) {
-      generate()
-      Files.write(marker, Version.toString.getBytes)
-    }
+  def ensure(): String = {
+    graft.Fixture.versioned(s"$root/VERSION", Version)(generate())
     root
   }
 

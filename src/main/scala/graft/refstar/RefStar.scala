@@ -27,7 +27,7 @@ import graft.etl.{DateDim, SurrogateKeys}
   * dims-only single-partition row_number (see SurrogateKeys scaladoc);
   * facts carry natural keys.
   *
-  * Staging rows: the dimension and target-fact recipes read each staging
+  * Staging rows: the dimension and fact recipes read each staging
   * entity through their `stage` argument. It defaults to the CSV itself
   * (`Staging.load`); `Warehouse.build` passes the persisted staging
   * parquet instead, so a rebuild parses every CSV exactly once.
@@ -271,11 +271,12 @@ object RefStar {
 
   def factSalesActual(spark: SparkSession, product: DataFrame, store: DataFrame,
                       customer: DataFrame, reseller: DataFrame,
-                      channel: DataFrame): DataFrame = {
-    val detail = Staging.load(spark, "salesdetail")
+                      channel: DataFrame,
+                      stage: Staging.Source = Staging.load): DataFrame = {
+    val detail = stage(spark, "salesdetail")
       .select("SALESDETAILID", "SALESHEADERID", "PRODUCTID", "SALESQUANTITY",
         "SALESAMOUNT")
-    val header = Staging.load(spark, "salesheader").select(
+    val header = stage(spark, "salesheader").select(
       col("SALESHEADERID").as("__h_hid"), col("DATE"), col("CHANNELID"),
       col("STOREID"), col("CUSTOMERID"), col("RESELLERID"))
     resolveFact(

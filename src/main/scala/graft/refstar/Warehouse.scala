@@ -91,7 +91,7 @@ object Warehouse {
   /** `graft.warehouse.dir` redirects specs and benchmarks to a temp store. */
   def root: String =
     sys.props.get("graft.warehouse.dir")
-      .getOrElse("/root/repo/fixtures/warehouse")
+      .getOrElse(graft.Fixture.checkoutDir("warehouse"))
 
   val DimTables: Seq[String] = Seq("dim_date", "dim_location", "dim_channel",
     "dim_customer", "dim_reseller", "dim_store", "dim_product")
@@ -132,20 +132,13 @@ object Warehouse {
   private def salesFactFrame(spark: SparkSession, product: DataFrame,
       store: DataFrame, customer: DataFrame, reseller: DataFrame,
       channel: DataFrame, years: Option[Seq[Int]] = None): DataFrame = {
-    val detail = staged(spark, "salesdetail")
-      .select("SALESDETAILID", "SALESHEADERID", "PRODUCTID", "SALESQUANTITY",
-        "SALESAMOUNT")
-    val headerAll = staged(spark, "salesheader")
-      .select(col("SALESHEADERID").as("__h_hid"), col("DATE"), col("CHANNELID"),
-        col("STOREID"), col("CUSTOMERID"), col("RESELLERID"))
-    val header = years.fold(headerAll)(ys => headerAll.filter(
-      floor(RefStar.dateKey(col("DATE")) / 10000L).cast("int").isin(ys: _*)))
-    RefStar.resolveFact(
-      detail.join(header, col("SALESHEADERID") === col("__h_hid"))
-        .drop("__h_hid"),
-      product, store, customer, reseller, channel)
-      .withColumn(FactYearCol,
-        floor(col("DimSaleDateID") / 10000L).cast("int"))
+    val stage: Staging.Source = years.fold(staged) { ys => (s, entity) =>
+      val df = staged(s, entity)
+      if (entity != "salesheader") df
+      else df.filter(floor(RefStar.dateKey(col("DATE")) / 10000L).cast("int").isin(ys: _*))
+    }
+    RefStar.factSalesActual(spark, product, store, customer, reseller, channel, stage)
+      .withColumn(FactYearCol, floor(col("DimSaleDateID") / 10000L).cast("int"))
   }
 
   /** Incremental backfill — the 100 TB answer to a late-arriving

@@ -5,6 +5,8 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
+import graft.Fixture
+
 /** JSON-lines source coverage: a deterministic JSONL fixture (nested
   * struct + array fields) read with a DECLARED schema — never
   * inference, which at 100 TB would scan the corpus twice and type
@@ -22,7 +24,7 @@ object Jsonl {
   val Count = 1000
 
   def root: String =
-    sys.env.getOrElse("GRAFT_JSONL_FIXTURE_DIR", "/root/repo/fixtures/jsonl")
+    sys.env.getOrElse("GRAFT_JSONL_FIXTURE_DIR", Fixture.checkoutDir("jsonl"))
 
   def path: String = s"$root/events.jsonl"
 
@@ -34,11 +36,8 @@ object Jsonl {
     StructField("nested", StructType(Seq(StructField("k", LongType))))))
 
   /** Generate (once) and return the fixture path. Thread-safe in-JVM. */
-  def ensure(): String = synchronized {
-    val marker = Paths.get(root, "VERSION")
-    val fresh = Files.exists(marker) &&
-      new String(Files.readAllBytes(marker)).trim == Version.toString
-    if (!fresh) {
+  def ensure(): String = {
+    Fixture.versioned(s"$root/VERSION", Version) {
       Files.createDirectories(Paths.get(root))
       val sb = new StringBuilder
       (0 until Count).foreach { i =>
@@ -48,7 +47,6 @@ object Jsonl {
           s""""tags":[$tags],"nested":{"k":${i % 7}}}""").append('\n')
       }
       Files.write(Paths.get(path), sb.toString.getBytes)
-      Files.write(marker, Version.toString.getBytes)
     }
     path
   }
@@ -83,15 +81,11 @@ object Jsonl {
     * parquet read), so JSON string escaping, unicode, and long fidelity
     * are all on the hook.
     */
-  def ensureDocs(spark: SparkSession, sfDir: String): String = synchronized {
+  def ensureDocs(spark: SparkSession, sfDir: String): String = {
     val d = docsDir(sfDir)
-    val marker = Paths.get(s"$d.VERSION")
-    val fresh = Files.exists(marker) &&
-      new String(Files.readAllBytes(marker)).trim == DocsVersion.toString
-    if (!fresh) {
+    Fixture.versioned(s"$d.VERSION", DocsVersion) {
       graft.Tables(spark, sfDir, "documents")
         .write.mode("overwrite").option("compression", "gzip").json(d)
-      Files.write(marker, DocsVersion.toString.getBytes)
     }
     d
   }

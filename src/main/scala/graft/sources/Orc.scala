@@ -1,8 +1,10 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.Fixture
 
 /** ORC source/sink coverage — the second columnar format a warehouse
   * interop layer must speak (Spark's ORC reader/writer is built in; no
@@ -20,7 +22,7 @@ object Orc {
   val Version = 1
 
   def root: String =
-    sys.env.getOrElse("GRAFT_ORC_FIXTURE_DIR", "/root/repo/fixtures/orc")
+    sys.env.getOrElse("GRAFT_ORC_FIXTURE_DIR", Fixture.checkoutDir("orc"))
 
   private def dir(sfDir: String): String =
     s"$root/${Paths.get(sfDir).getFileName}/documents"
@@ -29,15 +31,11 @@ object Orc {
     * The marker lives BESIDE the data dir — a non-ORC file inside it
     * would fail the scan (the reader takes every file in the directory).
     */
-  def ensure(spark: SparkSession, sfDir: String): String = synchronized {
+  def ensure(spark: SparkSession, sfDir: String): String = {
     val d = dir(sfDir)
-    val marker = Paths.get(s"$d.VERSION")
-    val fresh = Files.exists(marker) &&
-      new String(Files.readAllBytes(marker)).trim == Version.toString
-    if (!fresh) {
+    Fixture.versioned(s"$d.VERSION", Version) {
       graft.Tables(spark, sfDir, "documents")
         .write.mode("overwrite").orc(d)
-      Files.write(marker, Version.toString.getBytes)
     }
     d
   }

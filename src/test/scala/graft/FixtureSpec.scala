@@ -75,6 +75,50 @@ class FixtureSpec extends AnyFunSuite {
     Fixture.deleteTree(root) // already gone: a no-op, not an NPE
   }
 
+  test("versioned writes a missing or stale directory once, then stamps it") {
+    val root = Fixture.dir("graft_spec_versioned")
+    val marker = s"$root/VERSION"
+    val writes = new AtomicInteger()
+    def ensure(version: Int): Unit =
+      Fixture.versioned(marker, version) { writes.incrementAndGet(); () }
+    ensure(1)
+    ensure(1)
+    assert(writes.get == 1)
+    assert(new String(Files.readAllBytes(new File(marker).toPath)) == "1")
+    ensure(2)
+    assert(writes.get == 2)
+    intercept[IllegalStateException] {
+      Fixture.versioned(marker, 3)(throw new IllegalStateException("write fails"))
+    }
+    assert(new String(Files.readAllBytes(new File(marker).toPath)) == "2")
+  }
+
+  test("a versioned write may bring another marker's directory up to date") {
+    val root = Fixture.dir("graft_spec_versioned")
+    val inner = s"$root/inner.VERSION"
+    Fixture.versioned(s"$root/outer.VERSION", 1) {
+      Fixture.versioned(inner, 1)(())
+    }
+    assert(new File(inner).isFile && new File(s"$root/outer.VERSION").isFile)
+  }
+
+  test("no default root points into one fixed checkout") {
+    val main = new File("src/main/scala")
+    assert(main.isDirectory, s"run from the repo root: $main")
+    // a string literal holding an absolute path to a fixtures dir
+    val absoluteRoot = "\"/[^\"\\s]*/fixtures\\b".r
+    val walk = Files.walk(main.toPath)
+    val hits = try {
+      import scala.jdk.CollectionConverters._
+      walk.iterator().asScala.map(_.toFile).filter(_.getName.endsWith(".scala"))
+        .filter { f =>
+          absoluteRoot.findFirstIn(new String(Files.readAllBytes(f.toPath), "UTF-8")
+            .replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")).isDefined
+        }.map(_.getName).toList
+    } finally walk.close()
+    assert(hits.isEmpty, s"resolve fixture roots with Fixture.checkoutDir: $hits")
+  }
+
   test("gate code keeps no hand-rolled once-per-JVM state or temp dirs") {
     val banned = Seq("ConcurrentHashMap", "createTempDirectory",
       "addShutdownHook", "/tmp/graft_")

@@ -57,19 +57,8 @@ class RegistrySpec extends AnyFunSuite {
     // queries.Shared when more than one registry uses it
     val dir = new java.io.File("src/main/scala/graft/queries")
     assert(dir.isDirectory, s"run from the repo root: $dir")
-    val windows = for {
-      f <- dir.listFiles().toSeq.sortBy(_.getName)
-      if f.getName.endsWith(".scala")
-      code = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-        .split("\n").toVector.zipWithIndex.map { case (l, i) => (l.trim, i + 1) }
-        .filter { case (l, _) => l.nonEmpty &&
-          !Seq("//", "*", "/*").exists(l.startsWith) }.toVector
-      j <- 0 to code.size - 8
-      w = code.slice(j, j + 8)
-      if w.map(_._1.length).sum >= 200
-    } yield w.map(_._1) -> s"${f.getName}:${w.head._2}"
-    val repeated = windows.groupBy(_._1).values.map(_.map(_._2))
-      .filter(_.size >= 2).toSeq.sortBy(_.head)
+    val repeated = RepeatedBlocks(
+      dir.listFiles().toSeq.filter(_.getName.endsWith(".scala")))
     assert(repeated.isEmpty,
       s"${repeated.size} repeated windows: ${repeated.take(5).mkString("; ")}")
   }
